@@ -83,7 +83,8 @@ object Bench {
       // slowest family) and times only the total. Through r16 BOTH
       // passes warmed concurrently and famTimed the concurrent wall
       // time, which ALIASES scheduler contention into the rows: a
-      // same-host A/B (r17, WarmProbe) measured the smallest family
+      // same-host A/B (r17, each family warmed solo and then
+      // concurrently, twice over) measured the smallest family
       // (dup) at 1.6-2.0× its solo cost under concurrency on both the
       // r15 and r17 binaries — r16's "cache_build_dup doubled" was
       // that aliasing plus schedule luck, not an operator change.
@@ -194,7 +195,12 @@ object Bench {
     }
     sb ++= "},"
     sb ++= fixedTail
-    println(sb.result())
+    val line = sb.result()
+    // the budget above is the only guard against the harness's tail
+    // window clipping the headline: fail loudly if it ever stops holding
+    require(line.length < 1900,
+      s"Bench: stdout line is ${line.length} chars (limit 1900) — shrink the budget")
+    println(line)
     spark.stop()
   }
 }

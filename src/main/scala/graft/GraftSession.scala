@@ -43,6 +43,17 @@ object GraftSession {
     * working set is far below the heap, so the codec work is pure
     * overhead (~10-25% of small-stage latency measured). A cluster
     * deployment should NOT copy these.
+    *
+    * Mixed-mode hazard: local files are written and deleted here
+    * through the RAW local filesystem, which neither writes nor
+    * maintains Hadoop's `.crc` sidecars. A sidecar left by an earlier
+    * checksum-fs write of the same path goes stale when the file is
+    * overwritten or deleted under this tuning, and a checksum-fs session
+    * (plain `tune()` or a default session) that later reads the file
+    * verifies it against the stale sidecar and throws ChecksumException.
+    * Paths written under this tuning must not be re-read or overwritten
+    * by a checksum-fs session; delete their `.crc` files when a path
+    * changes mode.
     */
   def tuneLocal(b: SparkSession.Builder): SparkSession.Builder =
     tune(b)

@@ -35,21 +35,6 @@ final case class MergeInsert(values: Map[String, String]) extends MergeClauseAct
   */
 object LakeWriter {
 
-  /** Dev-only phase profiler for the commit funnel: set
-    * GRAFT_COMMIT_PROFILE=1 to print per-phase wall times to stderr.
-    * Zero-cost when off (one cached env check).
-    */
-  private val commitProfOn = sys.env.contains("GRAFT_COMMIT_PROFILE")
-  @inline private def commitProf[T](name: String)(f: => T): T =
-    if (!commitProfOn) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[commit] $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** Directory-partitioned parquet: one directory per `partitionCol`
     * value, rows sorted by `sortCols` within each file. Queries
     * filtering on the partition column scan only matching directories
@@ -1493,9 +1478,7 @@ object LakeWriter {
           require(fs.rename(pf, dest), s"rename $pf -> $dest failed")
           actions += s"""{"add":{"path":"$rel","partitionValues":$pvJson,"size":$size,"modificationTime":0,"dataChange":false$statsJson$rtJson}}"""
         }
-        files.foreach { f =>
-          actions += s"""{"remove":{"path":"${f.path}","deletionTimestamp":0,"size":${f.size},"dataChange":false}}"""
-        }
+        files.foreach(f => actions += removeLine(f, dataChange = false))
       }
     if (rt) actions += RowTracking.watermarkAction(nextRowId - 1)
     fs.delete(stage, true)
@@ -2183,23 +2166,11 @@ object LakeWriter {
     import org.apache.spark.sql.types.StructType
     val spark = df0.sparkSession
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"appendDeltaEvolve: unknown column mapping mode '$cm'")
+    // the same gate as appendDelta — evolution is still an append, and
+    // the table's declared constraints bind it
+    val cm = requireMutable(snap, "appendDeltaEvolve", removesRows = false)
     val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[StructType]
-    val tableNames = table.fieldNames.toSet
-    // the same obligation gates as appendDeltaWithSnapshot — evolution
-    // is still an append, and the table's declared constraints bind it
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "checkConstraints", "generatedColumns", "changeDataFeed", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 2 || (snap.minWriter >= 3 && snap.minWriter <= 5) ||
-        (snap.minWriter == 7 && unsafe.isEmpty),
-      s"appendDeltaEvolve: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing")
     // obligations enforce on the PRE-alignment batch: omitted generated
     // columns compute from their expressions (not null-fill), provided
     // ones verify, constraints/invariants check in one pass
@@ -2308,20 +2279,7 @@ object LakeWriter {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
     val spark = df0.sparkSession
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"overwriteWhere: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "overwriteWhere: table declares delta.appendOnly=true — a replace removes " +
-        "rows; forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"overwriteWhere: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
+    val cm = requireMutable(snap, "overwriteWhere", removesRows = true)
     val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val df = enforceObligations(
@@ -2352,14 +2310,7 @@ object LakeWriter {
     val fs = root.getFileSystem(hconf)
     val candidates = DeltaStats.prune(spark, snap.active, predicate, snap)
     val lineage = DeltaReader.scanFiles(spark, dir, snap, candidates, keepLineage = true)
-    val matchedPaths = lineage.where(pred).select("__dv_path").distinct()
-      .collect().map(_.getString(0)).toSet
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"overwriteWhere: resolved ${affected.size} of ${matchedPaths.size} matched " +
-        "files back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(snap, root, fs, lineage.where(pred), "overwriteWhere")
 
     // CDF tables read the affected files again for the deleted-rows
     // change data — persist the scan so they are read once (lazy, no
@@ -2398,9 +2349,7 @@ object LakeWriter {
         stageCdc(stagePhysicalRows(all, table, cm, phys, "overwriteWhere"),
           dir, snap.version + 1, stagePartCols)
       }
-    val removes = affected.map { a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
+    val removes = affected.map(removeLine(_, dataChange = true))
     commitDelta(staged, dir, snap.version + 1, includeMeta = false,
       checkpointInterval = 0, partCols = stagePartCols, txn = txn,
       extraActions = removes ++ cdcActions, operation = "WRITE",
@@ -2454,20 +2403,7 @@ object LakeWriter {
     import org.apache.spark.sql.functions.lit
     val spark = df0.sparkSession
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"overwriteDelta: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "overwriteDelta: table declares delta.appendOnly=true — an overwrite removes " +
-        "every existing row; forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"overwriteDelta: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
+    val cm = requireMutable(snap, "overwriteDelta", removesRows = true)
     val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val df = enforceObligations(
@@ -2508,9 +2444,7 @@ object LakeWriter {
         stageCdc(stagePhysicalRows(all, table, cm, phys, "overwriteDelta"),
           dir, snap.version + 1, stagePartCols)
       }
-    val removes = snap.active.map { a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
+    val removes = snap.active.map(removeLine(_, dataChange = true))
     commitDelta(staged, dir, snap.version + 1, includeMeta = false,
       checkpointInterval, partCols = stagePartCols, txn = txn,
       extraActions = removes ++ cdcActions, operation = "WRITE",
@@ -2804,25 +2738,13 @@ object LakeWriter {
                                              snap: DeltaReader.Snapshot,
                                              operation: String = "WRITE",
                                              operationParameters: String = "{}"): Unit = {
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"appendDelta: unknown column mapping mode '$cm'")
     // deletionVectors is append-safe: the writer obligation it imposes
     // (respect + rewrite DVs when modifying files) only binds writes
     // that TOUCH existing files, and a pure append never does.
     // columnMapping is append-safe because the physical rename below
     // stages parquet in the table's physical names. checkConstraints /
     // generatedColumns / invariants are ENFORCED below, not refused.
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "checkConstraints", "generatedColumns", "changeDataFeed", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 2 || (snap.minWriter >= 3 && snap.minWriter <= 5) ||
-        (snap.minWriter == 7 && unsafe.isEmpty),
-      s"appendDelta: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — this writer implements version 2 (append semantics) and cannot " +
-        "enforce the table's declared constraints; refusing to write")
+    val cm = requireMutable(snap, "appendDelta", removesRows = false)
     val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     // the table's declared write obligations — CHECK constraints
@@ -2938,7 +2860,7 @@ object LakeWriter {
     // writer's cleanup delete(stage) sweep the other's in-flight files
     val stage = new org.apache.hadoop.fs.Path(root,
       s"_stage_${version}_${java.util.UUID.randomUUID().toString.take(8)}")
-    commitProf("stage_write") {
+    locally {
       val wdf = fieldIdStaged(df)
       if (partCols.isEmpty) wdf.write.parquet(stage.toString)
       else wdf.write.partitionBy(partCols: _*).parquet(stage.toString)
@@ -2983,7 +2905,7 @@ object LakeWriter {
     // PARALLEL: one serial ~10 ms open per file turns a 2000-file
     // commit into ~20 s of driver bookkeeping; a bounded pool keeps it
     // at the per-file cost
-    val statsByPath: Map[String, Option[String]] = commitProf("footer_stats") {
+    val statsByPath: Map[String, Option[String]] = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(16, math.max(1, staged.size)))
       try {
@@ -3001,7 +2923,7 @@ object LakeWriter {
         }.asJava).asScala.map(_.get()).toMap
       } finally pool.shutdown()
     }
-    val moved = commitProf("rename_moves") { staged
+    val moved = staged
       .map { st =>
         // relative path under the stage dir = partition dirs + file name
         val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
@@ -3021,7 +2943,7 @@ object LakeWriter {
           col -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
         }.toSeq
         (rel, pv, st.getLen, stats)
-      } }
+      }
     fs.delete(stage, true)
     // identity watermark advance — derived from the footer stats just
     // computed (zero extra jobs); a changed watermark restates
@@ -3214,7 +3136,7 @@ object LakeWriter {
     val rebaseable = appendShape || mutationShape || maintenanceShape
     var v = version
     var committed = false
-    commitProf("log_write") { while (!committed) {
+    while (!committed) {
       val commit = new org.apache.hadoop.fs.Path(log, f"$v%020d.json")
       val effIctConf = if (ictEnabled(ictConf)) ictConf else configuration
       val stamped = ictStampContent(spark, fs, commit,
@@ -3248,7 +3170,7 @@ object LakeWriter {
               "re-read the table and retry", e)
         v = newest + 1
       }
-    } }
+    }
     // checkpoint cadence: the caller's explicit interval wins, else the
     // TABLE's own `delta.checkpointInterval` property (delta-spark's
     // knob) keeps the replay suffix bounded for every writer without
@@ -3967,9 +3889,7 @@ object LakeWriter {
         require(fs.rename(pf, dest), s"rename $pf -> $dest failed")
         actions += s"""{"add":{"path":"$rel","partitionValues":$pvJson,"size":$size,"modificationTime":0,"dataChange":false$statsJson$rtJson}}"""
       }
-      files.foreach { f =>
-        actions += s"""{"remove":{"path":"${f.path}","deletionTimestamp":0,"size":${f.size},"dataChange":false}}"""
-      }
+      files.foreach(f => actions += removeLine(f, dataChange = false))
     }
     if (rt) actions += RowTracking.watermarkAction(nextRowId - 1)
     fs.delete(stage, true)
@@ -4242,6 +4162,208 @@ object LakeWriter {
   private def cdfEnabled(snap: DeltaReader.Snapshot): Boolean =
     snap.configuration.get("delta.enableChangeDataFeed").contains("true")
 
+  // ---- the row-level DML funnel: one writer gate, one affected-file
+  // resolver, one remove renderer, and the deletion-vector family's
+  // shared rewrite, new-file stager and log write ----
+
+  /** The one writer gate of appends and row-level DML (compactDelta's
+    * dataChange=false rewrite has its own, laxer gate). Returns the
+    * table's column-mapping mode after refusing a mode this writer
+    * cannot stage. Legacy writer versions through 5 pass: CHECK
+    * constraints, invariants and generated columns are enforced on
+    * every written row, CDF tables get complete change data and
+    * identity/row-tracking state is carried. Version 6 and a v7 table
+    * declaring any feature outside the set below refuse. Ops that
+    * remove or rewrite rows (`removesRows`) also refuse
+    * `delta.appendOnly=true`.
+    */
+  private def requireMutable(snap: DeltaReader.Snapshot, op: String,
+                             removesRows: Boolean): String = {
+    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
+    require(cm == "none" || cm == "name" || cm == "id",
+      s"$op: unknown column mapping mode '$cm'")
+    if (removesRows)
+      require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
+        s"$op: table declares delta.appendOnly=true — $op removes or rewrites rows; " +
+          "forbidden on it")
+    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
+      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
+      Clustering.Features ++ RowTracking.safeExtra(snap)
+    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
+    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
+      s"$op: table requires writer version ${snap.minWriter}" +
+        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
+        " — refusing a write whose obligations this writer cannot honor")
+    cm
+  }
+
+  /** `a`'s data file as the lineage column `__dv_path` names it. */
+  private def absPath(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+                      a: DeltaReader.AddFile): String =
+    fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
+
+  /** The live files holding the rows of `matches` — a lineage frame
+    * (`DeltaReader.scanFiles(keepLineage = true)`) already filtered or
+    * joined down to the affected rows. One distributed distinct of
+    * `__dv_path` is collected and mapped back to the snapshot's
+    * AddFiles, so the driver holds O(affected files) paths and
+    * AddFiles, bounded like every snapshot by maxSnapshotFiles. A
+    * matched path that resolves to no log entry refuses the commit.
+    */
+  private def affectedFiles(snap: DeltaReader.Snapshot, root: org.apache.hadoop.fs.Path,
+                            fs: org.apache.hadoop.fs.FileSystem, matches: DataFrame,
+                            op: String): Seq[DeltaReader.AddFile] = {
+    val matchedPaths = matches.select("__dv_path").distinct()
+      .collect().map(_.getString(0)).toSet
+    if (matchedPaths.isEmpty) Nil
+    else {
+      val affected = snap.active.filter(a => matchedPaths.contains(absPath(fs, root, a)))
+      require(affected.size == matchedPaths.size,
+        s"$op: resolved ${affected.size} of ${matchedPaths.size} matched files back to " +
+          "log entries — path normalization bug, refusing to commit")
+      affected
+    }
+  }
+
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The `remove` action tombstoning live file `a` (path JSON-escaped;
+    * a percent-encoded log path renders verbatim).
+    */
+  private def removeLine(a: DeltaReader.AddFile, dataChange: Boolean): String =
+    s"""{"remove":{"path":${jsonMapper.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":$dataChange}}"""
+
+  /** The deletion-vector rewrite of deleteWhereDv, updateWhereDv and
+    * applyCdcDv. `matches` is a lineage frame holding one row per
+    * newly dead (`__dv_path`, `__dv_ridx`) of the `affected` files.
+    * Each file's new bitmap is those rows ∪ the rows its existing DV
+    * already kills ([[DeltaReader.deletedRowsDf]]) — a descriptor
+    * REPLACES its predecessor, so dropping the old rows would
+    * resurrect them. Bitmaps are built and written to sidecars on
+    * executors ([[writeDvSidecars]]); the driver holds descriptors
+    * only. Returns the affected files' removes, then their re-adds
+    * with the new descriptors (the protocol's DV shape: remove + add
+    * of the same path in one commit), both sorted by path.
+    */
+  private def dvRewrite(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+                        fs: org.apache.hadoop.fs.FileSystem,
+                        affected: Seq[DeltaReader.AddFile], matches: DataFrame): Seq[String] = {
+    if (affected.isEmpty) return Nil
+    val matched = matches.select("__dv_path", "__dv_ridx")
+    val withDv = affected.filter(_.dv.isDefined)
+    val allDel =
+      if (withDv.isEmpty) matched
+      else matched.unionByName(DeltaReader.deletedRowsDf(spark, root, fs, withDv))
+    val placed = writeDvSidecars(spark, root, allDel)
+    val om = jsonMapper
+    val ordered = affected.sortBy(_.path)
+    ordered.map(removeLine(_, dataChange = true)) ++ ordered.map { a =>
+      val pl = placed(absPath(fs, root, a))
+      val pvJson = a.partitionValues.map { case (c0, v) =>
+        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
+      }.mkString("{", ",", "}")
+      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
+      s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
+    }
+  }
+
+  /** Stage `rows` (logical shape) as NEW data files of the commit at
+    * `snap.version + 1` — updateWhereDv's and applyCdcDv's updated and
+    * inserted rows. The rows are written in the table's physical
+    * shape and partition layout under a writer-unique stage directory;
+    * each file moves into its partition directory as
+    * `part-<prefix>-<version>-<token>-<i>.parquet` (the token keeps two
+    * writers racing the same version apart), with footer stats
+    * (identity columns always kept past the stats cap — their
+    * watermark is derived from them) and, on row-tracked tables, fresh
+    * row ids from `rowIdBase` in sorted file order. Returns the add
+    * lines followed by the advanced row-id watermark, and each added
+    * file's stats.
+    */
+  private def stageNewFiles(rows: DataFrame, snap: DeltaReader.Snapshot,
+                            table: org.apache.spark.sql.types.StructType, cm: String,
+                            phys: Map[String, String], root: org.apache.hadoop.fs.Path,
+                            fs: org.apache.hadoop.fs.FileSystem, prefix: String, op: String,
+                            rowIdBase: Option[Long]): (Seq[String], Seq[Option[String]]) = {
+    val hconf = rows.sparkSession.sessionState.newHadoopConf()
+    val version = snap.version + 1
+    val partCols = snap.partCols.map(c => phys.getOrElse(c, c))
+    val idStatCols = IdentityColumns.advanceOf(table, phys)
+      .map(_.cols.map(_._2).toSet).getOrElse(Set.empty)
+    val statsColsPhys = DeltaStats.physicalStatsColumns(snap.configuration, Some(table))
+    val wtok = java.util.UUID.randomUUID().toString.take(8)
+    val stage = new org.apache.hadoop.fs.Path(root, s"_stage_${prefix}_${version}_$wtok")
+    locally {
+      val wdf = fieldIdStaged(stagePhysicalRows(rows, table, cm, phys, op))
+      if (partCols.isEmpty) wdf.write.parquet(stage.toString)
+      else wdf.write.partitionBy(partCols: _*).parquet(stage.toString)
+    }
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
+      }
+    val stageUri = stage.toUri.getPath.stripSuffix("/")
+    val om = jsonMapper
+    var nextRowId = rowIdBase
+    val added = walk(stage).sortBy(_.getPath.toString).zipWithIndex.map { case (st, i) =>
+      val rel0 = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
+      val relDir = rel0.split('/').dropRight(1).mkString("/")
+      val name = s"part-$prefix-$version-$wtok-$i.parquet"
+      val rel = if (relDir.isEmpty) name else s"$relDir/$name"
+      val stats = DeltaStats.fileStats(st.getPath, hconf,
+        DeltaStats.indexedColsOf(snap.configuration), idStatCols, statsColsPhys)
+      val dest = new org.apache.hadoop.fs.Path(root, DeltaReader.percentDecode(rel))
+      if (rel.contains("/")) fs.mkdirs(dest.getParent)
+      require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
+      val pvJson = relDir.split('/').filter(_.nonEmpty).map { seg =>
+        val eq = seg.indexOf('=')
+        require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
+        val c = seg.substring(0, eq)
+        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(seg.substring(eq + 1))
+        s"${om.writeValueAsString(c)}:${if (raw == "__HIVE_DEFAULT_PARTITION__") "null"
+          else om.writeValueAsString(raw)}"
+      }.mkString("{", ",", "}")
+      val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
+      val rtJson = nextRowId.map { base =>
+        val nr = stats.map(s => om.readTree(s).get("numRecords").asLong()).getOrElse(
+          throw new IllegalArgumentException(
+            s"$op rowTracking: staged file $rel produced no footer stats, " +
+              "so its row count is unknown — cannot assign baseRowId; refusing"))
+        nextRowId = Some(base + nr)
+        s""","baseRowId":$base,"defaultRowCommitVersion":$version"""
+      }.getOrElse("")
+      (s"""{"add":{"path":"${percentEncode(rel)}","partitionValues":$pvJson,"size":${st.getLen},"modificationTime":0,"dataChange":true$statsJson$rtJson}}""",
+        stats)
+    }
+    fs.delete(stage, true)
+    // consumed ids advance the watermark in the SAME atomic commit
+    val watermark = rowIdBase.map(base => RowTracking.watermarkAction(nextRowId.getOrElse(base) - 1))
+    (added.map(_._1) ++ watermark, added.map(_._2))
+  }
+
+  /** The DV family's commit (and RESTORE's): a commitInfo for
+    * `operation`, then `actions`, written create-if-absent at
+    * `snap.version + 1` through [[GraftLogStore.commitOrThrow]]. No
+    * OCC rebase, optimizeWrite or autoCompact (that is commitDelta's
+    * funnel); a lost race leaves this writer's sidecars and staged
+    * files as unreferenced debris, the same class as a failed writer's.
+    */
+  private def commitLog(spark: SparkSession, snap: DeltaReader.Snapshot,
+                        root: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
+                        operation: String, retryWhat: String, actions: Seq[String],
+                        crcReplaced: Seq[Long] = Nil): Unit = {
+    val version = snap.version + 1
+    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
+    fs.mkdirs(log)
+    val commitInfo = s"""{"commitInfo":{"timestamp":0,"operation":"$operation","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
+    GraftLogStore.commitOrThrow(spark, fs, new org.apache.hadoop.fs.Path(log, f"$version%020d.json"),
+      (commitInfo +: actions).mkString("\n").getBytes("UTF-8"),
+      s"a concurrent writer won version $version; re-read the table and retry the $retryWhat",
+      ictConf = snap.configuration, crcReplaced = crcReplaced)
+  }
+
   def deleteWhere(spark: SparkSession, dir: String, predicate: String): Seq[String] =
     deleteWhereWithSnapshot(spark, dir, predicate, DeltaReader.snapshot(spark, dir, None))
 
@@ -4251,26 +4373,8 @@ object LakeWriter {
     */
   private[graft] def deleteWhereWithSnapshot(spark: SparkSession, dir: String,
       predicate: String, snap: DeltaReader.Snapshot): Seq[String] = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"deleteWhere: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "deleteWhere: table declares delta.appendOnly=true — deletes are forbidden on it")
-    // same shape as the append gate: legacy writer versions pass when
-    // none of their non-delete obligations is declared (CHECK
-    // constraints and generated columns cannot be VIOLATED by removing
-    // rows, so only CDF — gated above — blocks legacy tables); v7
-    // tables must declare only features this rewrite preserves
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"deleteWhere: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
-
+    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
+    val cm = requireMutable(snap, "deleteWhere", removesRows = true)
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(hconf)
@@ -4283,16 +4387,8 @@ object LakeWriter {
     // rides into the distributed scan over the survivors
     val candidates = DeltaStats.prune(spark, snap.active, predicate, snap)
     val lineage = DeltaReader.scanFiles(spark, dir, snap, candidates, keepLineage = true)
-    val matchedPaths = lineage.where(pred).select("__dv_path").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (matchedPaths.isEmpty) return Nil
-
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"deleteWhere: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(snap, root, fs, lineage.where(pred), "deleteWhere")
+    if (affected.isEmpty) return Nil
 
     // job 2: rewrite ONLY the affected files' surviving rows (their
     // DVs already applied by the scan). NULL-predicate rows survive.
@@ -4326,9 +4422,7 @@ object LakeWriter {
           table, cm, phys, "deleteWhere")
         stageCdc(physCdc, dir, snap.version + 1, stagePartCols)
       }
-    val removes = affected.map { a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
+    val removes = affected.map(removeLine(_, dataChange = true))
     commitDelta(staged, dir, snap.version + 1, includeMeta = false,
       checkpointInterval = 0, partCols = stagePartCols,
       extraActions = removes ++ cdcActions, operation = "DELETE",
@@ -4517,26 +4611,13 @@ object LakeWriter {
   }
 
   def deleteWhereDv(spark: SparkSession, dir: String, predicate: String): Seq[String] = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.{expr, lit}
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"deleteWhereDv: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "deleteWhereDv: table declares delta.appendOnly=true — deletes are forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"deleteWhereDv: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
+    val cm = requireMutable(snap, "deleteWhereDv", removesRows = true)
 
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(hconf)
-    val pred = expr(predicate)
 
     // job 1: matching LIVE rows' (file, physical row index) — stats
     // skipping first (files whose envelope cannot match never open),
@@ -4544,11 +4625,9 @@ object LakeWriter {
     // is post-DV, so an already-deleted row can never re-match
     val candidates = DeltaStats.prune(spark, snap.active, predicate, snap)
     val lineage = DeltaReader.scanFiles(spark, dir, snap, candidates, keepLineage = true)
-    val matchedRows = lineage.where(pred)
-    val matched = matchedRows.select(col("__dv_path"), col("__dv_ridx"))
-    val matchedPaths = matched.select("__dv_path").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (matchedPaths.isEmpty) return Nil
+    val matchedRows = lineage.where(expr(predicate))
+    val affected = affectedFiles(snap, root, fs, matchedRows, "deleteWhereDv")
+    if (affected.isEmpty) return Nil
 
     // CDF: the newly-deleted rows are the commit's complete change data
     // (rows already dead under an existing DV never re-match — the
@@ -4561,55 +4640,15 @@ object LakeWriter {
         val phys = physNameMap(table, cm, "deleteWhereDv")
         val logCdc = matchedRows.select((table.fieldNames.map { c =>
           matchedRows.col(c)
-        } :+ org.apache.spark.sql.functions.lit("delete").as("_change_type")).toIndexedSeq: _*)
+        } :+ lit("delete").as("_change_type")).toIndexedSeq: _*)
         stageCdc(stagePhysicalRows(logCdc, table, cm, phys, "deleteWhereDv"),
           dir, snap.version + 1, snap.partCols.map(c => phys.getOrElse(c, c)))
       }
 
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"deleteWhereDv: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
-
-    // job 2: per-file bitmap = new matches ∪ the file's existing DV
-    // rows (a descriptor REPLACES its predecessor, so dropping the old
-    // rows would resurrect them); built, encoded AND written to
-    // sidecars on EXECUTORS — only descriptors reach the driver
-    val withDv = affected.filter(_.dv.isDefined)
-    val allDel =
-      if (withDv.isEmpty) matched
-      else matched.unionByName(DeltaReader.deletedRowsDf(spark, root, fs, withDv))
-    val placed = writeDvSidecars(spark, root, allDel)
-
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"DELETE","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
-    dvFeatureUpgrade(snap, cm).foreach(actions += _)
-    val ordered = affected.sortBy(_.path)
-    ordered.foreach { a =>
-      actions += s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
-    ordered.foreach { a =>
-      val pl = placed(absPath(a))
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
-    }
-    actions ++= cdcActions
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    fs.mkdirs(log)
-    val commit = new org.apache.hadoop.fs.Path(log, f"${snap.version + 1}%020d.json")
-    // same create-if-absent arbitration as commitDelta; a lost race
-    // leaves the sidecar as unreferenced debris (same class as a
-    // failed writer's staged files)
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version ${snap.version + 1}; re-read the table and retry the delete",
-      ictConf = snap.configuration)
+    // job 2: the bitmaps, built AND written to sidecars on executors
+    val dvActions = dvRewrite(spark, root, fs, affected, matchedRows)
+    commitLog(spark, snap, root, fs, "DELETE", "delete",
+      dvFeatureUpgrade(snap, cm).toSeq ++ dvActions ++ cdcActions)
     affected.map(_.path).sorted
   }
 
@@ -4649,22 +4688,10 @@ object LakeWriter {
     import org.apache.spark.sql.functions.{col, expr, lit}
     require(set.nonEmpty, "updateWhereDv: empty SET clause")
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"updateWhereDv: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "updateWhereDv: table declares delta.appendOnly=true — updates are forbidden")
+    val cm = requireMutable(snap, "updateWhereDv", removesRows = true)
     // row tracking: refuses only the half-configured shape (tracking
     // declared, watermark absent) — rowIdBase throws there
     val rowIdBase = RowTracking.rowIdBase(snap)
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"updateWhereDv: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
     val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     IdentityColumns.refuseUpdates(table, set.keySet, "updateWhereDv")
@@ -4676,22 +4703,13 @@ object LakeWriter {
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(hconf)
-    val pred = expr(predicate)
 
     // find phase: matching LIVE rows' (file, row index) + full columns
     val candidates = DeltaStats.prune(spark, snap.active, predicate, snap)
     val lineage = DeltaReader.scanFiles(spark, dir, snap, candidates, keepLineage = true)
-    val matchedRows = lineage.where(pred)
-    val matched = matchedRows.select(col("__dv_path"), col("__dv_ridx"))
-    val matchedPaths = matched.select("__dv_path").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (matchedPaths.isEmpty) return Nil
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"updateWhereDv: resolved ${affected.size} of ${matchedPaths.size} matched " +
-        "files back to log entries — path normalization bug, refusing to commit")
+    val matchedRows = lineage.where(expr(predicate))
+    val affected = affectedFiles(snap, root, fs, matchedRows, "updateWhereDv")
+    if (affected.isEmpty) return Nil
 
     // the updated rows — SET over the pre-update values, obligations
     // verified, CM physical naming, declared partition layout
@@ -4701,8 +4719,6 @@ object LakeWriter {
     }.toIndexedSeq: _*)
     val updated = enforceObligations(updated0, snap, table, "updateWhereDv")
     val phys = physNameMap(table, cm, "updateWhereDv")
-    val stagedDf = stagePhysicalRows(updated, table, cm, phys, "updateWhereDv")
-    val stagePartCols = snap.partCols.map(c => phys.getOrElse(c, c))
 
     // CDF: complete pre/post images of exactly the matched rows
     val cdcActions =
@@ -4713,106 +4729,14 @@ object LakeWriter {
             lit("update_preimage").as("_change_type")).toIndexedSeq: _*)
         val post = updated.withColumn("_change_type", lit("update_postimage"))
         stageCdc(stagePhysicalRows(pre.unionByName(post), table, cm, phys,
-          "updateWhereDv"), dir, snap.version + 1, stagePartCols)
+          "updateWhereDv"), dir, snap.version + 1, snap.partCols.map(c => phys.getOrElse(c, c)))
       }
 
-    // DV bitmaps: new matches ∪ each file's existing DV rows —
-    // executor-built AND executor-written ([[writeDvSidecars]]);
-    // descriptors only on the driver
-    val withDv = affected.filter(_.dv.isDefined)
-    val allDel =
-      if (withDv.isEmpty) matched
-      else matched.unionByName(DeltaReader.deletedRowsDf(spark, root, fs, withDv))
-    val placed = writeDvSidecars(spark, root, allDel)
-
-    // stage the updated rows as new data files (stageCdc's walk, into
-    // the table root, with footer stats like every add)
-    val version = snap.version + 1
-    // writer-unique stage dir AND rename token (see commitDelta's
-    // staging comment): the renamed part-updv names must not collide
-    // between two writers racing the same version either
-    val wtok = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new org.apache.hadoop.fs.Path(root, s"_stage_updv_${version}_$wtok")
-    locally {
-      val wdf = fieldIdStaged(stagedDf)
-      if (stagePartCols.isEmpty) wdf.write.parquet(stage.toString)
-      else wdf.write.partitionBy(stagePartCols: _*).parquet(stage.toString)
-    }
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
-      }
-    val stageUri = stage.toUri.getPath.stripSuffix("/")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val statsColsPhys = DeltaStats.physicalStatsColumns(
-      snap.configuration, Some(tableSchema(snap)))
-    // row tracking: the updated rows are NEW rows — fresh ids in the
-    // staged files' sorted order (commitDelta's discipline), watermark
-    // advanced atomically below
-    var nextRowId = rowIdBase
-    val newAdds = walk(stage).sortBy(_.getPath.toString).zipWithIndex.map {
-      case (st, i) =>
-        val rel0 = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-        val relDir = rel0.split('/').dropRight(1).mkString("/")
-        val name = s"part-updv-$version-$wtok-$i.parquet"
-        val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-        val stats = DeltaStats.fileStats(st.getPath, hconf,
-          DeltaStats.indexedColsOf(snap.configuration),
-          statsColumns = statsColsPhys)
-        val dest = new org.apache.hadoop.fs.Path(root, DeltaReader.percentDecode(rel))
-        if (rel.contains("/")) fs.mkdirs(dest.getParent)
-        require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
-        val pvJson = relDir.split('/').filter(_.nonEmpty).map { seg =>
-          val eq = seg.indexOf('=')
-          require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
-          val c = seg.substring(0, eq)
-          val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.substring(eq + 1))
-          s"${om.writeValueAsString(c)}:${if (raw == "__HIVE_DEFAULT_PARTITION__") "null"
-            else om.writeValueAsString(raw)}"
-        }.mkString("{", ",", "}")
-        val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-        val rtJson = nextRowId.map { base =>
-          val nr = stats.map(s => om.readTree(s).get("numRecords").asLong()).getOrElse(
-            throw new IllegalArgumentException(
-              s"updateWhereDv rowTracking: staged file $rel produced no footer stats, " +
-                "so its row count is unknown — cannot assign baseRowId; refusing"))
-          nextRowId = Some(base + nr)
-          s""","baseRowId":$base,"defaultRowCommitVersion":$version"""
-        }.getOrElse("")
-        s"""{"add":{"path":"${percentEncode(rel)}","partitionValues":$pvJson,"size":${fs.getFileStatus(dest).getLen},"modificationTime":0,"dataChange":true$statsJson$rtJson}}"""
-    }
-    fs.delete(stage, true)
-
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"UPDATE","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
-    dvFeatureUpgrade(snap, cm).foreach(actions += _)
-    val ordered = affected.sortBy(_.path)
-    ordered.foreach { a =>
-      actions += s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
-    ordered.foreach { a =>
-      val pl = placed(absPath(a))
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
-    }
-    actions ++= newAdds
-    // consumed ids → advance the watermark in the SAME atomic commit
-    rowIdBase.foreach { base =>
-      actions += RowTracking.watermarkAction(nextRowId.getOrElse(base) - 1)
-    }
-    actions ++= cdcActions
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    fs.mkdirs(log)
-    val commit = new org.apache.hadoop.fs.Path(log, f"$version%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version $version; re-read the table and retry the update",
-      ictConf = snap.configuration)
+    val dvActions = dvRewrite(spark, root, fs, affected, matchedRows)
+    val (newAdds, _) = stageNewFiles(updated, snap, table, cm, phys, root, fs, "updv",
+      "updateWhereDv", rowIdBase)
+    commitLog(spark, snap, root, fs, "UPDATE", "update",
+      dvFeatureUpgrade(snap, cm).toSeq ++ dvActions ++ newAdds ++ cdcActions)
     affected.map(_.path).sorted
   }
 
@@ -4850,22 +4774,10 @@ object LakeWriter {
     require(changes.columns.contains("_change_type"),
       "applyCdcDv: the batch must carry _change_type ('delete' or upsert)")
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"applyCdcDv: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "applyCdcDv: table declares delta.appendOnly=true — CDC deletes are forbidden")
+    val cm = requireMutable(snap, "applyCdcDv", removesRows = true)
     // row tracking: refuses only the half-configured shape (tracking
     // declared, watermark absent) — rowIdBase throws there
     val rowIdBase = RowTracking.rowIdBase(snap)
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"applyCdcDv: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
     val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val missing = table.fieldNames.filterNot(changes.columns.contains)
@@ -4883,7 +4795,6 @@ object LakeWriter {
 
     // find phase: live rows whose key appears in the batch — stats
     // prune by the batch's key range first, then the semi-join
-    val srcKeys = changes.select(keyCols.map(col): _*).distinct()
     val candidates =
       if (keyCols.size != 1) snap.active
       else {
@@ -4901,15 +4812,7 @@ object LakeWriter {
       table.fieldNames.filterNot(keyCols.contains).map(c => col(c).as(s"__s_$c")) :+
       col("_change_type").as("__op")).toIndexedSeq: _*)
     val joined = lineage.join(srcRen, keyCols.toSeq, "inner")
-    val matched = joined.select(col("__dv_path"), col("__dv_ridx"))
-    val matchedPaths = matched.select("__dv_path").distinct()
-      .collect().map(_.getString(0)).toSet
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"applyCdcDv: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(snap, root, fs, joined, "applyCdcDv")
 
     // the staged rows: updated versions of matched upserts + inserts
     // of unmatched non-deletes
@@ -4929,8 +4832,6 @@ object LakeWriter {
     if (affected.isEmpty && written.isEmpty) return Nil
 
     val phys = physNameMap(table, cm, "applyCdcDv")
-    val stagedDf = stagePhysicalRows(written, table, cm, phys, "applyCdcDv")
-    val stagePartCols = snap.partCols.map(c => phys.getOrElse(c, c))
 
     // CDF: deletes' preimages, updates' pre/post, inserts — complete
     val cdcActions =
@@ -4947,124 +4848,30 @@ object LakeWriter {
         stageCdc(stagePhysicalRows(
           delPre.unionByName(updPre).unionByName(updPost).unionByName(ins),
           table, cm, phys, "applyCdcDv"),
-          dir, snap.version + 1, stagePartCols)
+          dir, snap.version + 1, snap.partCols.map(c => phys.getOrElse(c, c)))
       }
 
-    // DV bitmaps over every matched row (update victims + deletes),
-    // unioned with existing DVs — executor-built AND executor-written
-    // ([[writeDvSidecars]]); an all-insert batch with no matches
-    // writes no sidecar (empty input → zero tasks emit)
-    val withDv = affected.filter(_.dv.isDefined)
-    val allDel =
-      if (withDv.isEmpty) matched
-      else matched.unionByName(DeltaReader.deletedRowsDf(spark, root, fs, withDv))
-    val placed = writeDvSidecars(spark, root, allDel)
-
-    // stage the new rows (updateWhereDv's walk)
-    val version = snap.version + 1
-    // identity watermark bounds must survive the stats cap here too
-    // (commitDelta's alwaysInclude handling): newWatermarks below
-    // refuses the commit when the identity column's bounds are absent
-    // and the file is not all-null, so a capped-away identity column
-    // would fail every CDC apply on a wide identity table
-    val idAdv = IdentityColumns.advanceOf(table, phys)
-    val idStatCols = idAdv.map(_.cols.map(_._2).toSet).getOrElse(Set.empty)
-    // writer-unique stage dir and rename token (commitDelta's comment)
-    val wtok = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new org.apache.hadoop.fs.Path(root, s"_stage_cdcdv_${version}_$wtok")
-    locally {
-      val wdf = fieldIdStaged(stagedDf)
-      if (stagePartCols.isEmpty) wdf.write.parquet(stage.toString)
-      else wdf.write.partitionBy(stagePartCols: _*).parquet(stage.toString)
-    }
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
-      }
-    val stageUri = stage.toUri.getPath.stripSuffix("/")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val newAddStats = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
-    val cdcStatsColsPhys = DeltaStats.physicalStatsColumns(
-      snap.configuration, Some(tableSchema(snap)))
-    // row tracking: staged rows (updates + inserts) are NEW rows —
-    // fresh ids in sorted file order, watermark advanced atomically
-    var nextRowId = rowIdBase
-    val newAdds = walk(stage).sortBy(_.getPath.toString).zipWithIndex.map {
-      case (st, i) =>
-        val rel0 = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-        val relDir = rel0.split('/').dropRight(1).mkString("/")
-        val name = s"part-cdc-$version-$wtok-$i.parquet"
-        val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-        val stats = DeltaStats.fileStats(st.getPath, hconf,
-          DeltaStats.indexedColsOf(snap.configuration), idStatCols,
-          cdcStatsColsPhys)
-        newAddStats += stats
-        val dest = new org.apache.hadoop.fs.Path(root, DeltaReader.percentDecode(rel))
-        if (rel.contains("/")) fs.mkdirs(dest.getParent)
-        require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
-        val pvJson = relDir.split('/').filter(_.nonEmpty).map { seg =>
-          val eq = seg.indexOf('=')
-          require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
-          val c = seg.substring(0, eq)
-          val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.substring(eq + 1))
-          s"${om.writeValueAsString(c)}:${if (raw == "__HIVE_DEFAULT_PARTITION__") "null"
-            else om.writeValueAsString(raw)}"
-        }.mkString("{", ",", "}")
-        val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-        val rtJson = nextRowId.map { base =>
-          val nr = stats.map(s => om.readTree(s).get("numRecords").asLong()).getOrElse(
-            throw new IllegalArgumentException(
-              s"applyCdcDv rowTracking: staged file $rel produced no footer stats, " +
-                "so its row count is unknown — cannot assign baseRowId; refusing"))
-          nextRowId = Some(base + nr)
-          s""","baseRowId":$base,"defaultRowCommitVersion":$version"""
-        }.getOrElse("")
-        s"""{"add":{"path":"${percentEncode(rel)}","partitionValues":$pvJson,"size":${fs.getFileStatus(dest).getLen},"modificationTime":0,"dataChange":true$statsJson$rtJson}}"""
-    }
-    fs.delete(stage, true)
-
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"MERGE","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
+    // DV bitmaps over every matched row (update victims + deletes); an
+    // all-insert batch with no matches writes no sidecar
+    val dvActions = dvRewrite(spark, root, fs, affected, joined)
+    val (newAdds, newAddStats) = stageNewFiles(written, snap, table, cm, phys, root, fs,
+      "cdc", "applyCdcDv", rowIdBase)
     // identity tables: the change stream's values land VERBATIM
     // (replication semantics — the source minted them), but the
     // watermark still advances past them in the same commit so a
     // replica taking direct appends later never re-mints an id
-    idAdv.foreach { adv =>
-      val wm = IdentityColumns.newWatermarks(adv, newAddStats.toSeq, "applyCdcDv")
-      if (wm.nonEmpty) actions += IdentityColumns.patchMetaLine(
-        metaLineFor(dir, snap, table, snap.configuration), wm)
+    val idMeta = IdentityColumns.advanceOf(table, phys).flatMap { adv =>
+      val wm = IdentityColumns.newWatermarks(adv, newAddStats, "applyCdcDv")
+      if (wm.isEmpty) None
+      else Some(IdentityColumns.patchMetaLine(
+        metaLineFor(dir, snap, table, snap.configuration), wm))
     }
-    if (placed.nonEmpty) dvFeatureUpgrade(snap, cm).foreach(actions += _)
-    txn.foreach { case (appId, v) =>
-      actions += s"""{"txn":{"appId":${om.writeValueAsString(appId)},"version":$v}}"""
+    val txnLine = txn.map { case (appId, v) =>
+      s"""{"txn":{"appId":${jsonMapper.writeValueAsString(appId)},"version":$v}}"""
     }
-    val ordered = affected.sortBy(_.path)
-    ordered.foreach { a =>
-      actions += s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
-    ordered.foreach { a =>
-      val pl = placed(absPath(a))
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
-    }
-    actions ++= newAdds
-    // consumed ids → advance the watermark in the SAME atomic commit
-    rowIdBase.foreach { base =>
-      actions += RowTracking.watermarkAction(nextRowId.getOrElse(base) - 1)
-    }
-    actions ++= cdcActions
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    fs.mkdirs(log)
-    val commit = new org.apache.hadoop.fs.Path(log, f"$version%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version $version; re-read the table and retry the CDC apply",
-      ictConf = snap.configuration)
+    commitLog(spark, snap, root, fs, "MERGE", "CDC apply",
+      idMeta.toSeq ++ (if (affected.isEmpty) None else dvFeatureUpgrade(snap, cm)) ++
+        txnLine ++ dvActions ++ newAdds ++ cdcActions)
     affected.map(_.path).sorted
   }
 
@@ -5191,20 +4998,7 @@ object LakeWriter {
       }
     }
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"mergeIntoClauses: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "mergeIntoClauses: table declares delta.appendOnly=true — merges rewrite rows; " +
-        "refusing")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"mergeIntoClauses: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
+    val cm = requireMutable(snap, "mergeIntoClauses", removesRows = true)
     val table0 = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     // WITH SCHEMA EVOLUTION: source columns the table lacks become new
@@ -5321,8 +5115,6 @@ object LakeWriter {
     val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(hconf)
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
 
     val srcKeys = keyAgg.select(keyCols.map(col): _*)
     // BY SOURCE clauses inspect every live target row — the whole
@@ -5345,13 +5137,8 @@ object LakeWriter {
           }
         val lineage = DeltaReader.scanFiles(spark, dir, snap, keyCandidates,
           keepLineage = true)
-        val matchedPaths = lineage.join(srcKeys, keyCols, "left_semi")
-          .select("__dv_path").distinct().collect().map(_.getString(0)).toSet
-        val got = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-        require(got.size == matchedPaths.size,
-          s"mergeIntoClauses: resolved ${got.size} of ${matchedPaths.size} matched " +
-            "files back to log entries — path normalization bug, refusing to commit")
-        got
+        affectedFiles(snap, root, fs, lineage.join(srcKeys, keyCols, "left_semi"),
+          "mergeIntoClauses")
       }
     // a merge that touches no file and can insert nothing writes NO commit
     // source emptiness falls out of the fused aggregate when it ran
@@ -5543,9 +5330,7 @@ object LakeWriter {
           .getOrElse(Nil)
       }
     val removesFiles = if (rewriteNeeded) affected else Nil
-    val removes = removesFiles.map { a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
+    val removes = removesFiles.map(removeLine(_, dataChange = true))
     commitDelta(staged, dir, snap.version + 1, includeMeta = schemaGrew,
       checkpointInterval = 0, partCols = stagePartCols, txn = txn,
       metaOverride =
@@ -5588,19 +5373,7 @@ object LakeWriter {
       snap: DeltaReader.Snapshot): Seq[String] = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, when}
     require(set.nonEmpty, "updateWhere: empty SET clause")
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"updateWhere: unknown column mapping mode '$cm'")
-    require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "updateWhere: table declares delta.appendOnly=true — updates are forbidden on it")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(snap)
-    val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"updateWhere: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
+    val cm = requireMutable(snap, "updateWhere", removesRows = true)
     val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     // CHECK constraints / invariants / generated columns are VERIFIED
@@ -5618,16 +5391,8 @@ object LakeWriter {
 
     val candidates = DeltaStats.prune(spark, snap.active, predicate, snap)
     val lineage = DeltaReader.scanFiles(spark, dir, snap, candidates, keepLineage = true)
-    val matchedPaths = lineage.where(pred).select("__dv_path").distinct()
-      .collect().map(_.getString(0)).toSet
-    if (matchedPaths.isEmpty) return Nil
-
-    def absPath(a: DeltaReader.AddFile): String =
-      fs.makeQualified(DeltaReader.resolveAddPath(root, a.path)).toUri.getPath
-    val affected = snap.active.filter(a => matchedPaths.contains(absPath(a)))
-    require(affected.size == matchedPaths.size,
-      s"updateWhere: resolved ${affected.size} of ${matchedPaths.size} matched files " +
-        "back to log entries — path normalization bug, refusing to commit")
+    val affected = affectedFiles(snap, root, fs, lineage.where(pred), "updateWhere")
+    if (affected.isEmpty) return Nil
 
     // rewrite the affected files: matching rows get the SET expressions
     // (evaluated against the PRE-update row, all at once — a SET that
@@ -5669,9 +5434,7 @@ object LakeWriter {
         stageCdc(stagePhysicalRows(pre.unionByName(post), table, cm, phys,
           "updateWhere"), dir, snap.version + 1, stagePartCols)
       }
-    val removes = affected.map { a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
+    val removes = affected.map(removeLine(_, dataChange = true))
     commitDelta(staged, dir, snap.version + 1, includeMeta = false,
       checkpointInterval = 0, partCols = stagePartCols,
       extraActions = removes ++ cdcActions, operation = "UPDATE",
@@ -6223,9 +5986,7 @@ object LakeWriter {
     // so staging is the last projection before the commit
     val physC = physNameMap(table, cmMode, op)
     val stagedPhys = stagePhysicalRows(staged, table, cmMode, physC, op)
-    val removes = active.sortBy(_.path).map { a =>
-      s"""{"remove":{"path":"${a.path}","deletionTimestamp":0,"size":${a.size},"dataChange":false}}"""
-    }
+    val removes = active.sortBy(_.path).map(removeLine(_, dataChange = false))
     commitDelta(stagedPhys, dir, snap.version + 1, includeMeta = false,
       checkpointInterval = 0, partCols = snap.partCols.map(c => physC.getOrElse(c, c)),
       extraActions = removes, addDataChange = false, operation = "OPTIMIZE",
@@ -6313,20 +6074,11 @@ object LakeWriter {
     require(versionAsOf >= 0 && versionAsOf <= cur.version,
       s"restoreDelta: version $versionAsOf outside [0, ${cur.version}]")
     val old = DeltaReader.snapshot(spark, dir, Some(versionAsOf))
-    require(cur.configuration.getOrElse("delta.appendOnly", "false") != "true",
-      "restoreDelta: table declares delta.appendOnly=true — a restore tombstones " +
-        "files added since the target version; refusing")
+    // a restore tombstones files added since the target version
+    requireMutable(cur, "restoreDelta", removesRows = true)
     require(!cur.configuration.get("delta.enableChangeDataFeed").contains("true"),
       "restoreDelta: table enables Change Data Feed — a restore must write change " +
         "data files this writer does not produce; refusing to break CDF readers")
-    val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
-      "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++ RowTracking.safeExtra(cur)
-    val unsafe = cur.writerFeatures.filterNot(safeFeatures)
-    require(cur.minWriter <= 5 || (cur.minWriter == 7 && unsafe.isEmpty),
-      s"restoreDelta: table requires writer version ${cur.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a mutation whose obligations this writer cannot honor")
     // metadata must agree: RESTORE across a schema/partitioning/config
     // change would have to re-emit the old metaData action, silently
     // undoing a deliberate evolution — refuse and make the caller
@@ -6380,22 +6132,12 @@ object LakeWriter {
         s""""pathOrInlineDv":${om.writeValueAsString(d.pathOrInlineDv)},$off""" +
         s""""sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
     }
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"RESTORE","operationParameters":{},"readVersion":${cur.version},"engineInfo":"graft"}}"""
-    removes.sortBy(_.path).foreach { a =>
-      actions += s"""{"remove":{"path":${om.writeValueAsString(a.path)},"deletionTimestamp":0,"size":${a.size},"dataChange":true}}"""
-    }
-    readds.sortBy(_.path).foreach { a =>
+    val readdLines = readds.sortBy(_.path).map { a =>
       val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":${pvJson(a)},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${a.dv.map(dvJson).getOrElse("")}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
+      s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":${pvJson(a)},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${a.dv.map(dvJson).getOrElse("")}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
     }
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    fs.mkdirs(log)
-    val commit = new org.apache.hadoop.fs.Path(log, f"${cur.version + 1}%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version ${cur.version + 1}; re-read the table and retry the restore",
-      ictConf = cur.configuration,
+    commitLog(spark, cur, root, fs, "RESTORE", "restore",
+      removes.sortBy(_.path).map(removeLine(_, dataChange = true)) ++ readdLines,
       // a re-add whose path is STILL live (DV descriptor differs)
       // replaces that entry rather than growing the live set
       crcReplaced = readds.flatMap(a => curByPath.get(a.path).map(_.size)))

@@ -4,7 +4,8 @@ import graft.sources.{DeltaReader, LakeWriter, MergeClause, MergeDelete, MergeIn
 
 /** Model-based randomized test of the Delta mutation surface: a seeded
   * random sequence of append / copy-on-write delete / DV delete /
-  * update / merge / clause-merge (CDC apply) / full overwrite /
+  * update / merge / clause-merge (CDC apply) / merge-on-read CDC
+  * apply (applyCdcDv) / full overwrite /
   * REPLACE WHERE / restore / compact / z-order / REORG PURGE /
   * cluster-declare + incremental OPTIMIZE / CLUSTER BY NONE /
   * checkpoint / delta.feature.* declaration (incl. v2Checkpoints,
@@ -62,7 +63,7 @@ class DeltaModelSpec extends SparkSpec {
     var cloneCount = 0
     (1 to ops).foreach { _ =>
       val before = version
-      rnd.nextInt(23) match {
+      rnd.nextInt(24) match {
         case 0 => // append fresh rows
           val rows = freshIds(1 + rnd.nextInt(4)).map(i => i -> s"v$i")
           LakeWriter.appendDelta(df(rows), dir)
@@ -192,6 +193,22 @@ class DeltaModelSpec extends SparkSpec {
           if (snapR.configuration.getOrElse("delta.columnMapping.mode", "none") != "none")
             LakeWriter.removeColumnMapping(spark, dir)
           else LakeWriter.compactDelta(spark, dir, minFiles = 2)
+        case 23 => // merge-on-read CDC apply: a key-unique batch of deletes
+          // (one for a key never written — a no-op) and upserts of
+          // existing and fresh keys
+          val keys = rnd.shuffle(model.keys.toSeq)
+          val dels = (keys.take(rnd.nextInt(3)) ++ freshIds(rnd.nextInt(2)))
+            .map(i => (i, s"x$i", "delete"))
+          val upds = keys.drop(2).take(rnd.nextInt(3)).map(i => (i, s"a$i", "update_postimage"))
+          val ins = freshIds(rnd.nextInt(3)).map(i => (i, s"a$i", "insert"))
+          val changes = dels ++ upds ++ ins
+          if (changes.nonEmpty) {
+            val s0 = spark
+            import s0.implicits._
+            LakeWriter.applyCdcDv(spark, dir,
+              changes.toDF("id", "v", "_change_type").coalesce(1), Seq("id"))
+            model = model -- dels.map(_._1) ++ (upds ++ ins).map(c => c._1 -> c._2)
+          }
         case _ => // shallow clone: the fork must equal the model NOW
           cloneCount += 1
           val cl = tmp(s"graft_model_cl_${seed}_${cloneCount}_") + "/t"

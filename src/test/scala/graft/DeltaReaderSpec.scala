@@ -730,22 +730,27 @@ class DeltaReaderSpec extends SparkSpec {
       (0L until 1000L).toSet)
   }
 
+  /** A version-0 table of two one-row files (ids 1 and 2) under
+    * `protocol` and the given configuration JSON object.
+    */
+  private def mkTwoFileTable(protocol: String,
+                             configuration: String = "{}"): (java.io.File, java.io.File) = {
+    val om = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+    val (dir, log) = mkTable()
+    val f1 = part(dir, "part-0001.parquet", Seq((1L, "a")))
+    val f2 = part(dir, "part-0002.parquet", Seq((2L, "b")))
+    commit(log, 0, Seq(
+      protocol,
+      s"""{"metaData":{"id":"cg","format":{"provider":"parquet","options":{}},"schemaString":${
+        om.writeValueAsString(dataSchema.json)},"partitionColumns":[],"configuration":$configuration}}""",
+      s"""{"add":{"path":"$f1","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}""",
+      s"""{"add":{"path":"$f2","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
+    (dir, log)
+  }
+
   test("compactDelta applies the same writer gate as appendDelta") {
     val s = spark
     import s.implicits._
-    val om = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
-    def mkTwoFileTable(protocol: String): (java.io.File, java.io.File) = {
-      val (dir, log) = mkTable()
-      val f1 = part(dir, "part-0001.parquet", Seq((1L, "a")))
-      val f2 = part(dir, "part-0002.parquet", Seq((2L, "b")))
-      commit(log, 0, Seq(
-        protocol,
-        s"""{"metaData":{"id":"cg","format":{"provider":"parquet","options":{}},"schemaString":${
-          om.writeValueAsString(dataSchema.json)},"partitionColumns":[],"configuration":{}}}""",
-        s"""{"add":{"path":"$f1","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}""",
-        s"""{"add":{"path":"$f2","partitionValues":{},"size":1,"modificationTime":1,"dataChange":true}}"""))
-      (dir, log)
-    }
     // v7 with a feature whose contract a rewrite cannot honor
     // (rowTracking requires baseRowId on every add action)
     val (dir1, log1) = mkTwoFileTable(
@@ -782,6 +787,50 @@ class DeltaReaderSpec extends SparkSpec {
     assert(DeltaReader.read(spark, dir3.getPath)
       .select("id", "v").as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (2L, "b")))
+  }
+
+  test("every row-level writer applies the one writer gate; row-removing ops refuse appendOnly") {
+    val s = spark
+    import s.implicits._
+    import graft.sources.{MergeClause, MergeInsertAll, MergeUpdateAll}
+    def batch = Seq((3L, "c")).toDF("id", "v")
+    // entry point -> the op name its refusal must carry, and whether it
+    // removes rows (those also refuse delta.appendOnly=true tables)
+    val ops: Seq[(String, Boolean, String => Unit)] = Seq(
+      ("appendDelta", false, d => LakeWriter.appendDelta(batch, d)),
+      ("appendDeltaEvolve", false, d => LakeWriter.appendDeltaEvolve(batch, d)),
+      ("overwriteDelta", true, d => LakeWriter.overwriteDelta(batch, d)),
+      ("overwriteWhere", true, d => LakeWriter.overwriteWhere(batch, d, "id = 3")),
+      ("deleteWhere", true, d => LakeWriter.deleteWhere(spark, d, "id = 1")),
+      ("deleteWhereDv", true, d => LakeWriter.deleteWhereDv(spark, d, "id = 1")),
+      ("updateWhere", true, d => LakeWriter.updateWhere(spark, d, "id = 1", Map("v" -> "'z'"))),
+      ("updateWhereDv", true, d => LakeWriter.updateWhereDv(spark, d, "id = 1", Map("v" -> "'z'"))),
+      ("applyCdcDv", true, d => LakeWriter.applyCdcDv(spark, d,
+        Seq((1L, "z", "update_postimage")).toDF("id", "v", "_change_type"), Seq("id"))),
+      ("mergeIntoClauses", true, d => LakeWriter.mergeIntoClauses(spark, d,
+        Seq((1L, "z")).toDF("id", "v"), Seq("id"),
+        matched = Seq(MergeClause(None, MergeUpdateAll)),
+        notMatched = Seq(MergeClause(None, MergeInsertAll)))),
+      ("restoreDelta", true, d => LakeWriter.restoreDelta(spark, d, 0L)))
+    def refused(name: String, run: String => Unit, protocol: String,
+                configuration: String, expect: String): Unit = {
+      val (dir, log) = mkTwoFileTable(protocol, configuration)
+      val e = intercept[IllegalArgumentException](run(dir.getPath))
+      assert(e.getMessage.contains(s"$name:") && e.getMessage.contains(expect),
+        s"$name: ${e.getMessage}")
+      assert(log.listFiles().map(_.getName).toSet == Set(f"${0L}%020d.json"),
+        s"$name: a refused write must leave no new log file")
+    }
+    ops.foreach { case (name, removesRows, run) =>
+      refused(name, run, """{"protocol":{"minReaderVersion":1,"minWriterVersion":6}}""",
+        "{}", "writer version 6")
+      refused(name, run,
+        """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["appendOnly","someFutureWriterFeature"]}}""",
+        "{}", "writer version 7")
+      if (removesRows)
+        refused(name, run, """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+          """{"delta.appendOnly":"true"}""", "delta.appendOnly=true")
+    }
   }
 
   test("column-mapping remap survives a physical/logical name swap") {
