@@ -25,6 +25,10 @@ def main():
     fails = 0
     for name, sql in sorted(oracle.items()):
         parts = glob.glob(f"{outdir}/{name}/*.parquet")
+        if not parts:
+            fails += 1
+            print(f"ERROR {name}: no result parquet")
+            continue
         mine = pd.concat([pd.read_parquet(p) for p in parts], ignore_index=True)
         ref = con.sql(sql).df()
         a, b = norm(mine), norm(ref)
@@ -37,6 +41,8 @@ def main():
                     i = d.idxmax()
                     print("  mine:", a.iloc[i].to_dict())
                     print("  ref :", b.iloc[i].to_dict())
+        else:
+            print(f"OK   {name} ({len(a)} rows)")
     print(f"{len(oracle)-fails}/{len(oracle)} strict pass")
 
 if __name__ == "__main__":

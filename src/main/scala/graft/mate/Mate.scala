@@ -9,12 +9,16 @@ import org.apache.spark.sql.functions._
   * (reference: maco/mate.py:125 join_search).
   *
   * Spark-first redesign: the reference's driver-side heap + per-table
-  * pruning loop becomes a declarative plan — token-match join on the
-  * first query column, native 128-bit super-key containment pre-filter
-  * (two long compares, maco/mate.py:393), then exact per-column
-  * verification joins and a global top-k. At scale the exact-k heap is
-  * the part that cannot distribute; the joins can, so we compute all
-  * candidate scores shuffle-parallel and `ORDER BY score LIMIT k`.
+  * pruning loop becomes one lazy declarative plan with two scans of the
+  * cell index and no eager checkpoint — token-match join on the first
+  * query column against one broadcast of the prepared input (carrying
+  * every query token), native 128-bit super-key containment pre-filter
+  * (two long compares, maco/mate.py:393), then one exact verification
+  * pass for all further columns (index cells semi-joined with the
+  * broadcast further tokens, joined to the candidate rows, one grouped
+  * aggregate) and a global top-k. At scale the exact-k heap is the part
+  * that cannot distribute; the joins can, so we compute all candidate
+  * scores shuffle-parallel and `ORDER BY score LIMIT k`.
   *
   * Determinism (SURVEY.md §3): input row ids are `min(rowId)` per
   * distinct raw query-tuple (the reference keeps pandas' first
@@ -61,18 +65,21 @@ object Mate {
   /** All verified candidate matches: (tableid, rowid, MateRowID,
     * columns) where `columns` is the matched-column-combination string
     * (first-column colid, then ascending matched colids per further
-    * query column — maco/mate.py:113 evaluate_rows).
+    * query column — maco/mate.py:113 evaluate_rows). One row per
+    * candidate cell (a row holding the first token in two columns gives
+    * two rows), as long as the index holds each (tableid, rowid, colid)
+    * once — duplicate cells are out of contract. Lazy: no Spark job runs
+    * until the result is used.
     */
   def matches(input: DataFrame, rowId: Column, queryCols: Seq[String], cells: DataFrame,
               rowHash: Column => Column = graft.functions.XashKernel.superKeyCol): DataFrame = {
     val prep = prepare(input, rowId, queryCols, rowHash)
-    val q0 = broadcast(prep.select(col("MateRowID"), col("tok_0"), col("q_hi"), col("q_lo")))
+    val q = broadcast(prep)
     val cand = cells
-      .join(q0, cells("tokenized") === q0("tok_0"))
+      .join(q, cells("tokenized") === q("tok_0"))
       // hash pre-filter: no false negatives, exact verification follows
       .where(Xash.contains(col("sk_hi"), col("sk_lo"), col("q_hi"), col("q_lo")))
-      .select(col("tableid"), col("rowid"), col("colid").as("c0"), col("MateRowID"))
-    verifyAndCombine(cand, prep, queryCols, cells)
+    verify(cand, prep, queryCols.length, cells)
   }
 
   /** [[matches]] over a word-array index ([[graft.index.LakeIndexer
@@ -86,15 +93,13 @@ object Mate {
                    cellsW: DataFrame, hashSize: Int): DataFrame = {
     import graft.functions.XashKernel
     val n = queryCols.length
-    val prepBase = prepareToks(input, rowId, queryCols)
-    val prep = prepBase.withColumn("q_sk",
+    val prep = prepareToks(input, rowId, queryCols).withColumn("q_sk",
       XashKernel.superKeyWordsCol(array((0 until n).map(i => col(s"tok_$i")): _*), hashSize))
-    val q0 = broadcast(prep.select(col("MateRowID"), col("tok_0"), col("q_sk")))
+    val q = broadcast(prep)
     val cand = cellsW
-      .join(q0, cellsW("tokenized") === q0("tok_0"))
+      .join(q, cellsW("tokenized") === q("tok_0"))
       .where(XashKernel.containsWordsCol(col("sk"), col("q_sk")))
-      .select(col("tableid"), col("rowid"), col("colid").as("c0"), col("MateRowID"))
-    verifyAndCombine(cand, prep, queryCols, cellsW)
+    verify(cand, prep, n, cellsW)
   }
 
   /** Top-k search over a word-array index at any XASH width. */
@@ -102,59 +107,35 @@ object Mate {
                    cellsW: DataFrame, k: Int, hashSize: Int): DataFrame =
     topkOf(matchesWords(input, rowId, queryCols, cellsW, hashSize), k)
 
-  /** Exact per-column verification joins + matched-column combo string —
-    * shared tail of every prefilter variant. `cells` only needs
-    * (tableid, rowid, colid, tokenized).
+  /** Exact verification of the further query columns + matched-column
+    * combo string — shared tail of every prefilter variant. `cand` is the
+    * prefiltered first-token join (cells ⋈ the broadcast `prep`, so it
+    * carries every query token); `cells` only needs (tableid, rowid,
+    * colid, tokenized). The verification scan keeps only cells holding
+    * some further query token (a broadcast semi-join inside the plan),
+    * one join brings them to their candidate rows and one aggregate
+    * collects, per candidate cell, the columns holding each token.
     */
-  private def verifyAndCombine(cand0: DataFrame, prep: DataFrame,
-                               queryCols: Seq[String], cells: DataFrame): DataFrame = {
-    // multi-column searches consume the candidate join twice (the
-    // candidate-key set below and the verification chain's base) — and
-    // that join is a full scan of the cell index, the single most
-    // expensive subplan of a search. Materialize it once; single-column
-    // searches consume it once and skip the checkpoint.
-    val cand = if (queryCols.length > 1) cand0.localCheckpoint(true) else cand0
-    var cur = cand
-    if (queryCols.length > 1) {
-      // materialized ONCE via eager localCheckpoint — consumed once per
-      // extra query column PLUS the eager bloom build below; uncached,
-      // each consumer would re-run the token-match candidate join.
-      // localCheckpoint over cache() because this frame is internal to
-      // one search call: its blocks are freed by the ContextCleaner as
-      // soon as the plan is unreachable, where a cache() with no
-      // unpersist hook (consumers execute lazily, after this method
-      // returns) would pin executor storage for the session's lifetime.
-      // Caveat: lineage is truncated, so an executor loss mid-query
-      // fails the query instead of recomputing — acceptable for an
-      // interactive search; retry re-runs the search.
-      val candKeys = cand.select("tableid", "rowid", "MateRowID").distinct()
-        .localCheckpoint(true)
-      // Bloom-prune the per-column verification scans: each extra query
-      // column re-joins the FULL cell index against the (much smaller)
-      // candidate-row set — build one bloom over the candidate
-      // (tableid, rowid) keys and drop non-candidate cells BEFORE their
-      // shuffle. False positives just reach the exact join; no false
-      // negatives. At lake scale this turns #queryCols full-index
-      // shuffles into broadcast-bitset scans.
-      val rowKeys = candKeys.select("tableid", "rowid").distinct()
-      val prunedCells = graft.ops.BloomPrune.semiFilterMulti(
-        cells.select("tableid", "rowid", "colid", "tokenized"), rowKeys,
-        Seq("tableid", "rowid"), Seq("tableid", "rowid"))
-      for (i <- 1 until queryCols.length) {
-        val qi = broadcast(prep.select(col("MateRowID"), col(s"tok_$i")))
-        val mi = prunedCells
-          .join(candKeys, Seq("tableid", "rowid"))
-          .join(qi, Seq("MateRowID"))
-          .where(col("tokenized") === col(s"tok_$i"))
-          .groupBy("tableid", "rowid", "MateRowID")
-          .agg(concat_ws("_",
-            transform(array_sort(collect_set(col("colid"))), _.cast("string"))).as(s"m_$i"))
-        cur = cur.join(mi, Seq("tableid", "rowid", "MateRowID"))
-      }
+  private def verify(cand0: DataFrame, prep: DataFrame, n: Int, cells: DataFrame): DataFrame = {
+    val further = 1 until n
+    val cand = cand0.select((Seq(col("tableid"), col("rowid"), col("MateRowID"),
+      col("colid").as("c0")) ++ further.map(i => col(s"tok_$i"))): _*)
+    val verified = if (further.isEmpty) cand else {
+      val toks = broadcast(prep.select(
+        explode(array(further.map(i => col(s"tok_$i")): _*)).as("__tok")))
+      val hits = cells.select("tableid", "rowid", "colid", "tokenized")
+        .join(toks, col("tokenized") === toks("__tok"), "left_semi")
+      val isTok = further.map(i => col("tokenized") === col(s"tok_$i"))
+      val sets = further.map(i => collect_set(when(isTok(i - 1), col("colid"))).as(s"m_$i"))
+      cand.join(hits, Seq("tableid", "rowid"))
+        .where(isTok.reduce(_ || _))
+        .groupBy("tableid", "rowid", "MateRowID", "c0")
+        .agg(sets.head, sets.tail: _*)
+        .where(further.map(i => size(col(s"m_$i")) > 0).reduce(_ && _))
     }
-    val combo = concat_ws("_",
-      (col("c0").cast("string") +: (1 until queryCols.length).map(i => col(s"m_$i"))): _*)
-    cur.select(col("tableid"), col("rowid"), col("MateRowID"), combo.as("columns"))
+    val combo = concat_ws("_", col("c0").cast("string") +: further.map(i =>
+      concat_ws("_", transform(array_sort(col(s"m_$i")), _.cast("string")))): _*)
+    verified.select(col("tableid"), col("rowid"), col("MateRowID"), combo.as("columns"))
   }
 
   /** Top-k joinable tables: (tableid, columns, joinability). */
@@ -202,22 +183,28 @@ object Mate {
 
   /** Top-k result AND its join maps off one cached match set.
     *
-    * The top-k frame is materialized to a k-row LOCAL relation (k is a
-    * user constant — this is a bounded driver collect at any lake
-    * scale): every downstream consumer broadcasts it — the map
-    * projection here, COCOA's candidate-table and excluded-column
-    * filters — and as a local relation those broadcasts are free
-    * instead of each re-executing the score+topk subplan.
+    * The top-k frame is collected (k is a user constant — this is a
+    * bounded driver collect at any lake scale) and re-parallelized as a
+    * one-partition RDD relation: every downstream consumer broadcasts it
+    * — the map projection here, COCOA's candidate-table and
+    * excluded-column filters — and each such broadcast runs a one-task
+    * job over the k collected rows instead of re-executing the
+    * score+topk subplan.
     */
   def searchAndMaps(input: DataFrame, rowId: Column, queryCols: Seq[String],
                     cells: DataFrame, k: Int): (DataFrame, DataFrame) =
-    // localCheckpoint over cache() for the same reason as candKeys in
-    // verifyAndCombine: this frame is returned with no unpersist hook,
-    // and a cache() would pin executor storage for the session's
-    // lifetime; checkpoint blocks are GC-freed once unreachable
+    // localCheckpoint over cache(): this frame is returned with no
+    // unpersist hook, and a cache() would pin executor storage for the
+    // session's lifetime; checkpoint blocks are GC-freed once
+    // unreachable. Caveat: lineage is truncated, so an executor loss
+    // mid-query fails the query instead of recomputing — acceptable for
+    // an interactive search; retry re-runs the search.
     searchAndMapsOf(matches(input, rowId, queryCols, cells).localCheckpoint(true), k)
 
-  /** [[searchAndMaps]] over an already-materialized match set. */
+  /** [[searchAndMaps]] over an already-materialized match set. `top` is
+    * the collected top-k as a one-partition RDD relation (see
+    * [[searchAndMaps]]).
+    */
   def searchAndMapsOf(matched: DataFrame, k: Int): (DataFrame, DataFrame) = {
     val spark = matched.sparkSession
     val topKDf = topkOf(matched, k)

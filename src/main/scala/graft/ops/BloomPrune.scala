@@ -28,7 +28,10 @@ object BloomPrune {
 
   /** Composite-key form: the filter is built over
     * `xxhash64(smallKeys*)` and probed with `xxhash64(bigKeys*)` —
-    * e.g. MATE's (tableid, rowid) candidate keys.
+    * e.g. a (tableid, rowid) row-key set. Building the filter is an
+    * eager aggregate job and embeds the serialized bits as a literal in
+    * the plan; where the small side is a cheap broadcast, an in-plan
+    * broadcast semi-join prunes lazily instead (MATE's verification).
     */
   def semiFilterMulti(big: DataFrame, small: DataFrame,
                       bigKeys: Seq[String], smallKeys: Seq[String],

@@ -1,8 +1,14 @@
 package graft
 
+import graft.functions.TextFunctions
 import graft.index.{LakeIndexer, LakeTable}
 import graft.mate.Mate
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** MATE on a hand-built toy lake where the expected ranking is obvious. */
 class MateSpec extends SparkSpec {
@@ -102,5 +108,154 @@ class MateSpec extends SparkSpec {
       .orderBy("rowid")
       .collect().map(r => (r.getInt(0), r.getLong(2), r.getLong(3)))
     assert(jm.toSeq == Seq((1, 0L, 100L), (1, 1L, 101L), (1, 2L, 102L)))
+  }
+
+  /** A 12-column table (colids 0-11) and a narrow one. Wide row 1 holds
+    * its first token in two columns, row 2 a token in two columns that a
+    * request repeats as a further token, rows 0 and 4 a further token in
+    * two columns (`2_11` must sort numerically).
+    */
+  private def fixtureTables: Seq[LakeTable] = {
+    val s = spark
+    import s.implicits._
+    def wide(k: Int, at: (Int, String)*) = Row.fromSeq(k.toString +:
+      (1 to 11).map(i => at.toMap.getOrElse(i, s"w${k}c$i")))
+    val wideRows = Seq(
+      wide(0, 1 -> "berlin", 2 -> "gold", 3 -> "x10", 11 -> "gold"),
+      wide(1, 1 -> "paris", 5 -> "paris", 2 -> "gold", 3 -> "x20"),
+      wide(2, 1 -> "rome", 4 -> "rome", 2 -> "silver", 3 -> "x30"),
+      wide(3, 1 -> "oslo", 2 -> "none", 3 -> "x40"),
+      wide(4, 1 -> "lima", 10 -> "gold", 11 -> "gold", 3 -> "x99"),
+      wide(5, 1 -> "berlin", 2 -> "silver", 3 -> "x10"))
+    val wideSchema = StructType(("k" +: (1 to 11).map(i => s"c$i")).map(StructField(_, StringType)))
+    val wideDf = s.createDataFrame(s.sparkContext.parallelize(wideRows, 1), wideSchema)
+    val narrow = Seq((0L, "berlin", "gold"), (1L, "paris", "silver"), (2L, "rome", "rome"),
+      (3L, "lima", "Gold")).toDF("k", "city", "seg")
+    Seq(LakeTable(1, "wide", wideDf, col("k")), LakeTable(2, "narrow", narrow, col("k")))
+  }
+
+  /** Request rows (rid, city, seg, x): a duplicate raw tuple (107 = 100),
+    * '' and 'nan' tokens, and a further token equal to the first (104).
+    */
+  private val fixtureInput = Seq(
+    (100L, "berlin", "gold", "x10"), (101L, "paris", "gold", "x20"),
+    (102L, "rome", "silver", "x30"), (103L, "lima", "gold", "x99"),
+    (104L, "rome", "rome", "rome"), (105L, "", "gold", "x10"),
+    (106L, "nan", "gold", "x10"), (107L, "berlin", "gold", "x10"),
+    (108L, "oslo", "none", ""))
+
+  private val fixtureCols = Seq("city", "seg", "x")
+
+  private def fixtureFrame: DataFrame = {
+    val s = spark
+    import s.implicits._
+    fixtureInput.toDF("rid" +: fixtureCols: _*)
+  }
+
+  /** Brute-force MATE matches over collected cells, prefilter left out
+    * (XASH has no false negatives): per distinct raw tuple (min rid),
+    * every cell holding the first token, kept when each further token
+    * occurs somewhere in the same row.
+    */
+  private def oracle(nq: Int, cells: DataFrame): Seq[(Int, Long, Long, String)] = {
+    val rows = cells.select("tableid", "rowid", "colid", "tokenized").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getString(3)))
+      .groupBy(c => (c._1, c._2))
+    val prep = fixtureInput
+      .map(r => (r._1, Seq(r._2, r._3, r._4).take(nq)))
+      .groupBy(_._2).toSeq
+      .map { case (raw, rs) => (rs.map(_._1).min,
+        raw.map(v => TextFunctions.cleanedTextLocal(v).take(LakeIndexer.MaxTokenLength))) }
+      .filter(_._2.forall(t => !Set("", "nan", "unknown").contains(t)))
+    for {
+      (mid, toks) <- prep
+      ((tid, rid), cs) <- rows.toSeq
+      c0 <- cs.filter(_._4 == toks.head).map(_._3)
+      sets = toks.tail.map(t => cs.filter(_._4 == t).map(_._3).distinct.sorted)
+      if sets.forall(_.nonEmpty)
+    } yield (tid, rid, mid, (c0.toString +: sets.map(_.mkString("_"))).mkString("_"))
+  }
+
+  private def rowsOf(m: DataFrame): Seq[(Int, Long, Long, String)] =
+    m.select("tableid", "rowid", "MateRowID", "columns").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq.sorted
+
+  test("verification equals a brute-force oracle for 1, 2 and 3 query columns") {
+    val tables = fixtureTables
+    val cells = LakeIndexer.cells(tables)
+    for (nq <- 1 to 3) {
+      val qcols = fixtureCols.take(nq)
+      val expected = oracle(nq, cells).sorted
+      val got = rowsOf(Mate.matches(fixtureFrame, col("rid"), qcols, cells))
+      assert(got == expected, s"$nq query columns")
+      // an all-zero query key passes the prefilter on every token match,
+      // so the exact verification alone must reach the oracle
+      val unfiltered = rowsOf(Mate.matches(fixtureFrame, col("rid"), qcols, cells,
+        _ => array(lit(0L), lit(0L))))
+      assert(unfiltered == expected, s"$nq query columns, no prefilter")
+      for (hs <- Seq(64, 128, 256, 512)) {
+        val words = rowsOf(Mate.matchesWords(fixtureFrame, col("rid"), qcols,
+          LakeIndexer.cellsWords(tables, hs), hs))
+        assert(words == got, s"$nq query columns, hash_size=$hs")
+      }
+    }
+    // the fixture reaches every case the verification must get right
+    val two = oracle(2, cells).toSet
+    assert(two.contains((1, 0L, 100L, "1_2_11")), "further token in two columns, numeric order")
+    assert(two.contains((1, 1L, 101L, "1_2")) && two.contains((1, 1L, 101L, "5_2")),
+      "first token in two columns")
+    assert(Set("1_1_4", "4_1_4").forall(c => two.contains((1, 2L, 104L, c))),
+      "further token equal to the first")
+    assert(two.contains((1, 4L, 103L, "1_10_11")))
+    assert(!two.exists(m => m._3 == 105L || m._3 == 106L || m._3 == 107L), "'' / nan / duplicate rows")
+    val three = oracle(3, cells)
+    assert(three.exists(_._4 == "1_2_11_3") && !three.exists(_._3 == 108L))
+  }
+
+  /** Spark jobs `body` submits, counted by a listener on a job group of
+    * its own.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"mate-spec-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "MateSpec job count")
+    try { body; ListenerBusDrain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+    n.get
+  }
+
+  test("multi-column matches is one lazy plan with no Bloom filter probe") {
+    val tables = fixtureTables
+    val cells = LakeIndexer.cells(tables)
+    val cellsW = LakeIndexer.cellsWords(tables, 128)
+    for (nq <- 2 to 3) {
+      val qcols = fixtureCols.take(nq)
+      var m: DataFrame = null
+      assert(jobsOf { m = Mate.matches(fixtureFrame, col("rid"), qcols, cells) } == 0,
+        s"Mate.matches ran a job at $nq query columns")
+      assert(jobsOf { Mate.matchesWords(fixtureFrame, col("rid"), qcols, cellsW, 128) } == 0,
+        s"Mate.matchesWords ran a job at $nq query columns")
+      val blooms = m.queryExecution.optimizedPlan.collect {
+        case p => p.expressions.count(_.exists(_.isInstanceOf[BloomFilterMightContain]))
+      }.sum
+      assert(blooms == 0, s"$nq query columns: ${m.queryExecution.optimizedPlan}")
+    }
+  }
+
+  test("a two-column searchAndMaps stays within its job budget") {
+    val cells = LakeIndexer.cells(fixtureTables)
+    var top: Array[Row] = null
+    val jobs = jobsOf {
+      top = Mate.searchAndMaps(fixtureFrame, col("rid"), fixtureCols.take(2), cells, 5)._1.collect()
+    }
+    assert(top.nonEmpty)
+    assert(jobs <= 16, s"$jobs jobs")
   }
 }
