@@ -1315,18 +1315,23 @@ object LakeWriter {
     * what delta-spark leaves behind; [[dropFeature]] stays the
     * separate protocol-downgrade path.
     *
-    * Row-tracked tables compose through the preserved profile like
-    * [[compactDelta]]: surviving rows keep their ids in the
+    * [[compactDelta]]'s maintenance path: the [[requireRewritable]]
+    * gate, [[rewriteBins]] with no re-staging (the scan resolves
+    * physical→logical itself, and logical footers without field ids
+    * ARE the point) and partitionValues / partition directories
+    * re-keyed logical, then [[commitFiles]] with the metaData action
+    * first — which keeps the commit out of the rebase tiers: a lost
+    * version race refuses. Row-tracked tables rewrite through the
+    * preserved profile: surviving rows keep their ids in the
     * materialized columns, fresh (shadowed) baseRowIds satisfy the
     * every-add invariant, the watermark advances in the commit.
     *
     * Cost: a FULL-TABLE rewrite — re-keying every parquet footer is
     * what removal IS (the reason the upgrade direction is free and
     * this one is not; a 100-TB table should schedule it like a
-    * compaction campaign). The rewrite bin-packs per partition into
-    * ≤`targetFileBytes` outputs and submits per-bin coalesce jobs
-    * from a bounded pool — OPTIMIZE's zero-shuffle shape. SQL
-    * spelling: `ALTER TABLE t SET TBLPROPERTIES
+    * compaction campaign), bin-packed per partition into
+    * ≤`targetFileBytes` outputs with OPTIMIZE's zero-shuffle shape.
+    * SQL spelling: `ALTER TABLE t SET TBLPROPERTIES
     * ('delta.columnMapping.mode'='none')`.
     */
   def removeColumnMapping(spark: SparkSession, dir: String,
@@ -1336,21 +1341,7 @@ object LakeWriter {
     val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
     require(cm == "name" || cm == "id",
       s"removeColumnMapping: column mapping mode is '$cm' — nothing to remove")
-    val rt = RowTracking.preservedProfileReady(snap)
-    require(!RowTracking.enabled(snap) || rt,
-      "removeColumnMapping: row tracking is declared but the preserved-profile " +
-        "configuration is incomplete (enableRowTracking backfill missing) — " +
-        "a rewrite would silently re-identify every row; refusing")
-    val safe = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping",
-      "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints",
-      IdentityColumns.Feature) ++
-      Clustering.Features ++ (if (rt) RowTracking.Features else Set.empty[String])
-    val unsafe = snap.writerFeatures.filterNot(safe)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"removeColumnMapping: table requires writer version ${snap.minWriter}" +
-        (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
-        " — refusing a rewrite whose obligations this writer cannot honor")
+    requireRewritable(snap, "removeColumnMapping")
     val table = tableSchema(snap)
     // the stripped LOGICAL schema: no ids, no physical names — while
     // comments, defaults, generation expressions and widening history
@@ -1369,127 +1360,23 @@ object LakeWriter {
     val newSchema = stripT(table).asInstanceOf[StructType]
     val newConf = snap.configuration -
       "delta.columnMapping.mode" - "delta.columnMapping.maxColumnId"
-
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hconf)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val matCols = if (rt) RowTracking.materializedCols(snap) else None
-    matCols.foreach { case (idc, vc) =>
-      Seq(idc, vc).foreach(c => require(!table.fieldNames.contains(c),
-        s"removeColumnMapping: materialized row-id column name '$c' collides " +
-          "with a table column — repair the table configuration"))
-    }
-    var nextRowId = if (rt) RowTracking.watermark(snap).get + 1 else 0L
-    val version = snap.version + 1
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"REMOVE COLUMN MAPPING","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
-    actions += metaLineFor(dir, snap, newSchema, newConf)
-    // logical -> physical names for the partition columns: historic
-    // partitionValues are keyed physical; the new adds re-key logical
+    // historic partitionValues are keyed physical (foreign fixtures may
+    // carry logical keys — accept either, the reader's own fallback);
+    // the new adds re-key logical
     val physPart = physNameMap(
       StructType(table.fields.filter(f => snap.partCols.contains(f.name))), cm,
       "removeColumnMapping")
-    val statsColsLogical = DeltaStats.physicalStatsColumns(
-      newConf, Some(newSchema))
-    val stage = new org.apache.hadoop.fs.Path(root,
-      s"_cmremove_${version}_${java.util.UUID.randomUUID().toString.take(8)}")
-    snap.active.groupBy(_.partitionValues).toSeq.sortBy(_._2.head.path)
-      .zipWithIndex.foreach { case ((pv, files), i) =>
-        val sub = new org.apache.hadoop.fs.Path(stage, s"g$i")
-        // bin-pack like compactDelta: one coalesce(1) output per bin of
-        // ≤ targetFileBytes inputs, bins written concurrently, no
-        // exchange anywhere — the bytes move once, file to file
-        val bins = scala.collection.mutable.ArrayBuffer(
-          scala.collection.mutable.ArrayBuffer.empty[DeltaReader.AddFile])
-        var binBytes = 0L
-        files.sortBy(_.path).foreach { f =>
-          if (bins.last.nonEmpty && binBytes + f.size > targetFileBytes) {
-            bins += scala.collection.mutable.ArrayBuffer.empty[DeltaReader.AddFile]
-            binBytes = 0L
-          }
-          bins.last += f
-          binBytes += f.size
-        }
-        // the scan resolves physical→logical itself; NO physical
-        // re-staging and NO field ids on the way out — logical footers
-        // ARE the point. Preserved profile: materialized ids ride as
-        // extra storage-named columns, same as compactDelta.
-        def scanOf(fsub: Seq[DeltaReader.AddFile]) = matCols match {
-          case Some((idc, vc)) =>
-            DeltaReader.scanFilesWithRowIds(spark, dir, snap, fsub)
-              .withColumnRenamed("_row_id", idc)
-              .withColumnRenamed("_row_commit_version", vc)
-              .drop(snap.partCols: _*)
-          case None =>
-            DeltaReader.scanFiles(spark, dir, snap, fsub).drop(snap.partCols: _*)
-        }
-        locally {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(8, bins.size))
-          try {
-            import scala.jdk.CollectionConverters._
-            pool.invokeAll(bins.toSeq.zipWithIndex.map { case (b, j) =>
-              new java.util.concurrent.Callable[Unit] {
-                def call(): Unit = scanOf(b.toSeq).coalesce(1)
-                  .write.parquet(new org.apache.hadoop.fs.Path(sub, s"b$j").toString)
-              }
-            }.asJava).asScala.foreach(_.get())
-          } finally pool.shutdown()
-        }
-        val part = fs.listStatus(sub).flatMap(d => fs.listStatus(d.getPath))
-          .map(_.getPath)
-          .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-          .sortBy(_.toString)
-        require(part.nonEmpty, "removeColumnMapping: rewrite wrote no files")
-        // LOGICAL partition values + directory layout (the historic pv
-        // is keyed physical; foreign fixtures may carry logical keys —
-        // accept either, the reader's own fallback)
-        val pvLogical: Seq[(String, String)] = snap.partCols.map { c =>
-          c -> pv.get(physPart.getOrElse(c, c)).orElse(pv.get(c)).orNull
-        }
-        val relDir = percentEncode(pvLogical.map { case (c, v) =>
-          val seg = if (v == null) "__HIVE_DEFAULT_PARTITION__"
-            else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
-          s"${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(c)}=$seg"
-        }.mkString("/"))
-        val pvJson = pvLogical.map { case (c, v) =>
-          s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-        }.mkString("{", ",", "}")
-        val attempt = java.util.UUID.randomUUID().toString.take(8)
-        part.zipWithIndex.foreach { case (pf, j) =>
-          val destName = s"part-cmremove-$version-g$i-$j-$attempt.parquet"
-          val rel = if (relDir.isEmpty) destName else s"$relDir/$destName"
-          val dest = new org.apache.hadoop.fs.Path(root, DeltaReader.percentDecode(rel))
-          if (rel.contains("/")) fs.mkdirs(dest.getParent)
-          val size = fs.getFileStatus(pf).getLen
-          val stats = DeltaStats.fileStats(pf, hconf,
-            DeltaStats.indexedColsOf(newConf), statsColumns = statsColsLogical)
-          val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-          val rtJson = if (!rt) "" else {
-            val nr = stats.map(st => om.readTree(st).get("numRecords").asLong())
-              .getOrElse(throw new IllegalArgumentException(
-                s"removeColumnMapping: rewritten file $pf produced no footer stats — " +
-                  "cannot assign baseRowId on a tracked table; refusing"))
-            val base = nextRowId
-            nextRowId += nr
-            s""","baseRowId":$base,"defaultRowCommitVersion":$version"""
-          }
-          require(fs.rename(pf, dest), s"rename $pf -> $dest failed")
-          actions += s"""{"add":{"path":"$rel","partitionValues":$pvJson,"size":$size,"modificationTime":0,"dataChange":false$statsJson$rtJson}}"""
-        }
-        files.foreach(f => actions += removeLine(f, dataChange = false))
-      }
-    if (rt) actions += RowTracking.watermarkAction(nextRowId - 1)
-    fs.delete(stage, true)
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    fs.mkdirs(log)
-    val commit = new org.apache.hadoop.fs.Path(log, f"$version%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version $version; re-read the table and retry " +
-        "the column-mapping removal",
-      ictConf = snap.configuration)
+    val groups = snap.active.groupBy(_.partitionValues).toSeq.map { case (pv, files) =>
+      snap.partCols.map(c => c -> pv.get(physPart.getOrElse(c, c)).orElse(pv.get(c)).orNull) -> files
+    }
+    val (staged, stage) = rewriteBins(spark, dir, snap, groups, targetFileBytes,
+      "cmremove", "removeColumnMapping", identity)
+    commitFiles(spark, dir, snap.version + 1, staged, stage,
+      extraActions = metaLineFor(dir, snap, newSchema, newConf) +:
+        snap.active.sortBy(_.path).map(removeLine(_, dataChange = false)),
+      addDataChange = false, operation = "REMOVE COLUMN MAPPING",
+      rowIdBase = RowTracking.rowIdBase(snap), ictConf = newConf,
+      statsSchema = Some(newSchema))
   }
 
   /** CONVERT TO DELTA: turn an existing plain-parquet directory (flat
@@ -1559,20 +1446,8 @@ object LakeWriter {
         org.apache.spark.sql.types.StructField(c,
           org.apache.spark.sql.types.DataType.fromDDL(ddl), nullable = true)
       })
-    // footer stats in a bounded pool — same as commitDelta's staging
-    val statsByPath: Map[String, Option[String]] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, math.max(1, files.size)))
-      try {
-        import scala.jdk.CollectionConverters._
-        pool.invokeAll(files.map { st =>
-          new java.util.concurrent.Callable[(String, Option[String])] {
-            def call(): (String, Option[String]) =
-              st.getPath.toString -> DeltaStats.fileStats(st.getPath, hconf)
-          }
-        }.asJava).asScala.map(_.get()).toMap
-      } finally pool.shutdown()
-    }
+    // footer stats in a bounded pool — same as commitFiles'
+    val fileStats = boundedParMap(files, 16)(st => DeltaStats.fileStats(st.getPath, hconf))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
     actions += s"""{"commitInfo":{"timestamp":0,"operation":"CONVERT","operationParameters":{"numFiles":${files.size}},"engineInfo":"graft"}}"""
@@ -1589,12 +1464,11 @@ object LakeWriter {
       actions += s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
     val pcJson = names.map(om.writeValueAsString).mkString("[", ",", "]")
     actions += s"""{"metaData":{"id":"${java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))}","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(tableSchema.json)},"partitionColumns":$pcJson,"configuration":{}}}"""
-    entries.zip(files).foreach { case ((rel, pv, size), st) =>
+    entries.zip(fileStats).foreach { case ((rel, pv, size), stats) =>
       val pvJson = pv.map { case (c, v) =>
         s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
       }.mkString("{", ",", "}")
-      val statsJson = statsByPath(st.getPath.toString)
-        .map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
+      val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
       actions += s"""{"add":{"path":"${percentEncode(rel)}","partitionValues":$pvJson,"size":$size,"modificationTime":0,"dataChange":true$statsJson}}"""
     }
     val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
@@ -2806,11 +2680,17 @@ object LakeWriter {
     }
   }
 
-  /** `metaOverride` = (protocol line, metaData line) replaces the
-    * default version-(1,2) protocol and df-schema metaData when
-    * `includeMeta` — the column-mapping create path authors both
-    * itself (physical-name schemaString, mode=name configuration,
-    * reader/writer versions (2,5)).
+  /** The commit funnel of appends, overwrites, row-level rewrites and
+    * cluster OPTIMIZE: stage `df` (partitioned tables through
+    * partitionBy, so the files land under `col=value/` directories
+    * without the partition columns, which the reader re-attaches from
+    * add.partitionValues), fold the staged files when optimizeWrite is
+    * on, parse each file's partitionValues back from its directory and
+    * commit through [[commitFiles]]. `metaOverride` = (protocol line,
+    * metaData line) replaces the default version-(1,2) protocol and
+    * df-schema metaData when `includeMeta` — the column-mapping create
+    * path authors both itself (physical-name schemaString, mode=name
+    * configuration, reader/writer versions (2,5)).
     */
   private[graft] def commitDelta(df: DataFrame, dir: String, version: Long,
                                  includeMeta: Boolean, checkpointInterval: Int,
@@ -2837,22 +2717,15 @@ object LakeWriter {
     // fail FAST on a store that can't arbitrate commits: before any
     // staging work, before the log directory exists — a refused create
     // must leave "not a table", not a half-created one
-    val logStore = GraftLogStore.resolve(spark)
-    GraftLogStore.requireAtomic(logStore)
-    val hconf = spark.sessionState.newHadoopConf()
+    GraftLogStore.requireAtomic(GraftLogStore.resolve(spark))
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hconf)
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // stage the parquet files, then move them into the table root —
     // files only become visible through the commit that adds them.
     // (_delta_log is created just before the commit write, AFTER the
     // staging job: a crash mid-staging then leaves no log directory,
     // so a creating writer's retry still sees "not a table" instead of
     // an empty log it refuses to read.)
-    // Partitioned tables stage through partitionBy, so the data files
-    // land under col=value/ directories and (per Spark's layout) do
-    // not contain the partition columns themselves; the reader
-    // re-attaches them from add.partitionValues.
     // writer-unique staging: concurrent writers may legitimately race
     // toward the SAME next version (the rebase path re-commits one of
     // them at version+1), so the staging dir must never be shared — a
@@ -2898,52 +2771,89 @@ object LakeWriter {
         leafSchema)
     }
     val stageUri = stage.toUri.getPath.stripSuffix("/")
-    val staged = walk(stage).sortBy(_.getPath.toString)
+    val staged = walk(stage).sortBy(_.getPath.toString).map { st =>
+      // relative path under the stage dir = partition dirs + file name
+      val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
+      // partitionValues from the col=value segments, Hive-unescaped
+      // (Spark escaped them when staging); the null marker maps back
+      // to a JSON null, which the reader types as a null literal
+      val pv = rel.split('/').dropRight(1).map { seg =>
+        val eq = seg.indexOf('=')
+        require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
+        val col = seg.substring(0, eq)
+        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(seg.substring(eq + 1))
+        col -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
+      }.toSeq
+      (st, rel, pv)
+    }
+    commitFiles(spark, dir, version, staged, stage, includeMeta, checkpointInterval,
+      partCols, txn, metaOverride, extraActions, configuration, addDataChange, operation,
+      operationParameters, rowIdBase, rebase, ictConf, identity, clusteringProvider,
+      statsSchema, df.schema)
+  }
+
+  /** A staged data file awaiting its commit: the file, its decoded
+    * table-relative destination, and the partitionValues its add
+    * carries (directory order).
+    */
+  private type StagedFile = (org.apache.hadoop.fs.FileStatus, String, Seq[(String, String)])
+
+  /** The commit half of [[commitDelta]], shared with the maintenance
+    * rewrites of [[rewriteBins]]: footer stats for every staged file,
+    * the rename into place (then `stage` is deleted), identity
+    * watermarks, the rendered actions, the create-if-absent commit with
+    * its three rebase tiers, the checkpoint cadence and autoCompact.
+    * The arguments are [[commitDelta]]'s; `schema` (the written
+    * DataFrame's) is read only when `includeMeta` renders a create.
+    */
+  private def commitFiles(spark: SparkSession, dir: String, version: Long,
+                          staged: Seq[StagedFile], stage: org.apache.hadoop.fs.Path,
+                          includeMeta: Boolean = false, checkpointInterval: Int = 0,
+                          partCols: Seq[String] = Nil,
+                          txn: Option[(String, Long)] = None,
+                          metaOverride: Option[(String, String)] = None,
+                          extraActions: Seq[String] = Nil,
+                          configuration: Map[String, String] = Map.empty,
+                          addDataChange: Boolean = true,
+                          operation: String = "WRITE",
+                          operationParameters: String = "{}",
+                          rowIdBase: Option[Long] = None,
+                          rebase: Option[(DeltaReader.Snapshot, String, Set[String])] = None,
+                          ictConf: Map[String, String] = Map.empty,
+                          identity: Option[(IdentityColumns.Advance, Option[String])] = None,
+                          clusteringProvider: Option[String] = None,
+                          statsSchema: Option[org.apache.spark.sql.types.StructType] = None,
+                          schema: org.apache.spark.sql.types.StructType =
+                            org.apache.spark.sql.types.StructType(Nil)): Unit = {
+    val logStore = GraftLogStore.resolve(spark)
+    GraftLogStore.requireAtomic(logStore)
+    val hconf = spark.sessionState.newHadoopConf()
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(hconf)
+    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
+    val sizingConf = if (ictConf.nonEmpty) ictConf else configuration
     // footer-derived add.stats BEFORE the move (metadata-only read of
     // the files just written) — the data-skipping envelope every
-    // predicate-carrying op prunes with (DeltaStats). Footers read in
-    // PARALLEL: one serial ~10 ms open per file turns a 2000-file
-    // commit into ~20 s of driver bookkeeping; a bounded pool keeps it
-    // at the per-file cost
-    val statsByPath: Map[String, Option[String]] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, math.max(1, staged.size)))
-      try {
-        import scala.jdk.CollectionConverters._
-        pool.invokeAll(staged.map { st =>
-          new java.util.concurrent.Callable[(String, Option[String])] {
-            def call(): (String, Option[String]) =
-              st.getPath.toString -> graft.sources.DeltaStats.fileStats(st.getPath, hconf,
-                graft.sources.DeltaStats.indexedColsOf(sizingConf),
-                // identity watermark bounds must survive the cap
-                identity.map(_._1.cols.map(_._2).toSet).getOrElse(Set.empty),
-                // logical config names → the footers' physical keys
-                graft.sources.DeltaStats.physicalStatsColumns(sizingConf, statsSchema))
-          }
-        }.asJava).asScala.map(_.get()).toMap
-      } finally pool.shutdown()
+    // predicate-carrying op prunes with (DeltaStats); a rewrite without
+    // them would silently destroy skipping on everything it replaces.
+    // Footers read in PARALLEL: one serial ~10 ms open per file turns a
+    // 2000-file commit into ~20 s of driver bookkeeping; a bounded pool
+    // keeps it at the per-file cost
+    val indexedCols = DeltaStats.indexedColsOf(sizingConf)
+    // identity watermark bounds must survive the cap
+    val keepCols = identity.map(_._1.cols.map(_._2).toSet).getOrElse(Set.empty[String])
+    // logical config names → the footers' physical keys
+    val statsCols = DeltaStats.physicalStatsColumns(sizingConf, statsSchema)
+    val fileStats = boundedParMap(staged, 16) { case (st, _, _) =>
+      DeltaStats.fileStats(st.getPath, hconf, indexedCols, keepCols, statsCols)
     }
-    val moved = staged
-      .map { st =>
-        // relative path under the stage dir = partition dirs + file name
-        val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-        val stats = statsByPath(st.getPath.toString)
-        val dest = new org.apache.hadoop.fs.Path(root, rel)
-        if (rel.contains("/")) fs.mkdirs(dest.getParent)
-        require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
-        // partitionValues from the col=value segments, Hive-unescaped
-        // (Spark escaped them when staging); the null marker maps back
-        // to a JSON null, which the reader types as a null literal
-        val pv = rel.split('/').dropRight(1).map { seg =>
-          val eq = seg.indexOf('=')
-          require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
-          val col = seg.substring(0, eq)
-          val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .unescapePathName(seg.substring(eq + 1))
-          col -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
-        }.toSeq
-        (rel, pv, st.getLen, stats)
-      }
+    val moved = staged.zip(fileStats).map { case ((st, rel, pv), stats) =>
+      val dest = new org.apache.hadoop.fs.Path(root, rel)
+      if (rel.contains("/")) fs.mkdirs(dest.getParent)
+      require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
+      (rel, pv, st.getLen, stats)
+    }
     fs.delete(stage, true)
     // identity watermark advance — derived from the footer stats just
     // computed (zero extra jobs); a changed watermark restates
@@ -3008,17 +2918,17 @@ object LakeWriter {
         // keeps the legacy version.
         val v7Features = featsCreate.toSeq ++
           (if (ictEnabled(configuration)) Seq("inCommitTimestamp") else Nil) ++
-          (if (IdentityColumns.hasIdentity(df.schema)) Seq(IdentityColumns.Feature) else Nil) ++
-          (if (df.schema.fields.exists(_.metadata.contains("delta.generationExpression")))
+          (if (IdentityColumns.hasIdentity(schema)) Seq(IdentityColumns.Feature) else Nil) ++
+          (if (schema.fields.exists(_.metadata.contains("delta.generationExpression")))
             Seq("generatedColumns") else Nil) ++
-          (if (df.schema.fields.exists(_.metadata.contains("CURRENT_DEFAULT")))
+          (if (schema.fields.exists(_.metadata.contains("CURRENT_DEFAULT")))
             Seq("allowColumnDefaults") else Nil) ++
           // VARIANT / TIMESTAMP_NTZ anywhere in the schema are
           // READER-visible shapes: reader+writer features, minReader 3
           // — a reader that doesn't know them would misread the binary
           // pair / shift wall-clock values to UTC instants
-          (if (hasVariant(df.schema)) Seq("variantType") else Nil) ++
-          (if (hasNtz(df.schema)) Seq("timestampNtz") else Nil)
+          (if (hasVariant(schema)) Seq("variantType") else Nil) ++
+          (if (hasNtz(schema)) Seq("timestampNtz") else Nil)
         val rwCreate = v7Features.distinct.filter(DeclarableReaderWriter)
         require(!reqMinReader.contains(3) || rwCreate.nonEmpty,
           "CREATE TABLE: delta.minReaderVersion=3 with NO reader features would " +
@@ -3037,7 +2947,7 @@ object LakeWriter {
         } else
           actions += s"""{"protocol":{"minReaderVersion":${reqMinReader.getOrElse(1)},"minWriterVersion":${(minWriter +: reqMinWriter.toSeq).max}}}"""
         actions += s"""{"metaData":{"id":"${java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))}","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(
-          IdentityColumns.patchSchema(df.schema, idWm).json)},"partitionColumns":$pcJson,"configuration":$confJson}}"""
+          IdentityColumns.patchSchema(schema, idWm).json)},"partitionColumns":$pcJson,"configuration":$confJson}}"""
     }
     // an advanced identity watermark restates metaData atomically with
     // the adds whose values it covers (mutation commits pass the
@@ -3113,26 +3023,26 @@ object LakeWriter {
       rowIdBase.isEmpty && idWm.isEmpty
     val mutationShape = rebase.isDefined && !includeMeta && txn.isEmpty
     // MAINTENANCE REBASE (the third tier, r13): a dataChange=false
-    // layout rewrite (z-order / clustering OPTIMIZE through this
-    // funnel) read only (a) table metadata/protocol and (b) the live
+    // layout rewrite (compaction, REORG PURGE, z-order / clustering
+    // OPTIMIZE) read only (a) table metadata/protocol and (b) the live
     // files it removes. A winner carrying only file actions whose
     // removes are DISJOINT from ours left that read set intact: its
     // fresh rows live in files this rewrite never touches, and it
     // cannot have deleted rows out of our inputs (every graft DV add
     // pairs with a remove of the same path, so merge-on-read deletes
     // surface in the remove overlap too) — re-commit the same staged
-    // rewrite at the next free version with zero re-execution.
-    // Row-tracked rewrites stay excluded (rowIdBase carries a
-    // version-dependent watermark and defaultRowCommitVersion).
+    // rewrite at the next free version with zero re-execution (at
+    // 100 TB the rewrite IS the cost; a nightly OPTIMIZE racing routine
+    // appends must not start over per append). Row-tracked rewrites
+    // stay excluded (rowIdBase carries a version-dependent watermark
+    // and defaultRowCommitVersion), and so does any rewrite carrying a
+    // non-remove action (column-mapping removal's metaData).
     val maintenanceShape = !includeMeta && txn.isEmpty && !addDataChange &&
       rebase.isEmpty && rowIdBase.isEmpty && idWm.isEmpty &&
       extraActions.nonEmpty && extraActions.forall(_.startsWith("""{"remove":"""))
     val maintRemoves: Set[String] =
       if (!maintenanceShape) Set.empty
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        extraActions.map(l => om.readTree(l).get("remove").get("path").asText()).toSet
-      }
+      else extraActions.map(l => om.readTree(l).get("remove").get("path").asText()).toSet
     val rebaseable = appendShape || mutationShape || maintenanceShape
     var v = version
     var committed = false
@@ -3176,12 +3086,14 @@ object LakeWriter {
     // knob) keeps the replay suffix bounded for every writer without
     // each call site having to plumb an interval — on a 100-TB table
     // written by many jobs, an unbounded commit suffix is a driver-side
-    // replay tax every reader pays until someone checkpoints
-    val effInterval =
-      if (checkpointInterval > 0) checkpointInterval
-      else sizingConf.get("delta.checkpointInterval").map(_.trim.toInt).getOrElse(0)
-    if (effInterval > 0 && v > 0 && v % effInterval == 0)
-      checkpointDelta(spark, dir, v)
+    // replay tax every reader pays until someone checkpoints. The
+    // property cadence is best-effort like every other commit's (the
+    // commit above is durable); an explicit interval fails loudly.
+    if (checkpointInterval > 0) {
+      if (v > 0 && v % checkpointInterval == 0) checkpointDelta(spark, dir, v)
+    } else
+      maybeCheckpointAtProperty(spark, new org.apache.hadoop.fs.Path(log, f"$v%020d.json"),
+        sizingConf)
     // post-commit small-file maintenance (`delta.autoOptimize.autoCompact`):
     // once a partition accumulates minNumFiles sub-threshold files, a
     // follow-up OPTIMIZE-shaped commit folds exactly those — gated on
@@ -3205,10 +3117,9 @@ object LakeWriter {
     }
   }
 
-  /** The `delta.checkpointInterval` TABLE-property cadence for commits
-    * outside [[commitDelta]]'s own loop — called by
+  /** The `delta.checkpointInterval` TABLE-property cadence — called by
     * [[GraftLogStore.commitOrThrow]] after every successful commit and
-    * by compactDelta's rebase loop. Best-effort (the commit is already
+    * by [[commitFiles]] when no explicit interval is given. Best-effort (the commit is already
     * durable); no-op unless the table declares the property and the
     * just-won version sits on the cadence.
     */
@@ -3393,7 +3304,7 @@ object LakeWriter {
 
   /** optimizeWrite's staged-partition fold: within each staged
     * directory, files BIN-PACK into bins of ≤ target bytes (greedy in
-    * task order — compactDelta's shape) and each oversized bin
+    * task order — [[rewriteBins]]' shape) and each multi-file bin
     * rewrites as ONE coalesce(1) job, jobs submitted concurrently
     * from a bounded driver pool. No shuffle anywhere: a repartition
     * fold would pay a network exchange of the batch AND spread
@@ -3409,81 +3320,86 @@ object LakeWriter {
                                 target: Long,
                                 leafSchema: org.apache.spark.sql.types.StructType): Unit = {
     val folds = staged.groupBy(_.getPath.getParent).toSeq.flatMap { case (parent, fsts) =>
-      val bins = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus])
-      var binBytes = 0L
-      fsts.sortBy(_.getPath.getName).foreach { st =>
-        if (bins.last.nonEmpty && binBytes + st.getLen > target) {
-          bins += scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-          binBytes = 0L
-        }
-        bins.last += st
-        binBytes += st.getLen
-      }
-      bins.toSeq.filter(_.size > 1).map(b => parent -> b.toSeq)
+      binPack(fsts.sortBy(_.getPath.getName), target)(_.getLen)
+        .filter(_.size > 1).map(parent -> _)
     }
-    if (folds.isEmpty) return
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, folds.size))
-    try {
-      import scala.jdk.CollectionConverters._
-      pool.invokeAll(folds.map { case (parent, fsts) =>
-        new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val tmp = new org.apache.hadoop.fs.Path(stage,
-              s".ow_${java.util.UUID.randomUUID().toString.take(8)}")
-            // read under the declared leaf schema (keeps field-id
-            // metadata the parquet reader would drop) and write with
-            // field-id emission matching the original staging write
-            val fsess = fieldIdSession(spark, leafSchema)
-            fsess.read.schema(leafSchema)
-              .parquet(fsts.map(_.getPath.toString): _*).coalesce(1)
-              .write.parquet(tmp.toString)
-            val outs = fs.listStatus(tmp).map(_.getPath)
-              .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-            require(outs.nonEmpty, "optimizeWrite fold wrote no files")
-            fsts.foreach(st => require(fs.delete(st.getPath, false),
-              s"optimizeWrite: delete ${st.getPath} failed"))
-            outs.foreach(o => require(fs.rename(o, new org.apache.hadoop.fs.Path(parent, o.getName)),
-              s"optimizeWrite: rename $o failed"))
-            fs.delete(tmp, true)
-          }
-        }
-      }.asJava).asScala.foreach(_.get())
-    } finally pool.shutdown()
+    boundedParMap(folds, 8) { case (parent, fsts) =>
+      val tmp = new org.apache.hadoop.fs.Path(stage,
+        s".ow_${java.util.UUID.randomUUID().toString.take(8)}")
+      // read under the declared leaf schema (keeps field-id
+      // metadata the parquet reader would drop) and write with
+      // field-id emission matching the original staging write
+      val fsess = fieldIdSession(spark, leafSchema)
+      fsess.read.schema(leafSchema)
+        .parquet(fsts.map(_.getPath.toString): _*).coalesce(1)
+        .write.parquet(tmp.toString)
+      val outs = fs.listStatus(tmp).map(_.getPath)
+        .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      require(outs.nonEmpty, "optimizeWrite fold wrote no files")
+      fsts.foreach(st => require(fs.delete(st.getPath, false),
+        s"optimizeWrite: delete ${st.getPath} failed"))
+      outs.foreach(o => require(fs.rename(o, new org.apache.hadoop.fs.Path(parent, o.getName)),
+        s"optimizeWrite: rename $o failed"))
+      fs.delete(tmp, true)
+    }
   }
+
+  /** Greedy bin-packing in input order: a bin closes when the next
+    * item would push it past `target` (an item larger than `target`
+    * gets a bin of its own).
+    */
+  private def binPack[A](xs: Seq[A], target: Long)(size: A => Long): Seq[Seq[A]] = {
+    val bins = Seq.newBuilder[Seq[A]]
+    var bin = Vector.empty[A]
+    var bytes = 0L
+    xs.foreach { x =>
+      if (bin.nonEmpty && bytes + size(x) > target) {
+        bins += bin
+        bin = Vector.empty
+        bytes = 0L
+      }
+      bin :+= x
+      bytes += size(x)
+    }
+    if (bin.nonEmpty) bins += bin
+    bins.result()
+  }
+
+  /** `f` over `xs` on a bounded driver thread pool (at most `width`
+    * threads — the per-bin write jobs and per-file footer reads the
+    * writers fan out), results in input order; the first failure
+    * rethrows once every task has finished.
+    */
+  private def boundedParMap[A, B](xs: Seq[A], width: Int)(f: A => B): Seq[B] =
+    if (xs.isEmpty) Nil
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(width, xs.size))
+      try {
+        import scala.jdk.CollectionConverters._
+        pool.invokeAll(xs.map(x => new java.util.concurrent.Callable[B] {
+          def call(): B = f(x)
+        }).asJava).asScala.toSeq.map(_.get())
+      } finally pool.shutdown()
+    }
 
   /** autoCompact's trigger: when any partition holds >= minNumFiles
     * files under target/2, fold exactly the small files
     * ([[compactDelta]] with the `smallerThan` candidate filter — cost
-    * ∝ debt, converged partitions untouched). Tables whose column
-    * mapping or writer features compactDelta would refuse skip
-    * silently: the APPEND already committed, and failing it
-    * retroactively for optional maintenance would be a lie.
+    * ∝ debt, converged partitions untouched). The fold runs
+    * [[compactDelta]]'s own gate; [[commitFiles]] logs a refusal (or
+    * any other failure) and leaves the debt, since the APPEND already
+    * committed and failing it retroactively for optional maintenance
+    * would be a lie.
     */
   private def autoCompactMaybe(spark: SparkSession, dir: String,
                                conf: Map[String, String]): Unit = {
     val target = targetFileSizeOf(conf)
     val minN = spark.conf.get("spark.graft.delta.autoCompact.minNumFiles", "32").toInt
     val snap = DeltaReader.snapshot(spark, dir, None)
-    // column-mapped tables auto-compact too (r16 — compactDelta
-    // re-stages physical names/ids since r15, and composes them with
-    // row tracking's materialized columns since r16, so the old
-    // blanket CM skip would silently accumulate small-file debt the
-    // code can clear); only unknown modes skip
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    if (cm != "none" && cm != "name" && cm != "id") return
-    val rt = RowTracking.preservedProfileReady(snap)
-    val safe = Set("appendOnly", "invariants", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping", "typeWidening",
-      "variantType", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++ Clustering.Features ++
-      (if (rt) RowTracking.Features else Set.empty[String])
-    if (snap.minWriter > 5 &&
-      !(snap.minWriter == 7 && snap.writerFeatures.forall(safe))) return
     val debt = snap.active.filter(_.size < target / 2).groupBy(_.partitionValues)
     if (debt.values.exists(_.size >= minN))
       compactDelta(spark, dir, minFiles = minN, targetFileBytes = target,
-        operation = "auto compact", smallerThan = Some(target / 2))
+        operation = "auto compact", smallerThan = Some(target / 2), snapOverride = Some(snap))
   }
 
   /** Newest committed version in the log (-1 if none). */
@@ -3598,33 +3514,6 @@ object LakeWriter {
     removeConf ++ addConf
   }
 
-  /** Write a classic single-file checkpoint at `version`: the replayed
-    * snapshot state (protocol + metaData + live adds) compacted into
-    * one parquet file, plus the `_last_checkpoint` hint. The repo's
-    * own [[DeltaReader]] replays from it, so a reader never walks
-    * commits below the newest checkpoint — the log stays O(interval)
-    * to read no matter how many commits the table accumulates.
-    *
-    * Protocol fields are written as int32, matching what real
-    * delta-spark checkpoints store (the reader goes through `Number`
-    * for exactly this reason).
-    */
-  /** Compaction (the OPTIMIZE maintenance op): every partition whose
-    * live file count exceeds `minFiles` is rewritten into ONE file,
-    * committed as adds + removes with `dataChange = false` — the
-    * snapshot's ROWS are untouched, only their file layout changes, so
-    * a streaming reader of the table skips the commit entirely. This
-    * is the same small-file problem `LakeIndexer.compact` solves for
-    * the index layout, carried by the table format: a micro-batch
-    * streaming sink leaves one file per batch per partition, and a
-    * 100 TB table read pays per-file open cost forever unless someone
-    * folds the history.
-    *
-    * Time travel to PRE-compaction versions still replays the removed
-    * files (tombstones do not delete data files); the earliest version
-    * at which retention may physically delete them is an operator
-    * decision, exactly as the protocol intends.
-    */
   /** Scope a maintenance rewrite to the partitions matching `where` —
     * the predicate may reference PARTITION columns only (a data-column
     * predicate cannot scope whole files; stats-based skipping belongs
@@ -3666,6 +3555,39 @@ object LakeWriter {
     files.filter(f => keptPv(f.partitionValues))
   }
 
+  /** Compaction (the OPTIMIZE maintenance op; also REORG PURGE,
+    * autoCompact, SQL OPTIMIZE/REORG and [[TableMaintenance]]): in every
+    * partition holding at least `minFiles` candidate files, the
+    * candidates fold into files of ≤ `targetFileBytes`, committed as
+    * adds + removes with `dataChange = false` — the snapshot's ROWS are
+    * untouched, only their file layout changes, so a streaming reader
+    * skips the commit. A micro-batch sink leaves one file per batch per
+    * partition, and a 100 TB table pays per-file open cost forever
+    * unless someone folds the history; the same problem
+    * `LakeIndexer.compact` solves for the index layout.
+    *
+    * Candidates: the live files, scoped to the partitions matching
+    * `where` ([[partitionScope]]); with `dvOnly` (REORG PURGE) only
+    * files carrying a deletion vector, so cost ∝ DV debt; with
+    * `smallerThan` (autoCompact) only files below it, so a converged
+    * partition of target-sized files never re-folds.
+    *
+    * The maintenance path shared with [[removeColumnMapping]]: the
+    * [[requireRewritable]] gate, the bin-packed rewrite of
+    * [[rewriteBins]] (DV-applied scan, so a fold holds exactly its
+    * inputs' live rows; column-mapped tables re-stage physical names
+    * and field ids; preserved-profile row ids ride the materialized
+    * columns, fresh shadowed baseRowIds satisfy the every-add
+    * invariant), and [[commitFiles]]' commit, whose maintenance tier
+    * rebases a compaction that lost the version race past winners
+    * whose removes are disjoint from its inputs (row-tracked rewrites
+    * refuse instead: their watermark is version-dependent).
+    *
+    * Time travel to PRE-compaction versions still replays the removed
+    * files (tombstones do not delete data files); the earliest version
+    * at which retention may physically delete them is an operator
+    * decision, exactly as the protocol intends.
+    */
   def compactDelta(spark: SparkSession, dir: String, minFiles: Int = 2,
                    targetFileBytes: Long = 1L << 30,
                    where: Option[String] = None,
@@ -3674,266 +3596,124 @@ object LakeWriter {
                    smallerThan: Option[Long] = None,
                    snapOverride: Option[DeltaReader.Snapshot] = None): Unit = {
     require(targetFileBytes > 0, s"compactDelta: targetFileBytes $targetFileBytes")
-    // snapOverride = OCC test seam (appendDeltaWithSnapshot's pattern)
+    // snapOverride = a snapshot the caller already holds (autoCompact's;
+    // the OCC test seam, appendDeltaWithSnapshot's pattern)
     val snap = snapOverride.getOrElse(DeltaReader.snapshot(spark, dir, None))
-    // column-mapped tables compact too (r15): the fold re-stages its
-    // LIVE rows through stagePhysicalRows, so rewritten files carry
-    // the physical names (and, in id mode, the parquet field ids) the
-    // table's readers resolve — OPTIMIZE debt on a mapped 100-TB
-    // table would otherwise be permanent
-    val cmMode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cmMode == "none" || cmMode == "name" || cmMode == "id",
-      s"compactDelta: unknown column mapping mode '$cmMode'")
-    // writer-version/feature gate: a dataChange=false rewrite re-states
-    // EXISTING rows only, so every legacy obligation through writer v5
-    // holds by construction — CHECK constraints and invariants already
-    // passed on these rows, generated columns copy through, CDF readers
-    // skip dataChange=false commits entirely (the protocol's OPTIMIZE
-    // carve-out — no change files needed), and column mapping is
-    // honored by physical re-staging. v7 tables must declare only features this
-    // rewrite preserves (rowTracking, e.g., would need baseRowId on
-    // every add — refused). deletionVectors is honored, not refused:
-    // the fold below reads through the DV-applied scan, so a compacted
-    // file holds exactly its sources' LIVE rows and the descriptors are
-    // dropped with the removes — compaction IS the physical cleanup
-    // path for a table that accumulated deleteWhereDv debt.
-    //
-    // PRESERVED row-tracking profile: a tracked table with an
-    // established watermark AND configured materialized-column names
-    // can compact — the rewrite stores every surviving row's identity
-    // in the materialized physical columns (readers prefer them over
-    // the new files' fresh baseRowId + index), so ids survive the
-    // layout change. Tracked tables missing the materialized-name
-    // configs (enabled by an older writer) still refuse.
-    val rt = RowTracking.preservedProfileReady(snap)
-    // preserved-profile row tracking + column mapping COMPOSE (r16):
-    // the materialized id columns are storage-level physical names the
-    // logical schema never carries, so they ride the physical staging
-    // as pass-through extras while the table columns rename/attach ids
-    val compactSafe = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++
-      (if (rt) RowTracking.Features else Set.empty[String])
-    val compactUnsafe = snap.writerFeatures.filterNot(compactSafe)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && compactUnsafe.isEmpty),
-      s"compactDelta: table requires writer version ${snap.minWriter}" +
-        (if (compactUnsafe.nonEmpty) s" with features ${compactUnsafe.mkString(", ")}" else "") +
-        " — this writer implements version 2 semantics and cannot honor the " +
-        "table's declared writer requirements; refusing to rewrite")
-    val hconf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hconf)
-    val scopedActive = where.map(partitionScope(spark, snap, snap.active, _,
-      "compactDelta")).getOrElse(snap.active)
-    // REORG ... APPLY (PURGE): rewrite ONLY the files carrying
-    // deletion vectors (materialize their deletes into clean files) —
-    // cost ∝ DV debt, not table size; the orphaned sidecars fall to
-    // VACUUM once their last referencing version ages out
-    val candidates0 = if (dvOnly) scopedActive.filter(_.dv.nonEmpty) else scopedActive
-    // `smallerThan` (the autoCompact path): only sub-threshold files
-    // are candidates, so a converged partition of target-sized files
-    // never re-folds — rewrite cost stays ∝ small-file DEBT, never
-    // ∝ partition size
-    val candidates = smallerThan.map(t => candidates0.filter(_.size < t))
-      .getOrElse(candidates0)
+    val cm = requireRewritable(snap, "compactDelta")
+    val scoped = where.map(partitionScope(spark, snap, snap.active, _, "compactDelta"))
+      .getOrElse(snap.active)
+    val candidates = scoped.filter(f =>
+      (!dvOnly || f.dv.nonEmpty) && smallerThan.forall(f.size < _))
     val groups = candidates.groupBy(_.partitionValues).filter(_._2.size >= minFiles)
     if (groups.isEmpty) return
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val stage = new org.apache.hadoop.fs.Path(root,
-      s"_compact_${snap.version + 1}_${java.util.UUID.randomUUID().toString.take(8)}")
-    val matCols = if (rt) RowTracking.materializedCols(snap) else None
+    val table = tableSchema(snap)
+    val physMap = physNameMap(table, cm, "compactDelta")
+    val dataTable = org.apache.spark.sql.types.StructType(
+      table.fields.filterNot(f => snap.partCols.contains(f.name)))
+    // the new adds keep each group's partitionValues as the log keys
+    // them (physical on mapped tables), in partition-column order
+    val physPart = snap.partCols.map(c => physMap.getOrElse(c, c))
+    val (staged, stage) = rewriteBins(spark, dir, snap,
+      groups.toSeq.map { case (pv, files) => (pv.toSeq.sortBy(kv => physPart.indexOf(kv._1)), files) },
+      targetFileBytes, "compact", "compactDelta",
+      rows => fieldIdStaged(stagePhysicalRows(rows, dataTable, cm, physMap, "compactDelta")))
+    commitFiles(spark, dir, snap.version + 1, staged, stage,
+      extraActions = groups.values.flatten.toSeq.sortBy(_.path).map(removeLine(_, dataChange = false)),
+      addDataChange = false, operation = operation, rowIdBase = RowTracking.rowIdBase(snap),
+      ictConf = snap.configuration, statsSchema = Some(table))
+  }
+
+  /** The gate of every dataChange=false rewrite (compaction, z-order
+    * and cluster OPTIMIZE, column-mapping removal): [[requireMutable]]
+    * — a rewrite re-states existing rows, so it refuses no more than an
+    * append does — plus, on a row-tracked table, the preserved profile
+    * (watermark and materialized-column names), without which the
+    * rewrite would silently re-identify every row. Returns the
+    * column-mapping mode.
+    */
+  private def requireRewritable(snap: DeltaReader.Snapshot, op: String): String = {
+    val cm = requireMutable(snap, op, removesRows = false)
+    require(!RowTracking.enabled(snap) || RowTracking.preservedProfileReady(snap),
+      s"$op: row tracking is declared but the preserved-profile " +
+        "configuration is incomplete (enableRowTracking backfill missing) — " +
+        "a rewrite would silently re-identify every row; refusing")
+    cm
+  }
+
+  /** The bin-packed rewrite of [[compactDelta]] and
+    * [[removeColumnMapping]]. `groups` pairs the partitionValues the
+    * new adds carry (directory order) with the live files they fold.
+    * Each group's files, in path order (write order, so time/range
+    * locality carries into the outputs' min/max envelopes), bin-pack
+    * into bins of ≤ `target` bytes, and each bin rewrites as ONE
+    * coalesce(1) job, jobs submitted concurrently from a bounded driver
+    * pool — delta-spark's OPTIMIZE shape, with no exchange anywhere:
+    * OPTIMIZE concatenates files, it never pays a network shuffle of
+    * every folded byte (at 100 TB the shuffle IS the cost), and a
+    * shuffle would randomize the per-file stats envelopes data skipping
+    * lives off. (A union of coalesce(1) branches is NOT equivalent: the
+    * optimizer collapses it to one partition.)
+    *
+    * A bin reads the DV-applied scan of its files with the partition
+    * columns dropped (the layout keeps them directory-encoded); on the
+    * preserved row-tracking profile each row's effective id rides along
+    * under the materialized column names. `restage` maps a bin's rows
+    * to their written shape. Returns the staged files, each with its
+    * decoded destination
+    * `<col=value dirs>/part-<prefix>-<version>-g<i>-<j>-<attempt>.parquet`
+    * (the attempt token keeps writers racing one version apart) and its
+    * partitionValues, plus the stage directory — [[commitFiles]]' input.
+    */
+  private def rewriteBins(spark: SparkSession, dir: String, snap: DeltaReader.Snapshot,
+                          groups: Seq[(Seq[(String, String)], Seq[DeltaReader.AddFile])],
+                          target: Long, prefix: String, op: String,
+                          restage: DataFrame => DataFrame): (Seq[StagedFile], org.apache.hadoop.fs.Path) = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val matCols =
+      if (RowTracking.preservedProfileReady(snap)) RowTracking.materializedCols(snap) else None
     matCols.foreach { case (idc, vc) =>
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val table = tableSchema(snap)
       Seq(idc, vc).foreach(c => require(!table.fieldNames.contains(c),
-        s"compactDelta: materialized row-id column name '$c' collides with a " +
-          "table column — repair the table configuration"))
+        s"$op: materialized row-id column name '$c' collides with a table column — " +
+          "repair the table configuration"))
     }
-    // fresh baseRowIds for the compacted files (the materialized
-    // columns carry the PRESERVED ids; the base ids exist to satisfy
-    // the every-add-has-a-baseRowId invariant and are shadowed row by
-    // row), watermark advanced in the same commit
-    var nextRowId = if (rt) RowTracking.watermark(snap).get + 1 else 0L
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":${new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(operation)},"operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
-    groups.toSeq.sortBy(_._2.head.path).zipWithIndex.foreach { case ((pv, files), i) =>
-      // one coalesced rewrite per oversized partition; the data read
-      // is the DV-applied distributed scan of exactly that partition's
-      // files — live rows only, so folding a DV-carrying file cannot
-      // resurrect its deleted rows. scanFiles re-attaches partition
-      // columns from the log; the staged files must NOT contain them
-      // (the layout keeps them directory-encoded), so drop them back
-      val sub = new org.apache.hadoop.fs.Path(stage, s"g$i")
-      // a 100-TB partition must NOT fold into one giant file: BIN-PACK
-      // the group's files into bins of ≤ targetFileBytes (greedy, in
-      // the group's path order — write order, so time/range locality
-      // in the inputs carries into the bins' min/max envelopes), one
-      // output file per bin. Each bin rewrites as its own coalesce(1)
-      // job, jobs submitted CONCURRENTLY from a bounded driver pool
-      // (delta-spark's own OPTIMIZE shape) — ZERO exchanges anywhere:
-      // real OPTIMIZE concatenates files, it never pays a network
-      // shuffle of every folded byte the way a repartition rewrite
-      // would (at 100 TB the shuffle IS the cost), and a shuffle
-      // would additionally randomize the per-file stats envelopes
-      // data skipping lives off. (A union of coalesce(1) branches is
-      // NOT equivalent: the optimizer collapses it to one partition.)
-      val bins = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer.empty[DeltaReader.AddFile])
-      var binBytes = 0L
-      files.sortBy(_.path).foreach { f =>
-        if (bins.last.nonEmpty && binBytes + f.size > targetFileBytes) {
-          bins += scala.collection.mutable.ArrayBuffer.empty[DeltaReader.AddFile]
-          binBytes = 0L
-        }
-        bins.last += f
-        binBytes += f.size
-      }
-      // preserved profile: the group scans WITH effective row ids
-      // (materialized-or-derived, same rule as the reader) and writes
-      // them back under the materialized column names; every bin
-      // re-stages through stagePhysicalRows (no-op when unmapped)
-      val tableS = tableSchema(snap)
-      val dataTable = org.apache.spark.sql.types.StructType(
-        tableS.fields.filterNot(f => snap.partCols.contains(f.name)))
-      val physMap = physNameMap(tableS, cmMode, "compactDelta")
-      def scanOf(fsub: Seq[DeltaReader.AddFile]) = {
-        val base = matCols match {
-          case Some((idc, vc)) =>
-            DeltaReader.scanFilesWithRowIds(spark, dir, snap, fsub)
-              .withColumnRenamed("_row_id", idc)
-              .withColumnRenamed("_row_commit_version", vc)
-              .drop(snap.partCols: _*)
-          case None =>
-            DeltaReader.scanFiles(spark, dir, snap, fsub).drop(snap.partCols: _*)
-        }
-        // materialized row-id columns pass through staging as extras
-        // (storage-level names, mapped by NOTHING); table columns
-        // rename to physical and attach field ids
-        stagePhysicalRows(base, dataTable, cmMode, physMap, "compactDelta")
-      }
-      locally {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, bins.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          pool.invokeAll(bins.toSeq.zipWithIndex.map { case (b, j) =>
-            new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = fieldIdStaged(scanOf(b.toSeq)).coalesce(1)
-                .write.parquet(new org.apache.hadoop.fs.Path(sub, s"b$j").toString)
-            }
-          }.asJava).asScala.foreach(_.get())
-        } finally pool.shutdown()
-      }
-      val part = fs.listStatus(sub).flatMap(d => fs.listStatus(d.getPath)).map(_.getPath)
-        .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .sortBy(_.toString)
-      require(part.nonEmpty, "compaction wrote no files")
-      val statsColsPhys = graft.sources.DeltaStats.physicalStatsColumns(
-        snap.configuration, Some(tableSchema(snap)))
-      // destination keeps the partition directory so the layout stays
-      // hive-readable. The directory part of `rel` is reused straight
-      // from the first removed file's add.path, which is ALREADY
-      // percent-encoded — encode only the (clean) file name, never the
-      // whole path twice. The random token makes the name unique PER
-      // ATTEMPT: two compactors racing to the same version would
-      // otherwise rename onto the same destination and the loser's
-      // earlier renames would be orphaned under a name a retry can
-      // never reclaim — with unique names the loser only loses the
-      // commit race (loud IllegalStateException below) and its files
-      // stay invisible, the same failed-writer debris VACUUM exists
-      // to sweep in real Delta deployments.
-      // a cloned table's absolute add.path carries the SOURCE's layout —
-      // rebuild the partition directory from the log's partitionValues
-      // (the authority anyway) instead of reusing a foreign URI's dirs;
-      // hive-escape for the on-disk segment, percent-encode for the log
-      // (the same double layering commitDelta's staging produces)
-      val relDir =
-        if (!DeltaReader.isAbsoluteAddPath(files.head.path))
-          files.head.path.split('/').dropRight(1).mkString("/")
-        else percentEncode(snap.partCols.map { c =>
-          val v = pv.get(c).orNull
-          val seg = if (v == null) "__HIVE_DEFAULT_PARTITION__"
-            else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
-          s"${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(c)}=$seg"
-        }.mkString("/"))
-      val attempt = java.util.UUID.randomUUID().toString.take(8)
-      val pvJson = pv.toSeq.sortBy(_._1).map { case (c, v) =>
-        s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      part.zipWithIndex.foreach { case (pf, j) =>
-        val destName = s"part-compact-${snap.version + 1}-g$i-$j-$attempt.parquet"
-        val rel = if (relDir.isEmpty) destName else s"$relDir/$destName"
-        val dest = new org.apache.hadoop.fs.Path(root, DeltaReader.percentDecode(rel))
-        if (rel.contains("/")) fs.mkdirs(dest.getParent)
-        val size = fs.getFileStatus(pf).getLen
-        // footer stats for the COMPACTED file — without them OPTIMIZE
-        // would silently destroy data skipping on everything it
-        // rewrites (the add replaces a stats-carrying one), and the
-        // very tables big enough to need compaction are the ones
-        // whose narrow mutations live off the pruning
-        val stats = graft.sources.DeltaStats.fileStats(pf, hconf,
-          graft.sources.DeltaStats.indexedColsOf(snap.configuration),
-          statsColumns = statsColsPhys)
-        val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-        // every add in a tracked table carries a (fresh, shadowed)
-        // baseRowId range — footer numRecords sizes it exactly
-        val rtJson = if (!rt) "" else {
-          val nr = stats.map(st => om.readTree(st).get("numRecords").asLong())
-            .getOrElse(throw new IllegalArgumentException(
-              s"compactDelta: rewritten file $pf produced no footer stats — " +
-                "cannot assign baseRowId on a tracked table; refusing"))
-          val base = nextRowId
-          nextRowId += nr
-          s""","baseRowId":$base,"defaultRowCommitVersion":${snap.version + 1}"""
-        }
-        require(fs.rename(pf, dest), s"rename $pf -> $dest failed")
-        actions += s"""{"add":{"path":"$rel","partitionValues":$pvJson,"size":$size,"modificationTime":0,"dataChange":false$statsJson$rtJson}}"""
-      }
-      files.foreach(f => actions += removeLine(f, dataChange = false))
-    }
-    if (rt) actions += RowTracking.watermarkAction(nextRowId - 1)
-    fs.delete(stage, true)
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    // MAINTENANCE REBASE (commitDelta's third tier, same argument): a
-    // losing compaction whose winners carried only file actions
-    // disjoint from its removes re-commits the SAME staged rewrite at
-    // the next free version — no re-read, no re-write of the folded
-    // bytes (at 100 TB the rewrite IS the cost; a nightly OPTIMIZE
-    // racing routine appends must not start over per append). A winner
-    // that removed a folded input (delete, DV, competing rewrite)
-    // forces the loud conflict as before. Row-tracked rewrites carry a
-    // version-dependent watermark + defaultRowCommitVersion and stay
-    // on the throw path.
-    val store = GraftLogStore.resolve(spark)
-    GraftLogStore.requireAtomic(store)
-    val content = actions.mkString("\n").getBytes("UTF-8")
-    val foldRemoves = groups.valuesIterator.flatten.map(_.path).toSet
-    var v = snap.version + 1
-    var committed = false
-    while (!committed) {
-      val commit = new org.apache.hadoop.fs.Path(log, f"$v%020d.json")
-      val stamped = ictStampContent(spark, fs, commit, snap.configuration,
-        injectOperationMetrics(content))
-      if (store.writeIfAbsent(fs, commit, stamped)) {
-        committed = true
-        writeVersionChecksum(fs, commit, stamped)
-        maybeCheckpointAtProperty(spark, commit, snap.configuration)
-      } else {
-        def refuse(extra: String): Nothing = throw new IllegalStateException(
-          s"Delta commit $commit already exists — a concurrent writer won version $v" +
-            extra + "; re-read the table and retry the compaction")
-        val newest = newestCommitVersion(fs, log)
-        if (rt || newest < v) refuse("")
-        val conflicts = (v to newest).flatMap { w =>
-          val base = appendConflicts(fs, log, w)
-          if (base.nonEmpty) base
-          else maintenanceRemoveConflicts(fs, log, w, foldRemoves)
-        }
-        if (conflicts.nonEmpty)
-          refuse(s" and its commit conflicts with this rewrite (${conflicts.mkString("; ")})")
-        v = newest + 1
+    def scanOf(files: Seq[DeltaReader.AddFile]): DataFrame = (matCols match {
+      case Some((idc, vc)) =>
+        DeltaReader.scanFilesWithRowIds(spark, dir, snap, files)
+          .withColumnRenamed("_row_id", idc)
+          .withColumnRenamed("_row_commit_version", vc)
+      case None => DeltaReader.scanFiles(spark, dir, snap, files)
+    }).drop(snap.partCols: _*)
+    val version = snap.version + 1
+    val attempt = java.util.UUID.randomUUID().toString.take(8)
+    val stage = new org.apache.hadoop.fs.Path(root, s"_${prefix}_${version}_$attempt")
+    val ordered = groups.map { case (pv, files) => (pv, files.sortBy(_.path)) }
+      .sortBy(_._2.head.path)
+    val bins = ordered.zipWithIndex.flatMap { case ((_, files), i) =>
+      binPack(files, target)(_.size).zipWithIndex.map { case (b, j) =>
+        (new org.apache.hadoop.fs.Path(stage, s"g$i/b$j"), b)
       }
     }
+    boundedParMap(bins, 8) { case (out, b) =>
+      restage(scanOf(b)).coalesce(1).write.parquet(out.toString)
+    }
+    val staged = ordered.zipWithIndex.flatMap { case ((pv, _), i) =>
+      val outs = fs.listStatus(new org.apache.hadoop.fs.Path(stage, s"g$i"))
+        .flatMap(d => fs.listStatus(d.getPath))
+        .filter(st => st.getPath.getName.startsWith("part-") && st.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.toString)
+      require(outs.nonEmpty, s"$op: rewrite wrote no files")
+      val relDir = pv.map { case (c, v) =>
+        s"${escapePathName(c)}=${if (v == null) "__HIVE_DEFAULT_PARTITION__" else escapePathName(v)}"
+      }.mkString("/")
+      outs.toSeq.zipWithIndex.map { case (st, j) =>
+        val name = s"part-$prefix-$version-g$i-$j-$attempt.parquet"
+        (st, if (relDir.isEmpty) name else s"$relDir/$name", pv)
+      }
+    }
+    (staged, stage)
   }
 
   /** `REORG TABLE ... APPLY (PURGE)` — materialize deletion-vector
@@ -4166,8 +3946,8 @@ object LakeWriter {
   // resolver, one remove renderer, and the deletion-vector family's
   // shared rewrite, new-file stager and log write ----
 
-  /** The one writer gate of appends and row-level DML (compactDelta's
-    * dataChange=false rewrite has its own, laxer gate). Returns the
+  /** The one writer gate of appends, row-level DML and (through
+    * [[requireRewritable]]) the dataChange=false rewrites. Returns the
     * table's column-mapping mode after refusing a mode this writer
     * cannot stage. Legacy writer versions through 5 pass: CHECK
     * constraints, invariants and generated columns are enforced on
@@ -5792,9 +5572,7 @@ object LakeWriter {
     * at 100 TB this is the difference between a point lookup touching
     * a handful of files and touching all of them.
     *
-    * Same gates as [[compactDelta]] (column mapping refused; legacy
-    * writer obligations hold for a dataChange=false re-statement of
-    * existing rows; v7 tables must declare only preserved features).
+    * Same gate as [[compactDelta]] ([[requireRewritable]]).
     * Deletion vectors fold through the DV-applied scan and drop, like
     * compaction. Quantile bounds come from ONE approximate pass over
     * the live table; the per-row z-value is a driver-broadcast bucket
@@ -5826,7 +5604,7 @@ object LakeWriter {
     * size at any table size); nulls take bucket 0, the curve's NULLS
     * FIRST side.
     *
-    * Same gates as [[compactDelta]]: dataChange=false, column-mapped
+    * Same gate as [[compactDelta]]: dataChange=false, column-mapped
     * tables (name and id mode) re-stage their rewritten files under
     * physical names + field ids, row-tracked tables rewrite through
     * the preserved id profile — and the two COMPOSE (the materialized
@@ -5850,27 +5628,14 @@ object LakeWriter {
     // commit from a deliberately stale snapshot to exercise the
     // maintenance-rebase tier deterministically
     val snap = snapOverride.getOrElse(DeltaReader.snapshot(spark, dir, None))
-    // column-mapped tables re-layout too (r16): the unioned rewrite
-    // re-stages through stagePhysicalRows below — same pattern as
-    // compactDelta's r15 change — so rewritten files carry physical
-    // names (and, in id mode, parquet field ids) readers resolve
-    val cmMode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cmMode == "none" || cmMode == "name" || cmMode == "id",
-      s"$op: unknown column mapping mode '$cmMode'")
-    // the same PRESERVED row-tracking profile as compactDelta: ready
-    // tracked tables re-layout with every surviving id materialized;
-    // half-configured ones refuse
-    val rt = RowTracking.preservedProfileReady(snap)
-    val compactSafe = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "checkConstraints",
-      "generatedColumns", "changeDataFeed", "deletionVectors", "columnMapping", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
-      Clustering.Features ++
-      (if (rt) RowTracking.Features else Set.empty[String])
-    val compactUnsafe = snap.writerFeatures.filterNot(compactSafe)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && compactUnsafe.isEmpty),
-      s"$op: table requires writer version ${snap.minWriter}" +
-        (if (compactUnsafe.nonEmpty) s" with features ${compactUnsafe.mkString(", ")}" else "") +
-        " — refusing to rewrite")
-    val matCols = if (rt) RowTracking.materializedCols(snap) else None
+    // compactDelta's gate: column-mapped tables re-layout too (r16 —
+    // the unioned rewrite re-stages through stagePhysicalRows below, so
+    // rewritten files carry physical names and, in id mode, parquet
+    // field ids), and tracked tables re-layout through the PRESERVED
+    // profile with every surviving id materialized
+    val cmMode = requireRewritable(snap, op)
+    val matCols =
+      if (RowTracking.enabled(snap)) RowTracking.materializedCols(snap) else None
     val table = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     cols.foreach { c =>
       require(table.fieldNames.contains(c),
@@ -5990,7 +5755,7 @@ object LakeWriter {
     commitDelta(stagedPhys, dir, snap.version + 1, includeMeta = false,
       checkpointInterval = 0, partCols = snap.partCols.map(c => physC.getOrElse(c, c)),
       extraActions = removes, addDataChange = false, operation = "OPTIMIZE",
-      rowIdBase = if (rt) RowTracking.rowIdBase(snap) else None,
+      rowIdBase = RowTracking.rowIdBase(snap),
       ictConf = snap.configuration, statsSchema = Some(table),
       clusteringProvider = if (zorder) None else Some("liquid"))
   }
@@ -6462,6 +6227,17 @@ object LakeWriter {
     cloneDelta(spark, srcDir, dstDir,
       Some(DeltaReader.versionAtTimestamp(spark, srcDir, timestampMillis)))
 
+  /** Write a classic single-file checkpoint at `version`: the replayed
+    * snapshot state (protocol + metaData + live adds) compacted into
+    * one parquet file, plus the `_last_checkpoint` hint. The repo's
+    * own [[DeltaReader]] replays from it, so a reader never walks
+    * commits below the newest checkpoint — the log stays O(interval)
+    * to read no matter how many commits the table accumulates.
+    *
+    * Protocol fields are written as int32, matching what real
+    * delta-spark checkpoints store (the reader goes through `Number`
+    * for exactly this reason).
+    */
   def checkpointDelta(spark: SparkSession, dir: String, version: Long,
                       parts: Int = 0): Unit = {
     import org.apache.spark.sql.Row

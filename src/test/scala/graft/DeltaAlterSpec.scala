@@ -197,6 +197,53 @@ class DeltaAlterSpec extends SparkSpec {
     assert(DeltaReader.read(spark, dir).where("id = 100").count() == 1)
   }
 
+  test("compactDelta and column-mapping removal keep null and Hive-escaped partition values and directories") {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    val s = spark
+    import s.implicits._
+    val keys = Seq(null, "a b/c", "plain")
+    // two one-file batches: every partition holds exactly two files
+    def batch(lo: Int) = (lo until lo + 12).map(i => (i.toLong, s"v$i", keys(i % 3)))
+      .toDF("id", "v", "k").coalesce(1)
+    def rows(dir: String) = DeltaReader.read(spark, dir).select("id", "v", "k")
+      .as[(Long, String, String)].collect().toSet
+    val expected = (0 until 24).map(i => (i.toLong, s"v$i", keys(i % 3))).toSet
+    // every live file sits under the escaped directory of the partition
+    // value its add carries, keyed `key`, and exists on disk
+    def placed(dir: String, key: String): Unit = {
+      val snap = DeltaReader.snapshot(spark, dir, None)
+      assert(snap.active.map(_.partitionValues.get(key).orNull).toSet == keys.toSet,
+        snap.active.map(_.partitionValues))
+      snap.active.foreach { a =>
+        val v = a.partitionValues(key)
+        val seg = if (v == null) "__HIVE_DEFAULT_PARTITION__" else escapePathName(v)
+        val rel = DeltaReader.percentDecode(a.path)
+        assert(rel.startsWith(s"${escapePathName(key)}=$seg/"), rel)
+        assert(new java.io.File(dir, rel).isFile, rel)
+      }
+    }
+    val plain = tmp("graft_alter_esc_plain_")
+    LakeWriter.writeDelta(batch(0), plain, partitionBy = Seq("k"))
+    LakeWriter.appendDelta(batch(12), plain)
+    LakeWriter.compactDelta(spark, plain)
+    assert(DeltaReader.snapshot(spark, plain, None).active.forall(_.path.contains("part-compact-")))
+    assert(rows(plain) == expected)
+    placed(plain, "k")
+
+    val mapped = tmp("graft_alter_esc_cm_")
+    LakeWriter.writeDeltaMapped(batch(0), mapped, partitionBy = Seq("k"))
+    LakeWriter.appendDelta(batch(12), mapped)
+    val phys = DeltaReader.snapshot(spark, mapped, None).active.head.partitionValues.keys.head
+    LakeWriter.compactDelta(spark, mapped)
+    assert(DeltaReader.snapshot(spark, mapped, None).active.forall(_.path.contains("part-compact-")))
+    assert(rows(mapped) == expected)
+    placed(mapped, phys)
+    LakeWriter.removeColumnMapping(spark, mapped)
+    assert(DeltaReader.snapshot(spark, mapped, None).active.forall(_.path.contains("part-cmremove-")))
+    assert(rows(mapped) == expected)
+    placed(mapped, "k")
+  }
+
   test("column-mapping UPGRADE (none -> name): metadata-only, old files keep resolving, rename/evolve then work") {
     val s = spark
     import s.implicits._

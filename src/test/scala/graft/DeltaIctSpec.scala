@@ -69,6 +69,34 @@ class DeltaIctSpec extends SparkSpec {
     assert(stamps.map(_._2) == stamps.map(_._2).sorted)
   }
 
+  test("maintenance rewrites commit on ICT tables with monotone stamps, rows unchanged") {
+    val d = freshDir("maint")
+    LakeWriter.writeDelta((1 to 40).map(i => (i.toLong, s"v$i")).toDF("id", "s").repartition(4), d,
+      configuration = Map(
+        "delta.enableInCommitTimestamps" -> "true",
+        "delta.enableDeletionVectors" -> "true"))
+    def rows() = DeltaReader.read(spark, d).select("id", "s").as[(Long, String)].collect().toSet
+    def version() = DeltaReader.snapshot(spark, d, None).version
+    val all = rows()
+    LakeWriter.compactDelta(spark, d)                                         // v1
+    assert(version() == 1L && rows() == all)
+    LakeWriter.compactDeltaZOrder(spark, d, "id", "s", filesPerPartition = 2) // v2
+    assert(version() == 2L && rows() == all)
+    LakeWriter.deleteWhereDv(spark, d, "id % 5 = 0")                          // v3
+    val live = rows()
+    assert(live.size == 32)
+    LakeWriter.reorgPurge(spark, d)                                           // v4
+    assert(version() == 4L && rows() == live)
+    assert(DeltaReader.snapshot(spark, d, None).active.forall(_.dv.isEmpty))
+    LakeWriter.alterProperties(spark, d, Map("delta.columnMapping.mode" -> "name"))  // v5
+    LakeWriter.removeColumnMapping(spark, d)                                  // v6
+    assert(version() == 6L && rows() == live)
+    val stamps = icts(d)
+    assert(stamps.map(_._1) == (0L to 6L), stamps)
+    assert(stamps.map(_._2).sliding(2).forall { case Seq(a, b) => a < b },
+      s"stamps must be strictly increasing: $stamps")
+  }
+
   test("history surfaces the stamp as `timestamp`; monotone mtime when unstamped") {
     val d = freshDir("hist")
     LakeWriter.writeDelta(Seq((1L, "a")).toDF("id", "s"), d,

@@ -119,6 +119,26 @@ class DeltaSizingSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.delta.autoCompact.minNumFiles")
   }
 
+  test("autoCompact folds tables declaring vacuumProtocolCheck (compactDelta's gate, not a narrower copy)") {
+    val dir = fresh("acf")
+    spark.conf.set("spark.graft.delta.autoCompact.minNumFiles", "4")
+    try {
+      LakeWriter.writeDelta(spark.range(0, 10).toDF("id").coalesce(1), dir,
+        configuration = Map("delta.autoOptimize.autoCompact" -> "true",
+          "delta.feature.vacuumProtocolCheck" -> "supported"))
+      assert(DeltaReader.snapshot(spark, dir, None).writerFeatures
+        .contains("vacuumProtocolCheck"))
+      (1 to 6).foreach { k =>
+        LakeWriter.appendDelta(
+          spark.range(k * 10L, k * 10L + 10).toDF("id").coalesce(1), dir)
+      }
+      assert(liveFiles(dir).size <= 4, s"${liveFiles(dir).size} files: autoCompact never folded")
+      assert(DeltaReader.history(spark, dir).select("operation").as[String].collect()
+        .contains("auto compact"))
+      assert(DeltaReader.read(spark, dir).as[Long].collect().toSet == (0L until 70L).toSet)
+    } finally spark.conf.unset("spark.graft.delta.autoCompact.minNumFiles")
+  }
+
   test("optimizeWrite never scrambles maintenance layouts: cluster OPTIMIZE keeps its files") {
     import graft.sources.Clustering
     val dir = fresh("cl")

@@ -173,6 +173,23 @@ class OccRebaseSpec extends SparkSpec {
     assert(DeltaReader.read(spark, d).count() == 7)
   }
 
+  test("maintenance rebase excludes row-tracked rewrites: a stale compaction refuses") {
+    val d = freshDir("mrt")
+    LakeWriter.writeDelta(rows(1, 10, "a").repartition(4), d)   // v0: 4 files
+    LakeWriter.enableRowTracking(spark, d)                       // v1: preserved profile
+    val stale = DeltaReader.snapshot(spark, d, None)
+    LakeWriter.appendDelta(rows(11, 20, "b"), d)                 // v2: the winner
+    val e = intercept[IllegalStateException] {
+      LakeWriter.compactDelta(spark, d, minFiles = 2, snapOverride = Some(stale))
+    }
+    assert(e.getMessage.contains("a concurrent writer won"), e.getMessage)
+    val snap = DeltaReader.snapshot(spark, d, None)
+    assert(snap.version == 2L, s"a refused compaction must not commit, got v${snap.version}")
+    assert(!snap.active.exists(_.path.contains("part-compact-")))
+    assert(DeltaReader.read(spark, d).select("id").as[Long].collect().toSet ==
+      (1L to 20L).toSet)
+  }
+
   test("z-order rebase rides the commit funnel's maintenance tier") {
     val d = freshDir("moz")
     LakeWriter.writeDelta(rows(1, 100, "a").repartition(4), d)  // v0
