@@ -87,24 +87,6 @@ object LakeWriter {
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** Create a Delta table at `dir` (version 0) from `df` — the write
-    * side of [[DeltaReader]], emitting spec-conformant protocol /
-    * metaData / add actions (PROTOCOL.md; minReaderVersion 1, no
-    * column mapping). Single-writer discipline: real Delta arbitrates
-    * concurrent commits through an atomic log rename, which a
-    * single-pipeline sink does not need — concurrent writers to one
-    * table are out of scope and would need that arbitration.
-    *
-    * All log/file manipulation goes through the Hadoop FileSystem of
-    * the table path, so the sink works on any scheme the session can
-    * reach, matching [[DeltaReader]].
-    *
-    * `checkpointInterval` > 0 writes a classic checkpoint parquet (+
-    * `_last_checkpoint` hint) every that-many commits — without it a
-    * long-lived graft-written table replays every JSON commit forever,
-    * which is exactly the unbounded-log failure the format's
-    * checkpoints exist to prevent.
-    */
   /** IN-COMMIT TIMESTAMPS (the protocol's `inCommitTimestamp` writer
     * feature): graft logs are deterministic by default — every
     * informational timestamp is 0, which makes results reproducible
@@ -467,6 +449,24 @@ object LakeWriter {
       .getOrElse(latest)
   }
 
+  /** Create a Delta table at `dir` (version 0) from `df` — the write
+    * side of [[DeltaReader]], emitting spec-conformant protocol /
+    * metaData / add actions (PROTOCOL.md; minReaderVersion 1, no
+    * column mapping). Single-writer discipline: real Delta arbitrates
+    * concurrent commits through an atomic log rename, which a
+    * single-pipeline sink does not need — concurrent writers to one
+    * table are out of scope and would need that arbitration.
+    *
+    * All log/file manipulation goes through the Hadoop FileSystem of
+    * the table path, so the sink works on any scheme the session can
+    * reach, matching [[DeltaReader]].
+    *
+    * `checkpointInterval` > 0 writes a classic checkpoint parquet (+
+    * `_last_checkpoint` hint) every that-many commits — without it a
+    * long-lived graft-written table replays every JSON commit forever,
+    * which is exactly the unbounded-log failure the format's
+    * checkpoints exist to prevent.
+    */
   def writeDelta(df: DataFrame, dir: String, checkpointInterval: Int = 0,
                  partitionBy: Seq[String] = Nil,
                  txn: Option[(String, Long)] = None,
@@ -500,77 +500,116 @@ object LakeWriter {
       identity = IdentityColumns.advanceOf(df.schema, Map.empty).map(adv => (adv, None)))
   }
 
-  /** One metadata-only ALTER commit: commitInfo + the (possibly
-    * upgraded) protocol restated + the new metaData, same table id,
-    * create-if-absent arbitration. No data file is touched — ALTERs
-    * are version bumps, and time travel below them replays the old
-    * metadata (historic reads keep their historic shape).
+  /** EVERY legacy obligation a table with configuration `conf` and
+    * schema `schema` carries, made explicit when a protocol restates to
+    * the (*, 7) feature form — a feature list that DROPPED one
+    * (generated columns, identity, constraints, CDF, CM) would license a
+    * v7 writer to violate it. Callers pass what the commit LEAVES the
+    * table with, so an obligation the same commit introduces is listed.
     */
-  private def commitAlter(spark: SparkSession, dir: String,
-                          snap: DeltaReader.Snapshot, schemaJson: String,
-                          partCols: Seq[String], configuration: Map[String, String],
-                          operation: String,
-                          protocolOverride: Option[String] = None): Unit = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val actions = Seq(
-      s"""{"commitInfo":{"timestamp":0,"operation":${om.writeValueAsString(operation)},"operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}""",
-      protocolOverride.getOrElse(protocolJson(snap)),
-      // raw-node restatement: a foreign table's name/description/
-      // createdTime survive graft's ALTER commits (r16)
-      metaLineRaw(dir, snap, schemaJson, partCols, configuration))
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    val commit = new org.apache.hadoop.fs.Path(log, f"${snap.version + 1}%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version ${snap.version + 1}; re-read the table and retry",
-      ictConf = configuration)
-  }
-
-  /** Protocol restatement that ADDS one writer feature: minWriter 7
-    * with the feature plus the legacy obligations the table actually
-    * declares (never obligations it doesn't have). None when already
-    * declared.
-    */
-  private[graft] def protocolWithWriterFeature(snap: DeltaReader.Snapshot,
-                                               feature: String): Option[String] =
-    protocolWithWriterFeatures(snap, Set(feature))
-
-  /** Same, adding a SET of writer features at once (a feature and its
-    * prerequisite, e.g. clustering + domainMetadata).
-    */
-  private[graft] def protocolWithWriterFeatures(snap: DeltaReader.Snapshot,
-                                                features: Set[String]): Option[String] = {
-    if (snap.minWriter == 7 && features.subsetOf(snap.writerFeatures.toSet)) return None
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def jarr(xs: Iterable[String]): String =
-      xs.toSeq.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-    val wf = snap.writerFeatures.toSet ++ legacyObligations(snap) ++ features
-    val rfJson =
-      if (snap.minReader >= 3) s""","readerFeatures":${jarr(snap.readerFeatures)}"""
-      else ""
-    Some(s"""{"protocol":{"minReaderVersion":${snap.minReader},"minWriterVersion":7$rfJson,"writerFeatures":${jarr(wf)}}}""")
-  }
-
-  /** EVERY legacy obligation the table actually declares, made
-    * explicit when a protocol restates to the (*, 7) feature form — a
-    * feature list that DROPPED one (generated columns, identity,
-    * constraints, CDF, CM) would license a v7 writer to violate it.
-    */
-  private def legacyObligations(snap: DeltaReader.Snapshot): Set[String] = {
-    val conf = snap.configuration
-    val table = tableSchema(snap)
+  private def legacyObligations(conf: Map[String, String],
+                                schema: org.apache.spark.sql.types.StructType): Set[String] =
     Set("appendOnly", "invariants") ++
-      (if (cdfEnabled(snap)) Set("changeDataFeed") else Set.empty) ++
+      (if (conf.get("delta.enableChangeDataFeed").contains("true")) Set("changeDataFeed")
+       else Set.empty) ++
       (if (conf.keys.exists(_.startsWith("delta.constraints."))) Set("checkConstraints")
        else Set.empty) ++
       (if (conf.getOrElse("delta.columnMapping.mode", "none") != "none")
         Set("columnMapping") else Set.empty) ++
-      (if (table.fields.exists(_.metadata.contains("delta.generationExpression")))
+      (if (schema.fields.exists(_.metadata.contains("delta.generationExpression")))
         Set("generatedColumns") else Set.empty) ++
-      (if (IdentityColumns.hasIdentity(table)) Set(IdentityColumns.Feature)
+      (if (IdentityColumns.hasIdentity(schema)) Set(IdentityColumns.Feature)
        else Set.empty)
+
+  /** The feature-form protocol of a commit that leaves the table with
+    * `conf` and `schema` and needs `writerFeatures` and the reader+writer
+    * `readerWriterFeatures` declared: minWriter 7; minReader 3 when a
+    * reader+writer feature is requested, else the larger of `minReader`
+    * and the snapshot's. The lists union the snapshot's features, every
+    * [[legacyObligations]] and the requested ones (reader+writer
+    * features in both lists; `columnMapping`, the one legacy obligation
+    * readers share, in the reader list too). None when the table is
+    * already v7 and declares everything requested plus any obligation
+    * the commit introduces.
+    */
+  private def restateProtocol(snap: DeltaReader.Snapshot, conf: Map[String, String],
+                              schema: org.apache.spark.sql.types.StructType,
+                              writerFeatures: Set[String] = Set.empty,
+                              readerWriterFeatures: Set[String] = Set.empty,
+                              minReader: Long = 1L): Option[String] = {
+    val obligations = legacyObligations(conf, schema)
+    val needed = writerFeatures ++ readerWriterFeatures ++
+      (obligations -- legacyObligations(snap.configuration, tableSchema(snap)))
+    val reader = math.max(snap.minReader, if (readerWriterFeatures.nonEmpty) 3L else minReader)
+    if (snap.minWriter == 7 && reader == snap.minReader &&
+        needed.subsetOf(snap.writerFeatures.toSet) &&
+        readerWriterFeatures.subsetOf(snap.readerFeatures.toSet)) None
+    else Some(protocolLine(reader, 7,
+      snap.readerFeatures.toSet ++ obligations.intersect(Set("columnMapping")) ++
+        readerWriterFeatures,
+      snap.writerFeatures.toSet ++ obligations ++ writerFeatures ++ readerWriterFeatures))
+  }
+
+  /** The one renderer of `protocol` actions: reader features are listed
+    * only in the feature form (minReader ≥ 3), writer features only at
+    * minWriter ≥ 7, each sorted and distinct.
+    */
+  private def protocolLine(minReader: Long, minWriter: Long,
+                           readerFeatures: Iterable[String],
+                           writerFeatures: Iterable[String]): String = {
+    def jarr(xs: Iterable[String]): String =
+      xs.toSeq.distinct.sorted.map(jsonMapper.writeValueAsString).mkString("[", ",", "]")
+    val rf = if (minReader >= 3) s""","readerFeatures":${jarr(readerFeatures)}""" else ""
+    val wf = if (minWriter >= 7) s""","writerFeatures":${jarr(writerFeatures)}""" else ""
+    s"""{"protocol":{"minReaderVersion":$minReader,"minWriterVersion":$minWriter$rf$wf}}"""
+  }
+
+  /** The table's CURRENT protocol restated verbatim — what a
+    * metadata-updating commit carries alongside its new metaData
+    * (emitting (1,2) would DOWNGRADE a feature table's declared
+    * requirements, the same trap checkpointDelta documents).
+    */
+  private def protocolJson(snap: DeltaReader.Snapshot): String =
+    protocolLine(snap.minReader, snap.minWriter, snap.readerFeatures, snap.writerFeatures)
+
+  /** The `commitInfo` action leading every graft commit (delta-spark's
+    * layout): pure provenance — excluded from checkpoints, ignored by
+    * state folding, surfaced by DeltaReader.history. Its timestamp is 0
+    * like every informational field of graft's deterministic logs;
+    * `readVersion` is absent on a creating commit.
+    */
+  private def commitInfoLine(operation: String, operationParameters: String,
+                             readVersion: Option[Long]): String =
+    s"""{"commitInfo":{"timestamp":0,"operation":${jsonMapper.writeValueAsString(operation)},"operationParameters":$operationParameters,${readVersion.map(v => s""""readVersion":$v,""").getOrElse("")}"engineInfo":"graft"}}"""
+
+  /** The metadata-class commit — ALTERs, protocol and feature changes,
+    * CLUSTER BY, domain metadata, row-tracking enablement, the DV family
+    * and RESTORE: [[commitInfoLine]] for `operation`, then `actions`,
+    * written create-if-absent at `snap.version + 1` through
+    * [[GraftLogStore.commitOrThrow]]. `conf` is the configuration the
+    * commit leaves the table with (its in-commit timestamp and
+    * checkpoint cadence read it); `crcReplaced` names the sizes of live
+    * entries re-added without a remove. No OCC rebase, optimizeWrite or
+    * autoCompact (that is commitDelta's funnel): a lost race refuses,
+    * and the loser's sidecars and staged files are unreferenced debris,
+    * the same class as a failed writer's. ALTERs are version bumps that
+    * touch no data file; time travel below them replays the old
+    * metadata.
+    */
+  private def commitLog(spark: SparkSession, snap: DeltaReader.Snapshot, dir: String,
+                        operation: String, conf: Map[String, String], actions: Seq[String],
+                        operationParameters: String = "{}",
+                        crcReplaced: Seq[Long] = Nil): Unit = {
+    val version = snap.version + 1
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
+    fs.mkdirs(log)
+    GraftLogStore.commitOrThrow(spark, fs, new org.apache.hadoop.fs.Path(log, f"$version%020d.json"),
+      (commitInfoLine(operation, operationParameters, Some(snap.version)) +: actions)
+        .mkString("\n").getBytes("UTF-8"),
+      s"a concurrent writer won version $version; re-read the table and retry the $operation",
+      ictConf = conf, crcReplaced = crcReplaced)
   }
 
   /** ALTER TABLE ... ALTER COLUMN c SET DEFAULT expr / DROP DEFAULT —
@@ -613,10 +652,12 @@ object LakeWriter {
     }
     val newSchema = org.apache.spark.sql.types.StructType(
       table.fields.map(x => if (x.name == colName) newField else x))
-    commitAlter(spark, dir, snap, newSchema.json, snap.partCols, snap.configuration,
-      "ALTER COLUMN",
-      if (default.isDefined) protocolWithWriterFeature(snap, "allowColumnDefaults")
-      else None)
+    val proto =
+      if (default.isEmpty) None
+      else restateProtocol(snap, snap.configuration, newSchema, Set("allowColumnDefaults"))
+    commitLog(spark, snap, dir, "ALTER COLUMN", snap.configuration, Seq(
+      proto.getOrElse(protocolJson(snap)),
+      metaLineFor(dir, snap, newSchema, snap.configuration)))
   }
 
   /** Carry an existing add's `clusteringProvider` through a re-add
@@ -772,29 +813,11 @@ object LakeWriter {
     // must understand — the upgrade rides the same commit as the
     // schema change
     val typeFeats = typeFeaturesNeeded(snap, parsed.map(_._2))
-    val protoOverride =
+    val proto =
       if (typeFeats.isEmpty) None
-      else Some(protocolWithReaderWriterFeature(snap, typeFeats: _*))
-    commitAlter(spark, dir, snap, newSchema.json, snap.partCols, newConf,
-      "ADD COLUMNS", protocolOverride = protoOverride)
-  }
-
-  /** Protocol restated in the (3, 7) feature form with one or more
-    * reader+writer features added, legacy obligations made explicit —
-    * the upgrade a schema change that affects READERS rides in its own
-    * commit (variant / NTZ columns, type widening).
-    */
-  private def protocolWithReaderWriterFeature(snap: DeltaReader.Snapshot,
-                                              features: String*): String = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def jarr(xs: Iterable[String]): String =
-      xs.toSeq.distinct.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-    val legacyR =
-      if (snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none")
-        Set("columnMapping") else Set.empty[String]
-    s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${
-      jarr(snap.readerFeatures.toSet ++ legacyR ++ features)},"writerFeatures":${
-      jarr(snap.writerFeatures.toSet ++ legacyObligations(snap) ++ features)}}}"""
+      else restateProtocol(snap, newConf, newSchema, readerWriterFeatures = typeFeats.toSet)
+    commitLog(spark, snap, dir, "ADD COLUMNS", newConf, Seq(
+      proto.getOrElse(protocolJson(snap)), metaLineFor(dir, snap, newSchema, newConf)))
   }
 
   /** `ALTER TABLE t ALTER COLUMN c TYPE <wider>` — the protocol's
@@ -888,10 +911,10 @@ object LakeWriter {
     // reader+writer feature: minReader 3 / minWriter 7, existing
     // features and legacy obligations preserved; the date→NTZ edge
     // introduces a second reader-visible shape in the same commit
-    commitAlter(spark, dir, snap, newSchema.json, snap.partCols, snap.configuration,
-      "ALTER COLUMN TYPE",
-      protocolOverride = Some(protocolWithReaderWriterFeature(snap,
-        "typeWidening" +: typeFeaturesNeeded(snap, Seq(to)): _*)))
+    commitLog(spark, snap, dir, "ALTER COLUMN TYPE", snap.configuration, Seq(
+      restateProtocol(snap, snap.configuration, newSchema, readerWriterFeatures =
+        typeFeaturesNeeded(snap, Seq(to)).toSet + "typeWidening").getOrElse(protocolJson(snap)),
+      metaLineFor(dir, snap, newSchema, snap.configuration)))
   }
 
   /** ALTER TABLE RENAME COLUMN — column-mapped tables only (name OR
@@ -961,8 +984,8 @@ object LakeWriter {
       if (!stamped) snap.configuration
       else snap.configuration + ("delta.columnMapping.maxColumnId" -> (maxId + 1).toString)
     val newPartCols = snap.partCols.map(c => if (c == from) to else c)
-    commitAlter(spark, dir, snap, newSchema.json, newPartCols, newConf,
-      "RENAME COLUMN")
+    commitLog(spark, snap, dir, "RENAME COLUMN", newConf, Seq(protocolJson(snap),
+      metaLineRaw(dir, snap, newSchema.json, newPartCols, newConf)))
   }
 
   /** ALTER TABLE DROP COLUMN — column-mapped tables only (the data
@@ -1006,8 +1029,8 @@ object LakeWriter {
         case Nil => st
       }
     val newSchema = dropAt(table, name.split('.').toList, name)
-    commitAlter(spark, dir, snap, newSchema.json, snap.partCols, snap.configuration,
-      "DROP COLUMNS")
+    commitLog(spark, snap, dir, "DROP COLUMNS", snap.configuration, Seq(protocolJson(snap),
+      metaLineFor(dir, snap, newSchema, snap.configuration)))
   }
 
   /** `ALTER TABLE t ALTER COLUMN c COMMENT 'text'` — one metadata
@@ -1048,8 +1071,8 @@ object LakeWriter {
       case Nil => st
     }
     val newSchema = at(table, colName.split('.').toList)
-    commitAlter(spark, dir, snap, newSchema.json, snap.partCols, snap.configuration,
-      "CHANGE COLUMN")
+    commitLog(spark, snap, dir, "CHANGE COLUMN", snap.configuration, Seq(protocolJson(snap),
+      metaLineFor(dir, snap, newSchema, snap.configuration)))
   }
 
   /** Feature names a `delta.feature.<name>=supported` TBLPROPERTIES
@@ -1182,72 +1205,42 @@ object LakeWriter {
     // ictStampContent reads it back so they agree to the millisecond)
     val enablingIct = set.get("delta.enableInCommitTimestamps").contains("true") &&
       !cur.get("delta.enableInCommitTimestamps").contains("true")
-    val (newConf, ictProtocol) =
-      if (!enablingIct) (newConf0, None)
+    val newConf =
+      if (!enablingIct) newConf0
       else {
         val root = new org.apache.hadoop.fs.Path(dir)
         val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
         val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
         val t = nextIct(spark, fs, log, snap.version)
-        (newConf0 ++ Map(
+        newConf0 ++ Map(
           "delta.inCommitTimestampEnablementVersion" -> (snap.version + 1).toString,
-          "delta.inCommitTimestampEnablementTimestamp" -> t.toString), Some(()))
+          "delta.inCommitTimestampEnablementTimestamp" -> t.toString)
       }
-    // ONE unified protocol override: declared features and/or ICT
-    // enablement lift to the v7 feature form (legacy obligations made
-    // explicit; a declared reader+writer feature lifts minReader to 3
-    // and materializes the legacy reader features beside it); a bare
-    // CDF/constraint enablement on a legacy table keeps the legacy
-    // floor delta-spark would stamp
-    val floor = Seq(if (enablingCdf) 4 else 0, if (addingConstraint) 3 else 0).max
-    val protocolOverride =
-      if (featsDeclared.nonEmpty || ictProtocol.nonEmpty ||
-          reqMinWriter.contains(7) || reqMinReader.contains(3) ||
-          // enabling CDF / a first constraint on an ALREADY-v7 table
-          // must add the feature to writerFeatures — a v7 list that
-          // omits changeDataFeed would license a foreign v7 writer to
-          // commit changeless mutations
-          ((enablingCdf || addingConstraint) && snap.minWriter == 7)) {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        def jarr(xs: Iterable[String]): String =
-          xs.toSeq.distinct.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-        val legacy = Set("appendOnly", "invariants") ++
-          (if (cdfEnabled(snap) || enablingCdf) Set("changeDataFeed") else Set.empty) ++
-          (if (cur.keys.exists(_.startsWith("delta.constraints.")) || addingConstraint)
-            Set("checkConstraints") else Set.empty) ++
-          (if (cur.getOrElse("delta.columnMapping.mode", "none") != "none")
-            Set("columnMapping") else Set.empty)
-        val wf = snap.writerFeatures.toSet ++ legacy ++ featsDeclared ++
-          (if (ictProtocol.nonEmpty) Set("inCommitTimestamp") else Set.empty)
-        val rw = featsDeclared.intersect(DeclarableReaderWriter)
-        val minReader =
-          if (rw.nonEmpty || reqMinReader.contains(3)) 3 else snap.minReader
-        val legacyR =
-          if (cur.getOrElse("delta.columnMapping.mode", "none") != "none")
-            Set("columnMapping") else Set.empty[String]
-        val rfAll = snap.readerFeatures.toSet ++ rw ++ legacyR
-        require(minReader < 3 || rfAll.nonEmpty,
+    // declared features, ICT enablement and v7/reader-3 requests restate
+    // the feature form, as does every change to an already-v7 table (a
+    // v7 list omitting a newly enabled changeDataFeed or constraint would
+    // license a foreign v7 writer to violate it); a bare CDF/constraint
+    // enablement on a legacy table lifts to the legacy floor delta-spark
+    // would stamp
+    val rw = featsDeclared.intersect(DeclarableReaderWriter)
+    val proto =
+      if (snap.minWriter == 7 || featsDeclared.nonEmpty || enablingIct ||
+          reqMinWriter.contains(7) || reqMinReader.contains(3)) {
+        require(!reqMinReader.contains(3) || rw.nonEmpty || snap.readerFeatures.nonEmpty ||
+            curMode != "none",
           "alterProperties: minReaderVersion 3 with NO reader features would be a " +
             "malformed table (the feature form declares its reader requirements " +
             "explicitly) — declare one via delta.feature.<name>=supported")
-        val rfJson =
-          if (minReader >= 3) s""","readerFeatures":${jarr(rfAll)}""" else ""
-        Some(s"""{"protocol":{"minReaderVersion":$minReader,"minWriterVersion":7$rfJson,"writerFeatures":${jarr(wf)}}}""")
-      } else if (snap.minWriter == 7) None
-      else {
-        // legacy-version lifts: a requested legacy writer/reader bump
-        // and/or the CDF/constraint enablement floor, whichever is
-        // higher; nothing to lift -> no protocol action
-        val newW: Long = Seq(snap.minWriter,
-          if (floor > 0) floor.toLong else 0L,
-          reqMinWriter.map(_.toLong).getOrElse(0L)).max
-        val newR: Long = math.max(snap.minReader,
-          reqMinReader.map(_.toLong).getOrElse(0L))
-        if (newW == snap.minWriter && newR == snap.minReader) None
-        else Some(s"""{"protocol":{"minReaderVersion":$newR,"minWriterVersion":$newW}}""")
+        restateProtocol(snap, newConf, tableSchema(snap),
+          featsDeclared -- rw ++ (if (enablingIct) Set("inCommitTimestamp") else Set.empty),
+          rw, reqMinReader.getOrElse(1).toLong).getOrElse(protocolJson(snap))
+      } else {
+        val floor = Seq(if (enablingCdf) 4 else 0, if (addingConstraint) 3 else 0).max
+        protocolLine(math.max(snap.minReader, reqMinReader.getOrElse(0).toLong),
+          Seq(snap.minWriter, floor.toLong, reqMinWriter.getOrElse(0).toLong).max, Nil, Nil)
       }
-    commitAlter(spark, dir, snap, snap.schemaJson, snap.partCols, newConf,
-      "SET TBLPROPERTIES", protocolOverride)
+    commitLog(spark, snap, dir, "SET TBLPROPERTIES", newConf, Seq(proto,
+      metaLineRaw(dir, snap, snap.schemaJson, snap.partCols, newConf)))
   }
 
   /** The none -> name column-mapping UPGRADE: one metadata commit, zero
@@ -1287,15 +1280,11 @@ object LakeWriter {
       ("delta.columnMapping.mode" -> "name") +
       ("delta.columnMapping.maxColumnId" -> next.toString)
     val proto =
-      if (featureForm)
-        protocolWithReaderWriterFeature(
-          // legacyR computes off the CURRENT (unmapped) configuration,
-          // so pass the feature explicitly — it must land in both lists
-          snap, "columnMapping")
-      else
-        s"""{"protocol":{"minReaderVersion":${math.max(snap.minReader, 2)},"minWriterVersion":${math.max(snap.minWriter, 5)}}}"""
-    commitAlter(spark, dir, snap, newSchema.json, snap.partCols, newConf,
-      "SET TBLPROPERTIES", protocolOverride = Some(proto))
+      if (!featureForm) protocolLine(math.max(snap.minReader, 2), math.max(snap.minWriter, 5), Nil, Nil)
+      else restateProtocol(snap, newConf, newSchema, readerWriterFeatures = Set("columnMapping"))
+        .getOrElse(protocolJson(snap))
+    commitLog(spark, snap, dir, "SET TBLPROPERTIES", newConf, Seq(proto,
+      metaLineFor(dir, snap, newSchema, newConf)))
   }
 
   /** REMOVE column mapping (`name`/`id` → `none`) — the inverse of
@@ -1450,18 +1439,15 @@ object LakeWriter {
     val fileStats = boundedParMap(files, 16)(st => DeltaStats.fileStats(st.getPath, hconf))
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"CONVERT","operationParameters":{"numFiles":${files.size}},"engineInfo":"graft"}}"""
+    actions += commitInfoLine("CONVERT", s"""{"numFiles":${files.size}}""", None)
     // NTZ (and in principle variant) columns in the converted files are
     // reader-visible shapes — the creating protocol must gate them or a
     // feature-unaware reader shifts every wall-clock value to UTC
     val convRw = (if (hasVariant(tableSchema)) Seq("variantType") else Nil) ++
       (if (hasNtz(tableSchema)) Seq("timestampNtz") else Nil)
-    if (convRw.nonEmpty) {
-      val fj = (Seq("appendOnly", "invariants") ++ convRw).sorted
-        .map(om.writeValueAsString).mkString("[", ",", "]")
-      actions += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${convRw.sorted.map(om.writeValueAsString).mkString("[", ",", "]")},"writerFeatures":$fj}}"""
-    } else
-      actions += s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
+    actions += (
+      if (convRw.isEmpty) protocolLine(1, 2, Nil, Nil)
+      else protocolLine(3, 7, convRw, legacyObligations(Map.empty, tableSchema) ++ convRw))
     val pcJson = names.map(om.writeValueAsString).mkString("[", ",", "]")
     actions += s"""{"metaData":{"id":"${java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))}","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(tableSchema.json)},"partitionColumns":$pcJson,"configuration":{}}}"""
     entries.zip(fileStats).foreach { case ((rel, pv, size), stats) =>
@@ -1718,13 +1704,9 @@ object LakeWriter {
     val cmRw = (if (hasVariant(logical)) Seq("variantType") else Nil) ++
       (if (hasNtz(logical)) Seq("timestampNtz") else Nil)
     val protoLine =
-      if (cmRw.isEmpty) """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
-      else {
-        val rfj = ("columnMapping" +: cmRw).sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-        val wfj = (Seq("appendOnly", "invariants", "columnMapping") ++ cmRw).sorted
-          .map(om.writeValueAsString).mkString("[", ",", "]")
-        s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":$rfj,"writerFeatures":$wfj}}"""
-      }
+      if (cmRw.isEmpty) protocolLine(2, 5, Nil, Nil)
+      else protocolLine(3, 7, "columnMapping" +: cmRw,
+        legacyObligations(Map("delta.columnMapping.mode" -> "name"), logical) ++ cmRw)
     commitDelta(dfPhys, dir, 0L, includeMeta = true, checkpointInterval,
       partitionBy.map(phys), txn,
       operation = "CREATE TABLE",
@@ -1786,51 +1768,6 @@ object LakeWriter {
     throw last
   }
 
-  /** Re-state the table's CURRENT protocol verbatim as a commit line —
-    * what a metadata-updating commit must carry alongside its new
-    * metaData (emitting (1,2) would DOWNGRADE a feature table's
-    * declared requirements, the same trap checkpointDelta documents).
-    */
-  private def protocolJson(snap: DeltaReader.Snapshot): String = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def jarr(xs: Seq[String]): String =
-      xs.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-    val rf = if (snap.readerFeatures.nonEmpty)
-      s""","readerFeatures":${jarr(snap.readerFeatures)}""" else ""
-    val wf = if (snap.writerFeatures.nonEmpty)
-      s""","writerFeatures":${jarr(snap.writerFeatures)}""" else ""
-    s"""{"protocol":{"minReaderVersion":${snap.minReader},"minWriterVersion":${snap.minWriter}$rf$wf}}"""
-  }
-
-  /** APPEND with SCHEMA EVOLUTION (delta-spark's mergeSchema=true):
-    * columns the table doesn't have yet are ADDED (appended after the
-    * existing fields, forced nullable — pre-evolution files simply
-    * lack them, and the schema-first scan reads those as null, which
-    * is the protocol's evolution model); since r16 this includes
-    * NESTED additions — a new field inside an existing struct (directly
-    * or through an array element) appends after that struct's fields,
-    * and old files null-fill it on read; table columns missing from
-    * `df` fill with nulls when the table declares them nullable
-    * (refused otherwise, nested fields included); common columns obey
-    * [[appendDelta]]'s compatibility rules against the merged shape. When the schema actually changes, the commit
-    * carries the new `metaData` action (same table id — readers track
-    * identity by it) plus the CURRENT protocol restated verbatim; when
-    * it doesn't, this is a plain append. Time travel below the
-    * evolution replays the OLD schemaString, so historic reads keep
-    * their historic shape.
-    *
-    * Refusals: type changes on existing columns (this writer does not
-    * rewrite old files), dropping into a non-nullable hole, partition
-    * columns missing from `df`, and the same writer-obligation gates
-    * as [[appendDelta]]. Column-mapped tables (name AND id mode, r16)
-    * evolve like unmapped ones: each new field gets a fresh physical
-    * name + field id and `maxColumnId` advances ([[evolveSchema]]);
-    * the grew-path batch stages through [[stagePhysicalRows]], so
-    * nested struct leaves land under their PER-LEVEL physical names
-    * (a foreign table whose inner fields carry their own physical
-    * names must not receive files keyed by logical nested names) and
-    * id-mode files carry parquet field ids.
-    */
   /** Schema EVOLUTION: merge `incoming` fields not yet in the table
     * into the schema — appended after the existing fields, forced
     * nullable (old rows have no value). On a column-mapped table each
@@ -2034,6 +1971,35 @@ object LakeWriter {
     om.writeValueAsString(wrapper)
   }
 
+  /** APPEND with SCHEMA EVOLUTION (delta-spark's mergeSchema=true):
+    * columns the table doesn't have yet are ADDED (appended after the
+    * existing fields, forced nullable — pre-evolution files simply
+    * lack them, and the schema-first scan reads those as null, which
+    * is the protocol's evolution model); since r16 this includes
+    * NESTED additions — a new field inside an existing struct (directly
+    * or through an array element) appends after that struct's fields,
+    * and old files null-fill it on read; table columns missing from
+    * `df` fill with nulls when the table declares them nullable
+    * (refused otherwise, nested fields included); common columns obey
+    * [[appendDelta]]'s compatibility rules against the merged shape. When the schema actually changes, the commit
+    * carries the new `metaData` action (same table id — readers track
+    * identity by it) plus the CURRENT protocol restated verbatim; when
+    * it doesn't, this is a plain append. Time travel below the
+    * evolution replays the OLD schemaString, so historic reads keep
+    * their historic shape.
+    *
+    * Refusals: type changes on existing columns (this writer does not
+    * rewrite old files), dropping into a non-nullable hole, partition
+    * columns missing from `df`, and the same writer-obligation gates
+    * as [[appendDelta]]. Column-mapped tables (name AND id mode, r16)
+    * evolve like unmapped ones: each new field gets a fresh physical
+    * name + field id and `maxColumnId` advances ([[evolveSchema]]);
+    * the grew-path batch stages through [[stagePhysicalRows]], so
+    * nested struct leaves land under their PER-LEVEL physical names
+    * (a foreign table whose inner fields carry their own physical
+    * names must not receive files keyed by logical nested names) and
+    * id-mode files carry parquet field ids.
+    */
   def appendDeltaEvolve(df0: DataFrame, dir: String, checkpointInterval: Int = 0,
                         txn: Option[(String, Long)] = None): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
@@ -2113,11 +2079,8 @@ object LakeWriter {
       // an evolution that INTRODUCES variant or NTZ upgrades the
       // protocol in the same commit (readers must understand the new
       // column)
-      val evolveFeats = typeFeaturesNeeded(snap, merged.fields.map(_.dataType))
-      val protoLine =
-        if (evolveFeats.nonEmpty)
-          protocolWithReaderWriterFeature(snap, evolveFeats: _*)
-        else protocolJson(snap)
+      val protoLine = restateProtocol(snap, newConf, merged, readerWriterFeatures =
+        typeFeaturesNeeded(snap, merged.fields.map(_.dataType)).toSet).getOrElse(protocolJson(snap))
       commitDelta(staged, dir, snap.version + 1, includeMeta = true,
         checkpointInterval, partCols = stagePartCols, txn = txn,
         metaOverride = Some((protoLine, metaLine)),
@@ -2388,19 +2351,6 @@ object LakeWriter {
     }
   }
 
-  /** ENFORCE the table's declared write obligations on a batch of new
-    * values — the writer-protocol duties real delta-spark performs
-    * instead of refusing: CHECK constraints (`delta.constraints.*` in
-    * configuration; TRUE-or-NULL passes, FALSE refuses — SQL
-    * semantics), column invariants (field metadata; same rule), and
-    * generated columns (computed from their expression when the batch
-    * omits them, VERIFIED null-safe-equal when it provides them). All
-    * verifications run in ONE distributed aggregation over the batch;
-    * any violation refuses the whole write with the named check and
-    * its row count — a partial write of the passing rows would not be
-    * the caller's batch. Returns the batch with generated columns
-    * completed, in table column order when completion happened.
-    */
   /** Logical→physical column-name map for a name-mode table; empty
     * when `cm` is "none". Refuses loudly — naming the op and the
     * field — on a malformed schemaString whose field lacks
@@ -2416,6 +2366,19 @@ object LakeWriter {
       f.name -> f.metadata.getString("delta.columnMapping.physicalName")
     }.toMap
 
+  /** ENFORCE the table's declared write obligations on a batch of new
+    * values — the writer-protocol duties real delta-spark performs
+    * instead of refusing: CHECK constraints (`delta.constraints.*` in
+    * configuration; TRUE-or-NULL passes, FALSE refuses — SQL
+    * semantics), column invariants (field metadata; same rule), and
+    * generated columns (computed from their expression when the batch
+    * omits them, VERIFIED null-safe-equal when it provides them). All
+    * verifications run in ONE distributed aggregation over the batch;
+    * any violation refuses the whole write with the named check and
+    * its row count — a partial write of the passing rows would not be
+    * the caller's batch. Returns the batch with generated columns
+    * completed, in table column order when completion happened.
+    */
   private[graft] def enforceObligations(df: DataFrame, snap: DeltaReader.Snapshot,
                                         table: org.apache.spark.sql.types.StructType,
                                         op: String): DataFrame = {
@@ -2505,11 +2468,6 @@ object LakeWriter {
     }
   }
 
-  /** The append gate + commit against an already-replayed snapshot —
-    * the streaming sink takes ONE snapshot per micro-batch for both
-    * its txn-watermark check and the append, instead of replaying the
-    * log twice per batch.
-    */
   /** Logical-named rows → the table's PHYSICAL staging shape, shared
     * by every path that writes data files (append, delete/update
     * rewrites, overwrite, merge, CDC images):
@@ -2560,11 +2518,8 @@ object LakeWriter {
     } ++ extras.map(c => rows.col(q(c)))).toIndexedSeq: _*)
   }
 
-  /** Run `body` (a staging write) with parquet field-id writing ON
-    * when `schema` carries field ids anywhere, RESTORING the user's
-    * session setting afterwards — an id-mode write must not
-    * permanently flip a flag the user may have disabled deliberately
-    * for unrelated parquet output.
+  /** True when `dt` carries `parquet.field.id` metadata at any nesting
+    * level — a staging write of that shape needs [[fieldIdSession]].
     */
   private[graft] def hasFieldIds(dt: org.apache.spark.sql.types.DataType): Boolean = {
     import org.apache.spark.sql.types._
@@ -2606,6 +2561,11 @@ object LakeWriter {
     else org.apache.spark.sql.GraftColumnBridge.rebind(
       fieldIdSession(df.sparkSession, df.schema), df)
 
+  /** The append gate + commit against an already-replayed snapshot —
+    * the streaming sink takes ONE snapshot per micro-batch for both
+    * its txn-watermark check and the append, instead of replaying the
+    * log twice per batch.
+    */
   private[graft] def appendDeltaWithSnapshot(df0: DataFrame, dir: String,
                                              checkpointInterval: Int,
                                              txn: Option[(String, Long)],
@@ -2873,14 +2833,11 @@ object LakeWriter {
     // loop below can re-render the same staged files at a later version
     def render(version: Long): Seq[String] = {
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    // commitInfo leads the commit (delta-spark's layout): pure
-    // provenance — excluded from checkpoints, ignored by state folding,
-    // surfaced by DeltaReader.history. timestamp stays 0 like every
-    // informational field in graft's deterministic logs.
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":${om.writeValueAsString(operation)},"operationParameters":$operationParameters,${if (version > 0) s""""readVersion":${version - 1},""" else ""}"engineInfo":"graft"}}"""
+    actions += commitInfoLine(operation, operationParameters,
+      if (version > 0) Some(version - 1) else None)
     if (includeMeta) metaOverride match {
-      case Some((protocolLine, metaLine)) =>
-        actions += protocolLine
+      case Some((proto, metaLine)) =>
+        actions += proto
         actions += IdentityColumns.patchMetaLine(metaLine, idWm)
       case None =>
         val pcJson = partCols.map(om.writeValueAsString).mkString("[", ",", "]")
@@ -2934,18 +2891,12 @@ object LakeWriter {
           "CREATE TABLE: delta.minReaderVersion=3 with NO reader features would " +
             "be a malformed table — declare one via delta.feature.<name>=supported " +
             "or use a schema that requires one")
-        if (v7Features.nonEmpty || reqMinWriter.contains(7)) {
-          val wf = (Seq("appendOnly", "invariants") ++ v7Features ++
-            (if (cdfCreate) Seq("changeDataFeed") else Nil) ++
-            (if (constraintsCreate) Seq("checkConstraints") else Nil))
-            .distinct.sorted
-            .map(om.writeValueAsString).mkString("[", ",", "]")
-          if (rwCreate.nonEmpty)
-            actions += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${rwCreate.sorted.map(om.writeValueAsString).mkString("[", ",", "]")},"writerFeatures":$wf}}"""
-          else
-            actions += s"""{"protocol":{"minReaderVersion":${reqMinReader.getOrElse(1)},"minWriterVersion":7,"writerFeatures":$wf}}"""
-        } else
-          actions += s"""{"protocol":{"minReaderVersion":${reqMinReader.getOrElse(1)},"minWriterVersion":${(minWriter +: reqMinWriter.toSeq).max}}}"""
+        actions += (
+          if (v7Features.isEmpty && !reqMinWriter.contains(7))
+            protocolLine(reqMinReader.getOrElse(1).toLong, (minWriter +: reqMinWriter.toSeq).max,
+              Nil, Nil)
+          else protocolLine(if (rwCreate.nonEmpty) 3 else reqMinReader.getOrElse(1).toLong, 7, rwCreate,
+            legacyObligations(confKept, schema) ++ v7Features))
         actions += s"""{"metaData":{"id":"${java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))}","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(
           IdentityColumns.patchSchema(schema, idWm).json)},"partitionColumns":$pcJson,"configuration":$confJson}}"""
     }
@@ -3626,19 +3577,28 @@ object LakeWriter {
   /** The gate of every dataChange=false rewrite (compaction, z-order
     * and cluster OPTIMIZE, column-mapping removal): [[requireMutable]]
     * — a rewrite re-states existing rows, so it refuses no more than an
-    * append does — plus, on a row-tracked table, the preserved profile
-    * (watermark and materialized-column names), without which the
-    * rewrite would silently re-identify every row. Returns the
+    * append does — plus [[unpreservedRowTracking]]. Returns the
     * column-mapping mode.
     */
   private def requireRewritable(snap: DeltaReader.Snapshot, op: String): String = {
     val cm = requireMutable(snap, op, removesRows = false)
-    require(!RowTracking.enabled(snap) || RowTracking.preservedProfileReady(snap),
-      s"$op: row tracking is declared but the preserved-profile " +
-        "configuration is incomplete (enableRowTracking backfill missing) — " +
-        "a rewrite would silently re-identify every row; refusing")
+    val unpreserved = unpreservedRowTracking(snap)
+    require(unpreserved.isEmpty, s"$op: ${unpreserved.get}; refusing")
     cm
   }
+
+  /** Why a dataChange=false rewrite of `snap` must refuse beyond what
+    * [[requireMutable]] checks: a row-tracked table without the
+    * preserved profile (watermark and materialized-column names), where
+    * the rewrite would silently re-identify every row. None when the
+    * table is untracked or the profile is ready. [[TableMaintenance]]
+    * asks it before scheduling a compaction.
+    */
+  private[graft] def unpreservedRowTracking(snap: DeltaReader.Snapshot): Option[String] =
+    if (!RowTracking.enabled(snap) || RowTracking.preservedProfileReady(snap)) None
+    else Some("row tracking is declared without the preserved profile (watermark and " +
+      "materialized-column names; enableRowTracking backfill missing) — a " +
+      "dataChange=false rewrite would silently re-identify every row")
 
   /** The bin-packed rewrite of [[compactDelta]] and
     * [[removeColumnMapping]]. `groups` pairs the partitionValues the
@@ -3756,7 +3716,6 @@ object LakeWriter {
   def dropFeature(spark: SparkSession, dir: String, feature: String,
                   truncateHistory: Boolean = false): Unit = {
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     require(snap.minWriter == 7,
       s"dropFeature: table's protocol (${snap.minReader}, ${snap.minWriter}) is the " +
         "legacy form — it declares no feature list to drop from")
@@ -3765,10 +3724,7 @@ object LakeWriter {
       s"dropFeature: table does not declare '$feature' (writer: " +
         s"${snap.writerFeatures.mkString(", ")}; reader: " +
         s"${snap.readerFeatures.mkString(", ")})")
-    def jarr(xs: Iterable[String]): String =
-      xs.toSeq.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"DROP FEATURE","operationParameters":{"feature":${om.writeValueAsString(feature)}},"readVersion":${snap.version},"engineInfo":"graft"}}"""
     var restateConf: Option[Map[String, String]] = None
     feature match {
       case "deletionVectors" =>
@@ -3801,7 +3757,7 @@ object LakeWriter {
           "deletionVectors, clustering, vacuumProtocolCheck and timestampNtz " +
           "have verifiable no-trace checks")
     }
-    val rf = snap.readerFeatures.filterNot(_ == feature).distinct.sorted
+    val rf = snap.readerFeatures.filterNot(_ == feature)
     // TRUNCATE HISTORY protects the boundary (PROTOCOL.md's
     // checkpointProtection feature): the SAME drop commit declares it
     // and stamps delta.requireCheckpointProtectionBeforeVersion = the
@@ -3813,35 +3769,22 @@ object LakeWriter {
     // checkpoint-at-drop stand-in left exposed: a from-version-0 JSON
     // replayer that ignores checkpoints.
     val dropVersion = snap.version + 1
-    val wf = (snap.writerFeatures.filterNot(_ == feature) ++
-      (if (truncateHistory) Seq("checkpointProtection") else Nil)).distinct.sorted
+    val wf = snap.writerFeatures.filterNot(_ == feature) ++
+      (if (truncateHistory) Seq("checkpointProtection") else Nil)
     // reader version falls out of the remaining reader features
     val minReader =
       if (rf.nonEmpty) 3
       else if (snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none") 2
       else 1
-    val rfJson = if (minReader >= 3) s""","readerFeatures":${jarr(rf)}""" else ""
-    actions += s"""{"protocol":{"minReaderVersion":$minReader,"minWriterVersion":7$rfJson,"writerFeatures":${jarr(wf)}}}"""
+    actions += protocolLine(minReader, 7, rf, wf)
     val confOut: Option[Map[String, String]] =
       if (!truncateHistory) restateConf
       else Some(restateConf.getOrElse(snap.configuration) +
         ("delta.requireCheckpointProtectionBeforeVersion" -> dropVersion.toString))
-    confOut.foreach { conf =>
-      val confJson = conf.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"${om.writeValueAsString(k)}:${om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val pcJson = snap.partCols.map(om.writeValueAsString).mkString("[", ",", "]")
-      actions += s"""{"metaData":{"id":"${snap.metaId.getOrElse(
-        java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8")).toString)}","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(snap.schemaJson)},"partitionColumns":$pcJson,"configuration":$confJson}}"""
-    }
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val commit = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "_delta_log"), f"${snap.version + 1}%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version ${snap.version + 1}; re-read and retry DROP FEATURE",
-      ictConf = snap.configuration)
+    confOut.foreach(conf =>
+      actions += metaLineRaw(dir, snap, snap.schemaJson, snap.partCols, conf))
+    commitLog(spark, snap, dir, "DROP FEATURE", confOut.getOrElse(snap.configuration),
+      actions.toSeq, operationParameters = s"""{"feature":${jsonMapper.writeValueAsString(feature)}}""")
     // the boundary checkpoint: a full checkpoint AT the drop version —
     // replay from it never crosses the dropped feature's historical
     // actions. Authoring it is the ONE legitimate from-JSON snapshot
@@ -3855,31 +3798,6 @@ object LakeWriter {
     }
   }
 
-  /** DELETE FROM the Delta table WHERE `predicate` (a SQL boolean
-    * expression over the table's LOGICAL columns) — copy-on-write, the
-    * protocol's baseline delete: every data file holding at least one
-    * matching live row is rewritten without its matching rows, and the
-    * rewrite commits atomically as dataChange=true removes + adds.
-    * SQL semantics: rows where the predicate is NULL survive, exactly
-    * like `DELETE FROM t WHERE p`.
-    *
-    * Composes with the rest of the table machinery: time travel below
-    * the delete still sees the deleted rows (tombstones keep the old
-    * files); [[vacuumDelta]] physically reclaims the rewritten files
-    * once the horizon passes the delete; [[graft.streaming.DeltaTail]]
-    * refuses the delete version loudly (its append-only contract).
-    * Deletion-vector tables are handled on the READ side: affected
-    * files rewrite their LIVE rows only and drop the DV; untouched
-    * files keep theirs.
-    *
-    * Scale: ONE distributed job finds affected files (predicate pushed
-    * into the scan; a partition-pruning predicate never reads
-    * non-matching partitions' data), one rewrites only those files'
-    * survivors; driver state is O(affected files), gated by the same
-    * maxSnapshotFiles bound as every snapshot. Returns the removed
-    * (rewritten) file paths as stored in the log, sorted; empty means
-    * nothing matched and NO commit was written.
-    */
   /** Stage `df` (the table's PHYSICAL columns + `_change_type`) as
     * change data files for commit `version`: parquet staged to a temp
     * dir, moved under `_change_data/` (an underscore prefix, so normal
@@ -4123,27 +4041,31 @@ object LakeWriter {
     (added.map(_._1) ++ watermark, added.map(_._2))
   }
 
-  /** The DV family's commit (and RESTORE's): a commitInfo for
-    * `operation`, then `actions`, written create-if-absent at
-    * `snap.version + 1` through [[GraftLogStore.commitOrThrow]]. No
-    * OCC rebase, optimizeWrite or autoCompact (that is commitDelta's
-    * funnel); a lost race leaves this writer's sidecars and staged
-    * files as unreferenced debris, the same class as a failed writer's.
+  /** DELETE FROM the Delta table WHERE `predicate` (a SQL boolean
+    * expression over the table's LOGICAL columns) — copy-on-write, the
+    * protocol's baseline delete: every data file holding at least one
+    * matching live row is rewritten without its matching rows, and the
+    * rewrite commits atomically as dataChange=true removes + adds.
+    * SQL semantics: rows where the predicate is NULL survive, exactly
+    * like `DELETE FROM t WHERE p`.
+    *
+    * Composes with the rest of the table machinery: time travel below
+    * the delete still sees the deleted rows (tombstones keep the old
+    * files); [[vacuumDelta]] physically reclaims the rewritten files
+    * once the horizon passes the delete; [[graft.streaming.DeltaTail]]
+    * refuses the delete version loudly (its append-only contract).
+    * Deletion-vector tables are handled on the READ side: affected
+    * files rewrite their LIVE rows only and drop the DV; untouched
+    * files keep theirs.
+    *
+    * Scale: ONE distributed job finds affected files (predicate pushed
+    * into the scan; a partition-pruning predicate never reads
+    * non-matching partitions' data), one rewrites only those files'
+    * survivors; driver state is O(affected files), gated by the same
+    * maxSnapshotFiles bound as every snapshot. Returns the removed
+    * (rewritten) file paths as stored in the log, sorted; empty means
+    * nothing matched and NO commit was written.
     */
-  private def commitLog(spark: SparkSession, snap: DeltaReader.Snapshot,
-                        root: org.apache.hadoop.fs.Path, fs: org.apache.hadoop.fs.FileSystem,
-                        operation: String, retryWhat: String, actions: Seq[String],
-                        crcReplaced: Seq[Long] = Nil): Unit = {
-    val version = snap.version + 1
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    fs.mkdirs(log)
-    val commitInfo = s"""{"commitInfo":{"timestamp":0,"operation":"$operation","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
-    GraftLogStore.commitOrThrow(spark, fs, new org.apache.hadoop.fs.Path(log, f"$version%020d.json"),
-      (commitInfo +: actions).mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version $version; re-read the table and retry the $retryWhat",
-      ictConf = snap.configuration, crcReplaced = crcReplaced)
-  }
-
   def deleteWhere(spark: SparkSession, dir: String, predicate: String): Seq[String] =
     deleteWhereWithSnapshot(spark, dir, predicate, DeltaReader.snapshot(spark, dir, None))
 
@@ -4212,90 +4134,6 @@ object LakeWriter {
       ictConf = snap.configuration, statsSchema = Some(table))
     if (cdfEnabled(snap)) affScan.unpersist(false)
     affected.map(_.path).sorted
-  }
-
-  /** DELETE rows matching `predicate` by writing DELETION VECTORS
-    * instead of rewriting files — the merge-on-read path PROTOCOL.md's
-    * `deletionVectors` feature exists for. [[deleteWhere]] (copy-on-
-    * write) re-stages every surviving row of every affected file: on a
-    * 100-TB table a targeted deletion (one user's rows, a bad crawl
-    * batch) rewrites terabytes to remove kilobytes. This operator's
-    * write cost is ∝ DELETED rows: each affected file keeps its bytes
-    * and gains a roaring-bitmap descriptor; one shared sidecar `.bin`
-    * (the reader's own verified format: version byte 1, per-DV
-    * big-endian size + bitmap + CRC-32) lands at the table root and
-    * the commit re-adds the files with their descriptors (remove+add
-    * of the same path in one commit — the add wins, the protocol's DV
-    * rewrite shape).
-    *
-    * Protocol: a table not yet declaring the feature is upgraded
-    * IN-COMMIT to (3,7) with `deletionVectors` added and the legacy
-    * writer obligations the table actually declares made explicit
-    * (appendOnly/invariants always — they are implied by writer v2 —
-    * plus checkConstraints/generatedColumns only when present, so the
-    * feature list never claims obligations the table doesn't have).
-    * Readers without DV support then refuse loudly instead of
-    * resurrecting deleted rows — exactly the protocol's intent.
-    *
-    * Semantics match [[deleteWhere]]: SQL null predicate rows survive,
-    * a no-match predicate writes NO commit (and no sidecar), already-
-    * deleted rows stay deleted (the new bitmap is the union of the
-    * file's existing DV and the new matches — the lineage scan is
-    * post-DV, so the two sets are disjoint by construction), time
-    * travel below the delete sees the old rows, and
-    * [[graft.streaming.DeltaTail]] refuses the version (dataChange
-    * removes). Column-mapped (name mode) tables work: the predicate
-    * binds to LOGICAL names through the scan, descriptors are
-    * path-keyed. A fully-deleted file keeps its (all-rows) DV rather
-    * than being dropped — without per-file row counts the writer
-    * cannot prove cardinality == numRecords, and a zero-live-row scan
-    * is correct either way. The maintenance ops compose: [[checkpointDelta]]
-    * re-emits descriptors, [[compactDelta]] folds DV'd files through
-    * the DV-applied scan (dropping the vectors — the physical-cleanup
-    * path once DV debt accumulates), and [[vacuumDelta]] keeps exactly
-    * the sidecars some window version still references.
-    *
-    * Scale: two distributed jobs (find matches, build AND WRITE
-    * bitmaps — both executor-side; [[writeDvSidecars]] authors the
-    * sidecar files from the executors, so no bitmap bytes ever land
-    * on the driver). Driver state is O(affected files) descriptors
-    * only — a mass scattered delete is driver-safe here; the
-    * copy-on-write [[deleteWhere]] remains the physical-cleanup
-    * choice when most of a file dies anyway. Returns the affected
-    * file paths as stored in the log, sorted; empty = nothing
-    * matched.
-    */
-  /** The (3,7) deletionVectors protocol restatement a DV commit must
-    * carry on a table not yet declaring the feature — legacy writer
-    * obligations the table ACTUALLY declares made explicit, never a
-    * claim of obligations it doesn't have. None when already declared.
-    */
-  private def dvFeatureUpgrade(snap: DeltaReader.Snapshot, cm: String): Option[String] = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def jarr(xs: Iterable[String]): String =
-      xs.toSeq.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-    val declared = snap.minReader >= 3 && snap.readerFeatures.contains("deletionVectors") &&
-      snap.minWriter == 7 && snap.writerFeatures.contains("deletionVectors")
-    if (declared) None
-    else {
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val legacy = scala.collection.mutable.Set("appendOnly", "invariants")
-      if (snap.minWriter >= 3 &&
-          snap.configuration.keys.exists(_.startsWith("delta.constraints.")))
-        legacy += "checkConstraints"
-      if (snap.minWriter >= 4 &&
-          table.fields.exists(_.metadata.contains("delta.generationExpression")))
-        legacy += "generatedColumns"
-      if (cdfEnabled(snap)) legacy += "changeDataFeed"
-      // BOTH mapping modes are reader-visible obligations the (3,7)
-      // restatement must carry explicitly — id mode included
-      if (cm != "none") legacy += "columnMapping"
-      val rf = snap.readerFeatures.toSet ++
-        (if (cm != "none") Set("columnMapping") else Set.empty) + "deletionVectors"
-      val wf = snap.writerFeatures.toSet ++ legacy + "deletionVectors"
-      Some(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":${jarr(rf)},"writerFeatures":${jarr(wf)}}}""")
-    }
   }
 
   /** Serializable Hadoop-configuration carrier: `Configuration` is a
@@ -4390,6 +4228,58 @@ object LakeWriter {
     }.toMap
   }
 
+  /** DELETE rows matching `predicate` by writing DELETION VECTORS
+    * instead of rewriting files — the merge-on-read path PROTOCOL.md's
+    * `deletionVectors` feature exists for. [[deleteWhere]] (copy-on-
+    * write) re-stages every surviving row of every affected file: on a
+    * 100-TB table a targeted deletion (one user's rows, a bad crawl
+    * batch) rewrites terabytes to remove kilobytes. This operator's
+    * write cost is ∝ DELETED rows: each affected file keeps its bytes
+    * and gains a roaring-bitmap descriptor; one shared sidecar `.bin`
+    * (the reader's own verified format: version byte 1, per-DV
+    * big-endian size + bitmap + CRC-32) lands at the table root and
+    * the commit re-adds the files with their descriptors (remove+add
+    * of the same path in one commit — the add wins, the protocol's DV
+    * rewrite shape).
+    *
+    * Protocol: a table not yet declaring the feature is upgraded
+    * IN-COMMIT to (3,7) with `deletionVectors` added and the legacy
+    * writer obligations the table actually declares made explicit
+    * ([[restateProtocol]]: appendOnly/invariants always — they are
+    * implied by writer v2 — plus constraints, generated and identity
+    * columns, CDF and column mapping only when present, so the feature
+    * list never claims obligations the table doesn't have).
+    * Readers without DV support then refuse loudly instead of
+    * resurrecting deleted rows — exactly the protocol's intent.
+    *
+    * Semantics match [[deleteWhere]]: SQL null predicate rows survive,
+    * a no-match predicate writes NO commit (and no sidecar), already-
+    * deleted rows stay deleted (the new bitmap is the union of the
+    * file's existing DV and the new matches — the lineage scan is
+    * post-DV, so the two sets are disjoint by construction), time
+    * travel below the delete sees the old rows, and
+    * [[graft.streaming.DeltaTail]] refuses the version (dataChange
+    * removes). Column-mapped (name mode) tables work: the predicate
+    * binds to LOGICAL names through the scan, descriptors are
+    * path-keyed. A fully-deleted file keeps its (all-rows) DV rather
+    * than being dropped — without per-file row counts the writer
+    * cannot prove cardinality == numRecords, and a zero-live-row scan
+    * is correct either way. The maintenance ops compose: [[checkpointDelta]]
+    * re-emits descriptors, [[compactDelta]] folds DV'd files through
+    * the DV-applied scan (dropping the vectors — the physical-cleanup
+    * path once DV debt accumulates), and [[vacuumDelta]] keeps exactly
+    * the sidecars some window version still references.
+    *
+    * Scale: two distributed jobs (find matches, build AND WRITE
+    * bitmaps — both executor-side; [[writeDvSidecars]] authors the
+    * sidecar files from the executors, so no bitmap bytes ever land
+    * on the driver). Driver state is O(affected files) descriptors
+    * only — a mass scattered delete is driver-safe here; the
+    * copy-on-write [[deleteWhere]] remains the physical-cleanup
+    * choice when most of a file dies anyway. Returns the affected
+    * file paths as stored in the log, sorted; empty = nothing
+    * matched.
+    */
   def deleteWhereDv(spark: SparkSession, dir: String, predicate: String): Seq[String] = {
     import org.apache.spark.sql.functions.{expr, lit}
     val snap = DeltaReader.snapshot(spark, dir, None)
@@ -4427,8 +4317,9 @@ object LakeWriter {
 
     // job 2: the bitmaps, built AND written to sidecars on executors
     val dvActions = dvRewrite(spark, root, fs, affected, matchedRows)
-    commitLog(spark, snap, root, fs, "DELETE", "delete",
-      dvFeatureUpgrade(snap, cm).toSeq ++ dvActions ++ cdcActions)
+    commitLog(spark, snap, dir, "DELETE", snap.configuration,
+      restateProtocol(snap, snap.configuration, tableSchema(snap),
+        readerWriterFeatures = Set("deletionVectors")).toSeq ++ dvActions ++ cdcActions)
     affected.map(_.path).sorted
   }
 
@@ -4515,8 +4406,10 @@ object LakeWriter {
     val dvActions = dvRewrite(spark, root, fs, affected, matchedRows)
     val (newAdds, _) = stageNewFiles(updated, snap, table, cm, phys, root, fs, "updv",
       "updateWhereDv", rowIdBase)
-    commitLog(spark, snap, root, fs, "UPDATE", "update",
-      dvFeatureUpgrade(snap, cm).toSeq ++ dvActions ++ newAdds ++ cdcActions)
+    commitLog(spark, snap, dir, "UPDATE", snap.configuration,
+      restateProtocol(snap, snap.configuration, table,
+        readerWriterFeatures = Set("deletionVectors")).toSeq ++
+        dvActions ++ newAdds ++ cdcActions)
     affected.map(_.path).sorted
   }
 
@@ -4649,8 +4542,9 @@ object LakeWriter {
     val txnLine = txn.map { case (appId, v) =>
       s"""{"txn":{"appId":${jsonMapper.writeValueAsString(appId)},"version":$v}}"""
     }
-    commitLog(spark, snap, root, fs, "MERGE", "CDC apply",
-      idMeta.toSeq ++ (if (affected.isEmpty) None else dvFeatureUpgrade(snap, cm)) ++
+    commitLog(spark, snap, dir, "MERGE", snap.configuration,
+      idMeta.toSeq ++ (if (affected.isEmpty) None else restateProtocol(snap,
+        snap.configuration, table, readerWriterFeatures = Set("deletionVectors"))) ++
         txnLine ++ dvActions ++ newAdds ++ cdcActions)
     affected.map(_.path).sorted
   }
@@ -5772,10 +5666,8 @@ object LakeWriter {
     */
   def clusterBy(spark: SparkSession, dir: String, cols: Seq[String]): Unit = {
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val table = tableSchema(snap)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"CLUSTER BY","operationParameters":{"clusteringColumns":${om.writeValueAsString(cols.mkString(","))}},"readVersion":${snap.version},"engineInfo":"graft"}}"""
     if (cols.isEmpty) {
       // CLUSTER BY NONE: nothing to do unless a declaration exists
       if (!Clustering.isClustered(snap)) return
@@ -5788,7 +5680,7 @@ object LakeWriter {
       require(cmC == "none" || cmC == "name" || cmC == "id",
         s"clusterBy: unknown column mapping mode '$cmC'")
       Clustering.validate(table, snap.partCols, cols, "clusterBy")
-      protocolWithWriterFeatures(snap, Clustering.Features).foreach(actions += _)
+      restateProtocol(snap, snap.configuration, table, Clustering.Features).foreach(actions += _)
       // the domain stores PHYSICAL names (what the files' stats carry)
       val phys = cols.map { c =>
         val f = table(c)
@@ -5798,14 +5690,9 @@ object LakeWriter {
       }
       actions += Clustering.domainAction(phys)
     }
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val commit = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "_delta_log"), f"${snap.version + 1}%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version ${snap.version + 1}; re-read and retry CLUSTER BY",
-      ictConf = snap.configuration)
+    commitLog(spark, snap, dir, "CLUSTER BY", snap.configuration, actions.toSeq,
+      operationParameters =
+        s"""{"clusteringColumns":${jsonMapper.writeValueAsString(cols.mkString(","))}}""")
   }
 
   /** RESTORE the Delta table to its state at `versionAsOf` — a NEW
@@ -5901,7 +5788,7 @@ object LakeWriter {
       val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
       s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":${pvJson(a)},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${a.dv.map(dvJson).getOrElse("")}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
     }
-    commitLog(spark, cur, root, fs, "RESTORE", "restore",
+    commitLog(spark, cur, dir, "RESTORE", cur.configuration,
       removes.sortBy(_.path).map(removeLine(_, dataChange = true)) ++ readdLines,
       // a re-add whose path is STILL live (DV descriptor differs)
       // replaces that entry rather than growing the live set
@@ -5992,7 +5879,8 @@ object LakeWriter {
     }
     val files = snap.active
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"CLONE","operationParameters":{"source":${om.writeValueAsString(srcDir)},"sourceVersion":${snap.version}},"engineInfo":"graft"}}"""
+    actions += commitInfoLine("CLONE",
+      s"""{"source":${om.writeValueAsString(srcDir)},"sourceVersion":${snap.version}}""", None)
     actions += protocolJson(snap)
     val pcJson = snap.partCols.map(om.writeValueAsString).mkString("[", ",", "]")
     val confJson = confClone.toSeq.sortBy(_._1).map { case (k, v) =>
@@ -6033,15 +5921,6 @@ object LakeWriter {
     files.size
   }
 
-  /** UPGRADE the table protocol (delta-spark's
-    * `upgradeTableProtocol`/`addFeatureSupport`): one commit carrying
-    * the new `protocol` action — versions may only go UP, declared
-    * features are never dropped, and version-7/3 forms must list
-    * their features explicitly (the feature-table shape). Writing a
-    * feature this library cannot honor is allowed — that is what an
-    * upgrade IS — and every graft writer gate then refuses its own
-    * writes against it, exactly the protection the protocol intends.
-    */
   /** Enable ROW TRACKING on an existing table (PROTOCOL.md row
     * tracking, graft's non-preserving writer profile — see
     * [[RowTracking]]): ONE commit upgrades the protocol to writer v7
@@ -6060,16 +5939,12 @@ object LakeWriter {
   def enableRowTracking(spark: SparkSession, dir: String): Unit = {
     val snap = DeltaReader.snapshot(spark, dir, None)
     if (RowTracking.enabled(snap) && RowTracking.watermark(snap).isDefined) return
-    val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    locally {
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      Seq(RowTracking.DefaultRowIdCol, RowTracking.DefaultRowVerCol).foreach(c =>
-        require(!table.fieldNames.contains(c),
-          s"enableRowTracking: table column '$c' collides with the materialized " +
-            "row-identity column name the preserved profile writes — rename it first"))
-    }
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val table = tableSchema(snap)
+    Seq(RowTracking.DefaultRowIdCol, RowTracking.DefaultRowVerCol).foreach(c =>
+      require(!table.fieldNames.contains(c),
+        s"enableRowTracking: table column '$c' collides with the materialized " +
+          "row-identity column name the preserved profile writes — rename it first"))
+    val om = jsonMapper
     val files = snap.active.sortBy(_.path)
     def numRecords(a: DeltaReader.AddFile): Long =
       a.stats.flatMap(st => Option(om.readTree(st).get("numRecords")).map(_.asLong()))
@@ -6077,45 +5952,18 @@ object LakeWriter {
           s"enableRowTracking: live file ${a.path} carries no numRecords stats — " +
             "row-id backfill needs exact per-file row counts; rewrite the table " +
             "through graft (compactDelta) first"))
-    def jarr(xs: Iterable[String]): String =
-      xs.toSeq.sorted.map(om.writeValueAsString).mkString("[", ",", "]")
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    actions += s"""{"commitInfo":{"timestamp":0,"operation":"ENABLE ROW TRACKING","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}"""
-    // protocol: (minReader, 7) + the two features, legacy obligations explicit
-    locally {
-      val table = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val legacy = scala.collection.mutable.Set("appendOnly", "invariants")
-      if (snap.minWriter >= 3 &&
-          snap.configuration.keys.exists(_.startsWith("delta.constraints.")))
-        legacy += "checkConstraints"
-      if (snap.minWriter >= 4 &&
-          table.fields.exists(_.metadata.contains("delta.generationExpression")))
-        legacy += "generatedColumns"
-      if (cdfEnabled(snap)) legacy += "changeDataFeed"
-      if (cm != "none") legacy += "columnMapping"
-      val wf = snap.writerFeatures.toSet ++ legacy ++ RowTracking.Features
-      val rdr = math.max(snap.minReader, if (snap.minReader >= 3) 3 else snap.minReader)
-      val rfJson = if (rdr >= 3) s""","readerFeatures":${jarr(snap.readerFeatures)}""" else ""
-      actions += s"""{"protocol":{"minReaderVersion":$rdr,"minWriterVersion":7$rfJson,"writerFeatures":${jarr(wf)}}}"""
-    }
     // metaData restated with delta.enableRowTracking in the
     // configuration, plus the MATERIALIZED identity column names the
     // preserved profile rewrites through (compactDelta stores each
     // surviving row's id under them; readers prefer them over
     // baseRowId + row_index)
-    locally {
-      val conf = snap.configuration +
-        ("delta.enableRowTracking" -> "true") +
-        (RowTracking.RowIdColConf -> RowTracking.DefaultRowIdCol) +
-        (RowTracking.RowVerColConf -> RowTracking.DefaultRowVerCol)
-      val confJson = conf.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"${om.writeValueAsString(k)}:${om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val pcJson = snap.partCols.map(om.writeValueAsString).mkString("[", ",", "]")
-      actions += s"""{"metaData":{"id":"${snap.metaId.getOrElse(
-        java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8")).toString)}","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(snap.schemaJson)},"partitionColumns":$pcJson,"configuration":$confJson}}"""
-    }
+    val conf = snap.configuration +
+      ("delta.enableRowTracking" -> "true") +
+      (RowTracking.RowIdColConf -> RowTracking.DefaultRowIdCol) +
+      (RowTracking.RowVerColConf -> RowTracking.DefaultRowVerCol)
+    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
+    restateProtocol(snap, conf, table, RowTracking.Features).foreach(actions += _)
+    actions += metaLineRaw(dir, snap, snap.schemaJson, snap.partCols, conf)
     // backfill: re-add every live file with its id range (last writer
     // wins per path — no removes needed; dataChange=false, metadata only)
     var next = 0L
@@ -6136,14 +5984,7 @@ object LakeWriter {
       actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":false$dvJson$statsJson${clpCarry(a)},"baseRowId":$base,"defaultRowCommitVersion":$backfillVersion}}"""
     }
     actions += RowTracking.watermarkAction(next - 1)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
-    val commit = new org.apache.hadoop.fs.Path(log, f"$backfillVersion%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version $backfillVersion; re-read and retry enableRowTracking",
-      ictConf = snap.configuration,
+    commitLog(spark, snap, dir, "ENABLE ROW TRACKING", conf, actions.toSeq,
       // every backfill add replaces a live entry (no paired removes)
       crcReplaced = files.map(_.size))
   }
@@ -6164,19 +6005,23 @@ object LakeWriter {
     require(snap.writerFeatures.contains("domainMetadata"),
       "table does not declare the domainMetadata writer feature — " +
         "upgradeProtocol(minWriter = 7, writerFeatures = Seq(\"domainMetadata\")) first")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val actions = Seq(
-      s"""{"commitInfo":{"timestamp":0,"operation":"SET DOMAIN METADATA","operationParameters":{"domain":${om.writeValueAsString(domain)}},"readVersion":${snap.version},"engineInfo":"graft"}}""",
-      s"""{"domainMetadata":{"domain":${om.writeValueAsString(domain)},"configuration":${om.writeValueAsString(configuration)},"removed":$removed}}""")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val commit = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "_delta_log"), f"${snap.version + 1}%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"), "a concurrent writer won; retry",
-      ictConf = snap.configuration)
+    val om = jsonMapper
+    commitLog(spark, snap, dir, "SET DOMAIN METADATA", snap.configuration, Seq(
+      s"""{"domainMetadata":{"domain":${om.writeValueAsString(domain)},"configuration":${om.writeValueAsString(configuration)},"removed":$removed}}"""),
+      operationParameters = s"""{"domain":${om.writeValueAsString(domain)}}""")
   }
 
+  /** UPGRADE the table protocol (delta-spark's
+    * `upgradeTableProtocol`/`addFeatureSupport`): one commit carrying
+    * the new `protocol` action — versions may only go UP, declared
+    * features are never dropped, and version-7/3 forms must list
+    * their features explicitly (the feature-table shape): the requested
+    * ones, reader features in both lists, beside every legacy
+    * obligation the table carries ([[restateProtocol]]). Writing a
+    * feature this library cannot honor is allowed — that is what an
+    * upgrade IS — and every graft writer gate then refuses its own
+    * writes against it, exactly the protection the protocol intends.
+    */
   def upgradeProtocol(spark: SparkSession, dir: String,
                       minReader: Int, minWriter: Int,
                       readerFeatures: Seq[String] = Nil,
@@ -6194,21 +6039,11 @@ object LakeWriter {
     require(minReader < 3 || rf.nonEmpty || wf.nonEmpty,
       "upgradeProtocol: the (3, 7) feature-table form declares its features " +
         "explicitly — pass the feature lists")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def jarr(xs: Seq[String]) = xs.map(om.writeValueAsString).mkString("[", ",", "]")
-    val rfJson = if (minReader >= 3) s""","readerFeatures":${jarr(rf)}""" else ""
-    val wfJson = if (minWriter >= 7) s""","writerFeatures":${jarr(wf)}""" else ""
-    val actions = Seq(
-      s"""{"commitInfo":{"timestamp":0,"operation":"UPGRADE PROTOCOL","operationParameters":{},"readVersion":${snap.version},"engineInfo":"graft"}}""",
-      s"""{"protocol":{"minReaderVersion":$minReader,"minWriterVersion":$minWriter$rfJson$wfJson}}""")
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val commit = new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(root, "_delta_log"), f"${snap.version + 1}%020d.json")
-    GraftLogStore.commitOrThrow(spark, fs, commit,
-      actions.mkString("\n").getBytes("UTF-8"),
-      s"a concurrent writer won version ${snap.version + 1}; re-read and retry",
-      ictConf = snap.configuration)
+    val proto =
+      if (minWriter < 7) protocolLine(minReader, minWriter, rf, wf)
+      else restateProtocol(snap, snap.configuration, tableSchema(snap), writerFeatures.toSet,
+        readerFeatures.toSet, minReader).getOrElse(protocolJson(snap))
+    commitLog(spark, snap, dir, "UPGRADE PROTOCOL", snap.configuration, Seq(proto))
   }
 
   /** RESTORE TO TIMESTAMP — [[restoreDelta]] at the version

@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   *
   *   1. OPTIMIZE when any partition holds ≥ `compactMinFiles` files
   *      (also the physical-cleanup path for accumulated DV debt) —
-  *      SKIPPED with a reason on tables compaction must refuse
-  *      (column-mapped, row-tracked: a dataChange=false rewrite there
-  *      would break contracts, see compactDelta);
+  *      SKIPPED with the reason compactDelta's gate would refuse on a
+  *      row-tracked table without the preserved profile
+  *      (`LakeWriter.unpreservedRowTracking`);
   *   2. CHECKPOINT when ≥ `checkpointEvery` commits accumulated since
   *      the newest checkpoint (bounds every future replay);
   *   3. VACUUM below a `retainVersions` horizon (time travel above the
@@ -45,22 +45,15 @@ object TableMaintenance {
     val snap0 = DeltaReader.snapshot(spark, dir, None)
 
     // 1. compaction — policy here, contract gates in compactDelta
-    val cm = snap0.configuration.getOrElse("delta.columnMapping.mode", "none")
-    val tracked = snap0.writerFeatures.contains("rowTracking")
     val wantsCompact =
       snap0.active.groupBy(_.partitionValues).exists(_._2.size >= compactMinFiles)
     val (compacted, skipReason) =
       if (!wantsCompact) (false, None)
-      else if (cm != "none")
-        (false, Some("column-mapped table — compaction would stage logical names"))
-      else if (tracked && !RowTracking.preservedProfileReady(snap0))
-        (false, Some("row-tracked table without the preserved profile " +
-          "(no watermark or no materialized-column names configured) — a " +
-          "dataChange=false rewrite would re-identify rows; run " +
-          "enableRowTracking on a graft session to configure preservation"))
-      else {
-        LakeWriter.compactDelta(spark, dir, compactMinFiles, targetFileBytes)
-        (true, None)
+      else LakeWriter.unpreservedRowTracking(snap0) match {
+        case Some(reason) => (false, Some(reason))
+        case None =>
+          LakeWriter.compactDelta(spark, dir, compactMinFiles, targetFileBytes)
+          (true, None)
       }
 
     // 2. checkpoint cadence: commits since the newest checkpoint

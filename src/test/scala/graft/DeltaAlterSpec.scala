@@ -530,6 +530,19 @@ class DeltaAlterSpec extends SparkSpec {
     assert(md.get("name").asText() == "events_gold", mdLine)
     assert(md.get("description").asText() == "curated events", mdLine)
     assert(md.get("createdTime").asLong() == 1700000000000L, mdLine)
+    // row-tracking enablement (v3) and a history-truncating DROP FEATURE
+    // (v5, after CLUSTER BY at v4) restate the same raw node
+    LakeWriter.enableRowTracking(spark, dir)
+    LakeWriter.clusterBy(spark, dir, Seq("id"))
+    LakeWriter.dropFeature(spark, dir, "clustering", truncateHistory = true)
+    Seq(3L, 5L).foreach { v =>
+      val line = java.nio.file.Files.readAllLines(new java.io.File(log, f"$v%020d.json").toPath)
+        .asScala.find(_.startsWith("""{"metaData"""")).get
+      val m = om.readTree(line).get("metaData")
+      assert(m.path("name").asText() == "events_gold" &&
+        m.path("description").asText() == "curated events" &&
+        m.path("createdTime").asLong() == 1700000000000L, line)
+    }
     // the comment itself landed in the schemaString metadata
     val sch = org.apache.spark.sql.types.DataType.fromJson(
       DeltaReader.snapshot(spark, dir, None).schemaJson)

@@ -19,6 +19,56 @@ class DeltaFeaturePropsSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(s"graft_featprops_$tag").resolve("t")
       .toAbsolutePath.toString
 
+  /** A FOREIGN legacy (1,4) table (hand-written log over one parquet
+    * file) with a generated column and Change Data Feed enabled: writer
+    * version 4 implies appendOnly, invariants, generatedColumns and
+    * changeDataFeed, none of them listed anywhere.
+    */
+  private def legacyGeneratedCdf(tag: String): String = {
+    import org.apache.spark.sql.types._
+    val dir = tmp(tag)
+    spark.range(4).selectExpr("id AS k", "id * 2 AS g", "cast(id AS string) AS v")
+      .coalesce(1).write.parquet(dir)
+    val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val schema = StructType(Seq(StructField("k", LongType),
+      StructField("g", LongType, nullable = true, new MetadataBuilder()
+        .putString("delta.generationExpression", "k * 2").build()),
+      StructField("v", StringType)))
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val log = new java.io.File(dir, "_delta_log"); log.mkdirs()
+    java.nio.file.Files.write(new java.io.File(log, "0" * 20 + ".json").toPath, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}""",
+      s"""{"metaData":{"id":"legacy-gen-cdf","format":{"provider":"parquet","options":{}},"schemaString":${
+        om.writeValueAsString(schema.json)},"partitionColumns":[],"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
+      s"""{"add":{"path":"${part.getName}","partitionValues":{},"size":${part.length},"modificationTime":0,"dataChange":true,"stats":"{\\"numRecords\\":4}"}}"""
+    ).mkString("\n").getBytes("UTF-8"))
+    dir
+  }
+
+  test("every feature-form restatement keeps a legacy table's obligations") {
+    val entryPoints: Seq[(String, String => Unit)] = Seq(
+      ("alterProperties declaring a feature", d => LakeWriter.alterProperties(spark, d,
+        Map("delta.feature.allowColumnDefaults" -> "supported"))),
+      ("alterProperties enabling ICT", d => LakeWriter.alterProperties(spark, d,
+        Map("delta.enableInCommitTimestamps" -> "true"))),
+      ("enableRowTracking", d => LakeWriter.enableRowTracking(spark, d)),
+      ("first deleteWhereDv", d => LakeWriter.deleteWhereDv(spark, d, "k = 1")),
+      ("clusterBy", d => LakeWriter.clusterBy(spark, d, Seq("k"))),
+      ("alterColumnDefault", d => LakeWriter.alterColumnDefault(spark, d, "v", Some("'x'"))),
+      ("upgradeProtocol", d => LakeWriter.upgradeProtocol(spark, d, 1, 7,
+        writerFeatures = Seq("domainMetadata"))))
+    val failures = entryPoints.zipWithIndex.flatMap { case ((name, op), i) =>
+      val dir = legacyGeneratedCdf(s"obl$i")
+      op(dir)
+      val snap = DeltaReader.snapshot(spark, dir, None)
+      val dropped = Set("appendOnly", "invariants", "generatedColumns", "changeDataFeed") --
+        snap.writerFeatures
+      if (snap.minWriter == 7 && dropped.isEmpty) None
+      else Some(s"$name: (${snap.minReader}, ${snap.minWriter}) dropped $dropped")
+    }
+    assert(failures.isEmpty, failures.mkString("; "))
+  }
+
   test("ALTER declaring a reader+writer feature lifts to (3,7); key consumed") {
     val dir = tmp("rw")
     LakeWriter.writeDelta(spark.range(4).toDF("k"), dir)

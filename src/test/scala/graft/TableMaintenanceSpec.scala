@@ -78,4 +78,24 @@ class TableMaintenanceSpec extends SparkSpec {
     assert(!r2.compacted &&
       r2.compactSkipReason.exists(_.contains("preserved profile")), r2.toString)
   }
+
+  test("column-mapped tables compact through the same gate, rows unchanged") {
+    val d = freshDir("cm")
+    LakeWriter.writeDeltaMapped((1 to 10).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .coalesce(1), d)
+    (11 to 16).foreach(i =>
+      LakeWriter.appendDelta(Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1), d))
+    // a metadata-only rename: the files keep the physical names
+    LakeWriter.renameColumn(spark, d, "v", "label")
+    def rows() = DeltaReader.read(spark, d).select("id", "label").as[(Long, String)]
+      .collect().toSet
+    val before = rows()
+    val filesBefore = DeltaReader.snapshot(spark, d, None).active.size
+    assert(filesBefore == 7 && before.size == 16)
+    val r = TableMaintenance.maintainTable(spark, d,
+      compactMinFiles = 4, checkpointEvery = 50, retainVersions = 50)
+    assert(r.compacted && r.compactSkipReason.isEmpty, r.toString)
+    assert(DeltaReader.snapshot(spark, d, None).active.size < filesBefore)
+    assert(rows() == before)
+  }
 }
