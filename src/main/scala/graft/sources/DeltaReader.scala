@@ -1726,7 +1726,6 @@ object DeltaReader {
     val hconf = s.sessionState.newHadoopConf()
     val logPath = new Path(dir, "_delta_log")
     val fs = logPath.getFileSystem(hconf)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val versions = fs.listStatus(logPath).toSeq.map(_.getPath.getName)
       .filter(_.matches("\\d{20}\\.json")).map(_.take(20).toLong).sorted
     // `timestamp` reads off the SAME monotone series as timestampAsOf

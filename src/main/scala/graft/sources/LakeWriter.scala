@@ -660,16 +660,6 @@ object LakeWriter {
       metaLineFor(dir, snap, newSchema, snap.configuration)))
   }
 
-  /** Carry an existing add's `clusteringProvider` through a re-add
-    * (DV commits, RESTORE, clone, row-tracking backfill) — losing it
-    * would make the next incremental clustering pass re-layout files
-    * that are already on the curve.
-    */
-  private[graft] def clpCarry(a: DeltaReader.AddFile): String =
-    a.clusteringProvider.map(p =>
-      s""","clusteringProvider":${new com.fasterxml.jackson.databind.ObjectMapper()
-        .writeValueAsString(p)}""").getOrElse("")
-
   /** VARIANT anywhere in a type tree — the shape that requires the
     * protocol's `variantType` reader+writer feature.
     */
@@ -1414,16 +1404,13 @@ object LakeWriter {
       require(segs.length == names.length,
         s"convertToDelta: '$rel' sits under ${segs.length} partition dirs but " +
           s"${names.length} partition columns were declared")
-      val pv = segs.zip(names).map { case (seg, expect) =>
-        val eq = seg.indexOf('=')
-        require(eq > 0 && seg.substring(0, eq) == expect,
+      segs.zip(names).foreach { case (seg, expect) =>
+        require(expect.nonEmpty && seg.startsWith(s"$expect="),
           s"convertToDelta: segment '$seg' of '$rel' does not match declared " +
             s"partition column '$expect'")
-        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.substring(eq + 1))
-        expect -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
-      }.toSeq
-      (rel, pv, st.getLen)
+      }
+      DeltaReader.AddFile(percentEncode(rel),
+        scala.collection.immutable.ListMap(partitionValuesOf(rel): _*), st.getLen)
     }
     // data schema from the first footer; partition columns appended
     val dataSchema = spark.read.parquet(files.head.getPath.toString).schema
@@ -1450,12 +1437,8 @@ object LakeWriter {
       else protocolLine(3, 7, convRw, legacyObligations(Map.empty, tableSchema) ++ convRw))
     val pcJson = names.map(om.writeValueAsString).mkString("[", ",", "]")
     actions += s"""{"metaData":{"id":"${java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))}","format":{"provider":"parquet","options":{}},"schemaString":${om.writeValueAsString(tableSchema.json)},"partitionColumns":$pcJson,"configuration":{}}}"""
-    entries.zip(fileStats).foreach { case ((rel, pv, size), stats) =>
-      val pvJson = pv.map { case (c, v) =>
-        s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":"${percentEncode(rel)}","partitionValues":$pvJson,"size":$size,"modificationTime":0,"dataChange":true$statsJson}}"""
+    actions ++= entries.zip(fileStats).map { case (a, stats) =>
+      addLine(a.copy(stats = stats), dataChange = true)
     }
     val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
     fs.mkdirs(log)
@@ -1565,12 +1548,8 @@ object LakeWriter {
     val byPartDir = snap.active.groupBy { a =>
       if (DeltaReader.isAbsoluteAddPath(a.path)) {
         // partition dir from the log's values, like compactDelta
-        snap.partCols.map { c =>
-          val v = a.partitionValues.get(c).flatMap(Option(_)).orNull
-          val seg = if (v == null) "__HIVE_DEFAULT_PARTITION__"
-            else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
-          s"${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(c)}=$seg"
-        }.mkString("/")
+        partitionDirOf(snap.partCols.map(c =>
+          c -> a.partitionValues.get(c).flatMap(Option(_)).orNull))
       } else DeltaReader.percentDecode(a.path).split('/').dropRight(1).mkString("/")
     }
     val written = byPartDir.toSeq.sortBy(_._1).map { case (partDir, files) =>
@@ -1616,7 +1595,6 @@ object LakeWriter {
                checkpointInterval: Int = 0): Seq[String] = {
     require(sources.nonEmpty, "copyInto: no source files given")
     val hconf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(dir)
     val qualified = sources.map { s0 =>
       val p = new org.apache.hadoop.fs.Path(s0)
       p.getFileSystem(hconf).makeQualified(p).toUri.toString
@@ -2294,26 +2272,6 @@ object LakeWriter {
         (adv, Some(metaLineFor(dir, snap, table, snap.configuration)))))
   }
 
-  /** Every nested field path under `st` carrying `delta.invariants`
-    * metadata — PROTOCOL.md allows invariants on struct members, so a
-    * top-level-only scan would wave through exactly the unchecked
-    * writes the gate exists to refuse.
-    */
-  private def invariantFields(st: org.apache.spark.sql.types.StructType,
-                              prefix: String = ""): Seq[String] = {
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    st.fields.toSeq.flatMap { f =>
-      val here = if (f.metadata.contains("delta.invariants")) Seq(prefix + f.name) else Nil
-      val below = f.dataType match {
-        case s: StructType => invariantFields(s, s"$prefix${f.name}.")
-        case ArrayType(s: StructType, _) => invariantFields(s, s"$prefix${f.name}.element.")
-        case MapType(_, s: StructType, _) => invariantFields(s, s"$prefix${f.name}.value.")
-        case _ => Nil
-      }
-      here ++ below
-    }
-  }
-
   /** (path, expression, enforceable) for every `delta.invariants`
     * field: top-level and struct-nested invariants evaluate row-wise
     * (the stored expression references the dotted path), but an
@@ -2686,23 +2644,7 @@ object LakeWriter {
     // staging job: a crash mid-staging then leaves no log directory,
     // so a creating writer's retry still sees "not a table" instead of
     // an empty log it refuses to read.)
-    // writer-unique staging: concurrent writers may legitimately race
-    // toward the SAME next version (the rebase path re-commits one of
-    // them at version+1), so the staging dir must never be shared — a
-    // version-keyed name would collide in ErrorIfExists or let one
-    // writer's cleanup delete(stage) sweep the other's in-flight files
-    val stage = new org.apache.hadoop.fs.Path(root,
-      s"_stage_${version}_${java.util.UUID.randomUUID().toString.take(8)}")
-    locally {
-      val wdf = fieldIdStaged(df)
-      if (partCols.isEmpty) wdf.write.parquet(stage.toString)
-      else wdf.write.partitionBy(partCols: _*).parquet(stage.toString)
-    }
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
-      }
+    val (staged0, stage) = stageFiles(df, root, partCols, version.toString)
     // write-time file sizing (`delta.autoOptimize.optimizeWrite`): the
     // staged partitions coalesce toward delta.targetFileSize BEFORE
     // the commit, so many-task writes and tiny streaming batches don't
@@ -2723,47 +2665,205 @@ object LakeWriter {
     // previously the fold silently skipped ANY field-id-carrying
     // staged set, quietly ignoring delta.autoOptimize.optimizeWrite on
     // mapped tables)
-    if (addDataChange &&
-        sizingConf.get("delta.autoOptimize.optimizeWrite").contains("true")) {
-      val leafSchema = org.apache.spark.sql.types.StructType(
-        df.schema.fields.filterNot(f => partCols.contains(f.name)))
-      optimizeWriteFold(spark, fs, stage, walk(stage), targetFileSizeOf(sizingConf),
-        leafSchema)
-    }
-    val stageUri = stage.toUri.getPath.stripSuffix("/")
-    val staged = walk(stage).sortBy(_.getPath.toString).map { st =>
-      // relative path under the stage dir = partition dirs + file name
-      val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-      // partitionValues from the col=value segments, Hive-unescaped
-      // (Spark escaped them when staging); the null marker maps back
-      // to a JSON null, which the reader types as a null literal
-      val pv = rel.split('/').dropRight(1).map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
-        val col = seg.substring(0, eq)
-        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.substring(eq + 1))
-        col -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
-      }.toSeq
-      (st, rel, pv)
-    }
+    val staged =
+      if (addDataChange &&
+          sizingConf.get("delta.autoOptimize.optimizeWrite").contains("true")) {
+        val leafSchema = org.apache.spark.sql.types.StructType(
+          df.schema.fields.filterNot(f => partCols.contains(f.name)))
+        optimizeWriteFold(spark, fs, stage, staged0.map(_.st), targetFileSizeOf(sizingConf),
+          leafSchema)
+        stagedUnder(fs, stage)
+      } else staged0
     commitFiles(spark, dir, version, staged, stage, includeMeta, checkpointInterval,
       partCols, txn, metaOverride, extraActions, configuration, addDataChange, operation,
       operationParameters, rowIdBase, rebase, ictConf, identity, clusteringProvider,
       statsSchema, df.schema)
   }
 
-  /** A staged data file awaiting its commit: the file, its decoded
-    * table-relative destination, and the partitionValues its add
-    * carries (directory order).
+  /** A staged data file awaiting its commit: the staged file, its
+    * table-relative destination as it sits on disk (partition
+    * directories Hive-escaped the way Spark wrote them; the add path is
+    * its [[percentEncode]]), and the partitionValues its add carries
+    * (directory order).
     */
-  private type StagedFile = (org.apache.hadoop.fs.FileStatus, String, Seq[(String, String)])
+  private final case class StagedFile(st: org.apache.hadoop.fs.FileStatus, rel: String,
+                                      pv: Seq[(String, String)])
+
+  /** The one staging write of appends, overwrites, row-level rewrites,
+    * change data and the DV family's new files: `df` written (field ids
+    * kept, `partCols` through partitionBy, so files land under
+    * `col=value/` directories without the partition columns) under a
+    * fresh `_stage_<tag>_<token>` directory of `root`, then listed by
+    * [[stagedUnder]]. Writer-unique: concurrent writers may race toward
+    * the SAME next version (the rebase path re-commits one of them at
+    * version+1), so the staging dir must never be shared — a
+    * version-keyed name would collide in ErrorIfExists or let one
+    * writer's cleanup delete(stage) sweep the other's in-flight files.
+    * Returns the staged files and the stage directory.
+    */
+  private def stageFiles(df: DataFrame, root: org.apache.hadoop.fs.Path,
+                         partCols: Seq[String],
+                         tag: String): (Seq[StagedFile], org.apache.hadoop.fs.Path) = {
+    val fs = root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    val stage = new org.apache.hadoop.fs.Path(root,
+      s"_stage_${tag}_${java.util.UUID.randomUUID().toString.take(8)}")
+    val wdf = fieldIdStaged(df)
+    if (partCols.isEmpty) wdf.write.parquet(stage.toString)
+    else wdf.write.partitionBy(partCols: _*).parquet(stage.toString)
+    (stagedUnder(fs, stage), stage)
+  }
+
+  /** The parquet files under `stage` in path order, each with its
+    * on-disk path relative to `stage` and the partitionValues parsed
+    * from it.
+    */
+  private def stagedUnder(fs: org.apache.hadoop.fs.FileSystem,
+                          stage: org.apache.hadoop.fs.Path): Seq[StagedFile] = {
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
+      }
+    val stageUri = stage.toUri.getPath.stripSuffix("/")
+    walk(stage).sortBy(_.getPath.toString).map { st =>
+      val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
+      StagedFile(st, rel, partitionValuesOf(rel))
+    }
+  }
+
+  /** The partitionValues of a relative file path's `col=value`
+    * directory segments, in directory order: Hive-unescaped (Spark
+    * escaped them when writing), the `__HIVE_DEFAULT_PARTITION__`
+    * marker mapped to null (a JSON null the reader types as a null
+    * literal).
+    */
+  private def partitionValuesOf(rel: String): Seq[(String, String)] =
+    rel.split('/').toSeq.dropRight(1).map { seg =>
+      val eq = seg.indexOf('=')
+      require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
+      val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(seg.substring(eq + 1))
+      seg.substring(0, eq) -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
+    }
+
+  /** The partition directory `partitionValuesOf` reads back: each
+    * column and value Hive-escaped, null as the Hive default marker.
+    */
+  private def partitionDirOf(pv: Seq[(String, String)]): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    pv.map { case (c, v) =>
+      s"${escapePathName(c)}=${if (v == null) "__HIVE_DEFAULT_PARTITION__" else escapePathName(v)}"
+    }.mkString("/")
+  }
+
+  /** The one move of staged data into the table: every file renamed to
+    * `root/<rel>` (its on-disk relative path, so the directory is the
+    * one its add names), then `stage` deleted.
+    */
+  private def moveStaged(fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
+                         staged: Seq[StagedFile], stage: org.apache.hadoop.fs.Path): Unit = {
+    staged.foreach { f =>
+      val dest = new org.apache.hadoop.fs.Path(root, f.rel)
+      if (f.rel.contains("/")) fs.mkdirs(dest.getParent)
+      require(fs.rename(f.st.getPath, dest), s"rename ${f.st.getPath} -> $dest failed")
+    }
+    fs.delete(stage, true)
+  }
+
+  /** Staged data files placed as adds: footer-derived stats for every
+    * file BEFORE the move (a metadata-only read of the files just
+    * written — the data-skipping envelope every predicate-carrying op
+    * prunes with; a rewrite without them would silently destroy
+    * skipping on everything it replaces), then [[moveStaged]]. Footers
+    * are read in PARALLEL: one serial ~10 ms open per file turns a
+    * 2000-file commit into ~20 s of driver bookkeeping. `conf` picks the
+    * indexed columns, `keepCols` survive the stats cap (identity
+    * watermark bounds), `statsSchema` translates configured stats
+    * columns to physical names. Returns one AddFile per staged file.
+    */
+  private def placeStaged(spark: SparkSession, root: org.apache.hadoop.fs.Path,
+                          staged: Seq[StagedFile], stage: org.apache.hadoop.fs.Path,
+                          conf: Map[String, String], keepCols: Set[String],
+                          statsSchema: Option[org.apache.spark.sql.types.StructType])
+      : Seq[DeltaReader.AddFile] = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val indexedCols = DeltaStats.indexedColsOf(conf)
+    val statsCols = DeltaStats.physicalStatsColumns(conf, statsSchema)
+    val stats = boundedParMap(staged, 16) { f =>
+      DeltaStats.fileStats(f.st.getPath, hconf, indexedCols, keepCols, statsCols)
+    }
+    moveStaged(root.getFileSystem(hconf), root, staged, stage)
+    staged.zip(stats).map { case (f, s) =>
+      DeltaReader.AddFile(percentEncode(f.rel),
+        scala.collection.immutable.ListMap(f.pv: _*), f.st.getLen, stats = s)
+    }
+  }
+
+  /** Fresh row ids for `adds` in order: each consumes its numRecords
+    * (from its stats) starting at `rowIdBase`, stamped with commit
+    * `version`; plus the advanced watermark, which commits ATOMICALLY
+    * with the adds. `adds` unchanged and no watermark on an untracked
+    * table (`rowIdBase` None).
+    */
+  private def assignRowIds(adds: Seq[DeltaReader.AddFile], rowIdBase: Option[Long],
+                           version: Long, op: String): (Seq[DeltaReader.AddFile], Option[String]) =
+    rowIdBase match {
+      case None => (adds, None)
+      case Some(base) =>
+        val counts = adds.map { a =>
+          a.stats.map(s => jsonMapper.readTree(s).get("numRecords").asLong()).getOrElse(
+            throw new IllegalArgumentException(
+              s"$op rowTracking: staged file ${a.path} produced no footer stats, so its " +
+                "row count is unknown — cannot assign baseRowId; refusing the commit"))
+        }
+        val bases = counts.scanLeft(base)(_ + _)
+        (adds.zip(bases).map { case (a, b) =>
+          a.copy(baseRowId = Some(b), defaultRowCommitVersion = Some(version))
+        }, Some(RowTracking.watermarkAction(bases.last - 1)))
+    }
+
+  /** The `partitionValues` JSON object of `pv`, in its order (null
+    * values as JSON null).
+    */
+  private def partitionValuesJson(pv: Iterable[(String, String)]): String =
+    pv.map { case (c, v) =>
+      s"${jsonMapper.writeValueAsString(c)}:${if (v == null) "null" else jsonMapper.writeValueAsString(v)}"
+    }.mkString("{", ",", "}")
+
+  /** The `deletionVector` JSON object of `d` (`offset` only when set). */
+  private def deletionVectorJson(d: DeltaReader.DvDescriptor): String = {
+    val off = d.offset.map(o => s""""offset":$o,""").getOrElse("")
+    s"""{"storageType":${jsonMapper.writeValueAsString(d.storageType)},""" +
+      s""""pathOrInlineDv":${jsonMapper.writeValueAsString(d.pathOrInlineDv)},$off""" +
+      s""""sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
+  }
+
+  /** The one renderer of `add` actions: every field `a` carries (path
+    * verbatim — log paths are already percent-encoded — partition
+    * values, size, modification time, deletion vector, stats, row-id
+    * identity, clustering provider), with `dataChange` as given. A
+    * re-add (DV commits, RESTORE, clone, row-tracking backfill) thus
+    * carries the clustering provider too — losing it would make the
+    * next incremental clustering pass re-layout files already on the
+    * curve.
+    */
+  private def addLine(a: DeltaReader.AddFile, dataChange: Boolean): String = {
+    def opt(name: String, v: Option[String]): String =
+      v.map(x => s""","$name":$x""").getOrElse("")
+    s"""{"add":{"path":${jsonMapper.writeValueAsString(a.path)},"partitionValues":""" +
+      s"""${partitionValuesJson(a.partitionValues)},"size":${a.size},""" +
+      s""""modificationTime":${a.modificationTime},"dataChange":$dataChange""" +
+      opt("deletionVector", a.dv.map(deletionVectorJson)) +
+      opt("stats", a.stats.map(jsonMapper.writeValueAsString)) +
+      RowTracking.carryJson(a) +
+      opt("clusteringProvider", a.clusteringProvider.map(jsonMapper.writeValueAsString)) + "}}"
+  }
 
   /** The commit half of [[commitDelta]], shared with the maintenance
-    * rewrites of [[rewriteBins]]: footer stats for every staged file,
-    * the rename into place (then `stage` is deleted), identity
-    * watermarks, the rendered actions, the create-if-absent commit with
-    * its three rebase tiers, the checkpoint cadence and autoCompact.
+    * rewrites of [[rewriteBins]]: the staged files placed as adds
+    * ([[placeStaged]]), identity watermarks, row ids ([[assignRowIds]]),
+    * the rendered actions, the create-if-absent commit with its three
+    * rebase tiers, the checkpoint cadence and autoCompact.
     * The arguments are [[commitDelta]]'s; `schema` (the written
     * DataFrame's) is read only when `includeMeta` renders a create.
     */
@@ -2773,61 +2873,41 @@ object LakeWriter {
                           partCols: Seq[String] = Nil,
                           txn: Option[(String, Long)] = None,
                           metaOverride: Option[(String, String)] = None,
-                          extraActions: Seq[String] = Nil,
+                          extraActions: Seq[String],
                           configuration: Map[String, String] = Map.empty,
-                          addDataChange: Boolean = true,
-                          operation: String = "WRITE",
+                          addDataChange: Boolean,
+                          operation: String,
                           operationParameters: String = "{}",
-                          rowIdBase: Option[Long] = None,
+                          rowIdBase: Option[Long],
                           rebase: Option[(DeltaReader.Snapshot, String, Set[String])] = None,
-                          ictConf: Map[String, String] = Map.empty,
+                          ictConf: Map[String, String],
                           identity: Option[(IdentityColumns.Advance, Option[String])] = None,
                           clusteringProvider: Option[String] = None,
-                          statsSchema: Option[org.apache.spark.sql.types.StructType] = None,
+                          statsSchema: Option[org.apache.spark.sql.types.StructType],
                           schema: org.apache.spark.sql.types.StructType =
                             org.apache.spark.sql.types.StructType(Nil)): Unit = {
     val logStore = GraftLogStore.resolve(spark)
     GraftLogStore.requireAtomic(logStore)
-    val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hconf)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val log = new org.apache.hadoop.fs.Path(root, "_delta_log")
     val sizingConf = if (ictConf.nonEmpty) ictConf else configuration
-    // footer-derived add.stats BEFORE the move (metadata-only read of
-    // the files just written) — the data-skipping envelope every
-    // predicate-carrying op prunes with (DeltaStats); a rewrite without
-    // them would silently destroy skipping on everything it replaces.
-    // Footers read in PARALLEL: one serial ~10 ms open per file turns a
-    // 2000-file commit into ~20 s of driver bookkeeping; a bounded pool
-    // keeps it at the per-file cost
-    val indexedCols = DeltaStats.indexedColsOf(sizingConf)
-    // identity watermark bounds must survive the cap
+    // identity watermark bounds must survive the stats cap
     val keepCols = identity.map(_._1.cols.map(_._2).toSet).getOrElse(Set.empty[String])
-    // logical config names → the footers' physical keys
-    val statsCols = DeltaStats.physicalStatsColumns(sizingConf, statsSchema)
-    val fileStats = boundedParMap(staged, 16) { case (st, _, _) =>
-      DeltaStats.fileStats(st.getPath, hconf, indexedCols, keepCols, statsCols)
-    }
-    val moved = staged.zip(fileStats).map { case ((st, rel, pv), stats) =>
-      val dest = new org.apache.hadoop.fs.Path(root, rel)
-      if (rel.contains("/")) fs.mkdirs(dest.getParent)
-      require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
-      (rel, pv, st.getLen, stats)
-    }
-    fs.delete(stage, true)
+    val adds = placeStaged(spark, root, staged, stage, sizingConf, keepCols, statsSchema)
+      .map(_.copy(clusteringProvider = clusteringProvider))
     // identity watermark advance — derived from the footer stats just
     // computed (zero extra jobs); a changed watermark restates
     // metaData in this commit and disqualifies the append rebase
     // (two writers generating from one base would mint equal ids)
     val idWm: Map[String, Long] = identity.map { case (adv, _) =>
-      IdentityColumns.newWatermarks(adv, moved.map(_._4), "commitDelta")
+      IdentityColumns.newWatermarks(adv, adds.map(_.stats), "commitDelta")
     }.getOrElse(Map.empty)
     val idMetaAppend: Option[String] = identity.collect {
       case (_, Some(metaBase)) if idWm.nonEmpty =>
         IdentityColumns.patchMetaLine(metaBase, idWm)
     }
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val now = 0L // deterministic logs: modificationTime is informational
+    val om = jsonMapper
     // the action list is a FUNCTION of the commit version (commitInfo
     // readVersion, row-tracking defaultRowCommitVersion) so the rebase
     // loop below can re-render the same staged files at a later version
@@ -2914,30 +2994,9 @@ object LakeWriter {
     // caller-authored actions (deleteWhere's removes) ride the SAME
     // atomic commit as the adds staged above
     actions ++= extraActions
-    // row tracking: each add consumes numRecords fresh ids (from the
-    // footer stats just computed), assigned in the staged files' sorted
-    // order; the advanced watermark commits ATOMICALLY with the adds
-    var nextRowId = rowIdBase
-    moved.foreach { case (rel, pv, size, stats) =>
-      val pvJson = pv.map { case (c, v) =>
-        s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      val rtJson = nextRowId.map { base =>
-        val nr = stats.map(s => om.readTree(s).get("numRecords").asLong()).getOrElse(
-          throw new IllegalArgumentException(
-            s"rowTracking: staged file $rel produced no footer stats, so its row " +
-              "count is unknown — cannot assign baseRowId; refusing the commit"))
-        nextRowId = Some(base + nr)
-        s""","baseRowId":$base,"defaultRowCommitVersion":$version"""
-      }.getOrElse("")
-      val clpJson = clusteringProvider
-        .map(p => s""","clusteringProvider":${om.writeValueAsString(p)}""").getOrElse("")
-      actions += s"""{"add":{"path":"${percentEncode(rel)}","partitionValues":$pvJson,"size":$size,"modificationTime":$now,"dataChange":$addDataChange$statsJson$rtJson$clpJson}}"""
-    }
-    rowIdBase.foreach { base =>
-      actions += RowTracking.watermarkAction(nextRowId.getOrElse(base) - 1)
-    }
+    // row tracking: fresh ids in the staged files' sorted order
+    val (rowIdAdds, watermark) = assignRowIds(adds, rowIdBase, version, operation)
+    actions ++= rowIdAdds.map(addLine(_, addDataChange)) ++= watermark
     actions.toSeq
     }
     fs.mkdirs(log)
@@ -3058,7 +3117,7 @@ object LakeWriter {
     // retroactively — it logs and leaves the debt for the next
     // trigger.
     if (addDataChange && sizingConf.get("delta.autoOptimize.autoCompact").contains("true")
-        && moved.exists(_._3 < targetFileSizeOf(sizingConf) / 2)) {
+        && adds.exists(_.size < targetFileSizeOf(sizingConf) / 2)) {
       try autoCompactMaybe(spark, dir, sizingConf)
       catch {
         case scala.util.control.NonFatal(e) =>
@@ -3575,30 +3634,32 @@ object LakeWriter {
   }
 
   /** The gate of every dataChange=false rewrite (compaction, z-order
-    * and cluster OPTIMIZE, column-mapping removal): [[requireMutable]]
-    * — a rewrite re-states existing rows, so it refuses no more than an
-    * append does — plus [[unpreservedRowTracking]]. Returns the
-    * column-mapping mode.
+    * and cluster OPTIMIZE, column-mapping removal): refuses with
+    * [[rewriteRefusal]]. Returns the column-mapping mode.
     */
   private def requireRewritable(snap: DeltaReader.Snapshot, op: String): String = {
-    val cm = requireMutable(snap, op, removesRows = false)
-    val unpreserved = unpreservedRowTracking(snap)
-    require(unpreserved.isEmpty, s"$op: ${unpreserved.get}; refusing")
-    cm
+    val refusal = rewriteRefusal(snap, op)
+    require(refusal.isEmpty, refusal.get)
+    snap.configuration.getOrElse("delta.columnMapping.mode", "none")
   }
 
-  /** Why a dataChange=false rewrite of `snap` must refuse beyond what
-    * [[requireMutable]] checks: a row-tracked table without the
-    * preserved profile (watermark and materialized-column names), where
-    * the rewrite would silently re-identify every row. None when the
-    * table is untracked or the profile is ready. [[TableMaintenance]]
-    * asks it before scheduling a compaction.
+  /** Why the dataChange=false rewrite `op` of `snap` must refuse, None
+    * when it may run: [[requireMutable]]'s refusal (a rewrite re-states
+    * existing rows, so it refuses no more than an append does) and a
+    * row-tracked table without the preserved profile (watermark and
+    * materialized-column names), where the rewrite would silently
+    * re-identify every row — both, joined, when both hold.
+    * [[TableMaintenance]] reports it as its compaction skip.
     */
-  private[graft] def unpreservedRowTracking(snap: DeltaReader.Snapshot): Option[String] =
-    if (!RowTracking.enabled(snap) || RowTracking.preservedProfileReady(snap)) None
-    else Some("row tracking is declared without the preserved profile (watermark and " +
-      "materialized-column names; enableRowTracking backfill missing) — a " +
-      "dataChange=false rewrite would silently re-identify every row")
+  private[graft] def rewriteRefusal(snap: DeltaReader.Snapshot, op: String): Option[String] = {
+    val unpreserved =
+      if (!RowTracking.enabled(snap) || RowTracking.preservedProfileReady(snap)) None
+      else Some(s"$op: row tracking is declared without the preserved profile (watermark " +
+        "and materialized-column names; enableRowTracking backfill missing) — a " +
+        "dataChange=false rewrite would silently re-identify every row; refusing")
+    val reasons = mutableRefusal(snap, op, removesRows = false).toSeq ++ unpreserved
+    if (reasons.isEmpty) None else Some(reasons.mkString("; "))
+  }
 
   /** The bin-packed rewrite of [[compactDelta]] and
     * [[removeColumnMapping]]. `groups` pairs the partitionValues the
@@ -3619,7 +3680,7 @@ object LakeWriter {
     * preserved row-tracking profile each row's effective id rides along
     * under the materialized column names. `restage` maps a bin's rows
     * to their written shape. Returns the staged files, each with its
-    * decoded destination
+    * on-disk destination
     * `<col=value dirs>/part-<prefix>-<version>-g<i>-<j>-<attempt>.parquet`
     * (the attempt token keeps writers racing one version apart) and its
     * partitionValues, plus the stage directory — [[commitFiles]]' input.
@@ -3628,7 +3689,6 @@ object LakeWriter {
                           groups: Seq[(Seq[(String, String)], Seq[DeltaReader.AddFile])],
                           target: Long, prefix: String, op: String,
                           restage: DataFrame => DataFrame): (Seq[StagedFile], org.apache.hadoop.fs.Path) = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val matCols =
@@ -3665,12 +3725,10 @@ object LakeWriter {
         .filter(st => st.getPath.getName.startsWith("part-") && st.getPath.getName.endsWith(".parquet"))
         .sortBy(_.getPath.toString)
       require(outs.nonEmpty, s"$op: rewrite wrote no files")
-      val relDir = pv.map { case (c, v) =>
-        s"${escapePathName(c)}=${if (v == null) "__HIVE_DEFAULT_PARTITION__" else escapePathName(v)}"
-      }.mkString("/")
+      val relDir = partitionDirOf(pv)
       outs.toSeq.zipWithIndex.map { case (st, j) =>
         val name = s"part-$prefix-$version-g$i-$j-$attempt.parquet"
-        (st, if (relDir.isEmpty) name else s"$relDir/$name", pv)
+        StagedFile(st, if (relDir.isEmpty) name else s"$relDir/$name", pv)
       }
     }
     (staged, stage)
@@ -3813,45 +3871,14 @@ object LakeWriter {
     */
   private def stageCdc(df: DataFrame, dir: String, version: Long,
                        partCols: Seq[String]): Seq[String] = {
-    val spark = df.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hconf)
-    // writer-unique (see commitDelta's staging comment)
-    val stage = new org.apache.hadoop.fs.Path(root,
-      s"_stage_cdc_${version}_${java.util.UUID.randomUUID().toString.take(8)}")
-    locally {
-      val wdf = fieldIdStaged(df)
-      if (partCols.isEmpty) wdf.write.parquet(stage.toString)
-      else wdf.write.partitionBy(partCols: _*).parquet(stage.toString)
+    val (staged, stage) = stageFiles(df, root, partCols, s"cdc_$version")
+    val cdc = staged.map(f => f.copy(rel = s"_change_data/${f.rel}"))
+    moveStaged(root.getFileSystem(df.sparkSession.sessionState.newHadoopConf()), root, cdc,
+      stage)
+    cdc.map { f =>
+      s"""{"cdc":{"path":"${percentEncode(f.rel)}","partitionValues":${partitionValuesJson(f.pv)},"size":${f.st.getLen},"dataChange":false}}"""
     }
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
-      }
-    val stageUri = stage.toUri.getPath.stripSuffix("/")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val actions = walk(stage).sortBy(_.getPath.toString).map { st =>
-      val rel = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-      val dest = new org.apache.hadoop.fs.Path(root, s"_change_data/$rel")
-      fs.mkdirs(dest.getParent)
-      require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
-      val pv = rel.split('/').dropRight(1).map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
-        val c = seg.substring(0, eq)
-        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.substring(eq + 1))
-        c -> (if (raw == "__HIVE_DEFAULT_PARTITION__") null else raw)
-      }
-      val pvJson = pv.map { case (c, v) =>
-        s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      s"""{"cdc":{"path":"${percentEncode(s"_change_data/$rel")}","partitionValues":$pvJson,"size":${st.getLen},"dataChange":false}}"""
-    }
-    fs.delete(stage, true)
-    actions
   }
 
   /** True when the snapshot's table declares Change Data Feed — the
@@ -3877,22 +3904,29 @@ object LakeWriter {
     */
   private def requireMutable(snap: DeltaReader.Snapshot, op: String,
                              removesRows: Boolean): String = {
+    val refusal = mutableRefusal(snap, op, removesRows)
+    require(refusal.isEmpty, refusal.get)
+    snap.configuration.getOrElse("delta.columnMapping.mode", "none")
+  }
+
+  /** Why [[requireMutable]] refuses `op` on `snap`, None when it passes. */
+  private def mutableRefusal(snap: DeltaReader.Snapshot, op: String,
+                             removesRows: Boolean): Option[String] = {
     val cm = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    require(cm == "none" || cm == "name" || cm == "id",
-      s"$op: unknown column mapping mode '$cm'")
-    if (removesRows)
-      require(snap.configuration.getOrElse("delta.appendOnly", "false") != "true",
-        s"$op: table declares delta.appendOnly=true — $op removes or rewrites rows; " +
-          "forbidden on it")
     val safeFeatures = Set("appendOnly", "invariants", "vacuumProtocolCheck", "checkpointProtection", "deletionVectors", "columnMapping",
       "changeDataFeed", "checkConstraints", "generatedColumns", "inCommitTimestamp", "allowColumnDefaults", "typeWidening", "variantType", "variantShredding", "timestampNtz", "v2Checkpoints", IdentityColumns.Feature) ++
       Clustering.Features ++ RowTracking.safeExtra(snap)
     val unsafe = snap.writerFeatures.filterNot(safeFeatures)
-    require(snap.minWriter <= 5 || (snap.minWriter == 7 && unsafe.isEmpty),
-      s"$op: table requires writer version ${snap.minWriter}" +
+    if (cm != "none" && cm != "name" && cm != "id")
+      Some(s"$op: unknown column mapping mode '$cm'")
+    else if (removesRows && snap.configuration.getOrElse("delta.appendOnly", "false") == "true")
+      Some(s"$op: table declares delta.appendOnly=true — $op removes or rewrites rows; " +
+        "forbidden on it")
+    else if (snap.minWriter > 5 && !(snap.minWriter == 7 && unsafe.isEmpty))
+      Some(s"$op: table requires writer version ${snap.minWriter}" +
         (if (unsafe.nonEmpty) s" with features ${unsafe.mkString(", ")}" else "") +
         " — refusing a write whose obligations this writer cannot honor")
-    cm
+    else None
   }
 
   /** `a`'s data file as the lineage column `__dv_path` names it. */
@@ -3953,92 +3987,46 @@ object LakeWriter {
       if (withDv.isEmpty) matched
       else matched.unionByName(DeltaReader.deletedRowsDf(spark, root, fs, withDv))
     val placed = writeDvSidecars(spark, root, allDel)
-    val om = jsonMapper
     val ordered = affected.sortBy(_.path)
     ordered.map(removeLine(_, dataChange = true)) ++ ordered.map { a =>
       val pl = placed(absPath(fs, root, a))
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true,"deletionVector":{"storageType":"u","pathOrInlineDv":${om.writeValueAsString(pl.uuidEnc)},"offset":${pl.offset},"sizeInBytes":${pl.sizeInBytes},"cardinality":${pl.cardinality}}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
+      addLine(a.copy(dv = Some(DeltaReader.DvDescriptor("u", pl.uuidEnc, Some(pl.offset),
+        pl.sizeInBytes, pl.cardinality))), dataChange = true)
     }
   }
 
   /** Stage `rows` (logical shape) as NEW data files of the commit at
     * `snap.version + 1` — updateWhereDv's and applyCdcDv's updated and
     * inserted rows. The rows are written in the table's physical
-    * shape and partition layout under a writer-unique stage directory;
-    * each file moves into its partition directory as
-    * `part-<prefix>-<version>-<token>-<i>.parquet` (the token keeps two
-    * writers racing the same version apart), with footer stats
-    * (identity columns always kept past the stats cap — their
-    * watermark is derived from them) and, on row-tracked tables, fresh
-    * row ids from `rowIdBase` in sorted file order. Returns the add
-    * lines followed by the advanced row-id watermark, and each added
-    * file's stats.
+    * shape and partition layout through [[stageFiles]]; each file moves
+    * into its partition directory as
+    * `part-<prefix>-<version>-<token>-<i>.parquet` (the stage's writer
+    * token keeps two writers racing the same version apart) through
+    * [[placeStaged]], with footer stats (identity columns always kept
+    * past the stats cap — their watermark is derived from them) and,
+    * on row-tracked tables, fresh row ids from `rowIdBase` in sorted
+    * file order. Returns the add lines followed by the advanced row-id
+    * watermark, and each added file's stats.
     */
   private def stageNewFiles(rows: DataFrame, snap: DeltaReader.Snapshot,
                             table: org.apache.spark.sql.types.StructType, cm: String,
                             phys: Map[String, String], root: org.apache.hadoop.fs.Path,
-                            fs: org.apache.hadoop.fs.FileSystem, prefix: String, op: String,
+                            prefix: String, op: String,
                             rowIdBase: Option[Long]): (Seq[String], Seq[Option[String]]) = {
-    val hconf = rows.sparkSession.sessionState.newHadoopConf()
     val version = snap.version + 1
-    val partCols = snap.partCols.map(c => phys.getOrElse(c, c))
+    val (staged, stage) = stageFiles(stagePhysicalRows(rows, table, cm, phys, op), root,
+      snap.partCols.map(c => phys.getOrElse(c, c)), s"${prefix}_$version")
+    val wtok = stage.getName.takeRight(8)
+    val named = staged.zipWithIndex.map { case (f, i) =>
+      f.copy(rel = f.rel.take(f.rel.lastIndexOf('/') + 1) +
+        s"part-$prefix-$version-$wtok-$i.parquet")
+    }
     val idStatCols = IdentityColumns.advanceOf(table, phys)
-      .map(_.cols.map(_._2).toSet).getOrElse(Set.empty)
-    val statsColsPhys = DeltaStats.physicalStatsColumns(snap.configuration, Some(table))
-    val wtok = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new org.apache.hadoop.fs.Path(root, s"_stage_${prefix}_${version}_$wtok")
-    locally {
-      val wdf = fieldIdStaged(stagePhysicalRows(rows, table, cm, phys, op))
-      if (partCols.isEmpty) wdf.write.parquet(stage.toString)
-      else wdf.write.partitionBy(partCols: _*).parquet(stage.toString)
-    }
-    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st) else Nil
-      }
-    val stageUri = stage.toUri.getPath.stripSuffix("/")
-    val om = jsonMapper
-    var nextRowId = rowIdBase
-    val added = walk(stage).sortBy(_.getPath.toString).zipWithIndex.map { case (st, i) =>
-      val rel0 = st.getPath.toUri.getPath.stripPrefix(stageUri).stripPrefix("/")
-      val relDir = rel0.split('/').dropRight(1).mkString("/")
-      val name = s"part-$prefix-$version-$wtok-$i.parquet"
-      val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-      val stats = DeltaStats.fileStats(st.getPath, hconf,
-        DeltaStats.indexedColsOf(snap.configuration), idStatCols, statsColsPhys)
-      val dest = new org.apache.hadoop.fs.Path(root, DeltaReader.percentDecode(rel))
-      if (rel.contains("/")) fs.mkdirs(dest.getParent)
-      require(fs.rename(st.getPath, dest), s"rename ${st.getPath} -> $dest failed")
-      val pvJson = relDir.split('/').filter(_.nonEmpty).map { seg =>
-        val eq = seg.indexOf('=')
-        require(eq > 0, s"unexpected staged partition segment '$seg' in $rel")
-        val c = seg.substring(0, eq)
-        val raw = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(seg.substring(eq + 1))
-        s"${om.writeValueAsString(c)}:${if (raw == "__HIVE_DEFAULT_PARTITION__") "null"
-          else om.writeValueAsString(raw)}"
-      }.mkString("{", ",", "}")
-      val statsJson = stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      val rtJson = nextRowId.map { base =>
-        val nr = stats.map(s => om.readTree(s).get("numRecords").asLong()).getOrElse(
-          throw new IllegalArgumentException(
-            s"$op rowTracking: staged file $rel produced no footer stats, " +
-              "so its row count is unknown — cannot assign baseRowId; refusing"))
-        nextRowId = Some(base + nr)
-        s""","baseRowId":$base,"defaultRowCommitVersion":$version"""
-      }.getOrElse("")
-      (s"""{"add":{"path":"${percentEncode(rel)}","partitionValues":$pvJson,"size":${st.getLen},"modificationTime":0,"dataChange":true$statsJson$rtJson}}""",
-        stats)
-    }
-    fs.delete(stage, true)
-    // consumed ids advance the watermark in the SAME atomic commit
-    val watermark = rowIdBase.map(base => RowTracking.watermarkAction(nextRowId.getOrElse(base) - 1))
-    (added.map(_._1) ++ watermark, added.map(_._2))
+      .map(_.cols.map(_._2).toSet).getOrElse(Set.empty[String])
+    val adds = placeStaged(rows.sparkSession, root, named, stage, snap.configuration,
+      idStatCols, Some(table))
+    val (rowIdAdds, watermark) = assignRowIds(adds, rowIdBase, version, op)
+    (rowIdAdds.map(addLine(_, dataChange = true)) ++ watermark, adds.map(_.stats))
   }
 
   /** DELETE FROM the Delta table WHERE `predicate` (a SQL boolean
@@ -4404,7 +4392,7 @@ object LakeWriter {
       }
 
     val dvActions = dvRewrite(spark, root, fs, affected, matchedRows)
-    val (newAdds, _) = stageNewFiles(updated, snap, table, cm, phys, root, fs, "updv",
+    val (newAdds, _) = stageNewFiles(updated, snap, table, cm, phys, root, "updv",
       "updateWhereDv", rowIdBase)
     commitLog(spark, snap, dir, "UPDATE", snap.configuration,
       restateProtocol(snap, snap.configuration, table,
@@ -4527,7 +4515,7 @@ object LakeWriter {
     // DV bitmaps over every matched row (update victims + deletes); an
     // all-insert batch with no matches writes no sidecar
     val dvActions = dvRewrite(spark, root, fs, affected, joined)
-    val (newAdds, newAddStats) = stageNewFiles(written, snap, table, cm, phys, root, fs,
+    val (newAdds, newAddStats) = stageNewFiles(written, snap, table, cm, phys, root,
       "cdc", "applyCdcDv", rowIdBase)
     // identity tables: the change stream's values land VERBATIM
     // (replication semantics — the source minted them), but the
@@ -5774,20 +5762,7 @@ object LakeWriter {
       }
     }
 
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def pvJson(a: DeltaReader.AddFile): String = a.partitionValues.map { case (c, v) =>
-      s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-    }.mkString("{", ",", "}")
-    def dvJson(d: DeltaReader.DvDescriptor): String = {
-      val off = d.offset.map(o => s""""offset":$o,""").getOrElse("")
-      s""","deletionVector":{"storageType":${om.writeValueAsString(d.storageType)},""" +
-        s""""pathOrInlineDv":${om.writeValueAsString(d.pathOrInlineDv)},$off""" +
-        s""""sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
-    }
-    val readdLines = readds.sortBy(_.path).map { a =>
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":${pvJson(a)},"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${a.dv.map(dvJson).getOrElse("")}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
-    }
+    val readdLines = readds.sortBy(_.path).map(addLine(_, dataChange = true))
     commitLog(spark, cur, dir, "RESTORE", cur.configuration,
       removes.sortBy(_.path).map(removeLine(_, dataChange = true)) ++ readdLines,
       // a re-add whose path is STILL live (DV descriptor differs)
@@ -5863,20 +5838,12 @@ object LakeWriter {
     def absUri(p: String): String =
       if (DeltaReader.isAbsoluteAddPath(p)) p // a clone of a clone keeps the origin
       else srcFs.makeQualified(DeltaReader.resolveAddPath(srcRoot, p)).toUri.toString
-    def dvJson(d: DeltaReader.DvDescriptor): String = {
-      // sidecars stay in the SOURCE dir — rewrite "u" (relative to the
-      // source root, meaningless under the clone's) to "p" absolute
-      val rewritten = d.storageType match {
-        case "u" => DeltaReader.DvDescriptor("p",
-          srcFs.makeQualified(DeltaReader.dvFilePath(srcRoot, d)).toUri.toString,
-          d.offset, d.sizeInBytes, d.cardinality)
-        case _ => d
-      }
-      val off = rewritten.offset.map(o => s""""offset":$o,""").getOrElse("")
-      s""","deletionVector":{"storageType":${om.writeValueAsString(rewritten.storageType)},""" +
-        s""""pathOrInlineDv":${om.writeValueAsString(rewritten.pathOrInlineDv)},$off""" +
-        s""""sizeInBytes":${rewritten.sizeInBytes},"cardinality":${rewritten.cardinality}}"""
-    }
+    // sidecars stay in the SOURCE dir — rewrite "u" (relative to the
+    // source root, meaningless under the clone's) to "p" absolute
+    def absDv(d: DeltaReader.DvDescriptor): DeltaReader.DvDescriptor =
+      if (d.storageType != "u") d
+      else d.copy(storageType = "p",
+        pathOrInlineDv = srcFs.makeQualified(DeltaReader.dvFilePath(srcRoot, d)).toUri.toString)
     val files = snap.active
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
     actions += commitInfoLine("CLONE",
@@ -5896,12 +5863,8 @@ object LakeWriter {
     snap.domainMetadata.toSeq.sortBy(_._1).foreach { case (domain, conf) =>
       actions += s"""{"domainMetadata":{"domain":${om.writeValueAsString(domain)},"configuration":${om.writeValueAsString(conf)},"removed":false}}"""
     }
-    files.sortBy(_.path).foreach { a =>
-      val pvJson = a.partitionValues.map { case (c, v) =>
-        s"${om.writeValueAsString(c)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(s => s""","stats":${om.writeValueAsString(s)}""").getOrElse("")
-      actions += s"""{"add":{"path":${om.writeValueAsString(absUri(a.path))},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":true${a.dv.map(dvJson).getOrElse("")}$statsJson${RowTracking.carryJson(a)}${clpCarry(a)}}}"""
+    actions ++= files.sortBy(_.path).map { a =>
+      addLine(a.copy(path = absUri(a.path), dv = a.dv.map(absDv)), dataChange = true)
     }
     val log = new org.apache.hadoop.fs.Path(dstRoot, "_delta_log")
     fs.mkdirs(log)
@@ -5966,24 +5929,12 @@ object LakeWriter {
     actions += metaLineRaw(dir, snap, snap.schemaJson, snap.partCols, conf)
     // backfill: re-add every live file with its id range (last writer
     // wins per path — no removes needed; dataChange=false, metadata only)
-    var next = 0L
-    val backfillVersion = snap.version + 1
-    files.foreach { a =>
-      val pvJson = a.partitionValues.map { case (c0, v) =>
-        s"${om.writeValueAsString(c0)}:${if (v == null) "null" else om.writeValueAsString(v)}"
-      }.mkString("{", ",", "}")
-      val statsJson = a.stats.map(st => s""","stats":${om.writeValueAsString(st)}""").getOrElse("")
-      val dvJson = a.dv.map { d =>
-        val off = d.offset.map(o => s""""offset":$o,""").getOrElse("")
-        s""","deletionVector":{"storageType":${om.writeValueAsString(d.storageType)},""" +
-          s""""pathOrInlineDv":${om.writeValueAsString(d.pathOrInlineDv)},$off""" +
-          s""""sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
-      }.getOrElse("")
-      val base = next
-      next += numRecords(a)
-      actions += s"""{"add":{"path":${om.writeValueAsString(a.path)},"partitionValues":$pvJson,"size":${a.size},"modificationTime":${a.modificationTime},"dataChange":false$dvJson$statsJson${clpCarry(a)},"baseRowId":$base,"defaultRowCommitVersion":$backfillVersion}}"""
+    val bases = files.map(numRecords).scanLeft(0L)(_ + _)
+    actions ++= files.zip(bases).map { case (a, base) =>
+      addLine(a.copy(baseRowId = Some(base), defaultRowCommitVersion = Some(snap.version + 1)),
+        dataChange = false)
     }
-    actions += RowTracking.watermarkAction(next - 1)
+    actions += RowTracking.watermarkAction(bases.last - 1)
     commitLog(spark, snap, dir, "ENABLE ROW TRACKING", conf, actions.toSeq,
       // every backfill add replaces a live entry (no paired removes)
       crcReplaced = files.map(_.size))
@@ -6036,9 +5987,11 @@ object LakeWriter {
     require(minReader < 3 || minWriter >= 7,
       "upgradeProtocol: reader version 3 is the feature-table form and requires " +
         "writer version 7 (PROTOCOL.md) — a (3, <7) protocol is not a valid table")
-    require(minReader < 3 || rf.nonEmpty || wf.nonEmpty,
-      "upgradeProtocol: the (3, 7) feature-table form declares its features " +
-        "explicitly — pass the feature lists")
+    require(minReader < 3 || rf.nonEmpty ||
+        snap.configuration.getOrElse("delta.columnMapping.mode", "none") != "none",
+      "upgradeProtocol: minReaderVersion 3 with NO reader features would be a malformed " +
+        "table (the feature form declares its reader requirements explicitly) — pass " +
+        "readerFeatures")
     val proto =
       if (minWriter < 7) protocolLine(minReader, minWriter, rf, wf)
       else restateProtocol(snap, snap.configuration, tableSchema(snap), writerFeatures.toSet,

@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   *
   *   1. OPTIMIZE when any partition holds ≥ `compactMinFiles` files
   *      (also the physical-cleanup path for accumulated DV debt) —
-  *      SKIPPED with the reason compactDelta's gate would refuse on a
-  *      row-tracked table without the preserved profile
-  *      (`LakeWriter.unpreservedRowTracking`);
+  *      SKIPPED with the reason compactDelta's gate would refuse with
+  *      (`LakeWriter.rewriteRefusal`: a writer version or feature this
+  *      writer cannot honor, or row tracking without the preserved
+  *      profile), so the checkpoint and vacuum steps still run;
   *   2. CHECKPOINT when ≥ `checkpointEvery` commits accumulated since
   *      the newest checkpoint (bounds every future replay);
   *   3. VACUUM below a `retainVersions` horizon (time travel above the
@@ -49,7 +50,7 @@ object TableMaintenance {
       snap0.active.groupBy(_.partitionValues).exists(_._2.size >= compactMinFiles)
     val (compacted, skipReason) =
       if (!wantsCompact) (false, None)
-      else LakeWriter.unpreservedRowTracking(snap0) match {
+      else LakeWriter.rewriteRefusal(snap0, "compactDelta") match {
         case Some(reason) => (false, Some(reason))
         case None =>
           LakeWriter.compactDelta(spark, dir, compactMinFiles, targetFileBytes)

@@ -201,13 +201,31 @@ class DeltaAlterSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     val s = spark
     import s.implicits._
-    val keys = Seq(null, "a b/c", "plain")
+    val keys = Seq(null, "a b/c", "plain", "50%")
     // two one-file batches: every partition holds exactly two files
-    def batch(lo: Int) = (lo until lo + 12).map(i => (i.toLong, s"v$i", keys(i % 3)))
+    def batch(lo: Int) = (lo until lo + 12).map(i => (i.toLong, s"v$i", keys(i % 4)))
       .toDF("id", "v", "k").coalesce(1)
     def rows(dir: String) = DeltaReader.read(spark, dir).select("id", "v", "k")
       .as[(Long, String, String)].collect().toSet
-    val expected = (0 until 24).map(i => (i.toLong, s"v$i", keys(i % 3))).toSet
+    val expected = (0 until 24).map(i => (i.toLong, s"v$i", keys(i % 4))).toSet
+    // merge-on-read DML stages new files into the same escaped
+    // directories: updateWhereDv rewrites ids 0-3 and applyCdcDv upserts
+    // ids 4-7 (one row per partition each), with complete change data
+    val mutated = (0 until 24).map { i =>
+      (i.toLong, if (i < 4) s"v$i!" else if (i < 8) s"w$i" else s"v$i", keys(i % 4))
+    }.toSet
+    def dvDml(dir: String): Unit = {
+      LakeWriter.alterProperties(spark, dir, Map("delta.enableChangeDataFeed" -> "true"))
+      LakeWriter.updateWhereDv(spark, dir, "id < 4", Map("v" -> "concat(v, '!')"))
+      LakeWriter.applyCdcDv(spark, dir, (4 until 8).map(i =>
+        (i.toLong, s"w$i", keys(i % 4), "update_postimage"))
+        .toDF("id", "v", "k", "_change_type"), Seq("id"))
+      val v = DeltaReader.snapshot(spark, dir, None).version
+      val changes = DeltaReader.readChanges(spark, dir, v - 1, v)
+        .groupBy("_change_type").count().as[(String, Long)].collect().toMap
+      assert(changes == Map("update_preimage" -> 8L, "update_postimage" -> 8L), changes)
+      assert(rows(dir) == mutated)
+    }
     // every live file sits under the escaped directory of the partition
     // value its add carries, keyed `key`, and exists on disk
     def placed(dir: String, key: String): Unit = {
@@ -229,6 +247,8 @@ class DeltaAlterSpec extends SparkSpec {
     assert(DeltaReader.snapshot(spark, plain, None).active.forall(_.path.contains("part-compact-")))
     assert(rows(plain) == expected)
     placed(plain, "k")
+    dvDml(plain)
+    placed(plain, "k")
 
     val mapped = tmp("graft_alter_esc_cm_")
     LakeWriter.writeDeltaMapped(batch(0), mapped, partitionBy = Seq("k"))
@@ -238,9 +258,11 @@ class DeltaAlterSpec extends SparkSpec {
     assert(DeltaReader.snapshot(spark, mapped, None).active.forall(_.path.contains("part-compact-")))
     assert(rows(mapped) == expected)
     placed(mapped, phys)
+    dvDml(mapped)
+    placed(mapped, phys)
     LakeWriter.removeColumnMapping(spark, mapped)
     assert(DeltaReader.snapshot(spark, mapped, None).active.forall(_.path.contains("part-cmremove-")))
-    assert(rows(mapped) == expected)
+    assert(rows(mapped) == mutated)
     placed(mapped, "k")
   }
 

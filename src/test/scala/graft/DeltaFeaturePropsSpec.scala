@@ -200,6 +200,29 @@ class DeltaFeaturePropsSpec extends SparkSpec {
     assert(!sc.configuration.contains("delta.minWriterVersion"))
   }
 
+  test("upgradeProtocol to reader 3 needs a reader feature, like ALTER and CREATE") {
+    val dir = tmp("up3")
+    LakeWriter.writeDelta(spark.range(3).toDF("k"), dir)
+    // writer features alone would leave an empty readerFeatures list
+    val noRf = intercept[IllegalArgumentException](
+      LakeWriter.upgradeProtocol(spark, dir, 3, 7, writerFeatures = Seq("domainMetadata")))
+    assert(noRf.getMessage.contains("NO reader features"), noRf.getMessage)
+    val s0 = DeltaReader.snapshot(spark, dir, None)
+    assert(s0.version == 0 && s0.minReader == 1)
+    // writer features keep reader 1; a requested reader feature lifts it
+    LakeWriter.upgradeProtocol(spark, dir, 1, 7, writerFeatures = Seq("domainMetadata"))
+    LakeWriter.upgradeProtocol(spark, dir, 3, 7, readerFeatures = Seq("deletionVectors"))
+    val s1 = DeltaReader.snapshot(spark, dir, None)
+    assert(s1.minReader == 3 && s1.readerFeatures == Seq("deletionVectors"))
+    assert(s1.writerFeatures.contains("domainMetadata"), s1.writerFeatures.toString)
+    // a column-mapped table brings its own reader feature
+    val cm = tmp("up3cm")
+    LakeWriter.writeDeltaMapped(spark.range(3).toDF("k"), cm)
+    LakeWriter.upgradeProtocol(spark, cm, 3, 7)
+    val s2 = DeltaReader.snapshot(spark, cm, None)
+    assert(s2.minReader == 3 && s2.readerFeatures == Seq("columnMapping"))
+  }
+
   test("enabling CDF on an already-v7 table adds changeDataFeed to writerFeatures") {
     val dir = tmp("cdf7")
     LakeWriter.writeDelta(spark.range(3).toDF("k"), dir,

@@ -98,4 +98,22 @@ class TableMaintenanceSpec extends SparkSpec {
     assert(DeltaReader.snapshot(spark, d, None).active.size < filesBefore)
     assert(rows() == before)
   }
+
+  test("a table the rewrite gate refuses reports the skip; the checkpoint still runs") {
+    val d = freshDir("v6")
+    LakeWriter.writeDelta((1 to 4).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+      .coalesce(1), d)
+    (5 to 7).foreach(i =>
+      LakeWriter.appendDelta(Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1), d))
+    // writer version 6 carries obligations this writer cannot honor
+    LakeWriter.upgradeProtocol(spark, d, 1, 6)
+    assert(DeltaReader.snapshot(spark, d, None).active.size == 4)
+    val r = TableMaintenance.maintainTable(spark, d,
+      compactMinFiles = 2, checkpointEvery = 1, retainVersions = 50)
+    assert(!r.compacted, r.toString)
+    assert(r.compactSkipReason.exists(_.contains("writer version 6")), r.toString)
+    assert(r.checkpointed.contains(4L), r.toString)
+    assert(DeltaReader.snapshot(spark, d, None).active.size == 4)
+    assert(DeltaReader.read(spark, d).count() == 7L)
+  }
 }
