@@ -77,27 +77,36 @@ object DuplicateDetection {
     * (maco/duplicate_detection.py:54 get_duplicate_tables): a lake
     * table qualifies when its duplicate rows cover the whole input or
     * its own whole extent (SURVEY.md §3 cleaned-up coverage rule).
+    * The input's signatures are built once, at call time (one collect,
+    * bounded by the input table, which a broadcast holds on the driver
+    * anyway), and broadcast to the lookup.
     * @param inputCells cell index of the input table (any tableid)
     */
   def duplicateTablesForInput(inputCells: DataFrame, lakeCells: DataFrame): DataFrame = {
-    val in = rowSignatures(inputCells).select(
+    val inSigs = rowSignatures(inputCells).select(
       col("rowid").as("in_row"), col("sig").as("in_sig"), col("sk_hi"), col("sk_lo"))
-    val nInput = in.select(countDistinct(col("in_row")).as("n_input"))
-    // the lake signature groupBy is the expensive pass over the cell
-    // index — materialize it once and derive per-table sizes from it
-    // (one sig row per distinct (tableid, rowid) by construction), so
-    // the index is shuffled once instead of once for the join side and
-    // once for the old distinct-based size pass
-    val lake = rowSignatures(lakeCells).localCheckpoint(true)
-    val sizes = lake.groupBy("tableid").agg(count(lit(1)).as("n_ext"))
-    lake.join(in, Seq("sk_hi", "sk_lo"))
+    val rows = inSigs.collect()
+    val in = broadcast(lakeCells.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), inSigs.schema))
+    val nInput = rows.map(_.getLong(0)).distinct.length
+    // only lake rows whose super key equals an input row's can be
+    // duplicates: the key is a row attribute on every cell, so a
+    // semi-join on it keeps whole candidate rows and the signature
+    // groupBy shuffles those alone, never the whole lake
+    val cand = rowSignatures(
+      lakeCells.join(in.select("sk_hi", "sk_lo"), Seq("sk_hi", "sk_lo"), "left_semi"))
+    // per-table sizes from the colid-0 cells: the melt emits exactly one
+    // per row, so no signature of the whole lake is needed to count rows
+    val sizes = lakeCells.where(col("colid") === 0).groupBy("tableid").agg(count(lit(1)).as("n_ext"))
+    cand.join(in, Seq("sk_hi", "sk_lo"))
       .where(col("sig") === col("in_sig"))
       .groupBy("tableid")
-      .agg(countDistinct(col("in_row")).as("in_cov"),
-        countDistinct(col("rowid")).as("ext_cov"))
+      // set sizes, not countDistinct: one aggregate over the few
+      // candidate pairs instead of an expand and two exchanges
+      .agg(size(collect_set(col("in_row"))).as("in_cov"),
+        size(collect_set(col("rowid"))).as("ext_cov"))
       .join(sizes, "tableid")
-      .crossJoin(broadcast(nInput))
-      .where(col("in_cov") >= col("n_input") || col("ext_cov") >= col("n_ext"))
+      .where(col("in_cov") >= nInput || col("ext_cov") >= col("n_ext"))
       .select("tableid")
   }
 }

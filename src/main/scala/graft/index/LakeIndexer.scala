@@ -3,6 +3,7 @@ package graft.index
 import graft.functions.{TextFunctions, Xash}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One table of the data lake.
   *
@@ -229,22 +230,51 @@ object LakeIndexer {
       .sortWithinPartitions("tokenized")
       .write.mode("overwrite").parquet(path)
 
+  /** The persisted index at `path`, tombstoned tables filtered out.
+    * Submits no Spark job when no table was removed: the schema comes
+    * from one part file's footer (see [[footerSchema]]) instead of
+    * Spark's inference job. With tombstones, one job collects the
+    * removed table ids.
+    */
   def readIndex(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
     val t = new org.apache.hadoop.fs.Path(path, TombstoneDir)
     val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val df = footerSchema(spark, fs, new org.apache.hadoop.fs.Path(path))
+      .fold(spark.read)(sc => spark.read.schema(sc)).parquet(path)
     if (fs.exists(t)) {
       // one row per removed table — a driver-side collect is bounded by
       // the number of REMOVALS, never by index size, and the resulting
       // NOT-IN literal pushes into the parquet scan (row-group pruning)
       // where an anti-join could not
-      val dead = spark.read.parquet(t.toString)
+      val dead = spark.read.schema("tableid INT").parquet(t.toString)
         .select("tableid").distinct().collect().map(_.getInt(0)).toSeq
       if (dead.nonEmpty) df.where(!col("tableid").isin(dead: _*)) else df
     } else df
   }
 
   private val TombstoneDir = "_tombstones"
+
+  /** The Spark schema a part file of `dir` was written with, read on the
+    * driver from its footer's `org.apache.spark.sql.parquet.row.metadata`
+    * — the same source Spark's own inference prefers, without its job.
+    * The first part file in name order stands for all of them, as in
+    * Spark's inference without schema merging. None when `dir` holds no
+    * visible data file or the footer carries no Spark schema; the caller
+    * then lets Spark infer (and fail) as before.
+    */
+  private def footerSchema(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                           dir: org.apache.hadoop.fs.Path): Option[StructType] =
+    scala.util.Try(fs.listStatus(dir)).toOption.toSeq.flatten
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith(".") && st.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName).headOption.flatMap { st =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+          spark.sparkContext.hadoopConfiguration)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }.map(json => DataType.fromJson(json).asInstanceOf[StructType])
 
   /** Append new tables' cells to a persisted index WITHOUT rewriting it
     * (the reference's update_index adds tables to the live Postgres

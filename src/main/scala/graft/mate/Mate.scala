@@ -9,16 +9,16 @@ import org.apache.spark.sql.functions._
   * (reference: maco/mate.py:125 join_search).
   *
   * Spark-first redesign: the reference's driver-side heap + per-table
-  * pruning loop becomes one lazy declarative plan with two scans of the
-  * cell index and no eager checkpoint — token-match join on the first
-  * query column against one broadcast of the prepared input (carrying
-  * every query token), native 128-bit super-key containment pre-filter
-  * (two long compares, maco/mate.py:393), then one exact verification
-  * pass for all further columns (index cells semi-joined with the
-  * broadcast further tokens, joined to the candidate rows, one grouped
-  * aggregate) and a global top-k. At scale the exact-k heap is the part
-  * that cannot distribute; the joins can, so we compute all candidate
-  * scores shuffle-parallel and `ORDER BY score LIMIT k`.
+  * pruning loop becomes one lazy declarative plan with one scan of the
+  * cell index, one broadcast and one aggregate, and no eager
+  * checkpoint — the prepared input (one row per query token) is
+  * broadcast into a token-match join against the index whose condition
+  * carries the native 128-bit super-key containment pre-filter (two
+  * long compares, maco/mate.py:393), one grouped aggregate per
+  * candidate row verifies every further query column exactly, then a
+  * global top-k. At scale the exact-k heap is the part that cannot
+  * distribute; the join can, so we compute all candidate scores
+  * shuffle-parallel and `ORDER BY score LIMIT k`.
   *
   * Determinism (SURVEY.md §3): input row ids are `min(rowId)` per
   * distinct raw query-tuple (the reference keeps pandas' first
@@ -69,23 +69,19 @@ object Mate {
     * candidate cell (a row holding the first token in two columns gives
     * two rows), as long as the index holds each (tableid, rowid, colid)
     * once — duplicate cells are out of contract. Lazy: no Spark job runs
-    * until the result is used.
+    * until the result is used; then the index is scanned once and the
+    * prepared input broadcast once (see [[verify]]).
     */
   def matches(input: DataFrame, rowId: Column, queryCols: Seq[String], cells: DataFrame,
-              rowHash: Column => Column = graft.functions.XashKernel.superKeyCol): DataFrame = {
-    val prep = prepare(input, rowId, queryCols, rowHash)
-    val q = broadcast(prep)
-    val cand = cells
-      .join(q, cells("tokenized") === q("tok_0"))
+              rowHash: Column => Column = graft.functions.XashKernel.superKeyCol): DataFrame =
+    verify(prepare(input, rowId, queryCols, rowHash), queryCols.length, cells,
       // hash pre-filter: no false negatives, exact verification follows
-      .where(Xash.contains(col("sk_hi"), col("sk_lo"), col("q_hi"), col("q_lo")))
-    verify(cand, prep, queryCols.length, cells)
-  }
+      Xash.contains(col("sk_hi"), col("sk_lo"), col("q_hi"), col("q_lo")))
 
   /** [[matches]] over a word-array index ([[graft.index.LakeIndexer
     * .cellsWords]]) at any reference XASH width — the prefilter is the
     * word-wise containment kernel instead of the two-long compare; the
-    * exact verification tail is identical, so results match the default
+    * exact verification is identical, so results match the default
     * path bit-for-bit at every width (the prefilter never drops a true
     * match, only admits more or fewer false candidates).
     */
@@ -95,11 +91,7 @@ object Mate {
     val n = queryCols.length
     val prep = prepareToks(input, rowId, queryCols).withColumn("q_sk",
       XashKernel.superKeyWordsCol(array((0 until n).map(i => col(s"tok_$i")): _*), hashSize))
-    val q = broadcast(prep)
-    val cand = cellsW
-      .join(q, cellsW("tokenized") === q("tok_0"))
-      .where(XashKernel.containsWordsCol(col("sk"), col("q_sk")))
-    verify(cand, prep, n, cellsW)
+    verify(prep, n, cellsW, XashKernel.containsWordsCol(col("sk"), col("q_sk")))
   }
 
   /** Top-k search over a word-array index at any XASH width. */
@@ -107,35 +99,40 @@ object Mate {
                    cellsW: DataFrame, k: Int, hashSize: Int): DataFrame =
     topkOf(matchesWords(input, rowId, queryCols, cellsW, hashSize), k)
 
-  /** Exact verification of the further query columns + matched-column
-    * combo string — shared tail of every prefilter variant. `cand` is the
-    * prefiltered first-token join (cells ⋈ the broadcast `prep`, so it
-    * carries every query token); `cells` only needs (tableid, rowid,
-    * colid, tokenized). The verification scan keeps only cells holding
-    * some further query token (a broadcast semi-join inside the plan),
-    * one join brings them to their candidate rows and one aggregate
-    * collects, per candidate cell, the columns holding each token.
+  /** Token match, XASH prefilter and exact verification in one join —
+    * shared by every prefilter variant. `prep` is the prepared input
+    * (MateRowID, tok_0..tok_{n-1}, query-key columns); it is broadcast
+    * once, exploded to one row per (MateRowID, position, token). `cells`
+    * (tableid, rowid, colid, tokenized + the row's super key) is scanned
+    * once and joined on the token, with `prefilter` — the super-key
+    * containment test — in the join condition: the key belongs to the
+    * row, so it prunes the further-token cells of a row as well as its
+    * first-token cells. For n >= 2 one aggregate per (table row, input
+    * row) collects the colids holding each position's token, keeps rows
+    * where every position matched and explodes position 0's set into
+    * one row per candidate cell; one column needs no aggregate.
     */
-  private def verify(cand0: DataFrame, prep: DataFrame, n: Int, cells: DataFrame): DataFrame = {
+  private def verify(prep: DataFrame, n: Int, cells: DataFrame, prefilter: Column): DataFrame = {
+    val keys = prep.columns.filterNot(c => c == "MateRowID" || c.startsWith("tok_")).map(col)
+    val q = broadcast(prep.select((col("MateRowID") +:
+      posexplode(array((0 until n).map(i => col(s"tok_$i")): _*)).as(Seq("__pos", "__tok")) +:
+      keys): _*))
+    val hit = cells.join(q, cells("tokenized") === q("__tok") && prefilter)
     val further = 1 until n
-    val cand = cand0.select((Seq(col("tableid"), col("rowid"), col("MateRowID"),
-      col("colid").as("c0")) ++ further.map(i => col(s"tok_$i"))): _*)
-    val verified = if (further.isEmpty) cand else {
-      val toks = broadcast(prep.select(
-        explode(array(further.map(i => col(s"tok_$i")): _*)).as("__tok")))
-      val hits = cells.select("tableid", "rowid", "colid", "tokenized")
-        .join(toks, col("tokenized") === toks("__tok"), "left_semi")
-      val isTok = further.map(i => col("tokenized") === col(s"tok_$i"))
-      val sets = further.map(i => collect_set(when(isTok(i - 1), col("colid"))).as(s"m_$i"))
-      cand.join(hits, Seq("tableid", "rowid"))
-        .where(isTok.reduce(_ || _))
-        .groupBy("tableid", "rowid", "MateRowID", "c0")
+    if (further.isEmpty)
+      hit.select(col("tableid"), col("rowid"), col("MateRowID"), col("colid").cast("string").as("columns"))
+    else {
+      val sets = (0 until n).map(i => collect_set(when(col("__pos") === i, col("colid"))).as(s"m_$i"))
+      val combo = concat_ws("_", col("c0").cast("string") +: further.map(i =>
+        concat_ws("_", transform(array_sort(col(s"m_$i")), _.cast("string")))): _*)
+      hit.groupBy("tableid", "rowid", "MateRowID")
         .agg(sets.head, sets.tail: _*)
         .where(further.map(i => size(col(s"m_$i")) > 0).reduce(_ && _))
+        // an empty position-0 set explodes to no row
+        .select(col("tableid") +: col("rowid") +: col("MateRowID") +:
+          explode(col("m_0")).as("c0") +: further.map(i => col(s"m_$i")): _*)
+        .select(col("tableid"), col("rowid"), col("MateRowID"), combo.as("columns"))
     }
-    val combo = concat_ws("_", col("c0").cast("string") +: further.map(i =>
-      concat_ws("_", transform(array_sort(col(s"m_$i")), _.cast("string")))): _*)
-    verified.select(col("tableid"), col("rowid"), col("MateRowID"), combo.as("columns"))
   }
 
   /** Top-k joinable tables: (tableid, columns, joinability). */

@@ -62,6 +62,36 @@ class IndexPersistSpec extends SparkSpec {
     assert(compacted.where(col("tableid") === 2).count() == 0)
   }
 
+  test("readIndex submits no job and keeps the schema spark.read.parquet infers") {
+    val s = spark
+    import s.implicits._
+    def cellsOf(id: Int) = LakeIndexer.cells(Seq(LakeTable(id, s"t$id",
+      Seq((0L, "alpha", 1.5), (1L, "beta", 2.5)).toDF("k", "name", "v"), col("k"))))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ix_schema_").toString + "/cells"
+    /** Jobs readIndex submits, after checking its schema. */
+    def readChecked(stage: String): Int = {
+      var back: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsOf { back = LakeIndexer.readIndex(spark, tmp) }
+      assert(back.schema == spark.read.parquet(tmp).schema, stage)
+      jobs
+    }
+    LakeIndexer.writeIndex(cellsOf(1), tmp, numPartitions = 2)
+    assert(readChecked("written") == 0)
+    LakeIndexer.addTables(cellsOf(2), tmp, numPartitions = 2)
+    assert(readChecked("after addTables") == 0)
+    // tombstones are collected: the only jobs readIndex runs
+    LakeIndexer.removeTable(spark, tmp, 1)
+    readChecked("tombstoned")
+    assert(LakeIndexer.readIndex(spark, tmp).select("tableid").distinct().collect()
+      .map(_.getInt(0)).toSeq == Seq(2))
+    // no part file: Spark's inference runs and fails as it always did
+    val empty = java.nio.file.Files.createTempDirectory("graft_ix_empty_").toString
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(empty, "_SUCCESS"))
+    val expected = intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(empty))
+    val got = intercept[org.apache.spark.sql.AnalysisException](LakeIndexer.readIndex(spark, empty))
+    assert(got.getMessage == expected.getMessage)
+  }
+
   test("streaming index maintenance equals the batch build") {
     val s = spark
     import s.implicits._

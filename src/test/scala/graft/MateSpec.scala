@@ -3,15 +3,16 @@ package graft
 import graft.functions.TextFunctions
 import graft.index.{LakeIndexer, LakeTable}
 import graft.mate.Mate
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** MATE on a hand-built toy lake where the expected ranking is obvious. */
-class MateSpec extends SparkSpec {
+class MateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def lake() = {
     val s = spark
@@ -212,25 +213,6 @@ class MateSpec extends SparkSpec {
     assert(three.exists(_._4 == "1_2_11_3") && !three.exists(_._3 == 108L))
   }
 
-  /** Spark jobs `body` submits, counted by a listener on a job group of
-    * its own.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"mate-spec-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "MateSpec job count")
-    try { body; ListenerBusDrain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-    n.get
-  }
-
   test("multi-column matches is one lazy plan with no Bloom filter probe") {
     val tables = fixtureTables
     val cells = LakeIndexer.cells(tables)
@@ -249,13 +231,49 @@ class MateSpec extends SparkSpec {
     }
   }
 
-  test("a two-column searchAndMaps stays within its job budget") {
+  test("each request scans the index once and broadcasts only the prepared input") {
+    val tables = fixtureTables
+    val dir = java.nio.file.Files.createTempDirectory("graft_mate_plan_").toString
+    LakeIndexer.writeIndex(LakeIndexer.cells(tables), s"$dir/cells", numPartitions = 4)
+    LakeIndexer.writeIndex(LakeIndexer.cellsWords(tables, 128), s"$dir/words", numPartitions = 4)
+    val cells = LakeIndexer.readIndex(spark, s"$dir/cells")
+    val cellsW = LakeIndexer.readIndex(spark, s"$dir/words")
+    val requests = (1 to 3).flatMap { nq =>
+      val qcols = fixtureCols.take(nq)
+      Seq(s"$nq columns" -> Mate.matches(fixtureFrame, col("rid"), qcols, cells),
+        s"$nq columns, words at 128" ->
+          Mate.matchesWords(fixtureFrame, col("rid"), qcols, cellsW, 128))
+    }
+    for ((label, m) <- requests) {
+      assert(m.collect().nonEmpty, label)
+      // the fixture's request frame is a local relation: every file scan
+      // in the executed (final adaptive) plan reads the index
+      val plan = m.queryExecution.executedPlan
+      val scans = collect(plan) { case f: FileSourceScanExec => f }
+      assert(scans.size == 1, s"$label: ${scans.size} index scans in\n$plan")
+      val cellBroadcasts = collect(plan) { case b: BroadcastExchangeExec => b }
+        .filter(b => collect(b) { case f: FileSourceScanExec => f }.nonEmpty)
+      assert(cellBroadcasts.isEmpty, s"$label: index cells broadcast in\n$plan")
+    }
+  }
+
+  private def searchAndMapsJobs(nq: Int): Int = {
     val cells = LakeIndexer.cells(fixtureTables)
     var top: Array[Row] = null
     val jobs = jobsOf {
-      top = Mate.searchAndMaps(fixtureFrame, col("rid"), fixtureCols.take(2), cells, 5)._1.collect()
+      top = Mate.searchAndMaps(fixtureFrame, col("rid"), fixtureCols.take(nq), cells, 5)._1.collect()
     }
     assert(top.nonEmpty)
-    assert(jobs <= 16, s"$jobs jobs")
+    jobs
+  }
+
+  test("a two-column searchAndMaps stays within its job budget") {
+    val jobs = searchAndMapsJobs(2)
+    assert(jobs <= 11, s"$jobs jobs")
+  }
+
+  test("a three-column searchAndMaps stays within its job budget") {
+    val jobs = searchAndMapsJobs(3)
+    assert(jobs <= 11, s"$jobs jobs")
   }
 }
