@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
 
 /** Minimal read path for the Delta Lake table format, implemented
   * against the PUBLIC protocol spec (delta-io/delta PROTOCOL.md)
@@ -451,17 +451,55 @@ object DeltaReader {
   }
 
   /** The adds and removes of ONE commit version, each with its
-    * `dataChange` flag — the unit the streaming tail source consumes.
-    * Refuses a version whose commit JSON was retention-cleaned: a
-    * checkpoint is a snapshot, not a change list, so those versions'
-    * changes are unrecoverable and pretending otherwise would silently
-    * drop data from the stream.
+    * `dataChange` flag. Refuses a version whose commit JSON was
+    * retention-cleaned: a checkpoint is a snapshot, not a change list.
     */
   private[graft] def commitChanges(s: SparkSession, dir: String, version: Long)
       : (Seq[(AddFile, Boolean)], Seq[(String, Boolean)]) = {
     val acts = commitActions(s, dir, version)
     (acts.collect { case (Right(af), dc) => af -> dc },
       acts.collect { case (Left(p), dc) => p -> dc })
+  }
+
+  /** What ONE commit changed, read once from its [[CommitParse]]: its
+    * `cdc` files, its `dataChange` adds and its `dataChange` removes
+    * (layout-only actions — compaction, column-mapping removal — carry
+    * dataChange=false and are not changes). Every change-feed reader
+    * decides a commit's shape from this one value: [[readChanges]],
+    * [[readChangesSlice]], [[graft.streaming.DeltaTail.changes]] and
+    * the `graft-delta` stream source's admission.
+    */
+  private[graft] final case class VersionChanges(cdc: Seq[AddFile], adds: Seq[AddFile],
+                                                 removes: Seq[String]) {
+    /** Adds and no removes: the append shape, its rows are inserts. */
+    def appendOnly: Boolean = adds.nonEmpty && removes.isEmpty
+
+    /** The append tail's sliceable payload: an append's adds,
+      * PATH-SORTED so the list is a pure function of the version and a
+      * restart re-resolves it identically; empty for every other shape.
+      */
+    def appendPayload: IndexedSeq[AddFile] =
+      if (appendOnly) adds.sortBy(_.path).toIndexedSeq else IndexedSeq.empty
+
+    /** The change feed's sliceable payload: the `cdc` files when the
+      * writer staged them (they ARE the change set), else
+      * [[appendPayload]]. Removes-only, metadata-only and compaction
+      * commits answer empty — they budget as zero and ride whole.
+      */
+    def cdfPayload: IndexedSeq[AddFile] =
+      if (cdc.nonEmpty) cdc.sortBy(_.path).toIndexedSeq else appendPayload
+  }
+
+  /** `lost` names what a retention-cleaned commit costs the caller:
+    * [[ChangeDataLost]] for the change feed, [[TailLost]] for the
+    * append tail.
+    */
+  private[graft] def versionChanges(s: SparkSession, dir: String, version: Long,
+                                    lost: String = ChangeDataLost): VersionChanges = {
+    val cp = presentCommit(s, dir, version, lost)
+    VersionChanges(cp.cdc,
+      cp.fileActions.collect { case (Right(af), true) => af },
+      cp.fileActions.collect { case (Left(p), true) => p })
   }
 
   /** One commit file's parsed content — everything the history family
@@ -649,26 +687,30 @@ object DeltaReader {
     * later.
     */
   private[graft] def commitActions(s: SparkSession, dir: String, version: Long)
-      : Seq[(Either[String, AddFile], Boolean)] = {
-    val hconf = s.sessionState.newHadoopConf()
-    val logPath = new Path(dir, "_delta_log")
-    val fs = logPath.getFileSystem(hconf)
-    parsedCommit(fs, logPath, version).getOrElse(throw new IllegalArgumentException(
-      s"commit $version not present in $logPath (retention-cleaned?) — its changes " +
-        "are unrecoverable from a checkpoint; cannot tail this version")).fileActions
-  }
+      : Seq[(Either[String, AddFile], Boolean)] =
+    presentCommit(s, dir, version, TailLost).fileActions
 
   /** One commit's `cdc` actions (change data files, PROTOCOL.md's
     * Change Data Feed) as AddFile shapes — path/partitionValues/size;
     * cdc files never carry deletion vectors.
     */
-  private[graft] def commitCdc(s: SparkSession, dir: String, version: Long): Seq[AddFile] = {
-    val hconf = s.sessionState.newHadoopConf()
+  private[graft] def commitCdc(s: SparkSession, dir: String, version: Long): Seq[AddFile] =
+    presentCommit(s, dir, version, ChangeDataLost).cdc
+
+  private[graft] val ChangeDataLost =
+    "its change data is unrecoverable; cannot read changes at this version"
+  private[graft] val TailLost =
+    "its changes are unrecoverable from a checkpoint; cannot tail this version"
+
+  /** The parse of commit `version`, refusing loudly when its JSON was
+    * retention-cleaned; `lost` says what the caller cannot recover.
+    */
+  private def presentCommit(s: SparkSession, dir: String, version: Long,
+                            lost: String): CommitParse = {
     val logPath = new Path(dir, "_delta_log")
-    val fs = logPath.getFileSystem(hconf)
+    val fs = logPath.getFileSystem(s.sessionState.newHadoopConf())
     parsedCommit(fs, logPath, version).getOrElse(throw new IllegalArgumentException(
-      s"commit $version not present in $logPath (retention-cleaned?) — its change " +
-        "data is unrecoverable; cannot read changes at this version")).cdc
+      s"commit $version not present in $logPath (retention-cleaned?) — $lost"))
   }
 
   /** Scan change data files: the table's data schema PLUS the
@@ -775,11 +817,7 @@ object DeltaReader {
     */
   def readChanges(s: SparkSession, dir: String,
                   fromVersion: Long, toVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val latest = snapshot(s, dir, None)
-    require(fromVersion >= 0 && fromVersion <= toVersion && toVersion <= latest.version,
-      s"readChanges: range [$fromVersion, $toVersion] outside [0, ${latest.version}]")
-    val snapTo = if (toVersion == latest.version) latest else snapshot(s, dir, Some(toVersion))
+    val snapTo = changeWindow(s, dir, fromVersion, toVersion)
     // a column-mapping REMOVAL inside the window re-keys change files:
     // versions before it are keyed by the OLD physical names, which
     // snapTo's logical read schema would silently null-misread (r17 —
@@ -803,11 +841,39 @@ object DeltaReader {
           "names and would silently misread under the window-end schema; " +
           "split the read at the transition commit")
     }
-    val schema = DataType.fromJson(snapTo.schemaJson).asInstanceOf[StructType]
-    val outSchema = StructType(schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("_commit_version", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("_commit_timestamp", org.apache.spark.sql.types.TimestampType)))
+    changesOf(s, dir, fromVersion to toVersion, snapTo)
+  }
+
+  /** The change feed's own columns, after the table's logical ones. */
+  private[graft] val CdfColumns: Seq[StructField] = Seq(
+    StructField("_change_type", StringType),
+    StructField("_commit_version", LongType),
+    StructField("_commit_timestamp", TimestampType))
+
+  /** A change read's schema: `snap`'s logical columns plus [[CdfColumns]]. */
+  private[graft] def cdfSchema(snap: Snapshot): StructType =
+    StructType(DataType.fromJson(snap.schemaJson).asInstanceOf[StructType].fields ++
+      CdfColumns)
+
+  /** Validates [fromVersion, toVersion] against the log; returns the
+    * window-end snapshot.
+    */
+  private def changeWindow(s: SparkSession, dir: String,
+                           fromVersion: Long, toVersion: Long): Snapshot = {
+    val latest = snapshot(s, dir, None)
+    require(fromVersion >= 0 && fromVersion <= toVersion && toVersion <= latest.version,
+      s"readChanges: range [$fromVersion, $toVersion] outside [0, ${latest.version}]")
+    if (toVersion == latest.version) latest else snapshot(s, dir, Some(toVersion))
+  }
+
+  /** The change rows of `versions` (ascending, non-empty), all read
+    * under `snapTo`'s metadata — [[readChanges]] minus its window
+    * checks.
+    */
+  private def changesOf(s: SparkSession, dir: String, versions: Seq[Long],
+                        snapTo: Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.broadcast
+    val outSchema = cdfSchema(snapTo)
     val outCols = outSchema.fieldNames.map(col).toIndexedSeq
     val root = new Path(dir)
     val fs = root.getFileSystem(s.sessionState.newHadoopConf())
@@ -820,36 +886,29 @@ object DeltaReader {
     // [[versionAtTimestamp]] — CDF consumers ordering by it must never
     // see a commit older than its predecessor
     val tsByVersion: Map[Long, Long] =
-      commitTimestamps(fs, new Path(root, "_delta_log"), toVersion).toMap
+      commitTimestamps(fs, new Path(root, "_delta_log"), versions.last).toMap
 
     // classify the window on the driver — O(actions), no plan built yet
     val cdcFiles = Seq.newBuilder[(AddFile, Long)]
     val insertAdds = Seq.newBuilder[(AddFile, Long)]
     val removeGroups = Seq.newBuilder[(Seq[AddFile], Long)]
-    (fromVersion to toVersion).foreach { v =>
-      val cdc = commitCdc(s, dir, v)
-      if (cdc.nonEmpty) cdc.foreach(c => cdcFiles += ((c, v)))
-      else {
-        val (adds, removes) = commitChanges(s, dir, v)
-        val addsDc = adds.collect { case (af, true) => af }
-        val remsDc = removes.collect { case (p, true) => p }
-        if (addsDc.nonEmpty && remsDc.isEmpty)
-          addsDc.foreach(a => insertAdds += ((a, v)))
-        else if (remsDc.nonEmpty && addsDc.isEmpty) {
-          val prev = snapshot(s, dir, Some(v - 1))
-          val gone = remsDc.toSet
-          val removedFiles = prev.active.filter(a => gone.contains(a.path))
-          require(removedFiles.size == gone.size,
-            s"readChanges: version $v removes ${gone.size} paths but only " +
-              s"${removedFiles.size} resolve in version ${v - 1}'s snapshot — corrupt log")
-          removeGroups += ((removedFiles, v))
-        } else if (addsDc.isEmpty && remsDc.isEmpty) ()
-        else throw new IllegalArgumentException(
-          s"readChanges: version $v rewrites files (dataChange adds AND removes) " +
-            "without change data files — its row-level changes are not derivable; " +
-            "enable delta.enableChangeDataFeed before mutating, or read versions " +
-            "around it")
-      }
+    versions.foreach { v =>
+      val ch = versionChanges(s, dir, v)
+      if (ch.cdc.nonEmpty) ch.cdc.foreach(c => cdcFiles += ((c, v)))
+      else if (ch.appendOnly) ch.adds.foreach(a => insertAdds += ((a, v)))
+      else if (ch.removes.nonEmpty && ch.adds.isEmpty) {
+        val prev = snapshot(s, dir, Some(v - 1))
+        val gone = ch.removes.toSet
+        val removedFiles = prev.active.filter(a => gone.contains(a.path))
+        require(removedFiles.size == gone.size,
+          s"readChanges: version $v removes ${gone.size} paths but only " +
+            s"${removedFiles.size} resolve in version ${v - 1}'s snapshot — corrupt log")
+        removeGroups += ((removedFiles, v))
+      } else if (ch.adds.nonEmpty) throw new IllegalArgumentException(
+        s"readChanges: version $v rewrites files (dataChange adds AND removes) " +
+          "without change data files — its row-level changes are not derivable; " +
+          "enable delta.enableChangeDataFeed before mutating, or read versions " +
+          "around it")
     }
 
     def versionMap(pairs: Seq[(AddFile, Long)], key: String): DataFrame = {
@@ -893,101 +952,108 @@ object DeltaReader {
   }
 
   /** [[readChanges]] that SPLITS the window per-version when a
-    * column-mapping transition breaks single-scan soundness
-    * ([[cmTransitionBreak]]): each version then reads under its OWN
-    * metadata and the slices union by the transition-invariant
-    * LOGICAL names. For callers that only consume the logical CDF
-    * shape — the streaming source's catch-up, incremental view
-    * maintenance — this delivers correctly across a removal (or a
-    * removal + re-upgrade round trip) where the strict
-    * [[readChanges]] refuses; the strict form remains for callers
-    * that must KNOW the window is homogeneous. The split path builds
-    * one scan per version — acceptable exactly because transitions
-    * are rare, priced rewrites.
+    * column-mapping transition breaks single-scan soundness, through
+    * the one rule [[acrossTransitions]] (the append tail's too): the
+    * grouped read otherwise. For callers that only consume the logical
+    * CDF shape — the streaming source's catch-up, incremental view
+    * maintenance, the change tail — this delivers correctly across a
+    * removal (or a removal + re-upgrade round trip) where the strict
+    * [[readChanges]] refuses; the strict form remains for callers that
+    * must KNOW the window is homogeneous.
     */
   def readChangesSplit(s: SparkSession, dir: String,
                        fromVersion: Long, toVersion: Long): DataFrame = {
-    // the homogeneous fast path IS the strict call — its own guard
-    // already runs the restatement walk, so re-checking here would
-    // duplicate the snapshot probes on every transition-free window
-    try readChanges(s, dir, fromVersion, toVersion)
-    catch {
-      case e: IllegalArgumentException
-          if e.getMessage != null &&
-            e.getMessage.contains("crosses a column-mapping transition") =>
-        // per-version slices, each read under its OWN metadata, then
-        // PROJECTED to the window-end logical schema (+ CDF columns)
-        // before the union — exactly what the grouped read produces
-        // for windows it can serve: a column added mid-window
-        // null-fills in earlier slices, a dropped column's values
-        // disappear, a widened column upcasts. A raw unionByName
-        // would instead throw an undiagnosable resolution error the
-        // moment a transition-crossing window also contains a schema
-        // change.
-        val snapTo = snapshot(s, dir, Some(toVersion))
-        val logical = DataType.fromJson(snapTo.schemaJson).asInstanceOf[StructType]
-        val want: Seq[(String, org.apache.spark.sql.types.DataType)] =
-          logical.fields.map(f => (f.name, f.dataType)).toSeq ++ Seq(
-            ("_change_type", org.apache.spark.sql.types.StringType),
-            ("_commit_version", org.apache.spark.sql.types.LongType),
-            ("_commit_timestamp", org.apache.spark.sql.types.TimestampType))
-        (fromVersion to toVersion).map { v =>
-          val df = readChanges(s, dir, v, v)
-          df.select(want.map { case (n, dt) =>
-            (if (df.columns.contains(n)) col(n).cast(dt)
-             else org.apache.spark.sql.functions.lit(null).cast(dt)).as(n)
-          }.toIndexedSeq: _*)
-        }.reduce(_ unionByName _)
-    }
+    val snapTo = changeWindow(s, dir, fromVersion, toVersion)
+    acrossTransitions(s, dir, fromVersion, toVersion, snapTo,
+      fromVersion to toVersion, cdfSchema(snapTo))(changesOf(s, dir, _, _))
   }
 
-  /** ONE version's ordered change-file payload — the unit list the
-    * streaming source's intra-version admission slices (delta-spark's
-    * CDF offsets carry file indexes for the same reason): the commit's
-    * `cdc` files when the writer staged them, else its dataChange adds
-    * (the insert-derivable shape), PATH-SORTED so the list is an
-    * immutable pure function of the version and a restart re-resolves
-    * it identically. Versions whose changes are not file-sliceable
-    * (removes-only, metadata-only, compaction) answer empty — they
-    * budget as zero payload and always ride whole.
+  /** The one split-on-transition rule for a read of `versions` inside
+    * the window (fromVersion, toVersion]. With no column-mapping
+    * transition breaking single-scan soundness ([[cmTransitionBreak]]),
+    * ONE `read` of every version under `snapTo`'s metadata. Across one,
+    * one `read` per version under that version's OWN metadata, each
+    * PROJECTED to `out` (the window-end shape) before the union, by
+    * column IDENTITY, not by name: every later in-window metaData
+    * restatement carries each slice column forward — by its
+    * column-mapping field id between two mapped schemas (a rename
+    * keeps the id, a dropped-and-re-added name gets a new one), by
+    * name across an upgrade or removal (neither renames). So a renamed
+    * column delivers its real values under the new name, a column
+    * added mid-window null-fills in earlier slices, a dropped column's
+    * values disappear (also when its name is later reused), a widened
+    * column upcasts — what the single read produces for windows it can
+    * serve, where a raw unionByName would fail on slices of different
+    * widths. The split builds one scan per version and replays one
+    * snapshot per restatement, acceptable exactly because transitions
+    * are rare, priced rewrites.
     */
-  private[graft] def cdfVersionPayload(s: SparkSession, dir: String,
-                                       version: Long): IndexedSeq[AddFile] = {
-    val cdc = commitCdc(s, dir, version)
-    if (cdc.nonEmpty) cdc.sortBy(_.path).toIndexedSeq
+  private[graft] def acrossTransitions(s: SparkSession, dir: String,
+      fromVersion: Long, toVersion: Long, snapTo: Snapshot, versions: Seq[Long],
+      out: StructType)(read: (Seq[Long], Snapshot) => DataFrame): DataFrame =
+    if (versions.isEmpty ||
+        cmTransitionBreak(s, dir, fromVersion, toVersion, snapTo).isEmpty)
+      read(versions, snapTo)
     else {
-      val (adds, removes) = commitChanges(s, dir, version)
-      val addsDc = adds.collect { case (af, true) => af }
-      val remsDc = removes.collect { case (p, true) => p }
-      if (addsDc.nonEmpty && remsDc.isEmpty) addsDc.sortBy(_.path).toIndexedSeq
-      else IndexedSeq.empty
+      val logPath = new Path(dir, "_delta_log")
+      val fs = logPath.getFileSystem(s.sessionState.newHadoopConf())
+      val restated = ((fromVersion + 1) to toVersion).filter(m =>
+        parsedCommit(fs, logPath, m).exists(_.cmMode.isDefined))
+      val fieldsMemo = scala.collection.mutable.Map.empty[Long, Seq[StructField]]
+      def fieldsAt(v: Long): Seq[StructField] = fieldsMemo.getOrElseUpdate(v,
+        DataType.fromJson(snapshot(s, dir, Some(v)).schemaJson)
+          .asInstanceOf[StructType].fields.toSeq)
+      def idOf(f: StructField): Option[Long] =
+        if (f.metadata.contains("delta.columnMapping.id"))
+          Some(f.metadata.getLong("delta.columnMapping.id")) else None
+      def successor(f: StructField, next: Seq[StructField]): Option[StructField] =
+        idOf(f) match {
+          case Some(i) if next.exists(idOf(_).isDefined) => next.find(idOf(_).contains(i))
+          case _ => next.find(_.name == f.name)
+        }
+      versions.map { v =>
+        // v's table columns → the name each carries at the window end;
+        // a column absent from the map was dropped after v
+        val endName = restated.filter(_ > v).foldLeft(
+            fieldsAt(v).map(f => f.name -> f)) { (cur, m) =>
+          cur.flatMap { case (n, f) => successor(f, fieldsAt(m)).map(n -> _) }
+        }.map { case (n, f) => n -> f.name }.toMap
+        val table = fieldsAt(v).map(_.name).toSet
+        val df = read(Seq(v), snapshot(s, dir, Some(v)))
+        df.select(out.fields.map { f =>
+          df.columns.find(c => (if (table(c)) endName.get(c) else Some(c)).contains(f.name))
+            .fold(lit(null))(c => col(c)).cast(f.dataType).as(f.name)
+        }.toIndexedSeq: _*)
+      }.reduce(_ unionByName _)
     }
-  }
 
-  /** Change rows for files [from, until) of ONE version's payload
-    * ([[cdfVersionPayload]]) — the same CDF triple as [[readChanges]]
-    * (`_change_type`, `_commit_version`, `_commit_timestamp`), used by
-    * the streaming source when a single huge commit (a backfill, a
-    * giant MERGE) must split across micro-batches instead of arriving
-    * as one batch no cluster sizes for. The union of a version's
-    * slices is exactly `readChanges(v, v)` for the sliceable shapes.
+  /** Files [from, until) of a pinned, path-sorted list, clamped to its
+    * length — the one slice every split micro-batch takes (the initial
+    * snapshot, an over-sized append, an over-sized change payload).
+    */
+  private[graft] def fileSlice(files: IndexedSeq[AddFile], from: Long,
+                               until: Long): IndexedSeq[AddFile] =
+    files.slice(from.toInt, math.min(until, files.length.toLong).toInt)
+
+  /** Change rows for files [from, until) of ONE version's
+    * [[VersionChanges.cdfPayload]] — the same CDF columns as
+    * [[readChanges]], used by the streaming source when a single huge
+    * commit (a backfill, a giant MERGE) must split across micro-batches
+    * instead of arriving as one batch no cluster sizes for. The union
+    * of a version's slices is exactly `readChanges(v, v)` for the
+    * sliceable shapes.
     */
   private[graft] def readChangesSlice(s: SparkSession, dir: String, version: Long,
                                       from: Long, until: Long): DataFrame = {
-    val payload = cdfVersionPayload(s, dir, version)
+    val ch = versionChanges(s, dir, version)
+    val payload = ch.cdfPayload
     require(payload.nonEmpty,
       s"readChangesSlice: version $version of $dir has no sliceable change payload")
     val snap = snapshot(s, dir, Some(version))
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    val outSchema = StructType(schema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField("_change_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("_commit_version", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("_commit_timestamp", org.apache.spark.sql.types.TimestampType)))
-    val outCols = outSchema.fieldNames.map(col).toIndexedSeq
-    val hi = math.min(until, payload.length.toLong)
-    if (hi <= from)
+    val outSchema = cdfSchema(snap)
+    val slice = fileSlice(payload, from, until)
+    if (slice.isEmpty)
       return s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    val slice = payload.slice(from.toInt, hi.toInt)
     val root = new Path(dir)
     val fs = root.getFileSystem(s.sessionState.newHadoopConf())
     // loud like readChanges' tsByVersion(v): a missing timestamp means
@@ -998,15 +1064,14 @@ object DeltaReader {
       .getOrElse(version, throw new IllegalStateException(
         s"readChangesSlice: no commit timestamp for version $version of $dir — " +
           "the commit was cleaned mid-stream; restart the stream"))
-    val isCdc = commitCdc(s, dir, version).nonEmpty
     val base =
-      if (isCdc) readCdcFiles(s, dir, snap, slice)
+      if (ch.cdc.nonEmpty) readCdcFiles(s, dir, snap, slice)
       else scanFiles(s, dir, snap, slice).withColumn("_change_type", lit("insert"))
     base
       .withColumn("_commit_version", lit(version))
       .withColumn("_commit_timestamp",
         org.apache.spark.sql.functions.timestamp_millis(lit(ts)))
-      .select(outCols: _*)
+      .select(outSchema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Process-wide snapshot cache. A session running N queries against

@@ -136,7 +136,7 @@ object DeltaStream {
     import org.apache.spark.sql.functions.{col, lit, max_by, struct, when}
     // _commit_timestamp is CDF bookkeeping too (never replica data),
     // but only the first two are required — the fold keys on them
-    val meta = Seq("_change_type", "_commit_version", "_commit_timestamp")
+    val meta = DeltaReader.CdfColumns.map(_.name)
     val missing = meta.take(2).filterNot(batch.columns.contains)
     require(missing.isEmpty,
       s"cdcApply expects a change-feed stream (readChangeFeed=true) — the batch " +

@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.sources.DeltaReader
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Streaming SOURCE from the Delta table format — the read-side twin
   * of [[DeltaStream]]'s sink: tail the `_delta_log` incrementally, one
@@ -43,10 +45,12 @@ object DeltaTail {
 
   /** New rows committed in versions (fromVersion, toVersion]:
     * dataChange=true adds only, scanned under `toVersion`'s metadata —
-    * or per-version under each version's OWN metadata when the window
-    * crosses a column-mapping transition (whose re-keyed files the
-    * single scan would null-misread; the logical names are
-    * transition-invariant, so the slices union).
+    * or per-version under each version's OWN metadata, projected to
+    * `toVersion`'s columns by column identity (a renamed column keeps
+    * its values), when the window crosses a column-mapping
+    * transition (whose re-keyed files the single scan would
+    * null-misread) — the rule [[DeltaReader.acrossTransitions]] shares
+    * with the split change feed.
     * Refuses dataChange=true removes (deletes need CDF, not a tail)
     * and DV-carrying new adds (a file BORN with deleted rows is a
     * rewrite product, not an append) — unless the caller opted into
@@ -67,45 +71,28 @@ object DeltaTail {
       s"changes: fromVersion $fromVersion > toVersion $toVersion")
     val snap = DeltaReader.snapshot(s, dir, Some(toVersion))
     val perVersion = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val (adds, removes) = DeltaReader.commitChanges(s, dir, v)
-      val deletes = removes.filter(_._2)
-      val dcAdds = adds.filter(_._2)
-      if (deletes.nonEmpty && skipChangeCommits) Nil
-      else if (deletes.nonEmpty && ignoreDeletes && dcAdds.isEmpty) Nil
+      val ch = DeltaReader.versionChanges(s, dir, v, DeltaReader.TailLost)
+      if (ch.removes.nonEmpty && (skipChangeCommits || (ignoreDeletes && ch.adds.isEmpty))) Nil
       else {
-        require(deletes.isEmpty,
-          s"version $v of $dir removes ${deletes.size} files with dataChange=true " +
+        require(ch.removes.isEmpty,
+          s"version $v of $dir removes ${ch.removes.size} files with dataChange=true " +
             "(a delete/rewrite) — an append-only tail cannot represent it; " +
             "refusing to stream a wrong delta (option ignoreDeletes skips " +
             "delete-only versions; skipChangeCommits skips every changing version)")
-        if (dcAdds.isEmpty) Nil else Seq(v -> dcAdds.map(_._1))
+        if (ch.adds.isEmpty) Nil else Seq(v -> ch.adds)
       }
     }
-    val newAdds = perVersion.flatMap(_._2)
-    newAdds.foreach { a =>
+    perVersion.flatMap(_._2).foreach { a =>
       require(a.dv.isEmpty,
         s"version range ($fromVersion, $toVersion] adds ${a.path} carrying a deletion " +
           "vector — a rewrite product, not an append; refusing to stream it")
     }
-    // a column-mapping REMOVAL inside the window re-keys files: adds
-    // from versions before it carry the OLD physical names, which
-    // toVersion's logical scan schema would silently null-misread
-    // (r17 repro, the readChanges class). The tail can deliver it
-    // CORRECTLY though: each version's adds scan under that version's
-    // OWN metadata and the slices union by the (transition-invariant)
-    // logical names — one scan per version only on windows that
-    // actually cross a transition, the homogeneous fast path otherwise.
-    // the in-window restatement walk, not endpoint comparison: a
-    // removal + re-upgrade leaves the endpoints agreeing while
-    // mid-window adds are keyed by a mapping toVersion's metadata no
-    // longer carries (DeltaReader.cmTransitionBreak)
-    val crossesCm =
-      DeltaReader.cmTransitionBreak(s, dir, fromVersion, toVersion, snap).nonEmpty
-    if (!crossesCm) DeltaReader.scanFiles(s, dir, snap, newAdds)
-    else perVersion.map { case (v, adds) =>
-      DeltaReader.scanFiles(s, dir, DeltaReader.snapshot(s, dir, Some(v)), adds)
-    }.reduceOption(_ unionByName _)
-      .getOrElse(DeltaReader.scanFiles(s, dir, snap, Nil))
+    val addsOf = perVersion.toMap
+    DeltaReader.acrossTransitions(s, dir, fromVersion, toVersion, snap,
+      perVersion.map(_._1),
+      DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]) { (versions, sn) =>
+      DeltaReader.scanFiles(s, dir, sn, versions.flatMap(addsOf))
+    }
   }
 
   /** One micro-batch poll: deliver everything committed since the
@@ -115,8 +102,8 @@ object DeltaTail {
     * returns the delivered version, or None when there was nothing
     * new. A poll that crashes inside `process` redelivers on retry —
     * pair with a version-deduping sink for exactly-once.
-    */
-  /** `maxVersionsPerTrigger` caps how many log versions one poll
+    *
+    * `maxVersionsPerTrigger` caps how many log versions one poll
     * delivers — a tail starting far behind a hot table catches up in
     * bounded batches instead of one giant one. This poll API keeps the
     * initial snapshot as ONE batch (one consistent version); the
@@ -129,49 +116,21 @@ object DeltaTail {
                maxVersionsPerTrigger: Option[Int] = None): Option[Long] = {
     maxVersionsPerTrigger.foreach(m => require(m > 0,
       s"maxVersionsPerTrigger $m must be positive"))
-    val hconf = s.sessionState.newHadoopConf()
-    val cpDir = new org.apache.hadoop.fs.Path(checkpoint)
-    val fs = cpDir.getFileSystem(hconf)
-    val wmFile = new org.apache.hadoop.fs.Path(cpDir, "delta_tail_version")
-    val watermark: Option[Long] =
-      if (!fs.exists(wmFile)) None
-      else {
-        val in = fs.open(wmFile)
-        val raw = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-        val t = raw.trim
-        // an unparseable watermark is OPERATOR-REPAIR territory, not a
-        // silent restart-from-scratch (which would redeliver the whole
-        // table into a sink that may not dedup the initial snapshot)
-        require(t.nonEmpty && t.forall(_.isDigit),
-          s"corrupt delta-tail watermark $wmFile (content: '$t') — repair or remove " +
-            "the file; removing restarts the tail from a full initial snapshot")
-        Some(t.toLong)
-      }
+    val wm = new Watermark(s, checkpoint, "delta_tail_version")
     val snap = DeltaReader.snapshot(s, dir, None)
-    val batch = watermark match {
+    val batch = wm.read() match {
       case None =>
         // initial load: the whole current snapshot as batch one
         Some(DeltaReader.read(s, dir, Some(snap.version)) -> snap.version)
-      case Some(wm) if snap.version > wm =>
-        val to = maxVersionsPerTrigger.map(m => math.min(snap.version, wm + m))
+      case Some(w) if snap.version > w =>
+        val to = maxVersionsPerTrigger.map(m => math.min(snap.version, w + m))
           .getOrElse(snap.version)
-        Some(changes(s, dir, wm, to) -> to)
+        Some(changes(s, dir, w, to) -> to)
       case _ => None
     }
     batch.map { case (df, version) =>
       process(df, version)
-      fs.mkdirs(cpDir)
-      // write-then-rename: fs.create(wmFile, true) truncates in place,
-      // so a crash mid-write would leave an empty/partial watermark and
-      // wedge the stream instead of redelivering
-      val tmp = new org.apache.hadoop.fs.Path(cpDir,
-        s".delta_tail_version.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-      if (fs.exists(wmFile)) fs.delete(wmFile, false)
-      require(fs.rename(tmp, wmFile),
-        s"rename $tmp -> $wmFile failed; the tail will redeliver version $version")
+      wm.write(version)
       version
     }
   }
@@ -188,31 +147,42 @@ object DeltaTail {
     n
   }
 
-  private def readWatermark(fs: org.apache.hadoop.fs.FileSystem,
-                            wmFile: org.apache.hadoop.fs.Path): Option[Long] =
-    if (!fs.exists(wmFile)) None
-    else {
-      val in = fs.open(wmFile)
-      val raw = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-      val t = raw.trim
-      require(t.nonEmpty && t.forall(_.isDigit),
-        s"corrupt delta-tail watermark $wmFile (content: '$t') — repair or remove " +
-          "the file; removing restarts the tail from its starting position")
-      Some(t.toLong)
-    }
+  /** One poller's watermark file under `checkpoint`: the last
+    * delivered version, advanced after `process` returns.
+    */
+  private final class Watermark(s: SparkSession, checkpoint: String, name: String) {
+    private val cpDir = new Path(checkpoint)
+    private val fs = cpDir.getFileSystem(s.sessionState.newHadoopConf())
+    private val file = new Path(cpDir, name)
 
-  private def writeWatermark(fs: org.apache.hadoop.fs.FileSystem,
-                             cpDir: org.apache.hadoop.fs.Path,
-                             wmFile: org.apache.hadoop.fs.Path, version: Long): Unit = {
-    fs.mkdirs(cpDir)
-    val tmp = new org.apache.hadoop.fs.Path(cpDir,
-      s".${wmFile.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(wmFile)) fs.delete(wmFile, false)
-    require(fs.rename(tmp, wmFile),
-      s"rename $tmp -> $wmFile failed; the tail will redeliver version $version")
+    // an unparseable watermark is OPERATOR-REPAIR territory, not a
+    // silent restart-from-scratch (which would redeliver the whole
+    // table into a sink that may not dedup the initial snapshot)
+    def read(): Option[Long] =
+      if (!fs.exists(file)) None
+      else {
+        val in = fs.open(file)
+        val t = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
+        finally in.close()
+        require(t.nonEmpty && t.forall(_.isDigit),
+          s"corrupt delta-tail watermark $file (content: '$t') — repair or remove " +
+            "the file; removing restarts the tail from its starting position")
+        Some(t.toLong)
+      }
+
+    // write-then-rename: fs.create(file, true) truncates in place, so a
+    // crash mid-write would leave an empty/partial watermark and wedge
+    // the stream instead of redelivering
+    def write(version: Long): Unit = {
+      fs.mkdirs(cpDir)
+      val tmp = new Path(cpDir,
+        s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      val out = fs.create(tmp, true)
+      try out.write(version.toString.getBytes("UTF-8")) finally out.close()
+      if (fs.exists(file)) fs.delete(file, false)
+      require(fs.rename(tmp, file),
+        s"rename $tmp -> $file failed; the tail will redeliver version $version")
+    }
   }
 
   /** One CHANGE-FEED micro-batch poll — the streaming form of
@@ -245,15 +215,11 @@ object DeltaTail {
                       maxVersionsPerTrigger: Option[Int] = None): Option[Long] = {
     maxVersionsPerTrigger.foreach(m => require(m > 0,
       s"maxVersionsPerTrigger $m must be positive"))
-    val hconf = s.sessionState.newHadoopConf()
-    val cpDir = new org.apache.hadoop.fs.Path(checkpoint)
-    val fs = cpDir.getFileSystem(hconf)
-    val wmFile = new org.apache.hadoop.fs.Path(cpDir, "delta_tail_cdf_version")
-    val watermark = readWatermark(fs, wmFile)
-    val snap = graft.sources.DeltaReader.snapshot(s, dir, None)
-    val from: Long = watermark.map(_ + 1).orElse(startingVersion).getOrElse {
+    val wm = new Watermark(s, checkpoint, "delta_tail_cdf_version")
+    val snap = DeltaReader.snapshot(s, dir, None)
+    val from: Long = wm.read().map(_ + 1).orElse(startingVersion).getOrElse {
       // start-from-now: record the position, deliver nothing
-      writeWatermark(fs, cpDir, wmFile, snap.version)
+      wm.write(snap.version)
       return None
     }
     if (from > snap.version) return None
@@ -265,7 +231,7 @@ object DeltaTail {
     // refusal forever (the poller cannot split its own window)
     val batch = DeltaReader.readChangesSplit(s, dir, from, to)
     process(batch, to)
-    writeWatermark(fs, cpDir, wmFile, to)
+    wm.write(to)
     Some(to)
   }
 

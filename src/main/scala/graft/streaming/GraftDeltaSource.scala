@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLi
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Registered Structured Streaming source for graft Delta tables:
   *
@@ -33,15 +33,19 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    the offset pins the version and the files-delivered index, so a
   *    restart resumes mid-snapshot without duplication), or as one
   *    batch when no cap is set. Later batches deliver dataChange=true
-  *    adds via [[DeltaTail.changes]], which refuses delete/rewrite
-  *    versions loudly instead of streaming a wrong delta. With
+  *    adds via [[DeltaTail.changes]] (a window crossing a
+  *    column-mapping transition reads per-version), which refuses
+  *    delete/rewrite versions loudly instead of streaming a wrong
+  *    delta; an over-sized append commit splits by the same caps. With
   *    `startingVersion` = v the snapshot is SKIPPED and the stream
   *    tails adds from version v (rate caps apply from the first
   *    batch) — joining a huge table's stream without scanning its
   *    history.
   *  - CDF (`readChangeFeed=true`): batches are row-level changes
-  *    (table columns + `_change_type` + `_commit_version` +
-  *    `_commit_timestamp`) via [[DeltaReader.readChanges]].
+  *    (table columns + [[DeltaReader.CdfColumns]]): whole versions via
+  *    [[DeltaReader.readChangesSplit]] (per-version across a
+  *    column-mapping transition), an over-sized version's payload in
+  *    slices via [[DeltaReader.readChangesSlice]].
   *    `startingVersion` = v streams history from v (0 = whole
   *    history); `startingTimestamp` resolves once at stream start on
   *    the monotone commit-timestamp series (first version stamped at
@@ -51,8 +55,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *
   * `maxVersionsPerTrigger` caps versions per batch,
   * `maxFilesPerTrigger` caps admitted files and `maxBytesPerTrigger`
-  * the admitted add sizes (soft: one version — or one snapshot
-  * file — always admits; an over-sized commit rides alone) — all
+  * the admitted add sizes (soft: one version — or one file of a
+  * sliced list — always admits) — all
   * through the admission-control API, so the caps hold across
   * restarts (the engine hands latestOffset the restart position — the
   * V1 getOffset path cannot see it, which is exactly why this source
@@ -301,21 +305,9 @@ class GraftDeltaSourceProvider extends StreamSourceProvider with StreamSinkProvi
                           partitionColumns: Seq[String],
                           outputMode: OutputMode): Sink = {
     val lower = parameters.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    val path = lower.get("table") match {
-      case Some(name) => name.split('.') match {
-        case Array(cat, db, t) =>
-          graft.catalog.GraftCatalogPaths
-            .tablePath(sqlContext.sparkSession, cat, db, t)
-            .getOrElse(throw new IllegalArgumentException(
-              s"graft-delta sink: table '$name' — spark.sql.catalog.$cat is not a " +
-                "registered GraftCatalog with a root"))
-        case _ => throw new IllegalArgumentException(
-          s"graft-delta sink: table '$name' must be <catalog>.<db>.<table>")
-      }
-      case None => lower.getOrElse("path",
-        throw new IllegalArgumentException(
-          "graft-delta sink: .start(path) or .option(\"table\", \"cat.db.t\") is required"))
-    }
+    val path = GraftDeltaSource.tablePath(sqlContext.sparkSession, lower)
+      .orElse(lower.get("path")).getOrElse(throw new IllegalArgumentException(
+        "graft-delta sink: .start(path) or .option(\"table\", \"cat.db.t\") is required"))
     val checkpoint = lower.getOrElse("checkpointlocation",
       throw new IllegalArgumentException(
         "graft-delta sink: checkpointLocation is required — the exactly-once txn " +
@@ -432,25 +424,9 @@ object GraftDeltaSource {
   /** Parsed, case-insensitive reader options. */
   final case class Options(raw: Map[String, String]) {
     private val lower = raw.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    // name-based streaming: .option("table", "graft.db.t") resolves
-    // through the V2 catalog root exactly like the SQL surface
-    val path: String = lower.get("table") match {
-      case Some(name) =>
-        name.split('.') match {
-          case Array(cat, db, t) =>
-            graft.catalog.GraftCatalogPaths
-              .tablePath(org.apache.spark.sql.SparkSession.active, cat, db, t)
-              .getOrElse(throw new IllegalArgumentException(
-                s"graft-delta: table '$name' — spark.sql.catalog.$cat is not a " +
-                  "registered GraftCatalog with a root"))
-          case _ => throw new IllegalArgumentException(
-            s"graft-delta: table '$name' must be a three-part catalog name " +
-              "(<catalog>.<db>.<table>)")
-        }
-      case None => lower.getOrElse("path",
-        throw new IllegalArgumentException(
-          "graft-delta: .load(path) or .option(\"table\", \"cat.db.t\") is required"))
-    }
+    val path: String = tablePath(SparkSession.active, lower)
+      .orElse(lower.get("path")).getOrElse(throw new IllegalArgumentException(
+        "graft-delta: .load(path) or .option(\"table\", \"cat.db.t\") is required"))
     val cdf: Boolean = lower.get("readchangefeed").exists(_.toBoolean)
     // CDF mode: replay row-level changes from this version. APPEND
     // mode (r10): SKIP the initial snapshot and tail the dataChange
@@ -507,6 +483,26 @@ object GraftDeltaSource {
         "instead of skipping them")
   }
 
+  /** The directory a `table` option names — name-based streaming:
+    * `.option("table", "graft.db.t")` resolves through the V2 catalog
+    * root exactly like the SQL surface, for the reader and the sink
+    * alike. None without the option.
+    */
+  private[graft] def tablePath(spark: SparkSession,
+                               lower: Map[String, String]): Option[String] =
+    lower.get("table").map { name =>
+      name.split('.') match {
+        case Array(cat, db, t) =>
+          graft.catalog.GraftCatalogPaths.tablePath(spark, cat, db, t)
+            .getOrElse(throw new IllegalArgumentException(
+              s"graft-delta: table '$name' — spark.sql.catalog.$cat is not a " +
+                "registered GraftCatalog with a root"))
+        case _ => throw new IllegalArgumentException(
+          s"graft-delta: table '$name' must be a three-part catalog name " +
+            "(<catalog>.<db>.<table>)")
+      }
+    }
+
   /** Timestamp option value: epoch millis, a SQL timestamp
     * ("2026-08-15 12:00:00"), or an ISO-8601 instant.
     */
@@ -529,12 +525,8 @@ object GraftDeltaSource {
   private[graft] def sourceSchema(spark: SparkSession, dir: String,
                                   cdf: Boolean): StructType = {
     val snap = DeltaReader.snapshot(spark, dir, None)
-    val base = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[StructType]
-    if (!cdf) base
-    else StructType(base.fields ++ Seq(StructField("_change_type", StringType),
-      StructField("_commit_version", LongType),
-      StructField("_commit_timestamp", org.apache.spark.sql.types.TimestampType)))
+    if (cdf) DeltaReader.cdfSchema(snap)
+    else org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
   }
 
   /** A custom read limit the engine passes back verbatim — versions
@@ -543,10 +535,11 @@ object GraftDeltaSource {
     * `maxBytesPerTrigger` bounds the sum of the admitted versions'
     * add sizes (a soft cap, delta-spark style: at least one unit
     * always admits so the stream makes progress). An over-sized
-    * commit no longer rides alone: the initial snapshot AND a CDF
-    * version whose change payload exceeds the file/byte caps both
-    * SPLIT across micro-batches via `{"version":N,"index":K}`
-    * offsets over a path-sorted file list.
+    * commit does not ride alone: the initial snapshot, an append
+    * commit and a CDF version whose payload exceeds the file/byte
+    * caps all SPLIT across micro-batches via
+    * `{"version":N,"index":K[,"tail":true]}` offsets over a
+    * path-sorted file list.
     */
   final case class MaxVersions(versions: Option[Int], files: Option[Int],
                                bytes: Option[Long])
@@ -609,69 +602,45 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
     Option(latestOffset(null, ReadLimit.allAvailable()))
       .map(o => GraftDeltaSourceOffset(GraftDeltaSourceOffset.versionOf(o)))
 
-  // the initial snapshot's path-sorted add list, resolved once per
-  // pinned version (the offset pins it, so a restart re-resolves the
-  // SAME list — the log below a version is immutable)
-  @volatile private var snapshotAddsMemo: Option[(Long, IndexedSeq[DeltaReader.AddFile])] =
+  // the path-sorted file list an indexed offset pins, resolved once
+  // per pin (latestOffset probes it, getBatch re-reads it; the log
+  // below a version is immutable, so a restart re-resolves the SAME
+  // list from the offset alone)
+  @volatile private var pinnedMemo: Option[((Boolean, Long), IndexedSeq[DeltaReader.AddFile])] =
     None
 
-  private def snapshotAdds(version: Long): IndexedSeq[DeltaReader.AddFile] =
-    snapshotAddsMemo match {
-      case Some((v, adds)) if v == version => adds
-      case _ =>
-        val adds = DeltaReader.snapshot(spark, opts.path, Some(version))
-          .active.sortBy(_.path).toIndexedSeq
-        snapshotAddsMemo = Some((version, adds))
-        adds
-    }
-
-  // one CDF version's sliceable payload, memoized per pinned version
-  // (latestOffset probes it, getBatch re-reads it — one parse, and the
-  // list is an immutable pure function of the version)
-  @volatile private var cdfPayloadMemo: Option[(Long, IndexedSeq[DeltaReader.AddFile])] =
-    None
-
-  private def cdfPayload(version: Long): IndexedSeq[DeltaReader.AddFile] =
-    cdfPayloadMemo match {
-      case Some((v, p)) if v == version => p
-      case _ =>
-        val p = DeltaReader.cdfVersionPayload(spark, opts.path, version)
-        cdfPayloadMemo = Some((version, p))
-        p
-    }
-
-  // a TAIL version's sliceable payload (append mode): its dataChange
-  // adds, path-sorted — ONLY when the version removes nothing; a
-  // removing version is never sliced, it rides whole through
-  // DeltaTail's refusal / ignoreDeletes / skipChangeCommits semantics
-  @volatile private var tailPayloadMemo: Option[(Long, IndexedSeq[DeltaReader.AddFile])] =
-    None
-
-  private def tailPayload(version: Long): IndexedSeq[DeltaReader.AddFile] =
-    tailPayloadMemo match {
-      case Some((v, p)) if v == version => p
-      case _ =>
-        val (adds, removes) = DeltaReader.commitChanges(spark, opts.path, version)
-        val addsDc = adds.collect { case (af, true) => af }
-        val remsDc = removes.collect { case (p0, true) => p0 }
-        val p =
-          if (addsDc.nonEmpty && remsDc.isEmpty) addsDc.sortBy(_.path).toIndexedSeq
-          else IndexedSeq.empty
-        tailPayloadMemo = Some((version, p))
-        p
-    }
-
-  /** Files [from, until) of tail version `v`'s add payload, scanned
-    * under that version's snapshot — the over-sized-append slice.
+  /** The list `{"version":v,"index":k}` indexes: the initial
+    * snapshot's path-sorted adds when `snapshot`, else version v's
+    * sliceable payload ([[versionPayload]]).
     */
-  private def tailSlice(v: Long, from: Long, until: Long): DataFrame = {
-    val payload = tailPayload(v)
-    val hi = math.min(until, payload.length.toLong)
-    if (hi <= from) emptyBatch
-    else DeltaReader.scanFiles(spark, opts.path,
-      DeltaReader.snapshot(spark, opts.path, Some(v)),
-      payload.slice(from.toInt, hi.toInt))
+  private def pinned(snapshot: Boolean, v: Long): IndexedSeq[DeltaReader.AddFile] =
+    pinnedMemo match {
+      case Some((key, files)) if key == ((snapshot, v)) => files
+      case _ =>
+        val files =
+          if (snapshot)
+            DeltaReader.snapshot(spark, opts.path, Some(v)).active.sortBy(_.path).toIndexedSeq
+          else versionPayload(v)
+        pinnedMemo = Some(((snapshot, v), files))
+        files
+    }
+
+  /** Version v's sliceable payload: its change payload in CDF mode,
+    * its append's adds on the tail — a removing version is never
+    * sliced, it rides whole through DeltaTail's refusal /
+    * ignoreDeletes / skipChangeCommits semantics.
+    */
+  private def versionPayload(v: Long): IndexedSeq[DeltaReader.AddFile] = {
+    val ch = DeltaReader.versionChanges(spark, opts.path, v,
+      if (opts.cdf) DeltaReader.ChangeDataLost else DeltaReader.TailLost)
+    if (opts.cdf) ch.cdfPayload else ch.appendPayload
   }
+
+  /** An indexed offset pins the initial snapshot when it is an
+    * append-mode index without `tail` (every pre-r15 checkpoint's
+    * meaning), else its version's payload.
+    */
+  private def pinsSnapshot(o: GraftDeltaSourceOffset): Boolean = !opts.cdf && !o.tail
 
   override def latestOffset(startOffset: OffsetV2, limit: ReadLimit): OffsetV2 = {
     val snapV = DeltaReader.snapshot(spark, opts.path, None).version
@@ -696,19 +665,15 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
         var accF = 0L
         var full = false
         while (!full && end < vEnd) {
-          val adds = DeltaReader.commitActions(spark, opts.path, end + 1).collect {
-            case (Right(af), _) => af
-          }
-          // a CDF version's read payload is its cdc files when the
-          // writer staged them — budget what will actually be scanned
-          // (cdfVersionPayload: cdc else dataChange adds, the same
-          // unit list the intra-version slicer walks). Re-deriving it
-          // here and in getBatch is a CommitParseCache hit (bounded
-          // LRU keyed by commit-file identity), not a re-parse
-          // — only the per-call sort repeats, on a KB-scale list
+          // a CDF version budgets what will actually be scanned — its
+          // change payload, the unit list the slicer walks (a
+          // CommitParseCache hit, not a re-parse); the append tail
+          // budgets every add of the commit
           val payload =
-            if (!opts.cdf) adds
-            else DeltaReader.cdfVersionPayload(spark, opts.path, end + 1)
+            if (opts.cdf) versionPayload(end + 1)
+            else DeltaReader.commitActions(spark, opts.path, end + 1).collect {
+              case (Right(af), _) => af
+            }
           val nb = payload.map(_.size).sum
           if (end > s && (capB.exists(accB + nb > _) ||
               capF.exists(f => accF + payload.size > f.toLong))) full = true
@@ -717,105 +682,57 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
         end
       }
     }
-    // initial-snapshot admission: deliver files [done, k) of the
-    // PINNED version's path-sorted add list, k bounded by the file
-    // and byte caps (at least one file — the stream must progress; an
-    // over-sized file rides alone); the snapshot completes into the
-    // plain tail form {"version":pin}, from which tailing resumes.
-    // Restart-safe: the pin rides in the offset, the sorted list is a
-    // pure function of it.
-    def snapshotPhase(pin: Long, done: Long): OffsetV2 = {
-      if (capF.isEmpty && capB.isEmpty) return GraftDeltaSourceOffset(pin)
-      val adds = snapshotAdds(pin)
-      val n = adds.length.toLong
+    // pinned-list admission: deliver files [done, k) of the list the
+    // offset pins (the initial snapshot at `v`, or version v's
+    // payload), k bounded by the file and byte caps (at least one
+    // file — the stream must progress; an over-sized file rides
+    // alone); a completed list drops the index into the plain tail
+    // form {"version":v}, from which tailing resumes. Restart-safe:
+    // the pin rides in the offset, the list is a pure function of it.
+    def slicePhase(snapshot: Boolean, v: Long, done: Long): OffsetV2 = {
+      if (capF.isEmpty && capB.isEmpty) return GraftDeltaSourceOffset(v)
+      val files = pinned(snapshot, v)
       val fCap = capF.map(_.toLong).getOrElse(Long.MaxValue)
       var k = done
       var bytes = 0L
       var full = false
-      while (!full && k < n && (k - done) < fCap) {
-        val sz = adds(k.toInt).size
+      while (!full && k < files.length && (k - done) < fCap) {
+        val sz = files(k.toInt).size
         if (k > done && capB.exists(bytes + sz > _)) full = true
         else { bytes += sz; k += 1 }
       }
-      if (k >= n) GraftDeltaSourceOffset(pin) else GraftDeltaSourceOffset(pin, k)
+      if (k >= files.length) GraftDeltaSourceOffset(v)
+      // `tail` disambiguates a version's index from the snapshot's
+      else GraftDeltaSourceOffset(v, k, tail = !snapshot && !opts.cdf)
     }
-    // CDF intra-version admission: when the NEXT undelivered version's
-    // change payload alone exceeds the caps, slice it — offset
-    // {"version":v,"index":k} means "the first k files of v's sorted
-    // payload delivered" (delta-spark's CDF offsets carry file indexes
-    // the same way). A fitting version rides whole through admitted()
-    // as before; a batch is EITHER whole versions OR one version's
-    // slice, never a mix.
-    def cdfVersionPhase(v: Long, done: Long): OffsetV2 = {
-      val payload = cdfPayload(v)
-      val n = payload.length.toLong
-      val fCap = capF.map(_.toLong).getOrElse(Long.MaxValue)
-      var k = done
-      var bytes = 0L
-      var full = false
-      while (!full && k < n && (k - done) < fCap) {
-        val sz = payload(k.toInt).size
-        if (k > done && capB.exists(bytes + sz > _)) full = true
-        else { bytes += sz; k += 1 }
-      }
-      if (k >= n) GraftDeltaSourceOffset(v) else GraftDeltaSourceOffset(v, k)
-    }
-    def cdfPhase(doneV: Long): OffsetV2 = {
+    // whole versions after doneV — unless the NEXT version's payload
+    // alone exceeds the caps: then it slices (delta-spark's CDF offsets
+    // carry file indexes the same way). A batch is EITHER whole
+    // versions OR one version's slice, never a mix.
+    def versionsPhase(doneV: Long): OffsetV2 = {
       if (capF.isEmpty && capB.isEmpty) return GraftDeltaSourceOffset(admitted(doneV))
       if (doneV >= latest) return GraftDeltaSourceOffset(doneV)
-      val payload = cdfPayload(doneV + 1)
+      val payload = pinned(snapshot = false, doneV + 1)
       val fits = capF.forall(payload.size <= _) &&
         capB.forall(payload.map(_.size).sum <= _)
       if (fits) GraftDeltaSourceOffset(admitted(doneV))
-      else cdfVersionPhase(doneV + 1, 0L)
-    }
-    // append-tail intra-version admission (same shape): an over-sized
-    // pure-append commit slices; the offset carries tail=true so a
-    // restart can't confuse the index with the initial snapshot's
-    def tailVersionPhase(v: Long, done: Long): OffsetV2 = {
-      val payload = tailPayload(v)
-      val n = payload.length.toLong
-      val fCap = capF.map(_.toLong).getOrElse(Long.MaxValue)
-      var k = done
-      var bytes = 0L
-      var full = false
-      while (!full && k < n && (k - done) < fCap) {
-        val sz = payload(k.toInt).size
-        if (k > done && capB.exists(bytes + sz > _)) full = true
-        else { bytes += sz; k += 1 }
-      }
-      if (k >= n) GraftDeltaSourceOffset(v)
-      else GraftDeltaSourceOffset(v, k, tail = true)
-    }
-    def tailPhase(doneV: Long): OffsetV2 = {
-      if (capF.isEmpty && capB.isEmpty) return GraftDeltaSourceOffset(admitted(doneV))
-      if (doneV >= latest) return GraftDeltaSourceOffset(doneV)
-      val payload = tailPayload(doneV + 1)
-      val fits = payload.isEmpty || (capF.forall(payload.size <= _) &&
-        capB.forall(payload.map(_.size).sum <= _))
-      if (fits) GraftDeltaSourceOffset(admitted(doneV))
-      else tailVersionPhase(doneV + 1, 0L)
+      else slicePhase(snapshot = false, doneV + 1, 0L)
     }
     val end: OffsetV2 = start match {
       case None => startingVersion match {
         // replay from sv (CDF rows or append-mode add tailing): the
         // rate caps apply from sv-1 — these are version tails, not
-        // the snapshot (CDF additionally slices an over-sized version)
-        case Some(sv) if opts.cdf => cdfPhase(sv - 1)
-        case Some(sv) => tailPhase(sv - 1)
+        // the snapshot
+        case Some(sv) => versionsPhase(sv - 1)
         // CDF start-after-current: first batch just records the
         // position; append mode: the initial snapshot at the current
         // version, split by the file/byte caps
-        case None if !opts.cdf => snapshotPhase(latest, 0L)
+        case None if !opts.cdf => slicePhase(snapshot = true, latest, 0L)
         case None => GraftDeltaSourceOffset(latest)
       }
       // mid-snapshot / mid-version: keep draining the pinned list
-      case Some(g) if g.index >= 0 =>
-        if (opts.cdf) cdfVersionPhase(g.version, g.index)
-        else if (g.tail) tailVersionPhase(g.version, g.index)
-        else snapshotPhase(g.version, g.index)
-      case Some(g) if opts.cdf => cdfPhase(g.version)
-      case Some(g) => tailPhase(g.version)
+      case Some(g) if g.index >= 0 => slicePhase(pinsSnapshot(g), g.version, g.index)
+      case Some(g) => versionsPhase(g.version)
     }
     val endG = GraftDeltaSourceOffset.of(end)
     val progressed = start match {
@@ -828,72 +745,25 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
     if (progressed) end else startOffset
   }
 
-  /** Files [from, until) of the pinned snapshot's path-sorted add
-    * list, scanned under that snapshot's metadata — the same
-    * distributed scan (DV anti-join, column mapping) as every reader.
-    */
-  private def snapshotSlice(pin: Long, from: Long, until: Long): DataFrame = {
-    val snap = DeltaReader.snapshot(spark, opts.path, Some(pin))
-    val adds = snapshotAdds(pin)
-    val hi = math.min(until, adds.length.toLong)
-    if (hi <= from) emptyBatch
-    else DeltaReader.scanFiles(spark, opts.path, snap,
-      adds.slice(from.toInt, hi.toInt))
-  }
-
   override def getBatch(start: Option[OffsetV1], end: OffsetV1): DataFrame = {
     val endO = GraftDeltaSourceOffset.of(end)
     val endV = endO.version
-    val startO = start.map(GraftDeltaSourceOffset.of)
-    val df = (startO, opts.cdf) match {
-      case (None, false) => startingVersion match {
-        // an indexed tail end = the first slice of sv's over-sized
-        // append payload (endV == sv by construction)
-        case Some(sv) if sv <= endV && endO.tail && endO.index >= 0 =>
-          tailSlice(endV, 0L, endO.index)
-        // skip-snapshot tailing: the first batch is the adds of
-        // versions [sv, end] through the shared append-tail path
-        case Some(sv) if sv <= endV => DeltaTail.changes(spark, opts.path, sv - 1, endV,
-          opts.ignoreDeletes, opts.skipChangeCommits)
-        case Some(_) => emptyBatch
-        case None =>
-          if (endO.index >= 0) snapshotSlice(endV, 0L, endO.index)
-          else DeltaReader.read(spark, opts.path, Some(endV))
+    val df = start.map(GraftDeltaSourceOffset.of) match {
+      // mid-list continuation: the next slice of the pinned list (an
+      // end without an index completes it)
+      case Some(s) if s.index >= 0 =>
+        slice(pinsSnapshot(s), s.version, s.index,
+          if (endO.index >= 0) endO.index else Long.MaxValue)
+      // an indexed end after a whole position: the first slice of the
+      // list it pins (the snapshot, or by construction version
+      // start + 1 / startingVersion)
+      case _ if endO.index >= 0 => slice(pinsSnapshot(endO), endV, 0L, endO.index)
+      case Some(s) => versions(s.version, endV)
+      case None => startingVersion match {
+        case Some(sv) => versions(sv - 1, endV)
+        case None if opts.cdf => emptyBatch // start-after-current
+        case None => DeltaReader.read(spark, opts.path, Some(endV))
       }
-      // mid-version tail continuation (an end without an index
-      // completes the sliced version)
-      case (Some(s), false) if s.index >= 0 && s.tail =>
-        tailSlice(s.version, s.index,
-          if (endO.index >= 0) endO.index else Long.MaxValue)
-      // mid-snapshot continuation: the next slice of the pinned list
-      // (an end without an index is the snapshot's completing batch)
-      case (Some(s), false) if s.index >= 0 =>
-        snapshotSlice(s.version, s.index,
-          if (endO.index >= 0) endO.index else Long.MaxValue)
-      case (Some(s), false) =>
-        if (endO.tail && endO.index >= 0)
-          // entering a sliced tail version: endV == s.version + 1
-          tailSlice(endV, 0L, endO.index)
-        else DeltaTail.changes(spark, opts.path, s.version, endV,
-          opts.ignoreDeletes, opts.skipChangeCommits)
-      case (None, true) => startingVersion match {
-        // an indexed end = the first slice of sv's over-sized payload
-        case Some(sv) if sv <= endV && endO.index >= 0 =>
-          DeltaReader.readChangesSlice(spark, opts.path, endV, 0L, endO.index)
-        case Some(sv) if sv <= endV => readChangesRange(sv, endV)
-        case _ => emptyBatch // start-after-current (or nothing at sv yet)
-      }
-      // mid-version continuation: the next slice of the pinned
-      // version's payload (an end without an index completes it)
-      case (Some(s), true) if s.index >= 0 =>
-        DeltaReader.readChangesSlice(spark, opts.path, s.version, s.index,
-          if (endO.index >= 0) endO.index else Long.MaxValue)
-      case (Some(s), true) =>
-        if (endO.index >= 0)
-          // entering a sliced version: by construction endV == s.version+1
-          DeltaReader.readChangesSlice(spark, opts.path, endV, 0L, endO.index)
-        else if (s.version >= endV) emptyBatch
-        else readChangesRange(s.version + 1, endV)
     }
     val got = df.schema.map(f => (f.name, f.dataType))
     val want = schema.map(f => (f.name, f.dataType))
@@ -904,19 +774,31 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
     GraftColumnBridge.asStreaming(df)
   }
 
-  /** A multi-version CDF catch-up window: the grouped O(1)-plan
-    * [[DeltaReader.readChanges]] when no column-mapping transition
-    * breaks single-scan soundness; the per-version union when one
-    * does (a removal, or a removal + re-upgrade round trip — each
-    * version then reads under its OWN metadata and the slices union
-    * by the transition-invariant logical names, DeltaTail's exact
-    * fallback). Without this, a catch-up batch crossing a removal
-    * would surface readChanges' batch-API refusal instead of
-    * delivering — the batch API makes the caller split the window;
-    * the source IS that caller.
+  /** Whole versions (after, to]: the append tail's adds
+    * ([[DeltaTail.changes]], its refusals included) or the split change
+    * feed ([[DeltaReader.readChangesSplit]] — the batch API makes the
+    * caller split a window crossing a column-mapping transition; the
+    * source IS that caller).
     */
-  private def readChangesRange(from: Long, to: Long): DataFrame =
-    DeltaReader.readChangesSplit(spark, opts.path, from, to)
+  private def versions(after: Long, to: Long): DataFrame =
+    if (after >= to) emptyBatch
+    else if (opts.cdf) DeltaReader.readChangesSplit(spark, opts.path, after + 1, to)
+    else DeltaTail.changes(spark, opts.path, after, to,
+      opts.ignoreDeletes, opts.skipChangeCommits)
+
+  /** Files [from, until) of the list `snapshot`/`v` pins, scanned under
+    * version v's metadata — the same distributed scan (DV anti-join,
+    * column mapping) as every reader; CDF slices carry the change
+    * columns.
+    */
+  private def slice(snapshot: Boolean, v: Long, from: Long, until: Long): DataFrame =
+    if (opts.cdf) DeltaReader.readChangesSlice(spark, opts.path, v, from, until)
+    else {
+      val files = DeltaReader.fileSlice(pinned(snapshot, v), from, until)
+      if (files.isEmpty) emptyBatch
+      else DeltaReader.scanFiles(spark, opts.path,
+        DeltaReader.snapshot(spark, opts.path, Some(v)), files)
+    }
 
   private def emptyBatch: DataFrame =
     // deliberately NOT wrapped via asStreaming: Spark 4's microbatch

@@ -300,6 +300,24 @@ class DeltaCdfSpec extends SparkSpec {
       got.toString)
   }
 
+  test("readChangesSplit carries a column renamed before a column-mapping removal by identity") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp("graft_cdf_splitren_")
+    LakeWriter.writeDeltaMapped(
+      (0L until 4L).map(i => (i, s"v$i")).toDF("id", "v"), dir)        // v0
+    LakeWriter.alterProperties(spark, dir,
+      Map("delta.enableChangeDataFeed" -> "true"))                     // v1
+    LakeWriter.deleteWhere(spark, dir, "id = 1")                       // v2: keyed (id, v)
+    LakeWriter.renameColumn(spark, dir, "v", "x")                      // v3
+    LakeWriter.removeColumnMapping(spark, dir)                         // v4
+    LakeWriter.appendDelta(Seq((100L, "y")).toDF("id", "x"), dir)      // v5
+    val got = DeltaReader.readChangesSplit(spark, dir, 2L, 5L)
+      .selectExpr("id", "x", "_change_type")
+      .as[(Long, String, String)].collect().toSet
+    assert(got == Set((1L, "v1", "delete"), (100L, "y", "insert")), got.toString)
+  }
+
   test("the CDF tail's start-from-now mode skips history") {
     val s = spark
     import s.implicits._

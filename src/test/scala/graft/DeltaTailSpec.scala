@@ -176,4 +176,65 @@ class DeltaTailSpec extends SparkSpec {
     assert(rows(DeltaTail.changes(spark, dir, 0L, 6L)) ==
       Set((10L, "a"), (11L, "b"), (12L, "c"), (13L, "d")))
   }
+
+  test("a tail window crossing a column-mapping removal and ADD COLUMNS null-fills the earlier slice") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp("graft_tail_cmadd_")
+    val cp = tmp("graft_tail_cmadd_cp_")
+    LakeWriter.writeDeltaMapped(Seq((0L, "z")).toDF("id", "v"), dir)       // v0
+    assert(DeltaTail.pollOnce(spark, dir, cp, (_, _) => ()) == Some(0L))
+    LakeWriter.appendDelta(Seq((10L, "a")).toDF("id", "v"), dir)           // v1: physical names
+    LakeWriter.removeColumnMapping(spark, dir)                              // v2
+    LakeWriter.alterAddColumns(spark, dir, Seq("w" -> "double"))            // v3
+    LakeWriter.appendDelta(Seq((11L, "b", 9.5)).toDF("id", "v", "w"), dir) // v4
+    // v1's slice reads under its own two-column metadata and projects
+    // to the window-end shape: w null-fills instead of failing the union
+    def rows3(df: DataFrame): Set[(Long, String, Option[Double])] =
+      df.selectExpr("id", "v", "w").as[(Long, String, Option[Double])].collect().toSet
+    val want = Set((10L, "a", None), (11L, "b", Some(9.5)))
+    assert(rows3(DeltaTail.changes(spark, dir, 0L, 4L)) == want)
+    var polled = Set.empty[(Long, String, Option[Double])]
+    assert(DeltaTail.pollOnce(spark, dir, cp, (df, _) => polled = rows3(df)) == Some(4L))
+    assert(polled == want, polled.toString)
+  }
+
+  test("a tail window crossing a column-mapping removal carries renamed columns by identity, never null") {
+    val s = spark
+    import s.implicits._
+    def rowsOf(df: DataFrame, cols: String*): Set[Seq[Any]] =
+      df.selectExpr(cols: _*).collect().map(_.toSeq).toSet
+    // rename, then removal: v1's slice reads (id, v) under its own
+    // metadata; its v values arrive under the window-end name x
+    val dir = tmp("graft_tail_cmren_")
+    val cp = tmp("graft_tail_cmren_cp_")
+    LakeWriter.writeDeltaMapped(Seq((0L, "z")).toDF("id", "v"), dir)       // v0
+    assert(DeltaTail.pollOnce(spark, dir, cp, (_, _) => ()) == Some(0L))
+    LakeWriter.appendDelta(Seq((10L, "a")).toDF("id", "v"), dir)           // v1
+    LakeWriter.renameColumn(spark, dir, "v", "x")                           // v2
+    LakeWriter.removeColumnMapping(spark, dir)                              // v3
+    LakeWriter.appendDelta(Seq((11L, "b")).toDF("id", "x"), dir)           // v4
+    val want = Set(Seq(10L, "a"), Seq(11L, "b"))
+    assert(rowsOf(DeltaTail.changes(spark, dir, 0L, 4L), "id", "x") == want)
+    var polled = Set.empty[Seq[Any]]
+    assert(DeltaTail.pollOnce(spark, dir, cp, (df, _) => polled = rowsOf(df, "id", "x")) ==
+      Some(4L))
+    assert(polled == want, polled.toString)
+    // a name REUSED after a rename or a drop is a different column:
+    // v1's values go to x (renamed) and nowhere (dropped w), the new v
+    // and w null-fill for v1 (an upgraded table, whose first physical
+    // names are the logical ones, so the re-added columns get fresh ones)
+    val dir2 = tmp("graft_tail_cmreuse_")
+    LakeWriter.writeDelta(Seq((0L, "z", 0.5)).toDF("id", "v", "w"), dir2)       // v0
+    LakeWriter.appendDelta(Seq((10L, "a", 1.5)).toDF("id", "v", "w"), dir2)     // v1
+    LakeWriter.alterProperties(spark, dir2,
+      Map("delta.columnMapping.mode" -> "name"))                                 // v2
+    LakeWriter.renameColumn(spark, dir2, "v", "x")                               // v3
+    LakeWriter.dropColumn(spark, dir2, "w")                                      // v4
+    LakeWriter.alterAddColumns(spark, dir2, Seq("v" -> "string", "w" -> "double")) // v5
+    LakeWriter.removeColumnMapping(spark, dir2)                                  // v6
+    LakeWriter.appendDelta(Seq((11L, "b", "c", 2.5)).toDF("id", "x", "v", "w"), dir2) // v7
+    assert(rowsOf(DeltaTail.changes(spark, dir2, 0L, 7L), "id", "x", "v", "w") ==
+      Set(Seq(10L, "a", null, null), Seq(11L, "b", "c", 2.5)))
+  }
 }

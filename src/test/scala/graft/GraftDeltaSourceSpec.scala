@@ -874,4 +874,52 @@ class GraftDeltaSourceSpec extends SparkSpec {
     assert(cdf.schema.fieldNames.takeRight(3).toSeq ==
       Seq("_change_type", "_commit_version", "_commit_timestamp"))
   }
+
+  test("an append stream pinned before a column-mapping removal and ADD COLUMNS refuses by name; a fresh stream delivers") {
+    import graft.streaming.{GraftDeltaSource, GraftDeltaSourceOffset}
+    val d = freshDir("cmadd"); val cp = freshDir("cmaddcp")
+    LakeWriter.writeDeltaMapped(Seq((0L, "z")).toDF("id", "v"), d)       // v0
+    val (first, _) = drain(d, cp)
+    assert(first.map(_.head) == Seq(0L))
+    // a source constructed now pins the two-column schema
+    val pinned = new GraftDeltaSource(spark, GraftDeltaSource.Options(Map("path" -> d)))
+    LakeWriter.appendDelta(Seq((10L, "a")).toDF("id", "v"), d)           // v1: physical names
+    LakeWriter.removeColumnMapping(spark, d)                              // v2
+    LakeWriter.alterAddColumns(spark, d, Seq("w" -> "double"))            // v3
+    LakeWriter.appendDelta(Seq((11L, "b", 9.5)).toDF("id", "v", "w"), d) // v4
+    val e = intercept[IllegalArgumentException] {
+      pinned.getBatch(Some(GraftDeltaSourceOffset(0L)), GraftDeltaSourceOffset(4L))
+    }
+    assert(e.getMessage.contains("schema changed mid-stream"), e.getMessage)
+    // a fresh stream tailing from v1 pins the evolved schema: v1's row
+    // arrives with w null-filled, v4's whole
+    val (inc, _) = drain(d, freshDir("cmaddcp2"), Map("startingVersion" -> "1"))
+    assert(inc.toSet == Set(Seq(10L, "a", null), Seq(11L, "b", 9.5)), inc.toString)
+  }
+
+  test("a fresh append stream over a rename before a column-mapping removal delivers the real values") {
+    val d = freshDir("cmren")
+    LakeWriter.writeDeltaMapped(Seq((0L, "z")).toDF("id", "v"), d)       // v0
+    LakeWriter.appendDelta(Seq((10L, "a")).toDF("id", "v"), d)           // v1
+    LakeWriter.renameColumn(spark, d, "v", "x")                           // v2
+    LakeWriter.removeColumnMapping(spark, d)                              // v3
+    LakeWriter.appendDelta(Seq((11L, "b")).toDF("id", "x"), d)           // v4
+    val (inc, _) = drain(d, freshDir("cmrencp"), Map("startingVersion" -> "1"))
+    assert(inc.toSet == Set(Seq(10L, "a"), Seq(11L, "b")), inc.toString)
+  }
+
+  test("reader and sink resolve the table option alike: a two-part name refuses with the three-part-name message") {
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    val eRead = intercept[Exception] {
+      spark.readStream.format("graft-delta").option("table", "a.b").load()
+    }
+    assert(messages(eRead).exists(_.contains("must be a three-part catalog name")), eRead.toString)
+    val eSink = intercept[IllegalArgumentException] {
+      new graft.streaming.GraftDeltaSourceProvider().createSink(spark.sqlContext,
+        Map("table" -> "a.b", "checkpointLocation" -> freshDir("cp")), Nil,
+        org.apache.spark.sql.streaming.OutputMode.Append())
+    }
+    assert(eSink.getMessage.contains("must be a three-part catalog name"), eSink.getMessage)
+  }
 }
