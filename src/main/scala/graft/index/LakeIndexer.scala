@@ -1,9 +1,10 @@
 package graft.index
 
 import graft.functions.{TextFunctions, Xash}
+import graft.sources.ParquetFooter
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** One table of the data lake.
   *
@@ -254,27 +255,16 @@ object LakeIndexer {
 
   private val TombstoneDir = "_tombstones"
 
-  /** The Spark schema a part file of `dir` was written with, read on the
-    * driver from its footer's `org.apache.spark.sql.parquet.row.metadata`
-    * — the same source Spark's own inference prefers, without its job.
-    * The first part file in name order stands for all of them, as in
-    * Spark's inference without schema merging. None when `dir` holds no
-    * visible data file or the footer carries no Spark schema; the caller
-    * then lets Spark infer (and fail) as before.
+  /** The Spark schema of `dir`'s visible part files, from the first
+    * one's footer ([[ParquetFooter.sparkSchema]]). None when `dir` holds
+    * no visible data file; the caller then lets Spark infer (and fail).
     */
   private def footerSchema(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
                            dir: org.apache.hadoop.fs.Path): Option[StructType] =
-    scala.util.Try(fs.listStatus(dir)).toOption.toSeq.flatten
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith(".") && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName).headOption.flatMap { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
-          spark.sparkContext.hadoopConfiguration)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        finally reader.close()
-      }.map(json => DataType.fromJson(json).asInstanceOf[StructType])
+    ParquetFooter.sparkSchema(spark.sparkContext.hadoopConfiguration,
+      scala.util.Try(fs.listStatus(dir)).toOption.toSeq.flatten
+        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith(".") && st.getPath.getName.endsWith(".parquet")))
 
   /** Append new tables' cells to a persisted index WITHOUT rewriting it
     * (the reference's update_index adds tables to the live Postgres

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType, TimestampType}
@@ -80,52 +80,76 @@ object DeltaReader {
     * a checkpoint that re-stated the protocol as (1,2) would DOWNGRADE
     * a column-mapping table's declared requirements, and a real reader
     * replaying from that checkpoint would misinterpret the data it
-    * gates.
+    * gates. `sources` names the log files a replay from scratch reads
+    * for this state — the newest checkpoint at or below it and the
+    * commit or compaction files after that (name relative to
+    * `_delta_log` → length, mtime): the snapshot stays valid while each
+    * of them does, see [[SnapshotCache]].
     */
   private[graft] final class Snapshot(val version: Long,
-                                      resolve: Option[Map[String, String]] => Seq[AddFile],
-                                      val schemaJson: String, val partCols: Seq[String],
-                                      val minReader: Long,
-                                      val configuration: Map[String, String],
-                                      val minWriter: Long,
-                                      val readerFeatures: Seq[String],
-                                      val writerFeatures: Seq[String],
+                                      private[sources] val meta: MetaAction,
+                                      private[sources] val protocol: ProtocolAction,
                                       val txns: Map[String, Long],
-                                      val metaId: Option[String],
-                                      val domainMetadata: Map[String, String] = Map.empty,
-                                      cpAdds: Option[DataFrame] = None,
-                                      suffixFinal: Seq[(String, Option[AddFile])] = Nil,
-                                      val metaRaw: Option[String] = None) {
+                                      val domainMetadata: Map[String, String],
+                                      files0: LiveFiles,
+                                      private[graft] val sources: Map[String, (Long, Long)]) {
+    def schemaJson: String = meta.schemaString
+    def partCols: Seq[String] = meta.partitionColumns
+    def configuration: Map[String, String] = meta.configuration
+    def metaId: Option[String] = meta.id
+    /** The metaData action's inner object, VERBATIM from wherever it
+      * was ingested (commit line / JSON manifest: the raw node; parquet
+      * checkpoint: the struct row re-serialized with every field it
+      * carries). The version-checksum re-seed copies this node into the
+      * .crc — delta-spark loads protocol/metadata straight from the .crc
+      * and compares it against replayed state, so a reconstructed field
+      * subset (no format/name/createdTime) would diverge there.
+      */
+    def metaRaw: Option[String] = Some(meta.raw)
+    def minReader: Long = protocol.minReader
+    def minWriter: Long = protocol.minWriter
+    val readerFeatures: Seq[String] = protocol.readerFeatures.toSeq.sorted
+    val writerFeatures: Seq[String] = protocol.writerFeatures.toSeq.sorted
 
-    /** The live add set as a DISTRIBUTED DataFrame in the 10-column
-      * resolve shape — never collected: the checkpoint's adds stay a
-      * scan, the (small) commit suffix anti-joins them away and its
+    @volatile private[sources] var files: LiveFiles = files0
+    @volatile private var resolved: Seq[AddFile] = null
+
+    /** The live add set as a DISTRIBUTED DataFrame in the resolve shape
+      * ([[checkpointAdds]]) — never collected: the checkpoint's adds stay
+      * a scan, the (small) commit suffix anti-joins them away and its
       * own survivors union in. The checkpoint WRITER consumes this, so
       * authoring a checkpoint of a multi-million-file table costs no
-      * driver memory at all (the read side's gated `active` is for
-      * scan planning, which needs the list on the driver anyway).
+      * driver memory beyond the list the snapshot already holds.
       */
-    def activeDf(s: SparkSession): DataFrame = {
-      import org.apache.spark.sql.functions.broadcast
-      import s.implicits._
-      val survivors = suffixFinal.collect { case (_, Some(af)) => af }
-      val sfxDf = if (survivors.isEmpty) None else Some(addsAsResolveDf(s, survivors))
-      val cpLive = cpAdds.map { adds =>
-        if (suffixFinal.isEmpty) adds
-        else adds.join(broadcast(suffixFinal.map(_._1).toDF("path")), Seq("path"), "left_anti")
-      }
-      (cpLive, sfxDf) match {
-        case (Some(a), Some(b)) => a.unionByName(b)
-        case (a, b) => a.orElse(b).getOrElse(addsAsResolveDf(s, Nil))
+    def activeDf(s: SparkSession): DataFrame = files.asDf(s)
+
+    /** The resolved live add set, resolved on first use: forcing it
+      * runs the distributed last-writer-wins resolution over the
+      * checkpoint and collects the final file list (gated by
+      * `spark.graft.delta.maxSnapshotFiles`) to the driver, or derives
+      * it in memory from an earlier snapshot's list — scalar-only
+      * consumers (txn watermarks, append gates, version discovery)
+      * never pay a per-file cost at all. Once resolved, a snapshot
+      * keeps only its own list, releasing the ancestor's list it was
+      * derived from (a checkpoint scan stays for [[activeDf]]).
+      */
+    def active: Seq[AddFile] = {
+      val r = resolved
+      if (r != null) r
+      else synchronized {
+        if (resolved == null) {
+          val f = files
+          resolved = f.resolve(version, None)
+          files =
+            if (f.cp.isEmpty) LiveFiles(None, resolved, version, Vector.empty, f.maxFiles)
+            else f.copy(known = None)
+        }
+        resolved
       }
     }
-    /** The resolved live add set. LAZY: forcing it runs the distributed
-      * last-writer-wins resolution over the checkpoint and collects the
-      * final file list (gated by `spark.graft.delta.maxSnapshotFiles`)
-      * to the driver — scalar-only consumers (txn watermarks, append
-      * gates, version discovery) never pay a per-file cost at all.
-      */
-    lazy val active: Seq[AddFile] = resolve(None)
+
+    /** The live list when [[active]] already resolved it. */
+    private[sources] def activeIfResolved: Option[Seq[AddFile]] = Option(resolved)
 
     /** The live adds whose log `partitionValues` carry EVERY (key,
       * value) in `partition` — partition pruning applied INSIDE the
@@ -134,10 +158,15 @@ object DeltaReader {
       * maxSnapshotFiles gate applies to the PRUNED list (a partition
       * read can succeed on a table whose full listing would refuse).
       * Keys/values are the log's string form (physical keys on a
-      * column-mapped table); null partition values don't match.
+      * column-mapped table); null partition values don't match. A
+      * resolved [[active]] is filtered in memory.
       */
     def activeMatching(partition: Map[String, String]): Seq[AddFile] =
-      if (partition.isEmpty) active else resolve(Some(partition))
+      if (partition.isEmpty) active
+      else activeIfResolved match {
+        case Some(all) => all.filter(LiveFiles.inPartition(_, partition))
+        case None => files.resolve(version, Some(partition))
+      }
 
     /** Memo for the plain full-table scan DataFrame ([[DeltaReader.read]]):
       * a Snapshot is immutable and (via the cache) shared across a
@@ -148,6 +177,114 @@ object DeltaReader {
       * DataFrame already does.
       */
     private[graft] var fullScanMemo: Option[DataFrame] = None
+  }
+
+  /** A checkpoint's adds in the resolve shape ([[checkpointAdds]]) as a
+    * distributed scan, built on first use: a snapshot rebased onto a
+    * checkpoint that resolves its list in memory never reads it.
+    */
+  private[graft] final class CheckpointScan(build: () => DataFrame) {
+    lazy val adds: DataFrame = build()
+  }
+
+  /** A snapshot's live add set as its replay left it: a BASE — the
+    * checkpoint's adds as a distributed scan (`cp`) and/or a live list
+    * already on the driver (`list`: an earlier snapshot's resolved
+    * set, or a JSON checkpoint manifest's inline adds) as of
+    * `baseVersion` — plus `suffix`, the last action per path committed
+    * after the base (Some(add) = live (re-)add, None = removed), in
+    * first-touch order. A base add survives iff the suffix never
+    * touched its path. `known`, beside a checkpoint scan, is the whole
+    * live set on the driver at some version between the base and the
+    * snapshot (an ancestor's resolved list): the suffix applied over it
+    * yields the same set as over the base — a path's last action at or
+    * below that version is already reflected — so the list resolves in
+    * memory while the scan stays the distributed form. `maxFiles` gates
+    * the resolved list when the table has a checkpoint at or below the
+    * snapshot (a JSON-only log's adds are on the driver already).
+    */
+  private[graft] final case class LiveFiles(cp: Option[CheckpointScan], list: Seq[AddFile],
+                                            baseVersion: Long,
+                                            suffix: Vector[(String, Option[AddFile])],
+                                            maxFiles: Option[Long],
+                                            known: Option[Seq[AddFile]] = None) {
+    /** `base`'s adds no suffix action touched, then the suffix's own live adds. */
+    private def applied(base: Seq[AddFile], keep: AddFile => Boolean): Seq[AddFile] = {
+      val fromBase =
+        if (base.isEmpty) Vector.empty
+        else {
+          val touched = suffix.iterator.map(_._1).toSet
+          base.filter(a => keep(a) && !touched(a.path))
+        }
+      fromBase ++ suffix.collect { case (_, Some(af)) if keep(af) => af }
+    }
+
+    /** The base's list under the suffix. */
+    def inMemory(keep: AddFile => Boolean): Seq[AddFile] = applied(list, keep)
+
+    /** The whole base on the driver, when it is: the list with no
+      * checkpoint scan, else `known`.
+      */
+    private def driverBase: Option[Seq[AddFile]] = if (cp.isEmpty) Some(list) else known
+
+    /** The live set, when it resolves with no job. */
+    def onDriver: Option[Seq[AddFile]] = driverBase.map(applied(_, _ => true))
+
+    /** The checkpoint adds no suffix action touched (broadcast anti-join
+      * against the small suffix, executed on executors).
+      */
+    private def untouched(adds: DataFrame): DataFrame =
+      if (suffix.isEmpty) adds
+      else {
+        val s = adds.sparkSession
+        import s.implicits._
+        adds.join(org.apache.spark.sql.functions.broadcast(suffix.map(_._1).toDF("path")),
+          Seq("path"), "left_anti")
+      }
+
+    /** The live list, pruned to `partition` inside the resolution. */
+    def resolve(version: Long, partition: Option[Map[String, String]]): Seq[AddFile] = {
+      val keep: AddFile => Boolean = af => partition.forall(LiveFiles.inPartition(af, _))
+      val limit = maxFiles.getOrElse(Long.MaxValue)
+      val out = driverBase match {
+        case Some(base) => applied(base, keep)
+        case None =>
+          val fromCp = cp.fold(Vector.empty[AddFile]) { scan =>
+            val adds = scan.adds
+            // partition pruning BEFORE the anti-join and the gated
+            // collect — the pushed map-key equality prunes inside the
+            // distributed resolve, so the driver only ever sees the
+            // matching partitions' entries
+            val pruned = partition.fold(adds)(_.foldLeft(adds) { case (df, (k, v)) =>
+              df.where(col("pv").getItem(k) === lit(v))
+            })
+            untouched(pruned).take(math.min(limit, Int.MaxValue - 2L).toInt + 1).iterator
+              .map(resolveRowAdd).toVector
+          }
+          fromCp ++ inMemory(keep)
+      }
+      require(out.length <= limit,
+        s"snapshot at version $version has more than $limit live files" +
+          partition.map(p => s" in partition $p").getOrElse("") +
+          " — each AddFile costs driver heap (path + partition values + DV " +
+          "descriptor); raise spark.graft.delta.maxSnapshotFiles only with " +
+          "driver memory to match, or prune with readPartition")
+      out
+    }
+
+    def asDf(s: SparkSession): DataFrame = {
+      val mem = inMemory(_ => true)
+      val memDf = if (mem.isEmpty) None else Some(addsAsResolveDf(s, mem))
+      (cp.map(scan => untouched(scan.adds)), memDf) match {
+        case (Some(a), Some(b)) => a.unionByName(b)
+        case (a, b) => a.orElse(b).getOrElse(addsAsResolveDf(s, Nil))
+      }
+    }
+  }
+
+  private[graft] object LiveFiles {
+    def inPartition(af: AddFile, p: Map[String, String]): Boolean =
+      p.forall { case (k, v) => af.partitionValues.get(k).contains(v) }
   }
 
   /** RFC 2396 percent-decoding of `add.path` — NOT URLDecoder, whose
@@ -502,39 +639,76 @@ object DeltaReader {
       cp.fileActions.collect { case (Left(p), true) => p })
   }
 
-  /** One commit file's parsed content — everything the history family
-    * (DESCRIBE HISTORY, readChanges/CDF tail, in-commit-timestamp
-    * reads, VACUUM LITE's candidate scan) consumes. Parsed ONCE per
-    * commit-file identity via [[CommitParseCache]].
+  /** A `metaData` action: `raw` is its inner object verbatim (see
+    * [[Snapshot.metaRaw]]); a null configuration value stays null.
+    */
+  private[graft] final case class MetaAction(raw: String, schemaString: String,
+                                             id: Option[String],
+                                             partitionColumns: Seq[String],
+                                             configuration: Map[String, String])
+
+  /** A `protocol` action. The LATEST one wins ENTIRELY (PROTOCOL.md) —
+    * replacement, not upgrade-merge, so DROP FEATURE's downgrade
+    * restatement takes effect; an action below the feature-table
+    * thresholds carries no feature lists, which MEANS none.
+    */
+  private[graft] final case class ProtocolAction(minReader: Long, minWriter: Long,
+                                                 readerFeatures: Set[String],
+                                                 writerFeatures: Set[String])
+
+  private[graft] object ProtocolAction {
+    val Initial: ProtocolAction = ProtocolAction(1L, 1L, Set.empty, Set.empty)
+  }
+
+  /** One log file's parsed content — a commit, a log-compaction file or
+    * a JSON V2 checkpoint manifest — everything the snapshot replay,
+    * the history family (DESCRIBE HISTORY, readChanges/CDF tail,
+    * in-commit-timestamp reads, VACUUM LITE's candidate scan) and the
+    * change feed consume. Parsed ONCE per file identity via
+    * [[CommitParseCache]]. Per-key actions keep the file's LAST one:
+    * `meta`, `protocol`, `txns` per appId (the idempotence watermark a
+    * streaming writer consults) and `domains` per domain (None = the
+    * domain was removed; the row-tracking high watermark lives in
+    * `delta.rowTracking`). `sidecars` and `checkpointVersion` come from
+    * a V2 manifest's `sidecar` and `checkpointMetadata` actions.
     */
   private[graft] final case class CommitParse(
-      fileActions: Seq[(Either[String, AddFile], Boolean)],
-      cdc: Seq[AddFile],
-      operation: Option[String], readVersion: Option[Long],
-      engineInfo: Option[String], ict: Option[Long],
+      fileActions: Seq[(Either[String, AddFile], Boolean)] = Nil,
+      cdc: Seq[AddFile] = Nil,
+      operation: Option[String] = None, readVersion: Option[Long] = None,
+      engineInfo: Option[String] = None, ict: Option[Long] = None,
       metrics: Map[String, String] = Map.empty,
       params: Map[String, String] = Map.empty,
-      // the column-mapping mode a metaData RESTATEMENT in this commit
-      // declares ("none" when the restatement omits the key); None =
-      // no metaData action — the window guards walk these to find
-      // transitions whose endpoints agree (removal + re-upgrade)
-      cmMode: Option[String] = None)
+      meta: Option[MetaAction] = None,
+      protocol: Option[ProtocolAction] = None,
+      txns: Map[String, Long] = Map.empty,
+      domains: Map[String, Option[String]] = Map.empty,
+      sidecars: Seq[String] = Nil,
+      checkpointVersion: Option[Long] = None) {
+    /** The column-mapping mode a metaData RESTATEMENT in this commit
+      * declares ("none" when the restatement omits the key); None = no
+      * metaData action — the window guards walk these to find
+      * transitions whose endpoints agree (removal + re-upgrade).
+      */
+    def cmMode: Option[String] =
+      meta.map(_.configuration.get("delta.columnMapping.mode").flatMap(Option(_)).getOrElse("none"))
+  }
 
-  /** Process-wide per-commit parse memo, validated by the commit
-    * FILE's own (length, mtime) — deliberately NOT the snapshot
-    * cache's whole-listing fingerprint: a new commit appearing in the
-    * log must not invalidate parses of older, immutable ones (that
-    * would make every DESCRIBE HISTORY after an append O(retained
-    * log) again — the exact tax this memo removes). Commit JSONs never
-    * change in place once committed (ICT stamping happens at write
-    * time; log compaction and retention DELETE files, never edit), so
-    * the per-file identity check is exact; the getFileStatus it needs
-    * is the same presence probe the uncached readers already paid.
-    * Entries are pure values (no DataFrames, no session binding), so
-    * one bounded LRU serves every session in the JVM.
+  /** Process-wide per-file parse memo, validated by the log FILE's own
+    * (length, mtime) — deliberately NOT a whole-listing fingerprint: a
+    * new commit appearing in the log must not invalidate parses of
+    * older, immutable ones (that would make every DESCRIBE HISTORY
+    * after an append O(retained log) again — the exact tax this memo
+    * removes). Commit JSONs never change in place once committed (ICT
+    * stamping happens at write time; log compaction and retention
+    * DELETE files, never edit), so the per-file identity check is
+    * exact; the getFileStatus it needs is the same presence probe the
+    * uncached readers already paid. Entries are pure values (no
+    * DataFrames, no session binding), so one bounded LRU serves every
+    * session in the JVM: at most 1024 files of at most 4 MB each.
     */
   private[graft] object CommitParseCache {
-    final case class Key(log: String, version: Long)
+    final case class Key(log: String, file: String)
     // sized ABOVE a typical retained log (checkpoint-bounded replay
     // suffix plus retention window): an in-version-order walk over a
     // log larger than the LRU would evict every entry before its next
@@ -554,25 +728,32 @@ object DeltaReader {
     private[graft] def clear(): Unit = entries.synchronized(entries.clear())
   }
 
-  /** Counts ACTUAL commit-file parses (memo misses) — the spec's
-    * evidence that N DESCRIBE HISTORY / readChanges calls parse each
-    * retained commit once.
+  /** Counts ACTUAL log-file parses (memo misses) — the spec's evidence
+    * that N DESCRIBE HISTORY / readChanges calls parse each retained
+    * commit once.
     */
   private[graft] val commitParseCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** The one JSON log-line parser: commits, log-compaction files and
+    * JSON V2 checkpoint manifests all go through it.
+    */
   private def parseCommitFile(fs: org.apache.hadoop.fs.FileSystem, p: Path): CommitParse = {
+    import com.fasterxml.jackson.databind.JsonNode
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val acts = Seq.newBuilder[(Either[String, AddFile], Boolean)]
     val cdc = Seq.newBuilder[AddFile]
-    var op: Option[String] = None
-    var readVersion: Option[Long] = None
-    var engine: Option[String] = None
-    var ict: Option[Long] = None
-    var metrics: Map[String, String] = Map.empty
-    var params: Map[String, String] = Map.empty
-    var cmMode: Option[String] = None
-    def dataChange(n: com.fasterxml.jackson.databind.JsonNode): Boolean =
-      !n.has("dataChange") || n.get("dataChange").isNull || n.get("dataChange").asBoolean()
+    val sidecars = Seq.newBuilder[String]
+    var cp = CommitParse()
+    def present(n: JsonNode, f: String): Option[JsonNode] = Option(n.get(f)).filterNot(_.isNull)
+    def text(n: JsonNode, f: String): Option[String] = present(n, f).map(_.asText())
+    def strings(n: JsonNode, f: String): Seq[String] =
+      present(n, f).map(a => (0 until a.size()).map(a.get(_).asText())).getOrElse(Nil)
+    def dataChange(n: JsonNode): Boolean = present(n, "dataChange").forall(_.asBoolean())
+    def fields(n: JsonNode, value: JsonNode => String): Map[String, String] = {
+      val b = Map.newBuilder[String, String]
+      n.fields().forEachRemaining(e => b += e.getKey -> value(e.getValue))
+      b.result()
+    }
     val rd = new java.io.BufferedReader(
       new java.io.InputStreamReader(fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
     try Iterator.continually(rd.readLine()).takeWhile(_ != null)
@@ -582,33 +763,42 @@ object DeltaReader {
         if (n.has("remove"))
           acts += Left(n.get("remove").get("path").asText()) -> dataChange(n.get("remove"))
         if (n.has("cdc")) cdc += addFromJson(n.get("cdc"))
-        if (n.has("metaData")) {
-          val conf = n.get("metaData").get("configuration")
-          cmMode = Some(Option(conf).filterNot(_.isNull)
-            .flatMap(c => Option(c.get("delta.columnMapping.mode")))
-            .filterNot(_.isNull).map(_.asText()).getOrElse("none"))
+        present(n, "metaData").foreach { md =>
+          cp = cp.copy(meta = Some(MetaAction(md.toString, md.get("schemaString").asText(),
+            text(md, "id"), strings(md, "partitionColumns"),
+            present(md, "configuration").map(fields(_, v => if (v.isNull) null else v.asText()))
+              .getOrElse(Map.empty))))
         }
-        if (n.has("commitInfo")) {
-          val ci = n.get("commitInfo")
-          op = Option(ci.get("operation")).filterNot(_.isNull).map(_.asText())
-          readVersion = Option(ci.get("readVersion")).filterNot(_.isNull).map(_.asLong())
-          engine = Option(ci.get("engineInfo")).filterNot(_.isNull).map(_.asText())
-          ict = Option(ci.get("inCommitTimestamp")).filterNot(_.isNull).map(_.asLong())
-          Option(ci.get("operationMetrics")).filterNot(_.isNull).foreach { mn =>
-            val b = Map.newBuilder[String, String]
-            mn.fields().forEachRemaining(e => b += e.getKey -> e.getValue.asText())
-            metrics = b.result()
-          }
-          Option(ci.get("operationParameters")).filterNot(_.isNull).foreach { pn =>
-            val b = Map.newBuilder[String, String]
-            pn.fields().forEachRemaining(e => b += e.getKey ->
-              (if (e.getValue.isTextual) e.getValue.asText() else e.getValue.toString))
-            params = b.result()
-          }
+        present(n, "protocol").foreach { pr =>
+          cp = cp.copy(protocol = Some(ProtocolAction(pr.get("minReaderVersion").asLong(),
+            pr.get("minWriterVersion").asLong(), strings(pr, "readerFeatures").toSet,
+            strings(pr, "writerFeatures").toSet)))
+        }
+        present(n, "txn").foreach { tx =>
+          cp = cp.copy(txns = cp.txns + (tx.get("appId").asText() -> tx.get("version").asLong()))
+        }
+        present(n, "domainMetadata").foreach { dm =>
+          val removed = present(dm, "removed").exists(_.asBoolean())
+          cp = cp.copy(domains = cp.domains + (dm.get("domain").asText() ->
+            (if (removed) None else Some(dm.get("configuration").asText()))))
+        }
+        present(n, "sidecar").foreach(sc => sidecars += sc.get("path").asText())
+        present(n, "checkpointMetadata").foreach { cm =>
+          cp = cp.copy(checkpointVersion = Some(cm.get("version").asLong()))
+        }
+        present(n, "commitInfo").foreach { ci =>
+          cp = cp.copy(operation = text(ci, "operation"),
+            readVersion = present(ci, "readVersion").map(_.asLong()),
+            engineInfo = text(ci, "engineInfo"),
+            ict = present(ci, "inCommitTimestamp").map(_.asLong()),
+            metrics = present(ci, "operationMetrics").map(fields(_, _.asText()))
+              .getOrElse(cp.metrics),
+            params = present(ci, "operationParameters")
+              .map(fields(_, v => if (v.isTextual) v.asText() else v.toString))
+              .getOrElse(cp.params))
         }
       } finally rd.close()
-    CommitParse(acts.result(), cdc.result(), op, readVersion, engine, ict, metrics,
-      params, cmMode)
+    cp.copy(fileActions = acts.result(), cdc = cdc.result(), sidecars = sidecars.result())
   }
 
   /** The FIRST column-mapping transition in versions
@@ -662,21 +852,25 @@ object DeltaReader {
     val st =
       try Some(fs.getFileStatus(p)).filter(_.isFile)
       catch { case _: java.io.FileNotFoundException => None }
-    st.map { s0 =>
-      val key = CommitParseCache.Key(fs.makeQualified(logPath).toString, version)
-      CommitParseCache.get(key, s0.getLen, s0.getModificationTime).getOrElse {
-        commitParseCounter.incrementAndGet()
-        val cp = parseCommitFile(fs, p)
-        // giant commits (a 100k-file overwrite's multi-MB JSON) parse
-        // but never pin: 1024 such entries would be a driver-heap
-        // hazard the memo's O(new commits) promise doesn't need —
-        // history-family hot paths touch ordinary append/mutation
-        // commits, and the rare giant re-parses at the same cost the
-        // uncached readers always paid
-        if (s0.getLen <= (4L << 20))
-          CommitParseCache.put(key, s0.getLen, s0.getModificationTime, cp)
-        cp
-      }
+    st.map(parsedLogFile(fs, fs.makeQualified(logPath).toString, _))
+  }
+
+  /** The memoized parse of one JSON log file of the log `logKey`. */
+  private def parsedLogFile(fs: org.apache.hadoop.fs.FileSystem, logKey: String,
+                            st: org.apache.hadoop.fs.FileStatus): CommitParse = {
+    val key = CommitParseCache.Key(logKey, st.getPath.getName)
+    CommitParseCache.get(key, st.getLen, st.getModificationTime).getOrElse {
+      commitParseCounter.incrementAndGet()
+      val cp = parseCommitFile(fs, st.getPath)
+      // giant commits (a 100k-file overwrite's multi-MB JSON) parse
+      // but never pin: 1024 such entries would be a driver-heap
+      // hazard the memo's O(new commits) promise doesn't need —
+      // history-family hot paths touch ordinary append/mutation
+      // commits, and the rare giant re-parses at the same cost the
+      // uncached readers always paid
+      if (st.getLen <= (4L << 20))
+        CommitParseCache.put(key, st.getLen, st.getModificationTime, cp)
+      cp
     }
   }
 
@@ -975,11 +1169,8 @@ object DeltaReader {
     * one `read` per version under that version's OWN metadata, each
     * PROJECTED to `out` (the window-end shape) before the union, by
     * column IDENTITY, not by name: every later in-window metaData
-    * restatement carries each slice column forward — by its
-    * column-mapping field id between two mapped schemas (a rename
-    * keeps the id, a dropped-and-re-added name gets a new one), by
-    * name across an upgrade or removal (neither renames). So a renamed
-    * column delivers its real values under the new name, a column
+    * restatement carries each slice column forward ([[carried]]). So a
+    * renamed column delivers its real values under the new name, a column
     * added mid-window null-fills in earlier slices, a dropped column's
     * values disappear (also when its name is later reused), a widened
     * column upcasts — what the single read produces for windows it can
@@ -995,29 +1186,15 @@ object DeltaReader {
         cmTransitionBreak(s, dir, fromVersion, toVersion, snapTo).isEmpty)
       read(versions, snapTo)
     else {
-      val logPath = new Path(dir, "_delta_log")
-      val fs = logPath.getFileSystem(s.sessionState.newHadoopConf())
-      val restated = ((fromVersion + 1) to toVersion).filter(m =>
-        parsedCommit(fs, logPath, m).exists(_.cmMode.isDefined))
+      val restated = restatements(s, dir, fromVersion, toVersion)
       val fieldsMemo = scala.collection.mutable.Map.empty[Long, Seq[StructField]]
-      def fieldsAt(v: Long): Seq[StructField] = fieldsMemo.getOrElseUpdate(v,
-        DataType.fromJson(snapshot(s, dir, Some(v)).schemaJson)
-          .asInstanceOf[StructType].fields.toSeq)
-      def idOf(f: StructField): Option[Long] =
-        if (f.metadata.contains("delta.columnMapping.id"))
-          Some(f.metadata.getLong("delta.columnMapping.id")) else None
-      def successor(f: StructField, next: Seq[StructField]): Option[StructField] =
-        idOf(f) match {
-          case Some(i) if next.exists(idOf(_).isDefined) => next.find(idOf(_).contains(i))
-          case _ => next.find(_.name == f.name)
-        }
+      def fieldsAt(v: Long): Seq[StructField] =
+        fieldsMemo.getOrElseUpdate(v, tableFields(s, dir, v))
       versions.map { v =>
         // v's table columns → the name each carries at the window end;
         // a column absent from the map was dropped after v
-        val endName = restated.filter(_ > v).foldLeft(
-            fieldsAt(v).map(f => f.name -> f)) { (cur, m) =>
-          cur.flatMap { case (n, f) => successor(f, fieldsAt(m)).map(n -> _) }
-        }.map { case (n, f) => n -> f.name }.toMap
+        val endName = carried(fieldsAt, restated.filter(_ > v), v)
+          .map { case (n, f) => n -> f.name }
         val table = fieldsAt(v).map(_.name).toSet
         val df = read(Seq(v), snapshot(s, dir, Some(v)))
         df.select(out.fields.map { f =>
@@ -1026,6 +1203,50 @@ object DeltaReader {
         }.toIndexedSeq: _*)
       }.reduce(_ unionByName _)
     }
+
+  /** The versions in (from, to] whose commit restates metaData — the
+    * only points where a column is renamed, dropped, added or changes
+    * its column-mapping mode.
+    */
+  private def restatements(s: SparkSession, dir: String, from: Long, to: Long): Seq[Long] = {
+    val logPath = new Path(dir, "_delta_log")
+    val fs = logPath.getFileSystem(s.sessionState.newHadoopConf())
+    ((from + 1) to to).filter(m => parsedCommit(fs, logPath, m).exists(_.cmMode.isDefined))
+  }
+
+  /** Version v's table columns, with their column-mapping metadata. */
+  private[graft] def tableFields(s: SparkSession, dir: String, v: Long): Seq[StructField] =
+    DataType.fromJson(snapshot(s, dir, Some(v)).schemaJson).asInstanceOf[StructType].fields.toSeq
+
+  /** A column's column-mapping field id; None on an unmapped schema. */
+  private[graft] def columnId(f: StructField): Option[Long] =
+    if (f.metadata.contains("delta.columnMapping.id"))
+      Some(f.metadata.getLong("delta.columnMapping.id")) else None
+
+  /** Version v's table columns followed through each metaData
+    * restatement in `restated` (ascending, all after v) by column
+    * IDENTITY — by column-mapping field id between two mapped schemas
+    * (a rename keeps the id, a dropped-and-re-added name gets a new
+    * one), by name across an upgrade or removal (neither renames):
+    * each column's name at v → its field after the last restatement.
+    * A column absent from the map was dropped on the way.
+    */
+  private def carried(fieldsAt: Long => Seq[StructField], restated: Seq[Long],
+                      v: Long): Map[String, StructField] = {
+    def successor(f: StructField, next: Seq[StructField]): Option[StructField] =
+      columnId(f) match {
+        case Some(i) if next.exists(columnId(_).isDefined) => next.find(columnId(_).contains(i))
+        case _ => next.find(_.name == f.name)
+      }
+    restated.foldLeft(fieldsAt(v).map(f => f.name -> f)) { (cur, m) =>
+      cur.flatMap { case (n, f) => successor(f, fieldsAt(m)).map(n -> _) }
+    }.toMap
+  }
+
+  /** [[carried]] from version `from`'s table columns to `to`'s fields. */
+  private[graft] def carriedColumns(s: SparkSession, dir: String, from: Long,
+                                    to: Long): Map[String, StructField] =
+    carried(tableFields(s, dir, _), restatements(s, dir, from, to), from)
 
   /** Files [from, until) of a pinned, path-sorted list, clamped to its
     * length — the one slice every split micro-batch takes (the initial
@@ -1077,24 +1298,34 @@ object DeltaReader {
   /** Process-wide snapshot cache. A session running N queries against
     * one table must not pay N× (commit-suffix JSON parse + checkpoint
     * DataFrame setup + the gated `active` collect) — real delta-spark
-    * caches Snapshot per (log, version) for the same reason. Entries
-    * are validated by a FINGERPRINT of the `_delta_log` listing
-    * (names + lengths + mtimes, `_sidecars` included), so the cache is
-    * correct by construction against every way the log can change —
-    * graft commits, foreign writers, checkpoints, log compaction,
-    * VACUUM's retention cleaning, even a test fixture deleting commit
-    * files in place — with no invalidation hooks to miss: any listing
-    * change is a miss and a fresh replay. The validation probe costs
-    * one `listStatus` the replay needed anyway; what the hit skips is
-    * all parsing, DataFrame construction and (via the Snapshot's lazy
-    * `active`) the distributed resolve + gated collect.
+    * caches Snapshot per (log, version) for the same reason — and a
+    * session reading each new version must not rebuild it from the
+    * checkpoint either: a miss at version t ADVANCES the newest valid
+    * entry below t (see [[snapshot]]).
+    *
+    * An entry is validated by the files a replay from scratch reads for
+    * it ([[Snapshot.sources]]: the newest checkpoint's parts and
+    * sidecars at or below its version and the commit or compaction
+    * files after that, by name, length and mtime, against the one
+    * `listStatus` the lookup needs anyway — an advanced entry rebases
+    * onto a checkpoint written since its ancestor). The state at a
+    * version is a function of those files alone, so later commits,
+    * checkpoints and compaction files leave an entry valid, while
+    * retention cleaning of its files, a rewritten file or a fixture
+    * deleting commits in place invalidate exactly the entries that
+    * read them — no invalidation hooks to miss.
     *
     * Keys carry the SparkSession identity: a Snapshot holds DataFrames
     * bound to the session that built it, so entries never cross
     * sessions. Bounded LRU (`spark.graft.delta.snapshotCache.maxEntries`,
-    * default 32 — each entry may pin up to a maxSnapshotFiles-gated
-    * file list, the same driver-heap class one in-flight query holds);
-    * `spark.graft.delta.snapshotCache.enabled=false` bypasses entirely.
+    * default 32); `spark.graft.delta.snapshotCache.enabled=false`
+    * bypasses the cache and every advance. Driver-memory bound: an
+    * entry holds at most one resolved file list — its own, or the
+    * ancestor's it derives from until its own resolves — so a session
+    * pins at most maxEntries × `spark.graft.delta.maxSnapshotFiles`
+    * AddFiles, plus each entry's post-base commit suffix and sources
+    * (one checkpoint interval of log-file names) and
+    * [[CommitParseCache]]'s 1024 parsed log files of at most 4 MB each.
     */
   private[graft] object SnapshotCache {
     /** The SESSION rides in the key by reference (SparkSession keeps
@@ -1111,14 +1342,25 @@ object DeltaReader {
     final case class Key(session: SparkSession, logDir: String,
                          version: Long, maxFiles: Long)
     @volatile private var maxEntries = 32
-    private val entries = new java.util.LinkedHashMap[Key, (Long, Snapshot)](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Key, (Long, Snapshot)]): Boolean =
+    private val entries = new java.util.LinkedHashMap[Key, Snapshot](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, Snapshot]): Boolean =
         size() > maxEntries
     }
-    def get(key: Key, fingerprint: Long): Option[Snapshot] = entries.synchronized {
-      Option(entries.get(key)).collect { case (fp, snap) if fp == fingerprint => snap }
+    def get(key: Key): Option[Snapshot] = entries.synchronized(Option(entries.get(key)))
+
+    /** The entries of `key`'s session, log and gate below its version,
+      * newest first (iteration leaves the LRU order alone).
+      */
+    def below(key: Key): Seq[Snapshot] = entries.synchronized {
+      val out = Seq.newBuilder[Snapshot]
+      entries.forEach { (k, snap) =>
+        if ((k.session eq key.session) && k.logDir == key.logDir &&
+            k.maxFiles == key.maxFiles && k.version < key.version) out += snap
+      }
+      out.result().sortBy(-_.version)
     }
-    def put(key: Key, fingerprint: Long, snap: Snapshot, max: Int): Unit =
+
+    def put(key: Key, snap: Snapshot, max: Int): Unit =
       entries.synchronized {
         maxEntries = max
         // a stopped session's entries can never hit again (its plans
@@ -1128,39 +1370,130 @@ object DeltaReader {
         while (it.hasNext) {
           if (it.next().session.sparkContext.isStopped) it.remove()
         }
-        entries.put(key, (fingerprint, snap))
+        entries.put(key, snap)
       }
     private[graft] def clear(): Unit = entries.synchronized(entries.clear())
   }
 
-  /** Counts ACTUAL log replays (cache misses) — the spec's evidence
-    * that N repeated reads at one version replay once.
+  /** Counts ACTUAL snapshot builds (cache misses, advances included) —
+    * the spec's evidence that N repeated reads at one version build once.
     */
   private[graft] val replayCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** 64-bit FNV-1a over the sorted (name, length, mtime) triples of
-    * the log listing plus the `_sidecars` listing when present — any
-    * file appearing, disappearing or changing shape in the log
-    * directory changes the fingerprint.
+  /** Counts replays that start from a checkpoint (its scalar actions
+    * read) — the spec's evidence that a session reading each new
+    * version advances its last snapshot instead of going back to the
+    * checkpoint. A rebase onto a checkpoint reads none of it until its
+    * scan is used.
     */
-  private def logFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-                             entries: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
-    var h = 0xcbf29ce484222325L
-    def mix(x: Long): Unit = { h ^= x; h *= 0x100000001b3L }
-    def mixStr(str: String): Unit = { str.foreach(c => mix(c.toLong)); mix(-1L) }
-    val sidecars = entries.find(st => st.isDirectory && st.getPath.getName == "_sidecars")
-      .map(st => fs.listStatus(st.getPath).toSeq).getOrElse(Nil)
-    (entries ++ sidecars).sortBy(_.getPath.toString).foreach { st =>
-      mixStr(st.getPath.getName); mix(st.getLen); mix(st.getModificationTime)
+  private[graft] val checkpointReadCounter = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** The log state a replay starts from — the empty log, a checkpoint
+    * or a cached snapshot — and folds log files into, in version order.
+    * `sources` accumulates the files the state is built from.
+    */
+  private final class ReplayState(val version: Long, var meta: Option[MetaAction],
+                                  var protocol: ProtocolAction,
+                                  var txns: Map[String, Long],
+                                  var domains: Map[String, String],
+                                  base: LiveFiles,
+                                  val sources: scala.collection.mutable.Map[String, (Long, Long)]) {
+    // last action per path in the files folded so far, first-touch order
+    private val suffix = scala.collection.mutable.LinkedHashMap.empty[String, Option[AddFile]]
+
+    def fold(cp: CommitParse): Unit = {
+      cp.fileActions.foreach {
+        case (Right(af), _) => suffix(af.path) = Some(af)
+        case (Left(p), _) => suffix(p) = None
+      }
+      cp.meta.foreach(m => meta = Some(m))
+      cp.protocol.foreach(p => protocol = p)
+      txns ++= cp.txns
+      cp.domains.foreach { case (d, conf) =>
+        domains = conf.fold(domains - d)(c => domains + (d -> c))
+      }
     }
-    h
+
+    def source(name: String, st: org.apache.hadoop.fs.FileStatus): Unit =
+      sources(name) = (st.getLen, st.getModificationTime)
+
+    /** The base's files with the folded suffix merged over the base's
+      * own (a later action on a path replaces an earlier one in place),
+      * as of `target`. A driver-side base absorbs its suffix once the
+      * suffix outgrows it, so a chain of advances nobody resolves stays
+      * O(live files).
+      */
+    def liveFiles(target: Long, maxFiles: Option[Long]): LiveFiles = {
+      val merged =
+        if (suffix.isEmpty) base.suffix
+        else if (base.suffix.isEmpty) suffix.toVector
+        else (scala.collection.mutable.LinkedHashMap.from(base.suffix) ++= suffix).toVector
+      val out = base.copy(suffix = merged, maxFiles = maxFiles)
+      if (out.cp.isEmpty && merged.size > out.list.size)
+        LiveFiles(None, out.inMemory(_ => true), target, Vector.empty, maxFiles)
+      else out
+    }
   }
 
-  /** Replay the log to the target version: commit JSON driver-parsed
-    * (bounded by checkpointInterval), checkpoint adds distributed with
-    * lazy gated resolution (see class scaladoc); every FS touch goes
-    * through `fs`. Resolved snapshots are served from [[SnapshotCache]]
-    * while the log listing is byte-for-byte unchanged.
+  private object ReplayState {
+    def empty: ReplayState = new ReplayState(-1L, None, ProtocolAction.Initial, Map.empty,
+      Map.empty, LiveFiles(None, Nil, -1L, Vector.empty, None),
+      scala.collection.mutable.Map.empty)
+
+    /** From cached snapshot `v`, at or above `cp` — the newest checkpoint
+      * at or below the target, its base built on demand:
+      *  - v's replay stands on cp, or there is none: v's base, suffix
+      *    and sources carry over, its resolved list beside them (as the
+      *    base itself with no checkpoint scan, as `known` with one);
+      *  - else (v was replayed before cp was written) the state REBASES
+      *    onto cp: its lazy scan, its files as sources, v's scalar
+      *    actions and v's live list as `known` when that needs no job,
+      *    and the fold restarts after cp. Refolding (cp, v] over v's
+      *    state changes nothing — the last action per path, metaData,
+      *    protocol, txn and domain wins either way — and keeps the
+      *    suffix and `sources` to one checkpoint interval, as a replay
+      *    from scratch has them.
+      */
+    def advancing(v: Snapshot, cp: Option[(Long, () => CheckpointBase)]): ReplayState =
+      cp.filterNot { case (cpV, _) => v.sources.keys.exists(_.startsWith(f"$cpV%020d.checkpoint")) } match {
+        case Some((cpV, base)) =>
+          val cb = base()
+          new ReplayState(cpV, Some(v.meta), v.protocol, v.txns, v.domainMetadata,
+            cb.files.copy(known = v.activeIfResolved.orElse(v.files.onDriver)),
+            scala.collection.mutable.Map.from(cb.sources))
+        case None =>
+          new ReplayState(v.version, Some(v.meta), v.protocol, v.txns, v.domainMetadata,
+            v.activeIfResolved.fold(v.files)(all =>
+              if (v.files.cp.isEmpty) LiveFiles(None, all, v.version, Vector.empty, None)
+              else v.files.copy(known = Some(all))),
+            scala.collection.mutable.Map.from(v.sources))
+      }
+  }
+
+  private val ClassicCheckpoint = "\\d{20}\\.checkpoint\\.parquet"
+  private val MultiPartCheckpoint = "\\d{20}\\.checkpoint\\.\\d{10}\\.(\\d{10})\\.parquet"
+  private val V2Checkpoint = "\\d{20}\\.checkpoint\\.[A-Za-z0-9_-]+\\.(json|parquet)"
+
+  /** The snapshot at the target version (latest, or `versionAsOf`).
+    * Served from [[SnapshotCache]] while the files it was built from are
+    * unchanged; otherwise ONE replay loop folds log files into a start
+    * state, newest first of:
+    *  - a cached snapshot at v < target of this session, log and gate,
+    *    when v is at or above the newest checkpoint at or below the
+    *    target: its state carries over, or rebases onto that
+    *    checkpoint when v was replayed before it was written
+    *    ([[ReplayState.advancing]]) — so a suffix over a checkpoint
+    *    scan never spans a newer checkpoint. A resolved list derives
+    *    the new one in memory, while the checkpoint scan stays the
+    *    distributed form ([[Snapshot.activeDf]]) for the checkpoint
+    *    writer;
+    *  - that checkpoint: its adds stay a distributed DataFrame (see the
+    *    class scaladoc), its scalar actions come in one job;
+    *  - the empty log.
+    * Commit JSON and compaction files come from [[parsedLogFile]]'s
+    * memo; every gate (reader features, column-mapping mode, chain
+    * contiguity, checkpoint protection) applies to the result whatever
+    * the start.
     */
   private[graft] def snapshot(s: SparkSession, dir: String,
                                 versionAsOf: Option[Long]): Snapshot = {
@@ -1172,387 +1505,109 @@ object DeltaReader {
       catch { case _: java.io.FileNotFoundException => false },
       s"not a Delta table (no _delta_log): $dir")
     val entries = fs.listStatus(logPath).toSeq
-    val commits = entries
-      .filter(st => st.isFile && st.getPath.getName.matches("\\d{20}\\.json"))
-      .map(st => st.getPath.getName.take(20).toLong -> st.getPath)
-      .sortBy(_._1)
-    // classic single-file checkpoints AND multi-part
-    // NNN.checkpoint.PPPPPPPPPP.QQQQQQQQQQ.parquet — a version's parts
+    val logFiles = entries.filter(_.isFile)
+    def named(re: String) = logFiles.filter(_.getPath.getName.matches(re))
+    val commits = named("\\d{20}\\.json")
+      .map(st => st.getPath.getName.take(20).toLong -> st).sortBy(_._1)
+    // classic single-file checkpoints, multi-part
+    // NNN.checkpoint.PPPPPPPPPP.QQQQQQQQQQ.parquet (a version's parts
     // are read together as one snapshot base; ignoring the multi-part
     // form would silently drop every file added at or before it when
-    // retention has cleaned the pre-checkpoint commits
-    // classic, multi-part AND v2-manifest
-    // (NNN.checkpoint.<uniqueStr>.{json,parquet}) checkpoint names
-    val checkpoints: Seq[(Long, Seq[Path])] = entries
-      .filter(st => st.isFile &&
-        (st.getPath.getName.matches("\\d{20}\\.checkpoint(\\.\\d{10}\\.\\d{10})?\\.parquet") ||
-          st.getPath.getName.matches("\\d{20}\\.checkpoint\\.[A-Za-z0-9_-]+\\.(json|parquet)")))
-      .map(_.getPath)
-      .groupBy(_.getName.take(20).toLong)
-      .map { case (v, ps) => v -> ps.sortBy(_.getName) }
-      .toSeq.sortBy(_._1)
-    // a compaction file's END version is a reachable state even after
+    // retention has cleaned the pre-checkpoint commits) AND v2-manifest
+    // (NNN.checkpoint.<uniqueStr>.{json,parquet}) names
+    val checkpoints: Seq[(Long, Seq[FileStatus])] =
+      (named(ClassicCheckpoint) ++ named(MultiPartCheckpoint) ++ named(V2Checkpoint))
+        .groupBy(_.getPath.getName.take(20).toLong)
+        .map { case (v, ps) => v -> ps.sortBy(_.getPath.getName) }
+        .toSeq.sortBy(_._1)
+    // LOG COMPACTION files (`<x>.<y>.compacted.json`, PROTOCOL.md): a
+    // compaction file's END version is a reachable state even after
     // the covered commits were retention-cleaned (its reconciled
     // actions ARE versions x..y); intermediate versions inside a
     // cleaned range are not
-    val compactedEnds = entries
-      .filter(st => st.isFile &&
-        st.getPath.getName.matches("\\d{20}\\.\\d{20}\\.compacted\\.json"))
-      .map(_.getPath.getName.slice(21, 41).toLong)
+    val compactedFiles = named("\\d{20}\\.\\d{20}\\.compacted\\.json")
+      .map { st =>
+        val n = st.getPath.getName
+        (n.take(20).toLong, n.slice(21, 41).toLong, st)
+      }.sortBy(_._1)
     val target = versionAsOf.getOrElse(
-      (commits.map(_._1) ++ checkpoints.map(_._1) ++ compactedEnds).maxOption.getOrElse(
-        sys.error(s"empty _delta_log: $dir")))
+      (commits.map(_._1) ++ checkpoints.map(_._1) ++ compactedFiles.map(_._2)).maxOption
+        .getOrElse(sys.error(s"empty _delta_log: $dir")))
     versionAsOf.foreach { v =>
       require(commits.exists(_._1 == v) || checkpoints.exists(_._1 == v) ||
-          compactedEnds.contains(v),
+          compactedFiles.exists(_._2 == v),
         s"versionAsOf $v not present in $logPath")
     }
 
     // cache lookup: key on the RESOLVED version (a latest-read and an
-    // explicit versionAsOf at the same version share one entry),
-    // validated by the listing fingerprint computed above the replay
+    // explicit versionAsOf at the same version share one entry)
     val cacheOn = s.conf.get("spark.graft.delta.snapshotCache.enabled", "true").toBoolean
-    val fingerprint = if (cacheOn) logFingerprint(fs, entries) else 0L
-    val cacheKey = SnapshotCache.Key(s,
-      fs.makeQualified(logPath).toString, target,
-      s.conf.getOption("spark.graft.delta.maxSnapshotFiles").map(_.toLong).getOrElse(4000000L))
-    if (cacheOn) {
-      val hit = SnapshotCache.get(cacheKey, fingerprint)
-      if (hit.isDefined) return hit.get
+    val maxFiles =
+      s.conf.getOption("spark.graft.delta.maxSnapshotFiles").map(_.toLong).getOrElse(4000000L)
+    val logKey = fs.makeQualified(logPath).toString
+    val cacheKey = SnapshotCache.Key(s, logKey, target, maxFiles)
+    val listed = logFiles.map(st => st.getPath.getName -> st).toMap
+    lazy val sidecarsListed: Map[String, FileStatus] = entries
+      .find(st => st.isDirectory && st.getPath.getName == "_sidecars").toSeq
+      .flatMap(st => fs.listStatus(st.getPath).toSeq)
+      .map(st => s"_sidecars/${st.getPath.getName}" -> st).toMap
+    def valid(snap: Snapshot): Boolean = snap.sources.forall { case (name, (len, mtime)) =>
+      (if (name.startsWith("_sidecars/")) sidecarsListed.get(name) else listed.get(name))
+        .exists(st => st.getLen == len && st.getModificationTime == mtime)
     }
+    val hit = if (cacheOn) SnapshotCache.get(cacheKey).filter(valid) else None
+    if (hit.isDefined) return hit.get
     replayCounter.incrementAndGet()
 
-    // Last action per path in the post-checkpoint commit SUFFIX:
-    // Some(add) = live (re-)add, None = removed. The suffix is bounded
-    // by checkpointInterval, so this map stays small no matter how many
-    // live files the table has — the checkpoint's own add entries never
-    // come to the driver here (see the resolution thunk below).
-    val suffix = scala.collection.mutable.LinkedHashMap.empty[String, Option[AddFile]]
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Nil
-    var minReader = 1L
-    var minWriter = 1L
-    var readerFeatures: Set[String] = Set.empty
-    var writerFeatures: Set[String] = Set.empty
-    var configuration: Map[String, String] = Map.empty
-    var txns: Map[String, Long] = Map.empty
-    var metaId: Option[String] = None
-    // the metaData action's inner object, VERBATIM from wherever it
-    // was ingested (commit line / JSON manifest: the raw node;
-    // parquet checkpoint: the struct row re-serialized with every
-    // field it carries). The version-checksum re-seed copies this
-    // node into the .crc — delta-spark loads protocol/metadata
-    // straight from the .crc (read-from-checksum optimization) and
-    // compares it against replayed state, so a reconstructed field
-    // subset (no format/name/createdTime) would diverge there.
-    var metaRaw: Option[String] = None
-    // domain → configuration (JSON string), last-writer-wins per
-    // domain; removed=true deletes the domain (PROTOCOL.md domain
-    // metadata — the row-tracking high watermark lives in
-    // `delta.rowTracking`)
-    var domainMeta: Map[String, String] = Map.empty
+    val cpBase = checkpoints.filter(_._1 <= target).lastOption
+    val cpBaseV = cpBase.map(_._1).getOrElse(-1L)
+    val start =
+      (if (!cacheOn) None
+       else SnapshotCache.below(cacheKey).find(v => v.version >= cpBaseV && valid(v)))
+        .map(ReplayState.advancing(_, cpBase.map { case (v, ps) =>
+          v -> (() => checkpointBase(s, fs, logPath, logKey, v, ps)) }))
+        .orElse(cpBase.map { case (v, ps) => readCheckpoint(s, fs, logPath, logKey, v, ps) })
+        .getOrElse(ReplayState.empty)
 
-    // base: the newest checkpoint at or below the target version —
-    // exactly how a real Delta reader avoids replaying the full log.
-    // Its add entries are kept as a DATAFRAME (distributed), not
-    // collected: a 100-TB table's checkpoint holds millions of adds.
-    var cpAddsDf: Option[DataFrame] = None
-    // ONE filtered-and-projected job collects the scalar actions
-    // (metaData/protocol/txn) of a parquet checkpoint/manifest — the
-    // add entries never ride along
-    def ingestScalars(cp: DataFrame): Unit = {
-      val cols = cp.columns.toSet
-      val scalarCols = Seq("metaData", "protocol", "txn", "domainMetadata").filter(cols)
-      val rows =
-        if (scalarCols.isEmpty) Array.empty[org.apache.spark.sql.Row]
-        else cp.where(scalarCols.map(c => col(c).isNotNull)
-            .reduce(_ || _))
-          .select(scalarCols.map(col): _*).collect()
-      rows.foreach { r =>
-        val cols = r.schema.fieldNames.toSet
-        if (cols("metaData") && !r.isNullAt(r.fieldIndex("metaData"))) {
-          val md = r.getStruct(r.fieldIndex("metaData"))
-          val mdFields = md.schema.fieldNames.toSet
-          schemaJson = Some(md.getString(md.fieldIndex("schemaString")))
-          partCols = md.getSeq[String](md.fieldIndex("partitionColumns"))
-          if (mdFields("configuration") && !md.isNullAt(md.fieldIndex("configuration")))
-            configuration = md.getMap[String, String](md.fieldIndex("configuration")).toMap
-          if (mdFields("id") && !md.isNullAt(md.fieldIndex("id")))
-            metaId = Some(md.getString(md.fieldIndex("id")))
-          metaRaw = Some(structRowJson(md))
-        }
-        if (cols("protocol") && !r.isNullAt(r.fieldIndex("protocol"))) {
-          val pr = r.getStruct(r.fieldIndex("protocol"))
-          // real delta-spark checkpoints store protocol versions as
-          // int32 (the protocol's parquet schema); hand-built fixtures
-          // may say int64 — getLong on an Integer throws, so go
-          // through Number
-          minReader = math.max(minReader,
-            pr.getAs[Number]("minReaderVersion").longValue())
-          minWriter = math.max(minWriter,
-            pr.getAs[Number]("minWriterVersion").longValue())
-          val prFields = pr.schema.fieldNames.toSet
-          if (prFields("readerFeatures") && !pr.isNullAt(pr.fieldIndex("readerFeatures")))
-            readerFeatures = pr.getSeq[String](pr.fieldIndex("readerFeatures")).toSet
-          if (prFields("writerFeatures") && !pr.isNullAt(pr.fieldIndex("writerFeatures")))
-            writerFeatures = pr.getSeq[String](pr.fieldIndex("writerFeatures")).toSet
-        }
-        if (cols("txn") && !r.isNullAt(r.fieldIndex("txn"))) {
-          val tx = r.getStruct(r.fieldIndex("txn"))
-          txns += tx.getString(tx.fieldIndex("appId")) ->
-            tx.getAs[Number]("version").longValue()
-        }
-        if (cols("domainMetadata") && !r.isNullAt(r.fieldIndex("domainMetadata"))) {
-          val dm = r.getStruct(r.fieldIndex("domainMetadata"))
-          val domain = dm.getString(dm.fieldIndex("domain"))
-          val removed = !dm.isNullAt(dm.fieldIndex("removed")) &&
-            dm.getBoolean(dm.fieldIndex("removed"))
-          if (removed) domainMeta -= domain
-          else domainMeta += domain -> dm.getString(dm.fieldIndex("configuration"))
-        }
-      }
-    }
-    val base = checkpoints.filter(_._1 <= target).lastOption
-    base.foreach { case (v, psAll) =>
-      // several checkpoint forms may coexist at one version; each
-      // complete form is a full snapshot by itself, so pick ONE —
-      // mixing forms in one read would double-count adds. Preference:
-      // classic single file, then a V2 manifest, then multi-part.
-      val classic = psAll.filter(_.getName.matches("\\d{20}\\.checkpoint\\.parquet"))
-      val v2 = psAll.filter(_.getName.matches(
-        "\\d{20}\\.checkpoint\\.[A-Za-z0-9_-]+\\.(json|parquet)")).sortBy(_.getName)
-      if (classic.nonEmpty || v2.isEmpty) {
-        val ps = if (classic.nonEmpty) classic else psAll
-        // a multi-part checkpoint names its part count — all parts must
-        // be present or the snapshot base is silently partial
-        val multi = "\\d{20}\\.checkpoint\\.\\d{10}\\.(\\d{10})\\.parquet".r
-        ps.head.getName match {
-          case multi(total) =>
-            require(ps.size == total.toInt,
-              s"checkpoint $v has ${ps.size} of $total parts in $logPath — refusing a partial snapshot")
-          case _ =>
-        }
-        val cp = s.read.parquet(ps.map(_.toString): _*)
-        if (cp.columns.contains("add")) cpAddsDf = Some(checkpointAdds(cp))
-        ingestScalars(cp)
-      } else {
-        // V2 spec checkpoint (reader feature `v2Checkpoints`):
-        // `<v>.checkpoint.<uniqueStr>.{json|parquet}` is a MANIFEST —
-        // non-file actions plus a `checkpointMetadata` (version
-        // verified) and optional `sidecar` actions naming parquet
-        // files under _delta_log/_sidecars/ that hold the add state.
-        // Several uniqueStrs may coexist (each complete): take the
-        // lexicographically first for determinism. File actions stay
-        // DISTRIBUTED: sidecars are a parquet scan; inline adds of a
-        // parquet manifest likewise. A JSON manifest is driver-parsed
-        // (the format puts bulk adds in sidecars for exactly this
-        // reason).
-        val mPath = v2.head
-        val sidecarDir = new Path(logPath, "_sidecars")
-        if (mPath.getName.endsWith(".parquet")) {
-          val mf = s.read.parquet(mPath.toString)
-          val cols = mf.columns.toSet
-          require(!cols("checkpointMetadata") || {
-            val cm = mf.where(col("checkpointMetadata").isNotNull)
-              .select("checkpointMetadata.version").collect()
-            cm.isEmpty || cm(0).getAs[Number](0).longValue() == v
-          }, s"v2 checkpoint ${mPath.getName} declares a different version than its " +
-            "file name — corrupt manifest, refusing")
-          val sidecars =
-            if (!cols("sidecar")) Nil
-            else mf.where(col("sidecar").isNotNull).select("sidecar.path")
-              .collect().map(r => new Path(sidecarDir, r.getString(0)).toString).toSeq
-          sidecars.foreach(p => require(fs.exists(new Path(p)),
-            s"v2 checkpoint sidecar $p missing — refusing a partial snapshot"))
-          val inline = if (cols("add")) Some(checkpointAdds(mf)) else None
-          val side =
-            if (sidecars.isEmpty) None
-            else Some(checkpointAdds(s.read.parquet(sidecars: _*)))
-          cpAddsDf = (inline, side) match {
-            case (Some(a), Some(b)) => Some(a.unionByName(b))
-            case (a, b) => a.orElse(b)
-          }
-          ingestScalars(mf)
-        } else {
-          // JSON manifest: same actions, one line each
-          val om0 = new com.fasterxml.jackson.databind.ObjectMapper()
-          val inline = Seq.newBuilder[AddFile]
-          val sidecars = Seq.newBuilder[String]
-          val rd = new java.io.BufferedReader(new java.io.InputStreamReader(
-            fs.open(mPath), java.nio.charset.StandardCharsets.UTF_8))
-          try Iterator.continually(rd.readLine()).takeWhile(_ != null)
-            .filter(_.nonEmpty).foreach { line =>
-              val n = om0.readTree(line)
-              if (n.has("checkpointMetadata"))
-                require(n.get("checkpointMetadata").get("version").asLong() == v,
-                  s"v2 checkpoint ${mPath.getName} declares a different version than " +
-                    "its file name — corrupt manifest, refusing")
-              if (n.has("sidecar"))
-                sidecars += new Path(sidecarDir,
-                  n.get("sidecar").get("path").asText()).toString
-              if (n.has("add")) inline += addFromJson(n.get("add"))
-              if (n.has("metaData")) {
-                val md = n.get("metaData")
-                metaRaw = Some(md.toString)
-                schemaJson = Some(md.get("schemaString").asText())
-                metaId = Option(md.get("id")).filterNot(_.isNull).map(_.asText())
-                partCols = Option(md.get("partitionColumns")).map { pcs =>
-                  (0 until pcs.size()).map(pcs.get(_).asText())
-                }.getOrElse(Nil)
-                configuration = Option(md.get("configuration")).filterNot(_.isNull).map { c =>
-                  val it = c.fields()
-                  val b = Map.newBuilder[String, String]
-                  while (it.hasNext) { val e = it.next(); b += e.getKey ->
-                    (if (e.getValue.isNull) null else e.getValue.asText()) }
-                  b.result()
-                }.getOrElse(Map.empty)
-              }
-              if (n.has("protocol")) {
-                val pr = n.get("protocol")
-                minReader = math.max(minReader, pr.get("minReaderVersion").asLong())
-                minWriter = math.max(minWriter, pr.get("minWriterVersion").asLong())
-                Option(pr.get("readerFeatures")).filterNot(_.isNull).foreach { fs0 =>
-                  readerFeatures = (0 until fs0.size()).map(fs0.get(_).asText()).toSet
-                }
-                Option(pr.get("writerFeatures")).filterNot(_.isNull).foreach { fs0 =>
-                  writerFeatures = (0 until fs0.size()).map(fs0.get(_).asText()).toSet
-                }
-              }
-              if (n.has("txn")) {
-                val tx = n.get("txn")
-                txns += tx.get("appId").asText() -> tx.get("version").asLong()
-              }
-              if (n.has("domainMetadata")) {
-                val dm = n.get("domainMetadata")
-                val domain = dm.get("domain").asText()
-                if (dm.has("removed") && dm.get("removed").asBoolean()) domainMeta -= domain
-                else domainMeta += domain -> dm.get("configuration").asText()
-              }
-            } finally rd.close()
-          val sidecarPaths = sidecars.result()
-          sidecarPaths.foreach(p => require(fs.exists(new Path(p)),
-            s"v2 checkpoint sidecar $p missing — refusing a partial snapshot"))
-          val side =
-            if (sidecarPaths.isEmpty) None
-            else Some(checkpointAdds(s.read.parquet(sidecarPaths: _*)))
-          val inlineAdds = inline.result()
-          val inlineDf =
-            if (inlineAdds.isEmpty) None else Some(addsAsResolveDf(s, inlineAdds))
-          cpAddsDf = (inlineDf, side) match {
-            case (Some(a), Some(b)) => Some(a.unionByName(b))
-            case (a, b) => a.orElse(b)
-          }
-        }
-      }
-    }
-
-    // replay (base, target] in version order; action order inside a
-    // segment is preserved by per-line parsing. The chain must be
-    // CONTIGUOUS from the base: a gap means log retention cleaned
+    // fold (start, target] in version order; action order inside a
+    // file is preserved by per-line parsing. The chain must be
+    // CONTIGUOUS from the start: a gap means log retention cleaned
     // commits this replay needs — a silent partial snapshot otherwise.
-    // LOG COMPACTION files (`<x>.<y>.compacted.json`, PROTOCOL.md)
-    // substitute for the whole range [x, y] when fully inside the
-    // window — the reconciled actions replace x..y's commit JSONs, so
-    // a long suffix reads as a few files and retention may clean the
-    // covered commits without breaking replay.
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val compactedFiles: Seq[(Long, Long, Path)] = entries
-      .filter(st => st.isFile &&
-        st.getPath.getName.matches("\\d{20}\\.\\d{20}\\.compacted\\.json"))
-      .map { st =>
-        val n = st.getPath.getName
-        (n.take(20).toLong, n.slice(21, 41).toLong, st.getPath)
-      }.sortBy(_._1)
+    // A compaction file substitutes for the whole range [x, y] when it
+    // ends inside the window — the reconciled actions replace x..y's
+    // commit JSONs, so a long suffix reads as a few files and retention
+    // may clean the covered commits without breaking replay.
     val commitByV = commits.toMap
-    val baseV = base.map(_._1).getOrElse(-1L)
-    val segs = Seq.newBuilder[Path]
-    var vcur = baseV + 1
+    var vcur = start.version + 1
     while (vcur <= target) {
       // a range STARTING at or before vcur serves too (straddling the
-      // checkpoint base): its actions are final-per-path, so the ones
-      // the base already reflects reapply idempotently
+      // start): its actions are final-per-path, so the ones the start
+      // already reflects reapply idempotently
       val cov = compactedFiles.filter(c => c._1 <= vcur && c._2 >= vcur && c._2 <= target)
-      if (cov.nonEmpty) {
-        val best = cov.maxBy(_._2)
-        segs += best._3
-        vcur = best._2 + 1
-      } else commitByV.get(vcur) match {
-        case Some(p) => segs += p; vcur += 1
-        case None => throw new IllegalArgumentException(
-          s"commit $vcur missing and no compaction file covers it — the chain " +
-            s"(${baseV + 1} to $target) is not reconstructible in $logPath " +
-            "(log cleaned past the newest usable checkpoint?); refusing a partial snapshot")
-      }
+      val seg =
+        if (cov.nonEmpty) { val best = cov.maxBy(_._2); vcur = best._2 + 1; best._3 }
+        else commitByV.get(vcur) match {
+          case Some(st) => vcur += 1; st
+          case None => throw new IllegalArgumentException(
+            s"commit $vcur missing and no compaction file covers it — the chain " +
+              s"(${start.version + 1} to $target) is not reconstructible in $logPath " +
+              "(log cleaned past the newest usable checkpoint?); refusing a partial snapshot")
+        }
+      start.fold(parsedLogFile(fs, logKey, seg))
+      start.source(seg.getPath.getName, seg)
     }
-    segs.result()
-      .foreach { p =>
-        val in = fs.open(p)
-        val rd = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-        try Iterator.continually(rd.readLine()).takeWhile(_ != null)
-          .filter(_.nonEmpty).foreach { line =>
-          val n = om.readTree(line)
-          if (n.has("add")) {
-            val af = addFromJson(n.get("add"))
-            suffix(af.path) = Some(af)
-          }
-          if (n.has("remove")) suffix(n.get("remove").get("path").asText()) = None
-          if (n.has("metaData")) {
-            val md = n.get("metaData")
-            metaRaw = Some(md.toString)
-            schemaJson = Some(md.get("schemaString").asText())
-            metaId = Option(md.get("id")).filterNot(_.isNull).map(_.asText())
-            partCols = Option(md.get("partitionColumns")).map { pcs =>
-              (0 until pcs.size()).map(pcs.get(_).asText())
-            }.getOrElse(Nil)
-            configuration = Option(md.get("configuration")).filterNot(_.isNull).map { c =>
-              val it = c.fields()
-              val b = Map.newBuilder[String, String]
-              while (it.hasNext) { val e = it.next(); b += e.getKey ->
-                (if (e.getValue.isNull) null else e.getValue.asText()) }
-              b.result()
-            }.getOrElse(Map.empty)
-          }
-          if (n.has("protocol")) {
-            val pr = n.get("protocol")
-            // the LATEST protocol action wins ENTIRELY (PROTOCOL.md) —
-            // replacement, not upgrade-merge, so DROP FEATURE's
-            // downgrade restatement takes effect; an action below the
-            // feature-table thresholds carries no feature lists, which
-            // MEANS none
-            minReader = pr.get("minReaderVersion").asLong()
-            minWriter = pr.get("minWriterVersion").asLong()
-            readerFeatures = Option(pr.get("readerFeatures")).filterNot(_.isNull).map { fs0 =>
-              (0 until fs0.size()).map(fs0.get(_).asText()).toSet
-            }.getOrElse(Set.empty)
-            writerFeatures = Option(pr.get("writerFeatures")).filterNot(_.isNull).map { fs0 =>
-              (0 until fs0.size()).map(fs0.get(_).asText()).toSet
-            }.getOrElse(Set.empty)
-          }
-          if (n.has("txn")) {
-            val tx = n.get("txn")
-            // later commits override: the latest version per appId is
-            // the idempotence watermark a streaming writer consults
-            txns += tx.get("appId").asText() -> tx.get("version").asLong()
-          }
-          if (n.has("domainMetadata")) {
-            val dm = n.get("domainMetadata")
-            val domain = dm.get("domain").asText()
-            if (dm.has("removed") && dm.get("removed").asBoolean()) domainMeta -= domain
-            else domainMeta += domain -> dm.get("configuration").asText()
-          }
-        } finally rd.close()
-      }
 
     // Reader-version gate, per PROTOCOL.md: version 2 adds column
     // mapping (supported below, name mode only); version 3 tables list
     // their reader features explicitly — anything beyond column mapping
     // (deletion vectors, v2 checkpoints, …) changes how data must be
     // interpreted and is refused LOUDLY rather than misread.
-    if (minReader >= 3) {
-      require(minReader == 3,
-        s"Delta protocol minReaderVersion $minReader not supported — refusing to misread the table")
-      require(readerFeatures.nonEmpty,
+    val protocol = start.protocol
+    if (protocol.minReader >= 3) {
+      require(protocol.minReader == 3,
+        s"Delta protocol minReaderVersion ${protocol.minReader} not supported — " +
+          "refusing to misread the table")
+      require(protocol.readerFeatures.nonEmpty,
         s"Delta protocol minReaderVersion 3 with no readerFeatures in $logPath — " +
           "malformed table, refusing to guess its reader requirements")
       // vacuumProtocolCheck mandates that VACUUM implementations
@@ -1565,7 +1620,7 @@ object DeltaReader {
       // groups) — Spark 4's parquet row converter reassembles them
       // natively under spark.sql.variant.allowReadingShredded, so the
       // scan path reads both layouts through the declared VariantType
-      val unsupported = readerFeatures -- Set("columnMapping", "deletionVectors",
+      val unsupported = protocol.readerFeatures -- Set("columnMapping", "deletionVectors",
         "v2Checkpoints", "typeWidening", "variantType", "timestampNtz",
         "vacuumProtocolCheck", "variantShredding")
       require(unsupported.isEmpty,
@@ -1574,89 +1629,31 @@ object DeltaReader {
           "variantShredding and vacuumProtocolCheck are implemented) — " +
           "refusing to misread the table")
     }
+    val configuration = start.meta.map(_.configuration).getOrElse(Map.empty)
     val cmMode = configuration.getOrElse("delta.columnMapping.mode", "none")
     require(cmMode == "none" || cmMode == "name" || cmMode == "id",
       s"delta.columnMapping.mode '$cmMode' not supported (none/name/id) — " +
         "refusing to misread the table")
-    // Last-writer-wins resolution, exploiting that the commit suffix is
-    // SMALL (bounded by checkpointInterval) while the checkpoint may be
-    // huge: a checkpoint add survives iff NO later commit touched its
-    // path (broadcast anti-join, executed on executors); a touched path
-    // is governed by the suffix's final action for it. The final file
-    // list is what the scan needs on the driver anyway — its collect is
-    // gated by spark.graft.delta.maxSnapshotFiles.
-    val suffixFinal = suffix.toVector
-    val cpDf = cpAddsDf
-    def matches(af: AddFile, p: Map[String, String]): Boolean =
-      p.forall { case (k, v) => af.partitionValues.get(k).contains(v) }
-    val resolveFn: Option[Map[String, String]] => Seq[AddFile] = { partition =>
-      val survivors = suffixFinal.collect {
-        case (_, Some(af)) if partition.forall(matches(af, _)) => af
-      }
-      cpDf match {
-        case None => survivors
-        case Some(adds) =>
-          import org.apache.spark.sql.functions.broadcast
-          import s.implicits._
-          // partition pruning BEFORE the anti-join and the gated
-          // collect — the pushed map-key equality prunes inside the
-          // distributed resolve, so the driver only ever sees the
-          // matching partitions' entries
-          val pruned = partition match {
-            case None => adds
-            case Some(p) => p.foldLeft(adds) { case (df, (k, v)) =>
-              df.where(col("pv").getItem(k) === lit(v))
-            }
-          }
-          val resolved =
-            if (suffixFinal.isEmpty) pruned
-            else pruned.join(broadcast(suffixFinal.map(_._1).toDF("path")),
-              Seq("path"), "left_anti")
-          val maxFiles = s.conf.getOption("spark.graft.delta.maxSnapshotFiles")
-            .map(_.toLong).getOrElse(4000000L)
-          val take = resolved.take(math.min(maxFiles, Int.MaxValue - 2L).toInt + 1)
-          require(take.length <= maxFiles,
-            s"snapshot at version $target has more than $maxFiles live files" +
-              partition.map(p => s" in partition $p").getOrElse("") +
-              " — each AddFile costs driver heap (path + partition values + DV " +
-              "descriptor); raise spark.graft.delta.maxSnapshotFiles only with " +
-              "driver memory to match, or prune with readPartition")
-          val cpActive = take.iterator.map { r =>
-            val dv =
-              if (r.isNullAt(4)) None
-              else Some(DvDescriptor(r.getString(4), r.getString(5),
-                if (r.isNullAt(6)) None else Some(r.getInt(6)),
-                r.getInt(7), r.getLong(8)))
-            AddFile(r.getString(0),
-              Option(r.getMap[String, String](1)).map(_.toMap)
-                .getOrElse(Map.empty[String, String]),
-              if (r.isNullAt(2)) 0L else r.getLong(2),
-              if (r.isNullAt(3)) 0L else r.getLong(3), dv,
-              if (r.isNullAt(9)) None else Some(r.getString(9)),
-              if (r.isNullAt(10)) None else Some(r.getLong(10)),
-              if (r.isNullAt(11)) None else Some(r.getLong(11)),
-              if (r.isNullAt(12)) None else Some(r.getString(12)))
-          }.toVector
-          cpActive ++ survivors
-      }
-    }
     // checkpointProtection (PROTOCOL.md, stamped by a TRUNCATE HISTORY
-    // feature drop): a snapshot AT or ABOVE the boundary must replay
-    // from a checkpoint at/above it — a from-JSON replay would cross
-    // the dropped feature's historical actions, the exact exposure the
-    // feature exists to close. Time travel BELOW the boundary is
-    // unaffected (that region's protocol actions declare its features
-    // and gate as usual).
+    // feature drop): a snapshot AT or ABOVE the boundary must stand on
+    // a checkpoint at/above it — a from-JSON replay would cross the
+    // dropped feature's historical actions, the exact exposure the
+    // feature exists to close. The base counted is the newest listed
+    // checkpoint at or below the target, whatever the start: a cached
+    // snapshot from below the boundary (read before the drop) must not
+    // carry a replay across it once the boundary checkpoint is gone
+    // (every start records that checkpoint's files as sources). Time
+    // travel BELOW the boundary is unaffected (that region's protocol
+    // actions declare its features and gate as usual).
     configuration.get("delta.requireCheckpointProtectionBeforeVersion")
       .map(_.toLong).filter(_ > 0)
       .filterNot(_ => s.conf.get(
         "spark.graft.delta.ignoreCheckpointProtection", "false").toBoolean)
       .foreach { bound =>
-        val baseV = base.map(_._1).getOrElse(-1L)
-        require(baseV >= bound - 1,
+        require(cpBaseV >= bound - 1,
           s"snapshot at version $target replays JSON history across the table's " +
             s"checkpoint protection boundary $bound (base: " +
-            (if (baseV < 0) "version 0, no checkpoint" else s"checkpoint $baseV") +
+            (if (cpBaseV < 0) "version 0, no checkpoint" else s"checkpoint $cpBaseV") +
             ") — a TRUNCATE HISTORY feature drop protects that history; replay " +
             "from a checkpoint at or above the boundary. If the boundary " +
             "checkpoint was deleted, repair under " +
@@ -1664,21 +1661,188 @@ object DeltaReader {
             "understands every feature graft drops) by re-authoring it with " +
             "LakeWriter.checkpointDelta, then unset the flag")
       }
-    val snap = new Snapshot(target, resolveFn,
-      schemaJson.getOrElse(sys.error(s"no metaData action found in $logPath")),
-      partCols, minReader, configuration,
-      minWriter, readerFeatures.toSeq.sorted, writerFeatures.toSeq.sorted, txns, metaId,
-      domainMeta, cpAddsDf, suffixFinal, metaRaw)
-    if (cacheOn) SnapshotCache.put(cacheKey, fingerprint, snap,
+    val snap = new Snapshot(target,
+      start.meta.getOrElse(sys.error(s"no metaData action found in $logPath")),
+      protocol, start.txns, start.domains,
+      start.liveFiles(target, if (cpBase.isDefined) Some(maxFiles) else None),
+      start.sources.toMap)
+    if (cacheOn) SnapshotCache.put(cacheKey, snap,
       s.conf.get("spark.graft.delta.snapshotCache.maxEntries", "32").toInt)
     snap
   }
 
-  /** A checkpoint's `add` entries flattened to the resolution schema —
-    * field order is load-bearing for the collect above. Optional
-    * fields (size, modificationTime, deletionVector) may be absent in
-    * minimal or foreign checkpoints; they surface as typed nulls.
+  /** Checkpoint `v` as a replay base (`psAll`: every checkpoint file of
+    * that version): its live files, the files it is read from and its
+    * scalar actions. Several checkpoint forms may coexist at one
+    * version; each complete form is a full snapshot by itself, so ONE
+    * is read — mixing forms would double-count adds. Preference:
+    * classic single file, then a V2 manifest, then multi-part. Only a
+    * JSON manifest is read up front (through the commit-parse memo);
+    * the add scan and the scalar actions come on first use, every
+    * parquet read taking its schema from the first file's footer
+    * ([[ParquetFooter.sparkSchema]]) instead of an inference job.
+    * `sources` holds the form's own files and a JSON manifest's
+    * sidecars (a parquet manifest's sidecars live while it names them).
     */
+  private final case class CheckpointBase(files: LiveFiles,
+                                          sources: Map[String, (Long, Long)],
+                                          scalars: () => CommitParse)
+
+  private def checkpointBase(s: SparkSession, fs: FileSystem, logPath: Path, logKey: String,
+                             v: Long, psAll: Seq[FileStatus]): CheckpointBase = {
+    def stamp(st: FileStatus) = sourceName(st) -> (st.getLen, st.getModificationTime)
+    def parquet(files: Seq[FileStatus]): DataFrame =
+      ParquetFooter.sparkSchema(fs.getConf, files).fold(s.read)(s.read.schema(_))
+        .parquet(files.map(_.getPath.toString): _*)
+    def adds(cp: DataFrame): DataFrame =
+      if (cp.columns.contains("add")) checkpointAdds(cp) else addsAsResolveDf(s, Nil)
+    def scan(build: => DataFrame) = LiveFiles(Some(new CheckpointScan(() => build)), Nil, v,
+      Vector.empty, None)
+    val classic = psAll.filter(_.getPath.getName.matches(ClassicCheckpoint))
+    val v2 = psAll.filter(_.getPath.getName.matches(V2Checkpoint))
+    if (classic.nonEmpty || v2.isEmpty) {
+      val ps = if (classic.nonEmpty) classic else psAll
+      // a multi-part checkpoint names its part count — all parts must
+      // be present or the snapshot base is silently partial
+      val multi = MultiPartCheckpoint.r
+      ps.head.getPath.getName match {
+        case multi(total) =>
+          require(ps.size == total.toInt,
+            s"checkpoint $v has ${ps.size} of $total parts in $logPath — refusing a partial snapshot")
+        case _ =>
+      }
+      lazy val cp = parquet(ps)
+      CheckpointBase(scan(adds(cp)), ps.map(stamp).toMap, () => checkpointScalars(cp))
+    } else {
+      // V2 spec checkpoint (reader feature `v2Checkpoints`):
+      // `<v>.checkpoint.<uniqueStr>.{json|parquet}` is a MANIFEST —
+      // non-file actions plus a `checkpointMetadata` (version
+      // verified) and optional `sidecar` actions naming parquet files
+      // under _delta_log/_sidecars/ that hold the add state. Several
+      // uniqueStrs may coexist (each complete): take the
+      // lexicographically first for determinism. Sidecars and a
+      // parquet manifest's inline adds stay a distributed scan; a JSON
+      // manifest is driver-parsed by the commit parser (the format
+      // puts bulk adds in sidecars for exactly this reason).
+      val m = v2.head
+      def scalarsOf(manifest: CommitParse): CommitParse = {
+        require(manifest.checkpointVersion.forall(_ == v),
+          s"v2 checkpoint ${m.getPath.getName} declares a different version than its " +
+            "file name — corrupt manifest, refusing")
+        manifest.copy(fileActions = Nil)
+      }
+      def sidecars(manifest: CommitParse): Seq[FileStatus] = manifest.sidecars.map { p =>
+        val path = new Path(new Path(logPath, "_sidecars"), p)
+        try fs.getFileStatus(path)
+        catch { case _: java.io.FileNotFoundException => throw new IllegalArgumentException(
+          s"v2 checkpoint sidecar $path missing — refusing a partial snapshot") }
+      }
+      if (m.getPath.getName.endsWith(".parquet")) {
+        lazy val mf = parquet(Seq(m))
+        lazy val manifest = scalarsOf(checkpointScalars(mf))
+        CheckpointBase(scan {
+          val sc = sidecars(manifest)
+          if (sc.isEmpty) adds(mf) else adds(mf).unionByName(adds(parquet(sc)))
+        }, Map(stamp(m)), () => manifest)
+      } else {
+        val manifest = parsedLogFile(fs, logKey, m)
+        val sc = sidecars(manifest)
+        val inline = manifest.fileActions.collect { case (Right(af), _) => af }
+        CheckpointBase(
+          if (sc.isEmpty) LiveFiles(None, inline, v, Vector.empty, None)
+          else scan(adds(parquet(sc))).copy(list = inline),
+          (m +: sc).map(stamp).toMap, () => scalarsOf(manifest))
+      }
+    }
+  }
+
+  /** The start state at checkpoint `v`: its base and its scalar actions. */
+  private def readCheckpoint(s: SparkSession, fs: FileSystem, logPath: Path, logKey: String,
+                             v: Long, psAll: Seq[FileStatus]): ReplayState = {
+    checkpointReadCounter.incrementAndGet()
+    val cb = checkpointBase(s, fs, logPath, logKey, v, psAll)
+    val st = new ReplayState(v, None, ProtocolAction.Initial, Map.empty, Map.empty, cb.files,
+      scala.collection.mutable.Map.from(cb.sources))
+    st.fold(cb.scalars())
+    st
+  }
+
+  /** A checkpoint file's name under `_delta_log` (sidecars keep their
+    * `_sidecars/` prefix), as [[Snapshot.sources]] records it.
+    */
+  private def sourceName(st: FileStatus): String =
+    if (st.getPath.getParent.getName == "_sidecars") s"_sidecars/${st.getPath.getName}"
+    else st.getPath.getName
+
+  /** The scalar actions of a parquet checkpoint or V2 manifest —
+    * metaData, protocol, txn, domainMetadata, sidecar and
+    * checkpointMetadata — in ONE filtered-and-projected job, as a
+    * [[CommitParse]] the replay folds like a commit; the add entries
+    * never ride along.
+    */
+  private def checkpointScalars(cp: DataFrame): CommitParse = {
+    import org.apache.spark.sql.Row
+    val cols = Seq("metaData", "protocol", "txn", "domainMetadata", "sidecar",
+      "checkpointMetadata").filter(cp.columns.toSet)
+    val rows =
+      if (cols.isEmpty) Array.empty[Row]
+      else cp.where(cols.map(c => col(c).isNotNull).reduce(_ || _))
+        .select(cols.map(col): _*).collect()
+    def field[A](r: Row, f: String): Option[A] =
+      if (r.schema.fieldNames.contains(f) && !r.isNullAt(r.fieldIndex(f))) Some(r.getAs[A](f))
+      else None
+    // real delta-spark checkpoints store protocol and txn versions as
+    // int32 (the protocol's parquet schema); hand-built fixtures may
+    // say int64 — go through Number
+    def long(r: Row, f: String): Long = r.getAs[Number](f).longValue()
+    def strings(r: Row, f: String): Seq[String] =
+      field[scala.collection.Seq[String]](r, f).map(_.toSeq).getOrElse(Nil)
+    rows.foldLeft(CommitParse()) { (out, r) =>
+      var o = out
+      field[Row](r, "metaData").foreach { md =>
+        o = o.copy(meta = Some(MetaAction(structRowJson(md), md.getAs[String]("schemaString"),
+          field[String](md, "id"), strings(md, "partitionColumns"),
+          field[scala.collection.Map[String, String]](md, "configuration").map(_.toMap)
+            .getOrElse(Map.empty))))
+      }
+      field[Row](r, "protocol").foreach { pr =>
+        o = o.copy(protocol = Some(ProtocolAction(long(pr, "minReaderVersion"),
+          long(pr, "minWriterVersion"),
+          strings(pr, "readerFeatures").toSet, strings(pr, "writerFeatures").toSet)))
+      }
+      field[Row](r, "txn").foreach { tx =>
+        o = o.copy(txns = o.txns + (tx.getAs[String]("appId") -> long(tx, "version")))
+      }
+      field[Row](r, "domainMetadata").foreach { dm =>
+        val removed = field[Boolean](dm, "removed").contains(true)
+        o = o.copy(domains = o.domains + (dm.getAs[String]("domain") ->
+          (if (removed) None else Some(dm.getAs[String]("configuration")))))
+      }
+      field[Row](r, "sidecar").foreach(sc => o = o.copy(sidecars = o.sidecars :+
+        sc.getAs[String]("path")))
+      field[Row](r, "checkpointMetadata").foreach(cm =>
+        o = o.copy(checkpointVersion = Some(long(cm, "version"))))
+      o
+    }
+  }
+
+  /** One collected row of the resolve shape ([[checkpointAdds]]). */
+  private def resolveRowAdd(r: org.apache.spark.sql.Row): AddFile = {
+    val dv =
+      if (r.isNullAt(4)) None
+      else Some(DvDescriptor(r.getString(4), r.getString(5),
+        if (r.isNullAt(6)) None else Some(r.getInt(6)),
+        r.getInt(7), r.getLong(8)))
+    AddFile(r.getString(0),
+      Option(r.getMap[String, String](1)).map(_.toMap).getOrElse(Map.empty[String, String]),
+      if (r.isNullAt(2)) 0L else r.getLong(2),
+      if (r.isNullAt(3)) 0L else r.getLong(3), dv,
+      if (r.isNullAt(9)) None else Some(r.getString(9)),
+      if (r.isNullAt(10)) None else Some(r.getLong(10)),
+      if (r.isNullAt(11)) None else Some(r.getLong(11)),
+      if (r.isNullAt(12)) None else Some(r.getString(12)))
+  }
+
   /** id-mode scans need Spark's parquet field-id resolution. The
     * switch is a SESSION conf (the scan is lazy, so a scoped
     * save-and-restore cannot work): an UNSET session turns it on —
@@ -1699,6 +1863,11 @@ object DeltaReader {
     s.conf.set(k, "true")
   }
 
+  /** A checkpoint's `add` entries flattened to the resolution schema —
+    * field order is load-bearing for [[resolveRowAdd]]. Optional
+    * fields (size, modificationTime, deletionVector) may be absent in
+    * minimal or foreign checkpoints; they surface as typed nulls.
+    */
   private def checkpointAdds(cp: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, LongType, MapType, StringType}
     val addT = cp.schema("add").dataType.asInstanceOf[StructType]

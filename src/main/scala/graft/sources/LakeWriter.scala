@@ -797,7 +797,7 @@ object LakeWriter {
     val incoming = parsed.foldLeft(table) { case (acc, (path, dt, cmt)) =>
       insertPath(acc, path, dt, cmt)
     }
-    val (newSchema, newConf) = evolveSchema(dir, snap, table, cm, incoming.fields.toSeq)
+    val (newSchema, newConf) = evolveSchema(snap, table, cm, incoming.fields.toSeq)
     require(newSchema != table, "alterAddColumns: nothing to add")
     // an added VARIANT or TIMESTAMP_NTZ column changes what READERS
     // must understand — the upgrade rides the same commit as the
@@ -1454,8 +1454,9 @@ object LakeWriter {
   /** LOG COMPACTION (PROTOCOL.md `<x>.<y>.compacted.json`): reconcile
     * the commit range [fromVersion, toVersion] into one file — per
     * path the FINAL file action (verbatim line, so DV descriptors and
-    * stats survive byte-identically), the last metaData/protocol and
-    * the latest txn per appId; commitInfo/cdc stay per-version (a
+    * stats survive byte-identically), the last metaData/protocol, the
+    * latest txn per appId and the last domainMetadata per domain (a
+    * removal included); commitInfo/cdc stay per-version (a
     * compaction file is state, not history). Readers substitute it
     * for the whole range during replay, so a long commit suffix reads
     * as a few files and retention may clean the covered commits
@@ -1483,6 +1484,7 @@ object LakeWriter {
     var protoLine: Option[String] = None
     val fileFinal = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val txnLatest = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val domainLatest = scala.collection.mutable.LinkedHashMap.empty[String, String]
     (fromVersion to toVersion).foreach { v =>
       val p = new org.apache.hadoop.fs.Path(log, f"$v%020d.json")
       require(fs.exists(p),
@@ -1497,11 +1499,14 @@ object LakeWriter {
           if (n.has("metaData")) metaLine = Some(line)
           if (n.has("protocol")) protoLine = Some(line)
           if (n.has("txn")) txnLatest(n.get("txn").get("appId").asText()) = line
+          if (n.has("domainMetadata"))
+            domainLatest(n.get("domainMetadata").get("domain").asText()) = line
         } finally rd.close()
     }
     val name = f"$fromVersion%020d.$toVersion%020d.compacted.json"
     val outPath = new org.apache.hadoop.fs.Path(log, name)
-    val actions = protoLine.toSeq ++ metaLine.toSeq ++ txnLatest.values ++ fileFinal.values
+    val actions = protoLine.toSeq ++ metaLine.toSeq ++ txnLatest.values ++
+      domainLatest.values ++ fileFinal.values
     val out = try fs.create(outPath, false)
     catch { case e: java.io.IOException =>
       throw new IllegalStateException(
@@ -1648,8 +1653,9 @@ object LakeWriter {
     * live only in `metaData.schemaString`, the parquet files and
     * partition directories carry stable physical `col-<uuid>` names,
     * and renames become metadata-only operations — the reason the mode
-    * exists. Physical names are deterministic per (table, column) so
-    * re-creates are reproducible. Protocol is the legacy column-mapping
+    * exists. Physical names are drawn from a random UUID per column, as
+    * delta-spark does, so a later column can never inherit the physical
+    * name of one dropped or renamed before it. Protocol is the legacy column-mapping
     * floor (2, 5), exactly what delta-spark stamps on upgraded tables.
     */
   def writeDeltaMapped(df: DataFrame, dir: String, checkpointInterval: Int = 0,
@@ -1665,7 +1671,7 @@ object LakeWriter {
       f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
         .putLong("delta.columnMapping.id", i + 1L)
         .putString("delta.columnMapping.physicalName",
-          s"col-${java.util.UUID.nameUUIDFromBytes(s"$dir#${f.name}".getBytes("UTF-8"))}")
+          s"col-${java.util.UUID.randomUUID()}")
         .build())
     }
     val logical = StructType(fields)
@@ -1749,12 +1755,12 @@ object LakeWriter {
   /** Schema EVOLUTION: merge `incoming` fields not yet in the table
     * into the schema — appended after the existing fields, forced
     * nullable (old rows have no value). On a column-mapped table each
-    * new field gets a fresh deterministic physical name + field id and
+    * new field gets a fresh random physical name + field id and
     * `maxColumnId` advances — the assignment [[alterAddColumns]]
     * makes. Returns (merged schema, new configuration); identical
     * schema back when nothing is new.
     */
-  private[graft] def evolveSchema(dir: String, snap: DeltaReader.Snapshot,
+  private[graft] def evolveSchema(snap: DeltaReader.Snapshot,
       table: org.apache.spark.sql.types.StructType, cm: String,
       incoming: Seq[org.apache.spark.sql.types.StructField])
       : (org.apache.spark.sql.types.StructType, Map[String, String]) = {
@@ -1764,25 +1770,21 @@ object LakeWriter {
     var next = maxId
     // a NEW column (top-level or nested) is forced nullable and, on a
     // mapped table, gets a fresh physical name + field id at EVERY
-    // level of its own subtree; the physical name derives from the
-    // dotted logical path (dir#name for top-level — the pre-r16 form,
-    // so existing tables' derivations are stable)
-    def newField(f0: StructField, path: String): StructField = {
+    // level of its own subtree
+    def newField(f0: StructField): StructField = {
       val f = f0.copy(nullable = true)
       // walk EVERY nesting shape (mirror of upgradeToNameMapping's
       // walkT): map key/value and arbitrary array depth included — a
       // new map-of-struct column on a mapped table must carry
       // per-level ids/physicalNames or a foreign reader's CM schema
       // validation refuses the whole table
-      def walk(dt: DataType, p: String): DataType = dt match {
-        case st: StructType =>
-          StructType(st.fields.map(c => newField(c, s"$p.${c.name}")))
-        case ArrayType(e, n) => ArrayType(walk(e, s"$p.element"), n)
-        case MapType(k, v, n) =>
-          MapType(walk(k, s"$p.key"), walk(v, s"$p.value"), n)
+      def walk(dt: DataType): DataType = dt match {
+        case st: StructType => StructType(st.fields.map(newField))
+        case ArrayType(e, n) => ArrayType(walk(e), n)
+        case MapType(k, v, n) => MapType(walk(k), walk(v), n)
         case other => other
       }
-      val dt = walk(f.dataType, path)
+      val dt = walk(f.dataType)
       if (cm == "none") f.copy(dataType = dt)
       else {
         next += 1
@@ -1790,7 +1792,7 @@ object LakeWriter {
           .withMetadata(f.metadata)
           .putLong("delta.columnMapping.id", next)
           .putString("delta.columnMapping.physicalName",
-            s"col-${java.util.UUID.nameUUIDFromBytes(s"$dir#$path".getBytes("UTF-8"))}")
+            s"col-${java.util.UUID.randomUUID()}")
           .build())
       }
     }
@@ -1798,26 +1800,25 @@ object LakeWriter {
     // fields inside an existing struct (directly or through an array
     // element) append after that struct's existing fields; existing
     // fields keep their declared types and metadata untouched
-    def merge(tbl: StructType, inc: StructType, path: String): StructType = {
+    def merge(tbl: StructType, inc: StructType): StructType = {
       val incByName = inc.fields.map(f => f.name -> f).toMap
       val kept = tbl.fields.map { tf =>
         incByName.get(tf.name) match {
           case Some(af) => (tf.dataType, af.dataType) match {
             case (ts: StructType, as: StructType) =>
-              tf.copy(dataType = merge(ts, as, s"$path${tf.name}."))
+              tf.copy(dataType = merge(ts, as))
             case (ArrayType(ts: StructType, n), ArrayType(as: StructType, _)) =>
-              tf.copy(dataType =
-                ArrayType(merge(ts, as, s"$path${tf.name}.element."), n))
+              tf.copy(dataType = ArrayType(merge(ts, as), n))
             case _ => tf
           }
           case None => tf
         }
       }
       val newOnes = inc.fields.filterNot(f => tbl.fieldNames.contains(f.name))
-        .map(f => newField(f, s"$path${f.name}"))
+        .map(newField)
       StructType(kept ++ newOnes)
     }
-    val merged = merge(table, StructType(incoming.toArray), "")
+    val merged = merge(table, StructType(incoming.toArray))
     val newConf =
       if (cm == "none" || next == maxId) snap.configuration
       else snap.configuration + ("delta.columnMapping.maxColumnId" -> next.toString)
@@ -1998,7 +1999,7 @@ object LakeWriter {
     // parent's existing fields, forced nullable; CM gets fresh
     // physical names/ids at every level ([[evolveSchema]])
     val dfByName = df.schema.fields.map(f => f.name -> f).toMap
-    val (merged, newConf) = evolveSchema(dir, snap, table, cm, df.schema.fields.toSeq)
+    val (merged, newConf) = evolveSchema(snap, table, cm, df.schema.fields.toSeq)
     // common columns: the batch must fit the MERGED shape — extra
     // nested fields are the evolution itself; a type CHANGE on an
     // existing (possibly nested) field still refuses
@@ -4672,7 +4673,7 @@ object LakeWriter {
     // gates this behind the explicit WITH SCHEMA EVOLUTION clause.
     val (table, evolvedConf) =
       if (!schemaEvolution) (table0, snap.configuration)
-      else evolveSchema(dir, snap, table0, cm, source.schema.fields.toSeq)
+      else evolveSchema(snap, table0, cm, source.schema.fields.toSeq)
     val schemaGrew = table.length > table0.length
     val badKeys = keyCols.toSet -- table.fieldNames.toSet
     require(badKeys.isEmpty,
@@ -6178,11 +6179,13 @@ object LakeWriter {
         Row(null, null, null, null, Row(domain, conf, false))
       }
     // the ADD rows stay a DISTRIBUTED plan end to end: the replayed
-    // live set (checkpoint scan ∪ commit suffix, anti-joined) projects
-    // into the checkpoint's add struct and writes through executors —
-    // authoring a checkpoint of a multi-million-file table never
-    // materializes the file list on the driver (the previous
-    // snap.active form did, the write-side twin of r8's replay fix)
+    // live set (checkpoint scan ∪ commit suffix, anti-joined — an
+    // advanced snapshot keeps the newest checkpoint's scan beside its
+    // driver list for exactly this) projects into the checkpoint's add
+    // struct and writes through executors — authoring a checkpoint of
+    // a multi-million-file table never materializes the file list on
+    // the driver (the previous snap.active form did, the write-side
+    // twin of r8's replay fix)
     import org.apache.spark.sql.functions.{coalesce => cls, col => c, lit => l, struct => st, when}
     val addT = schema("add").dataType
     val addsDf = snap.activeDf(spark).select(

@@ -7,7 +7,8 @@ import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLi
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Sink, Source}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Registered Structured Streaming source for graft Delta tables:
   *
@@ -65,7 +66,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Schema is pinned at stream start: a mid-stream schema evolution
   * fails the batch loudly (restart the stream to adopt it) rather
-  * than silently projecting new columns away.
+  * than silently projecting new columns away. A restarted stream
+  * adopts an additive evolution (ADD COLUMNS): batches over versions
+  * before it null-fill the added columns; a rename, drop or retype —
+  * judged by column-mapping identity, so a re-added name is a new
+  * column — still refuses.
   *
   * Scale: per-trigger driver work is one log listing + O(new
   * versions) KB-scale JSON parses; the data path is the same
@@ -523,11 +528,12 @@ object GraftDeltaSource {
   }
 
   private[graft] def sourceSchema(spark: SparkSession, dir: String,
-                                  cdf: Boolean): StructType = {
-    val snap = DeltaReader.snapshot(spark, dir, None)
+                                  cdf: Boolean): StructType =
+    schemaOf(DeltaReader.snapshot(spark, dir, None), cdf)
+
+  private def schemaOf(snap: DeltaReader.Snapshot, cdf: Boolean): StructType =
     if (cdf) DeltaReader.cdfSchema(snap)
     else org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-  }
 
   /** A custom read limit the engine passes back verbatim — versions
     * (and optionally their staged BYTES) are this source's admission
@@ -551,7 +557,13 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
 
   import GraftDeltaSource._
 
-  override val schema: StructType = sourceSchema(spark, opts.path, opts.cdf)
+  // the schema is pinned at construction, from the version current then
+  private val (pinnedAt: Long, pinnedSchema: StructType) = {
+    val snap = DeltaReader.snapshot(spark, opts.path, None)
+    (snap.version, schemaOf(snap, opts.cdf))
+  }
+
+  override val schema: StructType = pinnedSchema
 
   // startingTimestamp resolves to a starting VERSION exactly once, at
   // stream construction (delta-spark's rule): the first version
@@ -665,15 +677,12 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
         var accF = 0L
         var full = false
         while (!full && end < vEnd) {
-          // a CDF version budgets what will actually be scanned — its
-          // change payload, the unit list the slicer walks (a
-          // CommitParseCache hit, not a re-parse); the append tail
-          // budgets every add of the commit
-          val payload =
-            if (opts.cdf) versionPayload(end + 1)
-            else DeltaReader.commitActions(spark, opts.path, end + 1).collect {
-              case (Right(af), _) => af
-            }
+          // a version budgets what will actually be scanned — its
+          // sliceable payload, the unit list the slicer walks (a
+          // CommitParseCache hit, not a re-parse): the change payload
+          // in CDF mode, the dataChange adds DeltaTail delivers on the
+          // append tail (a layout commit's adds budget as zero)
+          val payload = versionPayload(end + 1)
           val nb = payload.map(_.size).sum
           if (end > s && (capB.exists(accB + nb > _) ||
               capF.exists(f => accF + payload.size > f.toLong))) full = true
@@ -765,13 +774,41 @@ class GraftDeltaSource(spark: SparkSession, opts: GraftDeltaSource.Options)
         case None => DeltaReader.read(spark, opts.path, Some(endV))
       }
     }
+    GraftColumnBridge.asStreaming(adopt(df, endV))
+  }
+
+  /** A batch ending at `endV` in the pinned schema. A batch at or below
+    * the pinned version — what a restarted stream sees when Spark
+    * replays its last committed batch, or tails history from a
+    * `startingVersion` — projects onto the pinned schema when each of
+    * its columns is still there under the same name, type and IDENTITY
+    * ([[DeltaReader.carriedColumns]]: the column-mapping id), the
+    * columns added since null. A rename, drop or retype since, a name
+    * re-added after a rename or drop (another column), or any change
+    * after the pin refuses loudly rather than silently misreading.
+    */
+  private def adopt(df: DataFrame, endV: Long): DataFrame = {
     val got = df.schema.map(f => (f.name, f.dataType))
     val want = schema.map(f => (f.name, f.dataType))
-    require(got == want,
+    val pinnedIds = schema.fields.flatMap(f => DeltaReader.columnId(f).map(f.name -> _)).toMap
+    val sameIds = pinnedIds.isEmpty ||
+      DeltaReader.tableFields(spark, opts.path, endV).forall(f =>
+        DeltaReader.columnId(f).forall(i => pinnedIds.get(f.name).forall(_ == i)))
+    if (got == want && sameIds) return df
+    // each table column must reach the pin as itself; the change-feed
+    // columns keep their names
+    val carried =
+      if (endV <= pinnedAt) DeltaReader.carriedColumns(spark, opts.path, endV, pinnedAt)
+      else Map.empty[String, StructField]
+    val feed = if (opts.cdf) DeltaReader.CdfColumns.map(_.name).toSet else Set.empty[String]
+    require(endV <= pinnedAt && df.schema.fields.forall(f => feed(f.name) ||
+        carried.get(f.name).exists(p => p.name == f.name && p.dataType == f.dataType)),
       s"graft-delta: table schema changed mid-stream for ${opts.path} " +
         s"(stream pinned ${want.mkString(",")}, version $endV scans ${got.mkString(",")}) " +
         "— restart the stream to adopt the evolved schema")
-    GraftColumnBridge.asStreaming(df)
+    df.select(schema.map { f =>
+      if (df.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)
+    }: _*)
   }
 
   /** Whole versions (after, to]: the append tail's adds

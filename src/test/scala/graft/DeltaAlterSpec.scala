@@ -625,4 +625,23 @@ class DeltaAlterSpec extends SparkSpec {
     LakeWriter.appendDelta(Seq((1L, "b")).toDF("id", "v").coalesce(1), dir)
     assert(DeltaReader.read(spark, dir).count() == 2)
   }
+
+  test("a column re-added under a renamed column's old name gets its own physical column; removing the mapping keeps both") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp("graft_alter_readd_")
+    LakeWriter.writeDeltaMapped(Seq((0L, "a")).toDF("id", "v").coalesce(1), dir)
+    LakeWriter.renameColumn(spark, dir, "v", "x")
+    LakeWriter.alterAddColumns(spark, dir, Seq("v" -> "string"))
+    val phys = org.apache.spark.sql.types.DataType
+      .fromJson(DeltaReader.snapshot(spark, dir, None).schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fields.map(_.metadata.getString("delta.columnMapping.physicalName"))
+    assert(phys.distinct.length == phys.length, phys.mkString(","))
+    LakeWriter.appendDelta(Seq((1L, "b", "c")).toDF("id", "x", "v").coalesce(1), dir)
+    LakeWriter.removeColumnMapping(spark, dir)
+    val got = DeltaReader.read(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2)))).toSet
+    assert(got == Set((0L, "a", None), (1L, "b", Some("c"))), got.toString)
+  }
 }

@@ -895,6 +895,83 @@ class GraftDeltaSourceSpec extends SparkSpec {
     // arrives with w null-filled, v4's whole
     val (inc, _) = drain(d, freshDir("cmaddcp2"), Map("startingVersion" -> "1"))
     assert(inc.toSet == Set(Seq(10L, "a", null), Seq(11L, "b", 9.5)), inc.toString)
+    // the stream restarted on its FIRST checkpoint adopts the evolved
+    // schema too: Spark replays the committed v0 batch (two columns),
+    // then the tail delivers v1..v4 in the three-column shape
+    val (resumed, _) = drain(d, cp)
+    assert(resumed.toSet == Set(Seq(10L, "a", null), Seq(11L, "b", 9.5)), resumed.toString)
+  }
+
+  test("an append stream capped by maxFilesPerTrigger cuts the same batches across a compaction commit") {
+    /** The ids of each non-empty batch, in order. */
+    def batches(dir: String): Seq[Set[Long]] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Set[Long]]
+      val q = spark.readStream.format("graft-delta")
+        .option("startingVersion", "1").option("maxFilesPerTrigger", "2").load(dir)
+        .writeStream.option("checkpointLocation", freshDir("capcp"))
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val ids = df.collect().map(_.getLong(0)).toSet
+          if (ids.nonEmpty) out.synchronized { out += ids }
+          ()
+        }.start()
+      q.awaitTermination()
+      out.toSeq
+    }
+    def append(dir: String, id: Long): Unit =
+      LakeWriter.appendDelta(Seq((id, "x")).toDF("id", "k").coalesce(1), dir)
+    val plain = freshDir("capplain"); val compacted = freshDir("capcompact")
+    Seq(plain, compacted).foreach { d =>
+      LakeWriter.writeDelta(Seq((0L, "x")).toDF("id", "k").coalesce(1), d)
+      append(d, 1L); append(d, 2L)
+      // a layout commit: dataChange=false removes and one new add
+      if (d == compacted) LakeWriter.compactDelta(spark, d)
+      append(d, 3L); append(d, 4L)
+    }
+    val want = batches(plain)
+    assert(want == Seq(Set(1L, 2L), Set(3L, 4L)), want.toString)
+    assert(batches(compacted) == want)
+  }
+
+  test("a capped stream from before a rename and a re-added name refuses rather than hand the old values to the new column") {
+    import graft.streaming.{GraftDeltaSource, GraftDeltaSourceOffset}
+    val d = freshDir("cmreadd")
+    LakeWriter.writeDeltaMapped(Seq((0L, "z")).toDF("id", "v"), d)            // v0
+    LakeWriter.appendDelta(Seq((10L, "a")).toDF("id", "v"), d)                // v1
+    LakeWriter.appendDelta(Seq((11L, "b")).toDF("id", "v"), d)                // v2
+    LakeWriter.renameColumn(spark, d, "v", "x")                                // v3
+    LakeWriter.alterAddColumns(spark, d, Seq("v" -> "string"))                 // v4
+    LakeWriter.appendDelta(Seq((12L, "c", "d")).toDF("id", "x", "v"), d)      // v5
+    // pinned at v5 (id, x, v); one file per batch makes the first batch
+    // (0, 1], scanned under v1's metadata as (id, v) — and its v is the
+    // pinned x (a rename), not the pinned v
+    val err0 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      drain(d, freshDir("cmreaddcp"), Map("startingVersion" -> "1", "maxFilesPerTrigger" -> "1"))
+    }
+    assert(err0.getMessage.contains("schema changed mid-stream"), err0.getMessage)
+    val capped = new GraftDeltaSource(spark, GraftDeltaSource.Options(Map("path" -> d,
+      "startingVersion" -> "1", "maxFilesPerTrigger" -> "1")))
+    intercept[IllegalArgumentException] {
+      capped.getBatch(Some(GraftDeltaSourceOffset(0L)), GraftDeltaSourceOffset(1L))
+    }
+    // uncapped, the one batch (0, 5] reads under v5's metadata and
+    // carries v1's and v2's v to x by identity
+    val (inc, _) = drain(d, freshDir("cmreaddcp2"), Map("startingVersion" -> "1"))
+    assert(inc.toSet == Set(Seq(10L, "a", null), Seq(11L, "b", null), Seq(12L, "c", "d")),
+      inc.toString)
+    // a name dropped after the pin and re-added with the same type is
+    // another column: the pinned source refuses rather than hand the
+    // new column's values over as the old one's
+    val e = freshDir("cmredrop")
+    LakeWriter.writeDeltaMapped(Seq((0L, "z")).toDF("id", "v"), e)            // v0
+    val pinned = new GraftDeltaSource(spark, GraftDeltaSource.Options(Map("path" -> e)))
+    LakeWriter.dropColumn(spark, e, "v")                                       // v1
+    LakeWriter.alterAddColumns(spark, e, Seq("v" -> "string"))                 // v2
+    LakeWriter.appendDelta(Seq((1L, "n")).toDF("id", "v"), e)                 // v3
+    val err = intercept[IllegalArgumentException] {
+      pinned.getBatch(Some(GraftDeltaSourceOffset(0L)), GraftDeltaSourceOffset(3L))
+    }
+    assert(err.getMessage.contains("schema changed mid-stream"), err.getMessage)
   }
 
   test("a fresh append stream over a rename before a column-mapping removal delivers the real values") {
