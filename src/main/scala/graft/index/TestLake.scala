@@ -23,21 +23,28 @@ object TestLake {
   def tables(s: SparkSession, dir: String): Seq[LakeTable] =
     spec.map { case (id, name, key, _) =>
       val raw = s.read.parquet(s"$dir/$name.parquet")
-      // The driver testdata writes ONE row group per file, so Spark scans
-      // each table as a single task and the melt+hash of the largest
-      // table becomes the critical path. Spread big tables before the
-      // (CPU-bound) index transform; a real lake has many files/row
-      // groups and needs no such shuffle, so gate it on the actual scan
-      // parallelism rather than doing it unconditionally.
-      // probe scan parallelism from the FILE COUNT (one row group per
-      // file in this fixture, so files = splits): the previous
-      // `.rdd.getNumPartitions` probe forced a full physical plan + RDD
-      // conversion per table, ~0.2 s of driver time each on a cold
-      // session — ~1 s of every cold index build spent deciding whether
-      // to repartition
-      val df = if (raw.inputFiles.length < 4 && id >= 3) raw.repartition(8) else raw
+      val df = if (id >= 3 && scanSplits(s, raw) < 4) raw.repartition(8) else raw
       LakeTable(id, name, df, col(key))
     }
+
+  /** Parallel scan splits of a parquet table: its row-group count, read
+    * from the file footers on the driver. The driver testdata writes ONE
+    * row group per file, so Spark scans each table as a single task and
+    * the melt+hash of the largest table becomes the critical path;
+    * [[tables]] spreads big tables before the (CPU-bound) index
+    * transform when they have fewer than 4 splits. A table with many
+    * row groups needs no such shuffle, whatever its file count. Footers
+    * instead of `.rdd.getNumPartitions`: that probe forced a full
+    * physical plan + RDD conversion per table, ~0.2 s of driver time
+    * each on a cold session.
+    */
+  private[graft] def scanSplits(s: SparkSession, raw: DataFrame): Int = {
+    val conf = s.sparkContext.hadoopConfiguration
+    graft.sources.ParquetFooter.rowGroups(conf, raw.inputFiles.toSeq.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(conf).getFileStatus(p)
+    })
+  }
 
   /** Both hash families of the demo-lake cell index in ONE cached melt
     * pass (tokenize/clean/explode shared; XASH and Bloom each add two

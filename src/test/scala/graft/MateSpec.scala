@@ -6,6 +6,7 @@ import graft.mate.Mate
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
@@ -267,13 +268,84 @@ class MateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     jobs
   }
 
-  test("a two-column searchAndMaps stays within its job budget") {
-    val jobs = searchAndMapsJobs(2)
-    assert(jobs <= 11, s"$jobs jobs")
+  for ((nq, name) <- Seq(1 -> "one", 2 -> "two", 3 -> "three"))
+    test(s"a $name-column searchAndMaps stays within its job budget") {
+      // the per-row frame's checkpoint and the top-k collect; `top` is a
+      // local relation, so the caller's collect runs none
+      val jobs = searchAndMapsJobs(nq)
+      assert(jobs <= 8, s"$jobs jobs")
+    }
+
+  /** Four tables over request rows berlin/gold/x10, paris/gold/x20 and
+    * rome/silver/x30: table 1 joins two rows on every width; table 2
+    * joins one row through two column combinations (cities in colids 1
+    * and 2), and tables 2-4 tie at joinability 1 across tables.
+    */
+  private def tieTables: Seq[LakeTable] = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      LakeTable(1, "a", Seq((0L, "berlin", "gold", "x10"), (1L, "paris", "gold", "x20"))
+        .toDF("k", "c1", "c2", "c3"), col("k")),
+      LakeTable(2, "b", Seq((0L, "berlin", "q", "gold", "x10"), (1L, "r", "paris", "gold", "x20"))
+        .toDF("k", "c1", "c2", "c3", "c4"), col("k")),
+      LakeTable(3, "c", Seq((0L, "rome", "silver", "x30")).toDF("k", "c1", "c2", "c3"), col("k")),
+      LakeTable(4, "d", Seq((0L, "rome", "silver", "x30")).toDF("k", "c1", "c2", "c3"), col("k")))
   }
 
-  test("a three-column searchAndMaps stays within its job budget") {
-    val jobs = searchAndMapsJobs(3)
-    assert(jobs <= 11, s"$jobs jobs")
+  test("searchAndMaps' top and maps equal topK and mapsOf of the match set") {
+    val s = spark
+    import s.implicits._
+    val inp = Seq((100L, "berlin", "gold", "x10"), (101L, "paris", "gold", "x20"),
+      (102L, "rome", "silver", "x30")).toDF("rid" +: fixtureCols: _*)
+    val cells = LakeIndexer.cells(tieTables)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    for (nq <- 1 to 3) {
+      val qcols = fixtureCols.take(nq)
+      val matched = Mate.matches(inp, col("rid"), qcols, cells)
+      val (top, maps) = Mate.searchAndMaps(inp, col("rid"), qcols, cells, 3)
+      var got: Seq[Seq[Any]] = null
+      assert(jobsOf { got = rows(top) } == 0, s"$nq columns: collecting top ran a job")
+      val expected = Mate.topK(matched, 3)
+      assert(got == rows(expected), s"$nq columns")
+      assert(rows(maps).sortBy(_.mkString(",")) ==
+        rows(Mate.mapsOf(matched, expected)).sortBy(_.mkString(",")), s"$nq columns")
+    }
+    // table 2's two combinations tie and the lower `columns` wins; tables
+    // 2-4 tie across tables and the lower table ids fill k
+    val (top2, maps2) = Mate.searchAndMaps(inp, col("rid"), fixtureCols.take(2), cells, 3)
+    assert(rows(top2) == Seq(Seq(1, "1_2", 2L), Seq(2, "1_3", 1L), Seq(3, "1_2", 1L)))
+    assert(rows(maps2.where(col("tableid") === 2)) == Seq(Seq(2, "1_3", 0L, 100L)))
+  }
+
+  test("MATE requests of every width share their compiled code after the first") {
+    val s = spark
+    import s.implicits._
+    // a table schema no other suite indexes, so the cell melt and the
+    // code fused with it are compiled here first
+    val t = Seq((0L, "berlin", "gold", java.sql.Date.valueOf("2001-01-01"), BigDecimal("1.5"), true),
+      (1L, "paris", "gold", java.sql.Date.valueOf("2001-01-02"), BigDecimal("2.5"), false))
+      .toDF("k", "city", "seg", "day", "amt", "flag")
+    val cells = LakeIndexer.cells(Seq(LakeTable(1, "width", t, col("k"))))
+    val inp = Seq((100L, "berlin", "gold", "2001-01-01"), (101L, "paris", "gold", "2001-01-02"))
+      .toDF("rid", "city", "seg", "day")
+    val qcols = Seq("city", "seg", "day")
+    def compiled(nq: Int): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (top, maps) = Mate.searchAndMaps(inp, col("rid"), qcols.take(nq), cells, 5)
+      assert(top.collect().map(_.getLong(2)).toSeq == Seq(2L), s"$nq columns")
+      assert(maps.count() == 2, s"$nq columns")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    assert(compiled(1) > 0, "the fixture's code was compiled before")
+    // a new width compiles at most a few classes: while the width was
+    // plan structure, each width's first request compiled its own
+    // verification (7 and 4 classes here after the suite's earlier
+    // requests; 41 and 15-16 in the discover benchmark, whose warm-up
+    // runs only a 1-column request)
+    for (nq <- 2 to 3) {
+      val n = compiled(nq)
+      assert(n <= 3, s"$nq columns: $n classes compiled")
+    }
   }
 }
