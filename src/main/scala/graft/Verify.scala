@@ -1,9 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failed.json naming every query that threw. Exits non-zero when one
+  * did, after everything else is written. */
 object Verify {
+  /** A query that threw: its name, the exception's class and message. */
+  final case class Failure(query: String, exception: String, message: String)
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -17,12 +22,28 @@ object Verify {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failures = run(spark, sfDir, outDir,
+      SparkEntry.queries.toSeq.filter(q => only.forall(_.contains(q._1))), SparkEntry.oracleSql)
+    spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
+  }
+
+  /** Writes each of `queries`' results to `outDir/<name>`, then
+    * `oracle_sql.json` (`oracles`) and `failed.json` (one object per
+    * query that threw, `[]` when none). A failing query never stops the
+    * others. Returns the failures.
+    */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          queries: Seq[(String, (SparkSession, String) => DataFrame)],
+          oracles: Map[String, String]): Seq[Failure] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(q => only.forall(_.contains(q._1))).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failures = queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(Failure(name, e.getClass.getName, String.valueOf(e.getMessage)))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -37,9 +58,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/failed.json"), failures.map(f =>
+      s"""{"query": ${q(f.query)}, "exception": ${q(f.exception)}, "message": ${q(f.message)}}""")
+      .mkString("[", ",\n", "]"))
+    failures
   }
 }

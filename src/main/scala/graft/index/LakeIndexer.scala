@@ -1,10 +1,9 @@
 package graft.index
 
 import graft.functions.{TextFunctions, Xash}
-import graft.sources.ParquetFooter
+import graft.sources.{DeltaReader, LakeWriter}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** One table of the data lake.
   *
@@ -212,108 +211,68 @@ object LakeIndexer {
   }
 
   /** Streaming index maintenance: the same melt+hash transform applied
-    * to a STREAMING frame of new rows — append new cells to the
-    * persisted index continuously instead of the reference's full
-    * rebuild (stateless transform: no watermark needed).
+    * to a STREAMING frame of new rows (stateless: no watermark needed).
+    * Sink it into the persisted index with
+    * `graft.streaming.DeltaStream.writeDelta(cellsStream(...), path,
+    * checkpoint, appId)`: each micro-batch lands as one append commit
+    * carrying a `txn` identifier, so a replayed batch lands once, and
+    * [[readIndex]] sees every committed batch.
     */
   def cellsStream(newRows: DataFrame, tableId: Int, rowId: Column,
                   dataCols: Seq[String]): DataFrame =
     cellsOf(LakeTable(tableId, s"t$tableId", newRows, rowId, dataCols),
       Seq("sk" -> graft.functions.XashKernel.superKeyCol))
 
-  /** Persist the cell index hash-partitioned by token and sorted within
-    * partitions — MATE's token-match join then reads co-located,
-    * min/max-prunable files (the parquet footer stats cover sorted
-    * token ranges). At lake scale this layout IS the inverted index.
+  /** The index layout: hash-partitioned by token and sorted within
+    * partitions, so MATE's token-match join reads co-located files whose
+    * min/max stats cover sorted token ranges. At lake scale this layout
+    * IS the inverted index.
+    */
+  private def laidOut(cells: DataFrame, numPartitions: Int): DataFrame =
+    cells.repartition(numPartitions, col("tokenized")).sortWithinPartitions("tokenized")
+
+  /** Persist the cell index as a Delta table in [[laidOut]]'s layout,
+    * committed by graft's own engine: version 0 in a fresh directory,
+    * else a new version replacing every row (readers of older versions
+    * keep them). The table allows deletion vectors, which
+    * [[removeTable]] writes.
     */
   def writeIndex(cells: DataFrame, path: String, numPartitions: Int = 32): Unit =
-    cells.repartition(numPartitions, col("tokenized"))
-      .sortWithinPartitions("tokenized")
-      .write.mode("overwrite").parquet(path)
+    LakeWriter.writeOrOverwriteDelta(laidOut(cells, numPartitions), path,
+      configuration = Map("delta.enableDeletionVectors" -> "true"))
 
-  /** The persisted index at `path`, tombstoned tables filtered out.
-    * Submits no Spark job when no table was removed: the schema comes
-    * from one part file's footer (see [[footerSchema]]) instead of
-    * Spark's inference job. With tombstones, one job collects the
-    * removed table ids.
+  /** The persisted index at `path`: the memoized scan of its current
+    * snapshot ([[DeltaReader.read]]), removed tables' rows filtered by
+    * their deletion vectors. A repeat read of an unchanged index reads
+    * no footer and submits no Spark job.
     */
-  def readIndex(spark: SparkSession, path: String): DataFrame = {
-    val t = new org.apache.hadoop.fs.Path(path, TombstoneDir)
-    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val df = footerSchema(spark, fs, new org.apache.hadoop.fs.Path(path))
-      .fold(spark.read)(sc => spark.read.schema(sc)).parquet(path)
-    if (fs.exists(t)) {
-      // one row per removed table — a driver-side collect is bounded by
-      // the number of REMOVALS, never by index size, and the resulting
-      // NOT-IN literal pushes into the parquet scan (row-group pruning)
-      // where an anti-join could not
-      val dead = spark.read.schema("tableid INT").parquet(t.toString)
-        .select("tableid").distinct().collect().map(_.getInt(0)).toSeq
-      if (dead.nonEmpty) df.where(!col("tableid").isin(dead: _*)) else df
-    } else df
-  }
+  def readIndex(spark: SparkSession, path: String): DataFrame =
+    DeltaReader.read(spark, path)
 
-  private val TombstoneDir = "_tombstones"
-
-  /** The Spark schema of `dir`'s visible part files, from the first
-    * one's footer ([[ParquetFooter.sparkSchema]]). None when `dir` holds
-    * no visible data file; the caller then lets Spark infer (and fail).
-    */
-  private def footerSchema(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                           dir: org.apache.hadoop.fs.Path): Option[StructType] =
-    ParquetFooter.sparkSchema(spark.sparkContext.hadoopConfiguration,
-      scala.util.Try(fs.listStatus(dir)).toOption.toSeq.flatten
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") && st.getPath.getName.endsWith(".parquet")))
-
-  /** Append new tables' cells to a persisted index WITHOUT rewriting it
-    * (the reference's update_index adds tables to the live Postgres
-    * index, maco/data_handler.py:205-258; a full rewrite of a 100-TB
-    * index per daily batch is not viable). The new cells are
-    * repartitioned and sorted exactly like [[writeIndex]]'s layout, so
-    * appended files carry the same token-range prunability. Re-adding a
-    * previously [[removeTable]]d tableId requires a [[compactIndex]]
-    * first (the tombstone would hide the new rows).
+  /** Append new tables' cells to a persisted index as one commit,
+    * WITHOUT rewriting it (the reference's update_index adds tables to
+    * the live Postgres index, maco/data_handler.py:205-258). The new
+    * files carry [[writeIndex]]'s layout and token-range prunability. A
+    * reader sees all of the append or none of it, and a
+    * [[removeTable]]d id may be added again at once.
     */
   def addTables(newCells: DataFrame, path: String, numPartitions: Int = 32): Unit =
-    newCells.repartition(numPartitions, col("tokenized"))
-      .sortWithinPartitions("tokenized")
-      .write.mode("append").parquet(path)
+    LakeWriter.appendDelta(laidOut(newCells, numPartitions), path)
 
-  /** Logical delete of one table from the persisted index: one tombstone
-    * row in an underscore-prefixed sidecar (invisible to the main
-    * parquet scan — Hadoop hides `_`-prefixed paths). No data files are
-    * rewritten; [[readIndex]] pushes the NOT-IN filter into the scan.
-    * The deletion-vector discipline: reclaim space with [[compactIndex]]
-    * when tombstones accumulate.
+  /** Delete one table from the persisted index: a deletion vector on
+    * each file holding its cells, no data file rewritten. Reclaim the
+    * space with [[compactIndex]].
     */
-  def removeTable(spark: SparkSession, path: String, tableId: Int): Unit = {
-    import spark.implicits._
-    Seq(tableId).toDF("tableid").repartition(1)
-      .write.mode("append").parquet(new org.apache.hadoop.fs.Path(path, TombstoneDir).toString)
-  }
+  def removeTable(spark: SparkSession, path: String, tableId: Int): Unit =
+    LakeWriter.deleteWhereDv(spark, path, s"tableid = $tableId")
 
-  /** Rewrite the index applying tombstones and restoring one sorted
-    * layout (the offline maintenance job; everything else is
-    * incremental).
+  /** The offline maintenance job: one `dataChange=false` rewrite of the
+    * whole index into `numPartitions` token-range files, folding every
+    * append and deletion vector. Readers of the pre-compaction version
+    * keep reading it.
     */
-  def compactIndex(spark: SparkSession, path: String, numPartitions: Int = 32): Unit = {
-    val tmp = path + "__compact"
-    writeIndex(readIndex(spark, path), tmp, numPartitions)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // rename-ASIDE with checked renames (the compactAnnIndex
-    // discipline): delete-then-rename would leave NO index at `path`
-    // on a crash between the two, and directory rename can fail
-    // silently on object stores
-    val p = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    fs.delete(old, true)
-    require(fs.rename(p, old), s"compactIndex: could not move $path aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), p),
-      s"compactIndex: could not move $tmp into place — original preserved at $old")
-    fs.delete(old, true)
-  }
+  def compactIndex(spark: SparkSession, path: String, numPartitions: Int = 32): Unit =
+    LakeWriter.compactDeltaCluster(spark, path, Seq("tokenized"), numPartitions, full = true)
 
   /** Rebuild a table's cleaned content from the cell index
     * (maco/data_handler.py:656 get_table): pivot tokens by colid.

@@ -1,6 +1,7 @@
 package graft.sim
 
 import graft.dedup.Dedup
+import graft.sources.{DeltaReader, LakeWriter}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -440,8 +441,8 @@ object Similarity {
     * persisted index). `corpusForRerank` must be given when
     * `rerank > k`. The probed-cell set is known on the driver, so it is
     * pushed as a static `cell IN (...)` predicate — on a persisted
-    * index partitioned by cell this prunes whole directories before
-    * any I/O.
+    * index partitioned by cell this drops the other cells' files
+    * before any I/O.
     */
   def ivfPqSearch(queries: DataFrame, codes: DataFrame, model: PqModel,
                   k: Int, nProbe: Int = 4, rerank: Int = 0,
@@ -478,9 +479,9 @@ object Similarity {
       byDist.take(nProbe).map(c => (qid, c))
     }.toSeq
     val probesDf = probes.toDF("qid", "cell")
-    // static partition pruning: the probed-cell set is known on the
-    // driver, so a persisted cell-partitioned code table only scans
-    // those directories
+    // static pruning: the probed-cell set is known on the driver, so a
+    // persisted code table (one scan branch per cell) only scans the
+    // probed cells' files
     val prunedCodes = codes.where(col("cell").isin(probes.map(_._2).distinct: _*))
     val cand = broadcast(probesDf).join(prunedCodes, "cell")
       .select(col("qid"), col("nid"), col("codes"), col("nn"))
@@ -546,29 +547,18 @@ object Similarity {
     }
   }
 
-  /** Persist an ANN index: the code table directory-partitioned by
-    * cell (so a search's probed-cell predicate prunes whole partitions
-    * before any I/O) + the driver-side model as a 1-row nested-array
-    * parquet sidecar. The same maintenance discipline as
-    * `LakeIndexer.writeIndex`: build once offline, search and append
-    * many times.
+  /** Persist an ANN index: the code table as a Delta table partitioned
+    * by cell, committed by graft's own engine ([[LakeWriter.writeDelta]]
+    * in a fresh directory, else a new version replacing every code
+    * quantized with an older model), plus the driver-side model as a
+    * 1-row nested-array parquet sidecar. Build once offline, then
+    * search, [[addVectors]] and [[removeVectors]] many times.
     */
   def writeAnnIndex(path: String, model: PqModel, codes: DataFrame): Unit = {
     val spark = codes.sparkSession
     import spark.implicits._
-    // rebuilding in place must clear EVERYTHING the old index owned:
-    // a surviving batch=<label> dir would union codes quantized with
-    // the OLD codebooks into searches decoded through the new model's
-    // LUTs, and stale tombstones would hide re-added ids
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/$TombstoneDir"), true)
-    // the code table nests one batch directory level above the cell
-    // partitioning: every maintenance write ([[addVectors]], streaming
-    // appends) owns its own `batch=<label>` directory, so a retried
-    // write REPLACES its own output instead of duplicating rows
-    codes.write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes/batch=base")
+    LakeWriter.writeOrOverwriteDelta(codes, s"$path/codes", partitionBy = Seq("cell"),
+      configuration = Map("delta.enableDeletionVectors" -> "true"))
     Seq((model.nCells, model.m, model.bits, model.dim,
       model.centroids.map(_.toSeq).toSeq, model.codebooks.map(_.map(_.toSeq).toSeq).toSeq))
       .toDF("nCells", "m", "bits", "dim", "centroids", "codebooks")
@@ -576,8 +566,10 @@ object Similarity {
   }
 
   /** Read a persisted ANN index back as (model, code table). The code
-    * table keeps its cell partitioning — `ivfPqSearch`'s probed-cell
-    * IN-filter becomes a PartitionFilters entry on this scan.
+    * table is the memoized scan of the table's current snapshot, one
+    * branch per cell carrying the cell as a literal, so
+    * `ivfPqSearch`'s probed-cell IN-filter drops the other cells'
+    * files from the plan before any I/O.
     */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): (PqModel, DataFrame) = {
     val r = spark.read.parquet(s"$path/model").head()
@@ -587,99 +579,44 @@ object Similarity {
         .map(_.toArray).toArray,
       r.getAs[scala.collection.Seq[scala.collection.Seq[scala.collection.Seq[Double]]]]("codebooks")
         .map(_.map(_.toArray).toArray).toArray)
-    // batch is a discovered partition column one level above cell —
-    // dropped here; the probed-cell predicate still prunes on cell
-    // across every batch directory
-    val raw = spark.read.parquet(s"$path/codes")
-      .select(col("cell").cast("int").as("cell"), col("nid"), col("codes"), col("nn"))
-    // logical deletes: anti-join the tombstone sidecar (tiny,
-    // broadcast). Existence goes through the Hadoop FileSystem of the
-    // index path — java.io.File would silently miss tombstones on any
-    // non-local filesystem and resurface removed vectors
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/$TombstoneDir")
-    val fs = tombPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val codes =
-      if (fs.exists(tombPath))
-        raw.join(spark.read.parquet(tombPath.toString).select(col("nid")), Seq("nid"), "left_anti")
-          .select("cell", "nid", "codes", "nn")
-      else raw
-    (model, codes)
+    (model, DeltaReader.read(spark, s"$path/codes"))
   }
 
-  private val TombstoneDir = "_tombstones"
-
-  /** Logical delete of vectors from a persisted index: tombstone ids in
-    * an underscore-prefixed sidecar (invisible to the main parquet
-    * scan), anti-joined out by [[readAnnIndex]] — no code files
-    * rewritten; reclaim with [[compactAnnIndex]]. Re-adding a removed
-    * id requires compaction first (the tombstone would hide it) — the
-    * same contract as `LakeIndexer.removeTable`.
+  /** Delete vectors from a persisted index: deletion vectors on the
+    * code files holding them, no file rewritten. A removed id may be
+    * added again at once; [[compactAnnIndex]] reclaims the space.
     */
   def removeVectors(spark: org.apache.spark.sql.SparkSession, path: String,
-                    ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    ids.toDF("nid").repartition(1)
-      .write.mode("append").parquet(s"$path/$TombstoneDir")
-  }
+                    ids: Seq[Long]): Unit =
+    if (ids.nonEmpty)
+      LakeWriter.deleteWhereDv(spark, s"$path/codes", ids.mkString("nid IN (", ",", ")"))
 
-  /** Offline rewrite: fold every batch directory into a fresh base,
-    * apply tombstones, drop the sidecar — add/remove stay incremental,
-    * this is the maintenance job that restores the compact layout.
+  /** The offline maintenance job: one `dataChange=false` rewrite that
+    * folds every cell's files, and the deletion vectors on them, into
+    * files of up to 1 GiB per cell.
     */
-  def compactAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val (model, codes) = readAnnIndex(spark, path)
-    val tmp = path + "__compact"
-    writeAnnIndex(tmp, model, codes)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // rename-ASIDE, not delete-then-rename: a crash between a delete
-    // and the rename would leave NO index at `path`; here the old index
-    // survives under __old until the swap has succeeded, and rename
-    // results are checked (directory rename can fail on object stores)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    fs.delete(old, true)
-    require(fs.rename(p, old), s"compactAnnIndex: could not move $path aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), p),
-      s"compactAnnIndex: could not move $tmp into place — original preserved at $old")
-    fs.delete(old, true)
-  }
+  def compactAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    LakeWriter.compactDelta(spark, s"$path/codes", minFiles = 1)
 
   /** Incremental maintenance: encode a new vector batch with the
-    * PERSISTED model and append it as its own cell-partitioned
-    * `batch=<label>` directory — no rewrite of the existing code
-    * table, the `addTables` discipline for the ANN index. Encoding is
-    * deterministic given the model, so the appended index is
-    * row-identical to a full re-encode of the union (spec-pinned).
-    * Re-running with the same label replaces that batch (idempotent);
-    * single-writer by design, like the lake index.
+    * PERSISTED model and append it to the code table as one commit —
+    * the `LakeIndexer.addTables` discipline for the ANN index. Encoding
+    * is deterministic given the model, so the appended index is
+    * row-identical to a full re-encode of the union (spec-pinned). A
+    * failed call commits nothing. `batchLabel` is kept for source
+    * compatibility and not read: exactly-once delivery of a stream of
+    * batches is `graft.streaming.AnnStream`'s, through Delta `txn`
+    * identifiers.
     */
   def addVectors(spark: org.apache.spark.sql.SparkSession, path: String, newVecs: DataFrame,
                  batchLabel: String = "add0",
                  id: String = "vec_id", vec: String = "embedding"): Unit =
     addVectorsWith(readAnnIndex(spark, path)._1, path, newVecs, batchLabel, id, vec)
 
-  /** [[addVectors]] with a preloaded model — the streaming maintenance
-    * path reads the (immutable) model once per query, not per
-    * micro-batch.
-    */
+  /** [[addVectors]] with a preloaded model. */
   def addVectorsWith(model: PqModel, path: String, newVecs: DataFrame, batchLabel: String,
-                     id: String = "vec_id", vec: String = "embedding"): Unit = {
-    // a flat pre-batch-layout code table (codes/cell=N at the top
-    // level) cannot take a nested batch append: mixed partition depths
-    // make the whole directory unreadable. Refuse with a migration
-    // path instead of bricking the index.
-    val codesPath = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = codesPath.getFileSystem(
-      newVecs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(codesPath))
-      require(!fs.listStatus(codesPath).exists(_.getPath.getName.startsWith("cell=")),
-        s"$path/codes uses the flat pre-batch layout — rebuild it with writeAnnIndex " +
-          "(or compactAnnIndex a copy) before appending batches")
-    encodePq(newVecs, model, id, vec)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes/batch=$batchLabel")
-  }
+                     id: String = "vec_id", vec: String = "embedding"): Unit =
+    LakeWriter.appendDelta(encodePq(newVecs, model, id, vec), s"$path/codes")
 
   /** recall@k of an approximate knn result against the exact
     * brute-force result over the same queries — the PUBLISHED quality

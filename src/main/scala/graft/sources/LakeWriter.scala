@@ -31,7 +31,8 @@ final case class MergeInsert(values: Map[String, String]) extends MergeClauseAct
   * partition column into file-listing pruning (no footer reads at
   * all), and in-file sorting makes parquet min/max stats selective for
   * the remaining columns — see also `LakeIndexer.writeIndex`, which
-  * applies the same discipline to the cell index itself.
+  * lays the cell index out the same way and commits it as a Delta
+  * table through [[writeDelta]].
   */
 object LakeWriter {
 
@@ -1700,9 +1701,8 @@ object LakeWriter {
 
   /** Append `df` to an existing Delta table as its next version —
     * readers at older versions (versionAsOf) are unaffected, the new
-    * snapshot sees old + new files: the same add-only incremental
-    * maintenance discipline as `LakeIndexer.addTables`, but carried by
-    * the table format itself.
+    * snapshot sees old + new files. `LakeIndexer.addTables` and
+    * `Similarity.addVectors` maintain the persisted indexes through it.
     */
   def appendDelta(df: DataFrame, dir: String, checkpointInterval: Int = 0,
                   txn: Option[(String, Long)] = None): Unit =
@@ -2272,6 +2272,21 @@ object LakeWriter {
       identity = IdentityColumns.advanceOf(table, phys).map(adv =>
         (adv, Some(metaLineFor(dir, snap, table, snap.configuration)))))
   }
+
+  /** Create or replace the table at `dir`: [[writeDelta]] when it holds
+    * no table (or only the empty log a crashed creator leaves), else
+    * [[overwriteDelta]], a new version replacing every row under the
+    * table's own partitioning and configuration. The directory is never
+    * deleted, so readers of the old version keep it and the snapshot
+    * memos, keyed by the log files' name, length and mtime, never see a
+    * recreated version 0.
+    */
+  private[graft] def writeOrOverwriteDelta(df: DataFrame, dir: String,
+                                           partitionBy: Seq[String] = Nil,
+                                           configuration: Map[String, String] = Map.empty): Unit =
+    if (DeltaReader.hasLogEntries(dir, df.sparkSession.sessionState.newHadoopConf()))
+      overwriteDelta(df, dir)
+    else writeDelta(df, dir, partitionBy = partitionBy, configuration = configuration)
 
   /** (path, expression, enforceable) for every `delta.invariants`
     * field: top-level and struct-nested invariants evaluate row-wise
@@ -3574,8 +3589,8 @@ object LakeWriter {
     * untouched, only their file layout changes, so a streaming reader
     * skips the commit. A micro-batch sink leaves one file per batch per
     * partition, and a 100 TB table pays per-file open cost forever
-    * unless someone folds the history; the same problem
-    * `LakeIndexer.compact` solves for the index layout.
+    * unless someone folds the history (`Similarity.compactAnnIndex`
+    * folds the ANN code table through it).
     *
     * Candidates: the live files, scoped to the partitions matching
     * `where` ([[partitionScope]]); with `dvOnly` (REORG PURGE) only

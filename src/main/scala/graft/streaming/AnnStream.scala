@@ -1,23 +1,20 @@
 package graft.streaming
 
 import graft.sim.Similarity
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming maintenance of a persisted ANN index
   * ([[Similarity.writeAnnIndex]]): each arriving micro-batch of
   * vectors is encoded with the index's PERSISTED model — codebooks
   * never retrain mid-stream, the standard IVF discipline (retraining
-  * would silently re-key every previously indexed vector) — and lands
-  * as its own cell-partitioned `batch=<id>` directory. A replayed
-  * micro-batch overwrites its own directory, so retries are
-  * idempotent and the maintained index is exactly the union of
-  * arrived batches; searches through [[Similarity.readAnnIndex]] /
-  * `ivfPqSearch` see every batch and still prune unprobed cells.
-  *
-  * `foreachBatch`, not a stateful operator, for the same reason as
-  * [[DedupStream]]: the index must outlive the query and stay
-  * shareable with batch jobs.
+  * would silently re-key every previously indexed vector) — and
+  * appended to the Delta code table by [[DeltaStream.writeDelta]].
+  * Each batch commits with a `txn` identifier scoped by the query
+  * checkpoint, so a replayed micro-batch lands once and the maintained
+  * index is exactly the union of arrived batches; searches through
+  * [[Similarity.readAnnIndex]] / `ivfPqSearch` see every committed
+  * batch and still prune unprobed cells.
   */
 object AnnStream {
 
@@ -26,19 +23,7 @@ object AnnStream {
     // the model is immutable by contract — read it ONCE per query, not
     // per micro-batch
     val model = Similarity.readAnnIndex(vecs.sparkSession, indexPath)._1
-    // batch directories are scoped by the checkpoint identity: batchId
-    // restarts at 0 under a NEW checkpoint, and an unscoped batch=0
-    // would silently overwrite the original batch-0 vectors; with the
-    // scope, same-checkpoint replays stay idempotent and a fresh
-    // checkpoint gets fresh directories
-    val scope = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        Similarity.addVectorsWith(model, indexPath, batch, s"$scope-$batchId", id, vec)
-        ()
-      }
-      .start()
+    DeltaStream.writeDelta(Similarity.encodePq(vecs, model, id, vec),
+      s"$indexPath/codes", checkpoint, appId = "graft-ann")
   }
 }

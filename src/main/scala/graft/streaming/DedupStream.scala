@@ -27,8 +27,8 @@ object DedupStream {
 
   def incrementalMinhash(docs: DataFrame, sigDir: String, pairsDir: String,
                          checkpoint: String, tau: Double): StreamingQuery = {
-    // batch directories are scoped by the checkpoint identity (the
-    // AnnStream discipline): batchId restarts at 0 under a NEW
+    // batch directories are scoped by the checkpoint identity (as
+    // DeltaStream scopes its txn ids): batchId restarts at 0 under a NEW
     // checkpoint against the same long-lived index, and an unscoped
     // batch=0 would silently overwrite the original batch-0 signatures
     val scope = java.security.MessageDigest.getInstance("MD5")

@@ -51,7 +51,7 @@ object DeltaStream {
       .start()
   }
 
-  /** appId + checkpoint-identity suffix (the DedupStream/AnnStream
+  /** appId + checkpoint-identity suffix (the DedupStream
     * batch-scoping discipline applied to txn identifiers).
     */
   private[graft] def scopedAppId(appId: String, checkpoint: String): String = {

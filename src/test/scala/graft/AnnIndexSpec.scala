@@ -3,9 +3,10 @@ package graft
 import graft.sim.Similarity
 import org.apache.spark.sql.functions._
 
-/** Persisted ANN index (IVFADC): round-trip fidelity, incremental
-  * append ≡ full re-encode, and partition pruning of the probed cells
-  * on the persisted code table.
+/** Persisted ANN index (IVFADC, a cell-partitioned Delta code table):
+  * round-trip fidelity, incremental append ≡ full re-encode, deletion
+  * and compaction through the engine, and pruning of unprobed cells on
+  * the persisted code table.
   */
 class AnnIndexSpec extends SparkSpec {
 
@@ -97,16 +98,24 @@ class AnnIndexSpec extends SparkSpec {
     // snapshot the logical view BEFORE compaction rewrites the files
     val preCompact = rows(c2.select("cell", "nid", "codes", "nn"))
 
+    // the removal wrote deletion vectors, not a sidecar
+    def live = graft.sources.DeltaReader.snapshot(spark, s"$dir/codes", None).active
+    assert(live.exists(_.dv.nonEmpty))
+
     Similarity.compactAnnIndex(spark, dir)
-    assert(!new java.io.File(s"$dir/_tombstones").exists())
-    // batches folded into one base directory
-    val batchDirs = new java.io.File(s"$dir/codes").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSeq
-    assert(batchDirs == Seq("batch=base"), batchDirs.toString)
+    // the base and the appended batch fold into one file per cell, and
+    // no live file carries a deletion vector
+    assert(live.forall(_.dv.isEmpty), live.toString)
+    assert(live.groupBy(_.partitionValues).values.forall(_.size == 1), live.toString)
     // compacted index ≡ pre-compaction view
     val (m3, c3) = Similarity.readAnnIndex(spark, dir)
     assert(rows(c3.select("cell", "nid", "codes", "nn")) == preCompact)
     assert(m3.centroids.map(_.toSeq).toSeq == m2.centroids.map(_.toSeq).toSeq)
+    // a removed id is added back at once, no compaction in between
+    Similarity.removeVectors(spark, dir, Seq(9L))
+    Similarity.addVectors(spark, dir, b.where(col("vec_id") === 9L))
+    assert(rows(Similarity.readAnnIndex(spark, dir)._2.select("cell", "nid", "codes", "nn")) ==
+      preCompact)
   }
 
   test("probed-cell predicate prunes partitions of the persisted code table") {
@@ -114,13 +123,26 @@ class AnnIndexSpec extends SparkSpec {
     val model = Similarity.trainPq(corpus, nCells = 2, m = 4, bits = 2)
     Similarity.writeAnnIndex(dir, model, Similarity.encodePq(corpus, model))
     val (m2, codes2) = Similarity.readAnnIndex(spark, dir)
-    val plan = Similarity.ivfPqSearch(corpus.limit(2), codes2, m2, k = 1, nProbe = 1)
-      .queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val filters = "PartitionFilters: \\[([^\\]]*)\\]".r
-      .findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(filters.exists(f => f.contains("cell") && f.nonEmpty),
-      s"expected a non-empty cell partition filter, got $filters in:\n$plan")
+    // the code table carries each cell as a literal of its own scan
+    // branch, so the probed-cell IN-filter removes the other cells'
+    // branches from the optimized plan: the files the search scans
+    val search = Similarity.ivfPqSearch(corpus.limit(2), codes2, m2, k = 1, nProbe = 1)
+    val scanned = search.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }.collect { case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+      h.location.inputFiles.toSeq
+    }.flatten
+    def cellOf(f: String) = "/cell=(\\d+)/".r.findFirstMatchIn(f).get.group(1).toInt
+    val cells = graft.sources.DeltaReader.snapshot(spark, s"$dir/codes", None).active
+      .map(_.partitionValues("cell")).distinct
+    assert(cells.size == 2, s"the fixture should fill both cells: $cells")
+    // both query vectors sit in one cell, so one probe reads one cell
+    val probed = Similarity.encodePq(corpus.limit(2), m2).select("cell").distinct()
+      .collect().map(_.getInt(0)).toSeq
+    assert(probed.size == 1, probed.toString)
+    assert(scanned.nonEmpty && scanned.forall(f => cellOf(f) == probed.head),
+      s"expected only cell ${probed.head}'s files, scanned $scanned")
+    assert(search.count() == 2)
   }
 
   test("nCells <= 0 selects auto cell count scaled to the corpus") {
