@@ -234,12 +234,18 @@ object LakeIndexer {
   /** Persist the cell index as a Delta table in [[laidOut]]'s layout,
     * committed by graft's own engine: version 0 in a fresh directory,
     * else a new version replacing every row (readers of older versions
-    * keep them). The table allows deletion vectors, which
-    * [[removeTable]] writes.
+    * keep them, and so does the disk until [[LakeWriter.vacuumDelta]]
+    * runs). The table allows deletion vectors, which [[removeTable]]
+    * writes. Every column is declared nullable (a CASE with no ELSE),
+    * as [[readIndex]] reads it back, so [[compactIndex]] can commit a
+    * rebuild read from the index itself.
     */
-  def writeIndex(cells: DataFrame, path: String, numPartitions: Int = 32): Unit =
-    LakeWriter.writeOrOverwriteDelta(laidOut(cells, numPartitions), path,
-      configuration = Map("delta.enableDeletionVectors" -> "true"))
+  def writeIndex(cells: DataFrame, path: String, numPartitions: Int = 32): Unit = {
+    val laid = laidOut(cells, numPartitions)
+    LakeWriter.writeOrOverwriteDelta(
+      laid.select(laid.columns.map(c => when(col(c).isNotNull, col(c)).as(c)).toIndexedSeq: _*),
+      path, configuration = Map("delta.enableDeletionVectors" -> "true"))
+  }
 
   /** The persisted index at `path`: the memoized scan of its current
     * snapshot ([[DeltaReader.read]]), removed tables' rows filtered by
@@ -260,19 +266,22 @@ object LakeIndexer {
     LakeWriter.appendDelta(laidOut(newCells, numPartitions), path)
 
   /** Delete one table from the persisted index: a deletion vector on
-    * each file holding its cells, no data file rewritten. Reclaim the
-    * space with [[compactIndex]].
+    * each file holding its cells, no data file rewritten. The space
+    * comes back in two steps: [[compactIndex]] writes a version
+    * without the removed rows, then [[LakeWriter.vacuumDelta]] deletes
+    * the files and sidecars no retained version references.
     */
   def removeTable(spark: SparkSession, path: String, tableId: Int): Unit =
     LakeWriter.deleteWhereDv(spark, path, s"tableid = $tableId")
 
-  /** The offline maintenance job: one `dataChange=false` rewrite of the
-    * whole index into `numPartitions` token-range files, folding every
-    * append and deletion vector. Readers of the pre-compaction version
-    * keep reading it.
+  /** The offline maintenance job: rewrite the live index through
+    * [[writeIndex]] as one new version, folding every append and
+    * deletion vector back into [[laidOut]]'s `numPartitions` files.
+    * Readers of the pre-compaction version keep reading it; its files
+    * stay on disk until [[LakeWriter.vacuumDelta]].
     */
   def compactIndex(spark: SparkSession, path: String, numPartitions: Int = 32): Unit =
-    LakeWriter.compactDeltaCluster(spark, path, Seq("tokenized"), numPartitions, full = true)
+    writeIndex(readIndex(spark, path), path, numPartitions)
 
   /** Rebuild a table's cleaned content from the cell index
     * (maco/data_handler.py:656 get_table): pivot tokens by colid.

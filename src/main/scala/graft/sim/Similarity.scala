@@ -566,10 +566,10 @@ object Similarity {
   }
 
   /** Read a persisted ANN index back as (model, code table). The code
-    * table is the memoized scan of the table's current snapshot, one
-    * branch per cell carrying the cell as a literal, so
-    * `ivfPqSearch`'s probed-cell IN-filter drops the other cells'
-    * files from the plan before any I/O.
+    * table is the memoized scan of the table's current snapshot: one
+    * relation partitioned by `cell`, so `ivfPqSearch`'s probed-cell
+    * IN-filter is a partition filter and the other cells' files are
+    * never opened.
     */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): (PqModel, DataFrame) = {
     val r = spark.read.parquet(s"$path/model").head()
@@ -584,7 +584,11 @@ object Similarity {
 
   /** Delete vectors from a persisted index: deletion vectors on the
     * code files holding them, no file rewritten. A removed id may be
-    * added again at once; [[compactAnnIndex]] reclaims the space.
+    * added again at once. The ids travel as one SQL `IN` list, parsed
+    * and checked against every code file's `nid` range, so one call's
+    * cost grows with the list: remove a bulk set in batches (each batch
+    * is one commit). The space comes back in two steps:
+    * [[compactAnnIndex]], then [[LakeWriter.vacuumDelta]].
     */
   def removeVectors(spark: org.apache.spark.sql.SparkSession, path: String,
                     ids: Seq[Long]): Unit =
@@ -593,7 +597,8 @@ object Similarity {
 
   /** The offline maintenance job: one `dataChange=false` rewrite that
     * folds every cell's files, and the deletion vectors on them, into
-    * files of up to 1 GiB per cell.
+    * files of up to 1 GiB per cell. The replaced files stay on disk
+    * until [[LakeWriter.vacuumDelta]] runs.
     */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     LakeWriter.compactDelta(spark, s"$path/codes", minFiles = 1)
@@ -603,20 +608,14 @@ object Similarity {
     * the `LakeIndexer.addTables` discipline for the ANN index. Encoding
     * is deterministic given the model, so the appended index is
     * row-identical to a full re-encode of the union (spec-pinned). A
-    * failed call commits nothing. `batchLabel` is kept for source
-    * compatibility and not read: exactly-once delivery of a stream of
-    * batches is `graft.streaming.AnnStream`'s, through Delta `txn`
-    * identifiers.
+    * failed call commits nothing; a repeated call appends its batch
+    * again (exactly-once delivery of a stream of batches is
+    * `graft.streaming.AnnStream`'s, through Delta `txn` identifiers).
     */
   def addVectors(spark: org.apache.spark.sql.SparkSession, path: String, newVecs: DataFrame,
-                 batchLabel: String = "add0",
                  id: String = "vec_id", vec: String = "embedding"): Unit =
-    addVectorsWith(readAnnIndex(spark, path)._1, path, newVecs, batchLabel, id, vec)
-
-  /** [[addVectors]] with a preloaded model. */
-  def addVectorsWith(model: PqModel, path: String, newVecs: DataFrame, batchLabel: String,
-                     id: String = "vec_id", vec: String = "embedding"): Unit =
-    LakeWriter.appendDelta(encodePq(newVecs, model, id, vec), s"$path/codes")
+    LakeWriter.appendDelta(encodePq(newVecs, readAnnIndex(spark, path)._1, id, vec),
+      s"$path/codes")
 
   /** recall@k of an approximate knn result against the exact
     * brute-force result over the same queries — the PUBLISHED quality

@@ -2275,18 +2275,27 @@ object LakeWriter {
 
   /** Create or replace the table at `dir`: [[writeDelta]] when it holds
     * no table (or only the empty log a crashed creator leaves), else
-    * [[overwriteDelta]], a new version replacing every row under the
-    * table's own partitioning and configuration. The directory is never
-    * deleted, so readers of the old version keep it and the snapshot
-    * memos, keyed by the log files' name, length and mtime, never see a
-    * recreated version 0.
+    * [[overwriteDelta]], a new version replacing every row. An existing
+    * table must already have `partitionBy` and `configuration`; a
+    * mismatch is refused, not silently kept. The directory is never
+    * deleted, so readers of the old version keep it, its files stay
+    * until [[vacuumDelta]], and the snapshot memos, keyed by the log
+    * files' name, length and mtime, never see a recreated version 0.
     */
   private[graft] def writeOrOverwriteDelta(df: DataFrame, dir: String,
                                            partitionBy: Seq[String] = Nil,
                                            configuration: Map[String, String] = Map.empty): Unit =
-    if (DeltaReader.hasLogEntries(dir, df.sparkSession.sessionState.newHadoopConf()))
+    if (DeltaReader.hasLogEntries(dir, df.sparkSession.sessionState.newHadoopConf())) {
+      val snap = DeltaReader.snapshot(df.sparkSession, dir, None)
+      require(snap.partCols == partitionBy,
+        s"$dir is partitioned by (${snap.partCols.mkString(", ")}), " +
+          s"not (${partitionBy.mkString(", ")})")
+      configuration.foreach { case (k, v) =>
+        require(snap.configuration.get(k).contains(v),
+          s"$dir has $k = ${snap.configuration.getOrElse(k, "<unset>")}, not $v")
+      }
       overwriteDelta(df, dir)
-    else writeDelta(df, dir, partitionBy = partitionBy, configuration = configuration)
+    } else writeDelta(df, dir, partitionBy = partitionBy, configuration = configuration)
 
   /** (path, expression, enforceable) for every `delta.invariants`
     * field: top-level and struct-nested invariants evaluate row-wise

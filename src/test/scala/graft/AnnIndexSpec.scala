@@ -123,26 +123,27 @@ class AnnIndexSpec extends SparkSpec {
     val model = Similarity.trainPq(corpus, nCells = 2, m = 4, bits = 2)
     Similarity.writeAnnIndex(dir, model, Similarity.encodePq(corpus, model))
     val (m2, codes2) = Similarity.readAnnIndex(spark, dir)
-    // the code table carries each cell as a literal of its own scan
-    // branch, so the probed-cell IN-filter removes the other cells'
-    // branches from the optimized plan: the files the search scans
-    val search = Similarity.ivfPqSearch(corpus.limit(2), codes2, m2, k = 1, nProbe = 1)
-    val scanned = search.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
-    }.collect { case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-      h.location.inputFiles.toSeq
-    }.flatten
-    def cellOf(f: String) = "/cell=(\\d+)/".r.findFirstMatchIn(f).get.group(1).toInt
-    val cells = graft.sources.DeltaReader.snapshot(spark, s"$dir/codes", None).active
-      .map(_.partitionValues("cell")).distinct
-    assert(cells.size == 2, s"the fixture should fill both cells: $cells")
+    val snap = graft.sources.DeltaReader.snapshot(spark, s"$dir/codes", None)
+    val filesPerCell = snap.active.groupBy(_.partitionValues("cell").toInt).map {
+      case (c, fs) => c -> fs.size }
+    assert(filesPerCell.size == 2, s"the fixture should fill both cells: $filesPerCell")
     // both query vectors sit in one cell, so one probe reads one cell
     val probed = Similarity.encodePq(corpus.limit(2), m2).select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
     assert(probed.size == 1, probed.toString)
-    assert(scanned.nonEmpty && scanned.forall(f => cellOf(f) == probed.head),
-      s"expected only cell ${probed.head}'s files, scanned $scanned")
-    assert(search.count() == 2)
+    val search = Similarity.ivfPqSearch(corpus.limit(2), codes2, m2, k = 1, nProbe = 1)
+    assert(search.collect().length == 2)
+    // the code table's scan carries the probed-cell IN-filter as a
+    // partition filter, and reads only that cell's files
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val scans = Plans.collect(search.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths.exists(_.toString.contains("/codes/")) => f
+    }
+    assert(scans.nonEmpty && scans.forall(_.partitionFilters.exists(_.references.exists(
+      _.name == "cell"))), scans.map(_.simpleString(200)).mkString("\n"))
+    assert(scans.map(_.metrics("numFiles").value).sum == filesPerCell(probed.head),
+      scans.map(_.metrics.map { case (k, v) => k -> v.value }).mkString("\n"))
   }
 
   test("nCells <= 0 selects auto cell count scaled to the corpus") {

@@ -689,11 +689,18 @@ class DeltaReaderSpec extends SparkSpec {
     assert(lines.get(0).contains("\"operation\":\"OPTIMIZE\""), lines.get(0))
     lines.forEach(l => assert(l.contains("commitInfo") ||
       l.contains("\"dataChange\":false"), l))
-    // live file set: web folded to the single compacted file
-    val webLive = DeltaReader.read(spark, dir.getPath)
-      .where("src = 'web'").inputFiles
+    // live file set: web folded to the single compacted file, and a
+    // read of web scans only that file
+    val webLive = DeltaReader.snapshot(spark, dir.getPath, None).active
+      .filter(_.partitionValues("src") == "web").map(_.path)
     assert(webLive.length == 1 && webLive.head.contains("part-compact-"),
       webLive.mkString(", "))
+    val webRead = DeltaReader.read(spark, dir.getPath).where("src = 'web'")
+    assert(webRead.collect().length == 2)
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val webScans = Plans.collect(webRead.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+    assert(webScans.map(_.metrics("numFiles").value).sum == 1, webScans.toString)
     // time travel BELOW the compaction still replays the removed files
     assert(rows(Some(2L)) == Set((1L, "a", "web"), (2L, "b", "web"), (3L, "c", "book")))
     // ...and the physical files are still on disk (tombstones never delete)

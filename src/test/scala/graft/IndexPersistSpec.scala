@@ -67,6 +67,28 @@ class IndexPersistSpec extends SparkSpec {
     assert(compacted.where(col("tableid") === 2).count() == 0)
     val snap = graft.sources.DeltaReader.snapshot(spark, tmp, None)
     assert(snap.active.size <= 4 && snap.active.forall(_.dv.isEmpty), snap.active.toString)
+    // and restores writeIndex's layout: each file sorted on the full
+    // token, so row-group min/max ranges stay narrow for MATE's probes
+    snap.active.foreach { f =>
+      val tokens = spark.read.parquet(s"$tmp/${f.path}").select("tokenized")
+        .collect().map(r => Option(r.getString(0))).toSeq
+      assert(tokens.nonEmpty && tokens == tokens.sorted, f.path)
+    }
+  }
+
+  test("an in-place rebuild is a new version; a different layout is refused") {
+    val tables = TestLake.tables(spark, sf())
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rebuild_").toString + "/cells"
+    LakeIndexer.writeIndex(LakeIndexer.cells(tables.take(3)), tmp, numPartitions = 4)
+    LakeIndexer.writeIndex(LakeIndexer.cells(tables), tmp, numPartitions = 4)
+    assert(sorted(LakeIndexer.readIndex(spark, tmp)) == sorted(LakeIndexer.cells(tables)))
+    // the replaced version stays readable (its files stay until vacuum)
+    assert(sorted(graft.sources.DeltaReader.read(spark, tmp, Some(0L))) ==
+      sorted(LakeIndexer.cells(tables.take(3))))
+    val e = intercept[IllegalArgumentException](graft.sources.LakeWriter.writeOrOverwriteDelta(
+      LakeIndexer.cells(tables), tmp, partitionBy = Seq("tableid")))
+    assert(e.getMessage.contains("partitioned by"), e.getMessage)
+    assert(graft.sources.DeltaReader.snapshot(spark, tmp, None).version == 1L)
   }
 
   test("a removed table is re-added without compaction") {
