@@ -69,8 +69,6 @@ object Cocoa {
     */
   def columnPairSimilarity(cells: DataFrame, k: Int, minJac: Double = 0.0,
                            maxTokenDf: Int = 4096): DataFrame = {
-    val spark = cells.sparkSession
-    import spark.implicits._
     val d = cells.select(col("table_col_id"), col("tokenized")).distinct()
     // bucket size IS the token's column frequency — the guard costs no
     // extra shuffle. Pairs stream from a lazy iterator (never df²

@@ -1,6 +1,5 @@
 package graft.dedup
 
-import graft.functions.SimHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -208,8 +207,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, id: String = "doc_id",
                         text: String = "text", n: Int = 3,
                         maxDocFreq: Int = 65536): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     // Shingles are keyed by their 64-bit hash and the strings are never
     // built ([[shingleHashes]]): an 8-byte key shuffles ~4× less than a
     // ~25-char shingle and compares in one instruction. Collisions would

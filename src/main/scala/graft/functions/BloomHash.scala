@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions.udf
-
 /** 128-bit Bloom-filter row hash (reference: maco/bloom_filter.py,
   * used as the alternative MATE super key in maco/mate.py:66).
   *
@@ -41,11 +39,9 @@ object BloomHash {
     (hi, lo)
   }
 
-  val rowHashUdf = udf((ts: Seq[String]) => rowHash(ts))
-
   /** Column form yielding array<long> [hi, lo] (LakeIndexer contract) —
     * delegates to the codegen'd [[XashKernel.bloomRowHashCol]] kernel;
-    * `rowHashUdf` remains only as the boxed reference form for specs.
+    * `rowHash` stays as the Scala reference the specs check it against.
     */
   def rowHashCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     XashKernel.bloomRowHashCol(c)

@@ -63,8 +63,6 @@ object SimHash {
     out
   }
 
-  val simhashUdf = udf((s: String) => simhash64(s))
-
   /** Reference-exact 128-bit SimHash as (hi, lo) signed longs — bit i of
     * the 128-bit integer is bit (i mod 64) of lo for i < 64, of hi
     * otherwise (matching `int(md5(f).hexdigest(), 16)` big-endian

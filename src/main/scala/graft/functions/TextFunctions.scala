@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 
 /** Text cleaning / tokenization, Spark-native.
   *
@@ -32,9 +31,6 @@ object TextFunctions {
     * regex passes per cell — untenable in the index-build hot path.
     */
   def cleanedText(c: Column): Column = XashKernel.cleanTextCol(c.cast("string"))
-
-  /** UDF form, kept for registration-style use. */
-  lazy val cleanUdf = udf((s: String) => cleanedTextLocal(s))
 
   /** Row-level form (same semantics as the SQL twin below: Java
     * String.replace is left-to-right non-overlapping like Python's).

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{bitwise_not, udf}
+import org.apache.spark.sql.functions.bitwise_not
 
 /** XASH — 128-bit token hash used for MATE super keys.
   *
@@ -190,12 +190,6 @@ object Xash {
     }
     (hi, lo)
   }
-
-  /** Column form: string → struct(hi, lo). */
-  val xashUdf = udf((s: String) => xash128(s))
-
-  /** Column form: array<string> → struct(hi, lo) row super key. */
-  val superKeyUdf = udf((ts: Seq[String]) => superKey(ts))
 
   /** MATE pre-filter: query super key bits ⊆ row super key bits.
     * Pure long ops — stays in codegen.

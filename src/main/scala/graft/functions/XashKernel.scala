@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * A Scala UDF costs catalyst→Scala row conversion per call and blocks
   * expression-level optimizations; `StaticInvoke` of a static method
   * compiles to a direct call inside whole-stage codegen. These are the
-  * preferred forms for the index-build hot path; `Xash.xashUdf` /
-  * `superKeyUdf` remain for API compatibility.
+  * forms the index-build hot path uses; the Scala functions they wrap
+  * (`Xash.xash128`, `Xash.superKey`, ...) stay as the specs' reference.
   */
 object XashKernel {
 
@@ -100,11 +100,6 @@ object XashKernel {
 
   private def exprOf(c: Column) = GraftColumnBridge.expression(c)
 
-  /** xash(token) → array<long> [hi, lo], codegen'd. */
-  def xashCol(c: Column): Column = GraftColumnBridge.column(StaticInvoke(
-    XashKernel.getClass, ArrayType(LongType, containsNull = false), "xash",
-    Seq(exprOf(c)), returnNullable = false))
-
   /** super key of an array<string> of tokens → array<long> [hi, lo]. */
   def superKeyCol(c: Column): Column = GraftColumnBridge.column(StaticInvoke(
     XashKernel.getClass, ArrayType(LongType, containsNull = false), "superKey",
@@ -118,12 +113,6 @@ object XashKernel {
   /** any-width row super key of an array<string> → array<long> words. */
   def superKeyWordsCol(c: Column, hashSize: Int): Column = GraftColumnBridge.column(StaticInvoke(
     XashKernel.getClass, ArrayType(LongType, containsNull = false), "superKeyWords",
-    Seq(exprOf(c), org.apache.spark.sql.catalyst.expressions.Literal(hashSize)),
-    returnNullable = false))
-
-  /** any-width xash(token) → array<long> words. */
-  def xashWordsCol(c: Column, hashSize: Int): Column = GraftColumnBridge.column(StaticInvoke(
-    XashKernel.getClass, ArrayType(LongType, containsNull = false), "xashWords",
     Seq(exprOf(c), org.apache.spark.sql.catalyst.expressions.Literal(hashSize)),
     returnNullable = false))
 

@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.functions.{TextFunctions, Xash}
+import graft.functions.TextFunctions
 import graft.sources.{DeltaReader, LakeWriter}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,7 +38,7 @@ object LakeIndexer {
   /** Inverted cell index: (tokenized, tableid, colid, rowid,
     * table_col_id, sk_hi, sk_lo). Super key = `rowHash` folded over the
     * row's tokens (default XASH OR, maco/data_handler.py:281; Bloom via
-    * `BloomHash.rowHashUdf` mirrors the reference's pluggable
+    * `BloomHash.rowHashCol` mirrors the reference's pluggable
     * `hash_function`, maco/data_handler.py:89), carried as two longs.
     */
   def cells(tables: Seq[LakeTable],

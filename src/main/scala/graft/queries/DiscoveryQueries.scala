@@ -103,16 +103,6 @@ object DiscoveryQueries {
       Future(mateMatches(s, dir, "single").count()))), Duration.Inf)
   }
 
-  /** Per-component warm list for the `Profile warm-components` dev
-    * mode — same builds `warmCaches` runs, individually addressable.
-    */
-  private[graft] def warmComponents: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "disc_cells" -> ((s, dir) => { TestLake.cells(s, dir).count(); () }),
-    "disc_pairs" -> ((s, dir) => { custNationPairs(s, dir).count(); () }),
-    "disc_ranks" -> ((s, dir) => { custRanks(s, dir).count(); () }),
-    "disc_mate_sample" -> ((s, dir) => { mateMatches(s, dir, "sample").count(); () }),
-    "disc_mate_single" -> ((s, dir) => { mateMatches(s, dir, "single").count(); () }))
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mate_topk" -> ((s, dir) =>
       Mate.topK(mateMatches(s, dir, "sample"), 10)),

@@ -34,13 +34,6 @@ object DupQueries {
   private val dupSigsCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  /** Per-component warm list for the `Profile warm-components` dev
-    * mode — same builds `warmCaches` runs, individually addressable.
-    */
-  private[graft] def warmComponents: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "dup_lake" -> ((s, dir) => { dupLake(s, dir).count(); () }),
-    "dup_sigs" -> ((s, dir) => { dupSigs(s, dir).count(); () }))
-
   /** Materialize the shared dup-lake caches (timed as Bench's
     * `cache_build`).
     */

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.functions.{BloomHash, SimHash, TextFunctions, Xash}
+import graft.functions.{BloomHash, SimHash, TextFunctions}
 import graft.index.{CocoaIndex, LakeIndexer, TestLake}
 import graft.sources.LakeReader
 import org.apache.spark.sql.{DataFrame, SparkSession}

@@ -7,7 +7,6 @@ import graft.multimodal.Multimodal
 import graft.sim.Similarity
 import graft.text.{TextAnalysis, WebCuration}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** LLM-training-data pipeline operators — SURVEY.md §2.4. */
@@ -94,17 +93,6 @@ object PipelineQueries {
 
   private val bpeCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), (Seq[(String, String)], Map[String, Int])]
-
-  /** Per-component warm list for the `Profile warm-components` dev
-    * mode — same builds `warmCaches` runs, individually addressable.
-    */
-  private[graft] def warmComponents: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "pipe_jacPairs" -> ((s, dir) => { jacPairs(s, dir).count(); () }),
-    "pipe_docSpans" -> ((s, dir) => { docSpans(s, dir).count(); () }),
-    "pipe_embCells" -> ((s, dir) => { embCells(s, dir).count(); () }),
-    "pipe_contamSpans" -> ((s, dir) => { contamSpans(s, dir).count(); () }),
-    "pipe_dsirW" -> ((s, dir) => { dsirW(s, dir).count(); () }),
-    "pipe_bpeMerges" -> ((s, dir) => { bpeMerges(s, dir); () }))
 
   /** Materialize the shared caches (timed as Bench's `cache_build`). */
   def warmCaches(s: SparkSession, dir: String): Unit = {
@@ -226,8 +214,8 @@ object PipelineQueries {
     // driver gate, not a green "it ran". Bounds are COLLAPSE detectors
     // pinned below the measured sf0.01/sf0.1 values (lsh .020/.017 →
     // .01; ivf .353/.200 → .15; pq .190/.120 → .08; ivfpq ~.44 at the
-    // rerank=32 default → .35); the full recall-vs-params curve lives
-    // in SURVEY §4c (`Profile recall`).
+    // rerank=32 default → .35); the full recall-vs-params curve, a
+    // dated measurement, is recorded in SURVEY §4c.
     "knn_lsh_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val exact = Similarity.bruteForceKnnBlocked(emb.where(col("vec_id") < 100), emb, 3)

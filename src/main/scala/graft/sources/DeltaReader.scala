@@ -2348,8 +2348,6 @@ object DeltaReader {
     */
   def readWithRowIds(s: SparkSession, dir: String,
                      versionAsOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    import s.implicits._
     val snap = snapshot(s, dir, versionAsOf)
     require(snap.writerFeatures.contains("rowTracking"),
       s"table at $dir does not declare the rowTracking feature — run " +

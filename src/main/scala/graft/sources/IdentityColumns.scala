@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, monotonically_increasing_id}
-import org.apache.spark.sql.types.{LongType, Metadata, MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructType}
 
 /** IDENTITY columns — the protocol's `identityColumns` writer feature
   * (legacy writer version 6): a `bigint` column whose values the

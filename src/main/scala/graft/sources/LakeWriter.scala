@@ -2092,7 +2092,7 @@ object LakeWriter {
     */
   def overwriteWhere(df0: DataFrame, dir: String, predicate: String,
                      txn: Option[(String, Long)] = None): Seq[String] = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     val spark = df0.sparkSession
     val snap = DeltaReader.snapshot(spark, dir, None)
     val cm = requireMutable(snap, "overwriteWhere", removesRows = true)

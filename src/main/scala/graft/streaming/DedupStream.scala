@@ -31,8 +31,7 @@ object DedupStream {
     // DeltaStream scopes its txn ids): batchId restarts at 0 under a NEW
     // checkpoint against the same long-lived index, and an unscoped
     // batch=0 would silently overwrite the original batch-0 signatures
-    val scope = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val scope = DeltaStream.checkpointScope(checkpoint)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>

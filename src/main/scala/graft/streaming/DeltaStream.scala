@@ -51,14 +51,17 @@ object DeltaStream {
       .start()
   }
 
-  /** appId + checkpoint-identity suffix (the DedupStream
-    * batch-scoping discipline applied to txn identifiers).
+  /** appId + checkpoint-identity suffix. */
+  private[graft] def scopedAppId(appId: String, checkpoint: String): String =
+    s"$appId-${checkpointScope(checkpoint)}"
+
+  /** The checkpoint's identity: the first 4 bytes of its path's MD5 as
+    * 8 hex digits. Txn ids here and DedupStream's `batch=<scope>-<id>`
+    * directories both carry it, so it must never change form.
     */
-  private[graft] def scopedAppId(appId: String, checkpoint: String): String = {
-    val scope = java.security.MessageDigest.getInstance("MD5")
+  private[graft] def checkpointScope(checkpoint: String): String =
+    java.security.MessageDigest.getInstance("MD5")
       .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"$appId-$scope"
-  }
 
   /** Streaming UPSERT sink: each micro-batch MERGEs into the table on
     * `keyCols` (matched target rows replaced by the batch row,

@@ -263,6 +263,30 @@ class DeltaDvWriteSpec extends SparkSpec {
     assert(rows(DeltaReader.read(spark, dir)) == Set((0L, "a"), (3L, "d")))
   }
 
+  test("a broad DV delete over more files than shuffle partitions: every file DV'd, sidecars bounded by partitions") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmp("graft_dvw_scatter_")
+    val files = 12
+    val n = files * 40L
+    LakeWriter.writeDelta(spark.range(0, n, 1, files)
+      .select(col("id"), col("id").cast("string").as("v")), dir,
+      configuration = Map("delta.enableDeletionVectors" -> "true"))
+    val live = DeltaReader.snapshot(spark, dir, None).active.map(_.path).toSet
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(live.size == files && files > partitions)
+
+    val touched = LakeWriter.deleteWhereDv(spark, dir, "id % 2 = 0")
+    assert(touched.toSet == live)
+    val after = DeltaReader.snapshot(spark, dir, None).active
+    assert(after.map(_.path).toSet == live)
+    assert(after.forall(_.dv.exists(_.cardinality == 20L)), after.map(_.dv).toString)
+    // each non-empty task partition writes ONE sidecar for all its files
+    assert(sidecars(dir).nonEmpty && sidecars(dir).size <= partitions, sidecars(dir).toString)
+    val read = DeltaReader.read(spark, dir)
+    assert(read.count() == n / 2)
+    assert(read.where("id % 2 = 0").count() == 0, "a deleted row resurrected")
+  }
+
   test("append-only tables refuse deleteWhereDv loudly") {
     val om = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
     val schema = org.apache.spark.sql.types.StructType(Seq(

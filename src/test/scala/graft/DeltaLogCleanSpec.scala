@@ -88,6 +88,33 @@ class DeltaLogCleanSpec extends SparkSpec {
     assert(LakeWriter.cleanExpiredLogs(spark, noCp).isEmpty)
   }
 
+  test("an expired prefix past the 64-file inline threshold deletes through the executor path") {
+    // a fabricated log: the adds name no real file, and only the log's
+    // own state is read back
+    val n = 80
+    val dir = tmp("many")
+    val (log, fs) = logFs(dir)
+    fs.mkdirs(log)
+    def write(v: Long, lines: String*): Unit = {
+      val out = fs.create(new Path(log, f"$v%020d.json"))
+      try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+    }
+    val schema = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      spark.range(1).toDF("id").schema.json)
+    write(0L, """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"metaData":{"id":"many","format":{"provider":"parquet","options":{}},"schemaString":$schema,"partitionColumns":[],"configuration":{}}}""")
+    (1 to n).foreach(v => write(v.toLong,
+      s"""{"add":{"path":"part-$v.parquet","partitionValues":{},"size":100,"modificationTime":0,"dataChange":true}}"""))
+    LakeWriter.checkpointDelta(spark, dir, n.toLong)
+    (0 until n).foreach(v => age(dir, v.toLong, 40 * 86400000L))
+    val deleted = LakeWriter.cleanExpiredLogs(spark, dir)
+    assert(deleted.toSet == (0 until n).map(v => f"$v%020d.json").toSet,
+      deleted.take(5).toString)
+    assert(fs.listStatus(log).map(_.getPath.getName).count(_.endsWith(".json")) == 1)
+    val snap = DeltaReader.snapshot(spark, dir, None)
+    assert(snap.version == n && snap.active.size == n)
+  }
+
   test("cleanup rides the checkpoint cadence with a tightened retention") {
     val dir = tmp("cadence")
     LakeWriter.writeDelta(spark.range(3).toDF("k"), dir,

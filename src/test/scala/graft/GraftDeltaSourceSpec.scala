@@ -451,6 +451,25 @@ class GraftDeltaSourceSpec extends SparkSpec {
     assert(nb == 3, s"6 versions at 2/trigger must take 3 batches, took $nb")
   }
 
+  test("an uncapped drain delivers a multi-version table as one batch; a capped CDF replay takes ceil(versions/cap)") {
+    val d = freshDir("t")
+    LakeWriter.writeDelta(base, d,
+      configuration = Map("delta.enableChangeDataFeed" -> "true"))
+    (1 to 4).foreach(i => LakeWriter.appendDelta(
+      Seq((2000L + i, "y", i.toDouble)).toDF("id", "k", "v"), d))
+    // snapshot mode folds all 5 versions into one consistent batch
+    val (snap, nbSnap) = drain(d, freshDir("cp"))
+    assert(snap.toSet == batchRows(d).toSet && snap.size == batchRows(d).size)
+    assert(nbSnap == 1, s"the uncapped snapshot took $nbSnap batches")
+    // CDF replay from v0 walks the history at 2 versions per trigger
+    val (changes, nb) = drain(d, freshDir("cp"), Map("readChangeFeed" -> "true",
+      "startingVersion" -> "0", "maxVersionsPerTrigger" -> "2"))
+    val want = DeltaReader.readChanges(spark, d, 0L, 4L)
+      .collect().map(_.toSeq.toVector).toSeq
+    assert(changes.toSet == want.toSet && changes.size == want.size)
+    assert(nb == 3, s"5 versions at 2/trigger must take 3 batches, took $nb")
+  }
+
   test("append-mode startingVersion skips the snapshot and tails adds from v") {
     val d = freshDir("sv"); val cp = freshDir("svcp")
     LakeWriter.writeDelta(base, d) // v0: 30 rows — must NOT be delivered

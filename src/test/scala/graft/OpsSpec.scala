@@ -396,6 +396,31 @@ class OpsSpec extends SparkSpec {
       out.toSeq.toString)
   }
 
+  test("funnel: Spark jobs grow linearly in the number of stages") {
+    // every user converts every stage, so no shrinking user set can
+    // hide the lineage shape: each stage's localCheckpoint keeps K
+    // stages at ~K jobs, where the chained per-stage lineage re-runs
+    // stages 1..i-1 for every stage i and grows quadratically
+    val users = 50L
+    def jobsAt(stages: Int): Int = {
+      val ev = spark.range(0, users * stages, 1, 4)
+        .selectExpr(s"id % ${users}L AS user_id", s"id DIV ${users}L AS s")
+        .selectExpr("user_id", "s * 1000000000L + user_id AS ts",
+          "concat('s', s + 1) AS event_type")
+      var rows: Array[org.apache.spark.sql.Row] = Array.empty
+      val jobs = jobsOf {
+        rows = graft.ops.EventAnalytics.funnel(ev, (1 to stages).map(i => s"s$i"),
+          10L * 1000 * 1000 * 1000).collect()
+      }
+      assert(rows.map(r => (r.getInt(0), r.getLong(2))).toSeq ==
+        (1 to stages).map(_ -> users), rows.toSeq.toString)
+      jobs
+    }
+    val k = 4
+    val (jk, j2k) = (jobsAt(k), jobsAt(2 * k))
+    assert(j2k <= 2.5 * jk, s"jobs: $jk at K=$k, $j2k at K=${2 * k}")
+  }
+
   test("cohortRetention: offsets measured from each user's first day") {
     import spark.implicits._
     val d = 86400L * 1000 * 1000 * 1000

@@ -141,6 +141,11 @@ class StreamingSpec extends SparkSpec {
       .select("id_1", "id_2").as[(Long, Long)].collect().toSet
     assert(streamed == full)
     assert(full.nonEmpty)
+    // batch directories carry DeltaStream's checkpoint scope; its form
+    // is pinned, or directories already on disk would stop matching
+    val scope = graft.streaming.DeltaStream.checkpointScope(s"$root/ckpt")
+    assert(new java.io.File(s"$root/pairs/batch=$scope-0").isDirectory)
+    assert(graft.streaming.DeltaStream.checkpointScope("/lake/ckpt") == "fe6e2f8b")
   }
 
   test("streaming ANN maintenance: maintained index equals full re-encode, search finds new vectors") {
